@@ -28,17 +28,18 @@ absorb cache-eviction/GC noise from whichever entries precede them —
 q16 read 4.2 s shared vs 0.96 s cold with an UNCHANGED plan — so
 ordering artifacts masqueraded as regressions):
 
-- **cold is the canonical per-entry regime**: session caches
-  (catalog.py::clear_session_caches — shared shingle scans, capped pair
-  lists, IVF indexes) are cleared before every entry, so each timing is
-  an independent measurement, comparable round-over-round.  Carve-out
-  (documented per VERDICT r12 item 8): driver-side METADATA memos
-  survive the per-entry clear — sources/batch.py::_TABLE_PLAN_MEMO
-  (lazy table plans keyed by file size+mtime, no rows) and
-  util._SPREAD_DECISIONS (a boolean per analyzed scan shape).  These
-  are the session-catalog state a real engine keeps (the same category
-  as Spark's own FileStatusCache, which a cache clear also does not
-  drop); every cold entry still scans its parquet from disk;
+- **cold is the canonical per-entry regime**: the session scope
+  (catalog.py::clear_session_caches → util.SessionScope.release — pins,
+  build views, shared shingle scans, capped pair lists, IVF indexes) is
+  released before every entry, so each timing is an independent
+  measurement, comparable round-over-round.  Carve-out (documented per
+  VERDICT r12 item 8): the scope's driver-side METADATA memos survive
+  the per-entry release — lazy table plans keyed by file identity (no
+  rows), a boolean per analyzed scan shape, the shipped-package flag —
+  and are dropped only when the Spark application changes.  These are
+  the session-catalog state a real engine keeps (the same category as
+  Spark's own FileStatusCache, which a cache clear also does not drop);
+  every cold entry still scans its parquet from disk;
 - **shared is the throughput regime**: one drive of the whole catalog
   with caches live (one shingle scan feeds four dedup flavors) — the
   realistic cost of the catalog as a workload, reported as

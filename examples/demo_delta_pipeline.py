@@ -152,7 +152,6 @@ def main() -> None:
             admitted.select("vec_id", "embedding"),
             by_residual=True, rotation=rot,
         )
-        sstats["release"]()  # terminal action on `admitted` done
         # the contract this demo exists to prove: index growth ==
         # exactly this round's semantic survivors, nothing else pays
         assert n_appended == sstats["admitted"], (n_appended, sstats)

@@ -39,6 +39,7 @@ from .operators import multimodal as mm
 from .operators import similarity as sim
 from .operators import textops as tx
 from .sources.batch import load_driver_table, read_parquet_memo
+from .util import SCOPE, persist_shared
 
 
 def _pa_rows(path, columns=None) -> list[dict]:
@@ -2544,16 +2545,12 @@ def _jaccard_sql(threshold: float) -> str:
 _JACCARD_SQL = _jaccard_sql(0.5)
 
 
-# one persisted (doc_id, shingle) frame per corpus+session: the shingle
-# scan (normalize → split → k-gram explode) feeds FOUR dedup flavors in a
-# catalog drive — without the cache each entry recomputes it from parquet
-_SHINGLE_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
+# one pinned (doc_id, shingle) frame per corpus, shared until the scope's
+# release: the shingle scan (normalize → split → k-gram explode) feeds
+# FOUR dedup flavors in a catalog drive — without it each entry
+# recomputes it from parquet
 def _doc_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (spark.sparkContext.applicationId, str(sf_dir))
-    sh = _SHINGLE_CACHE.get(key)
-    if sh is None:
+    def build() -> DataFrame:
         # documents.parquet is a single small file at test SFs → ONE scan
         # partition → the whole normalize/split/k-gram pipeline runs on
         # one core.  Spread the docs first so shingling uses the full
@@ -2563,29 +2560,26 @@ def _doc_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
         docs = _t(spark, sf_dir, "documents").repartition(
             spark.sparkContext.defaultParallelism, "doc_id"
         )
-        sh = dd.word_shingles(docs).persist()
-        _SHINGLE_CACHE[key] = sh
-    return sh
+        return persist_shared(dd.word_shingles(docs))
+
+    return SCOPE.bind(spark).frame(("shingles", str(sf_dir)), build)
 
 
 # the capped J≥0.5 pair list feeds BOTH pipeline entries (survivors'
 # anti-join and clusters' connected components); computing the inverted-
-# index self-join once per corpus+session halves the dedup-family drive
-_PAIRS_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
+# index self-join once per corpus halves the dedup-family drive
 def _capped_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (spark.sparkContext.applicationId, str(sf_dir))
-    pairs = _PAIRS_CACHE.get(key)
-    if pairs is None:
-        pairs = dd.ngram_jaccard_pairs(
-            _t(spark, sf_dir, "documents"),
-            threshold=0.5,
-            top_shingle_cap=500,
-            shingles=_doc_shingles(spark, sf_dir),
-        ).persist()
-        _PAIRS_CACHE[key] = pairs
-    return pairs
+    def build() -> DataFrame:
+        return persist_shared(
+            dd.ngram_jaccard_pairs(
+                _t(spark, sf_dir, "documents"),
+                threshold=0.5,
+                top_shingle_cap=500,
+                shingles=_doc_shingles(spark, sf_dir),
+            )
+        )
+
+    return SCOPE.bind(spark).frame(("pairs", str(sf_dir)), build)
 
 
 @register(
@@ -2943,18 +2937,17 @@ def similarity_knn_join(spark, sf_dir):
     return sim.knn_join(emb, queries, k=3)
 
 
-# -- materialized IVF indexes (built once per corpus, reused across
-# queries and driver runs; keyed by the embeddings file's identity so a
-# testdata regeneration invalidates the cache) ------------------------
-_IVF_CACHE: dict[tuple[str, str], "sim.IvfIndex"] = {}
-
-
+# -- materialized IVF indexes (built once per corpus on disk, keyed by
+# the embeddings file's identity so a testdata regeneration invalidates
+# the export; the loaded index object is shared until the scope's
+# release) --------------------------------------------------------------
 def _ivf_index(spark, sf_dir: str, flavor: str) -> "sim.IvfIndex":
-    from pathlib import Path
+    return SCOPE.bind(spark).frame(
+        ("ivf", str(sf_dir), flavor), lambda: _load_ivf_index(spark, sf_dir, flavor)
+    )
 
-    key = (str(sf_dir), flavor)
-    if key in _IVF_CACHE:
-        return _IVF_CACHE[key]
+
+def _load_ivf_index(spark, sf_dir: str, flavor: str) -> "sim.IvfIndex":
     src = Path(sf_dir) / "embeddings.parquet"
     st = src.stat()
     d = (
@@ -2963,21 +2956,19 @@ def _ivf_index(spark, sf_dir: str, flavor: str) -> "sim.IvfIndex":
         / f"{flavor}_{Path(sf_dir).name}_{st.st_size}_{st.st_mtime_ns}"
     )
     if (d / sim.IvfIndex.DONE).exists():
-        idx = sim.IvfIndex.load(spark, d)
-    elif flavor == "label":
-        idx = sim.IvfIndex.build(_t(spark, sf_dir, "embeddings"), d, cell_col="label")
-    elif flavor == "seed400":
+        return sim.IvfIndex.load(spark, d)
+    if flavor == "label":
+        return sim.IvfIndex.build(_t(spark, sf_dir, "embeddings"), d, cell_col="label")
+    if flavor == "seed400":
         # the incremental-semantic-dedup fixture: quantizer trained and
         # index built on the SEED half only (vec_id < 400), so the delta
         # admits against genuinely frozen state
-        idx = sim.IvfIndex.build(
+        return sim.IvfIndex.build(
             _t(spark, sf_dir, "embeddings").filter(F.col("vec_id") < 400),
             d, k=4, iters=2,
         )
-    else:  # kmeans8: deterministic Lloyd's quantizer trained in Spark
-        idx = sim.IvfIndex.build(_t(spark, sf_dir, "embeddings"), d, k=8, iters=3)
-    _IVF_CACHE[key] = idx
-    return idx
+    # kmeans8: deterministic Lloyd's quantizer trained in Spark
+    return sim.IvfIndex.build(_t(spark, sf_dir, "embeddings"), d, k=8, iters=3)
 
 
 # bump when the export layout or the oracle's replay contract changes;
@@ -4546,8 +4537,6 @@ def funnel_conversion(spark, sf_dir):
         if prev is not None:
             s = s.join(prev, "user_id").where(F.col("t") >= F.col(prev_t))
         return s.groupBy("user_id").agg(F.min("t").alias(out_t))
-
-    from .util import persist_shared
 
     # each stage frame feeds BOTH the next stage's join and its own
     # count: without the pins stage k's whole subtree is embedded (and
@@ -6573,35 +6562,13 @@ def store_upsert_docs_q(spark, sf_dir):
 
 
 def clear_session_caches() -> None:
-    """Unpersist and drop the per-session shared frames (shingles, capped
-    pair list, IVF indexes).  The caches make a full catalog drive cheap
-    — four dedup flavors share one shingle scan — but they also make
-    per-entry bench timings non-independent.  ``bench.py --cold`` calls
-    this between queries so each entry pays its own scan."""
-    for cache in (_SHINGLE_CACHE, _PAIRS_CACHE):
-        for df in cache.values():
-            try:
-                df.unpersist()
-            except Exception:
-                pass
-        cache.clear()
-    _IVF_CACHE.clear()
-    # semantic_admit registers one delta-sized cache per batch; safe to
-    # drain here because callers are done with their `kept` frames by
-    # the time a new bench entry starts (ADVICE r6)
-    sim.release_admit_caches()
-    # operator-internal multi-consumer frames (winnowed fingerprints,
-    # gram multisets, span carves) registered via util.persist_shared
-    from .util import release_shared_caches
-
-    release_shared_caches()
-    # staged-SQL build views (minhash, backoff), droppable only AFTER
-    # the pins above are released (dropTempView uncaches the view's
-    # plan — dropping mid-build measured 3.4 s -> 8.6 s on
-    # dedup_minhash_lsh; r13)
-    from .util import drop_registered_views
-
-    drop_registered_views()
+    """Release the session scope (util.SessionScope.release): pins,
+    build views and the shared shingle scans, capped pair lists and IVF
+    indexes.  Those make a full catalog drive cheap — four dedup flavors
+    share one shingle scan — but they also make per-entry bench timings
+    non-independent.  ``bench.py --cold`` calls this between queries so
+    each entry pays its own scan."""
+    SCOPE.release()
 
 
 _DRIVER_PRIORITY = [  # generated by tools/rotation_plan.py
@@ -6635,26 +6602,26 @@ _DRIVER_PRIORITY = [  # generated by tools/rotation_plan.py
     "bm25_rerank",  # DIRTY
     "lm_stupid_backoff_tri",  # DIRTY
     "lm_stupid_backoff_quad",  # DIRTY
-    "store_projection_logs",  # newest green r10
-    "store_stats_manifest",  # newest green r10
-    "q1_pricing_summary",  # newest green r10
-    "q3_shipping_priority",  # newest green r10
-    "q5_local_supplier",  # newest green r10
-    "q10_returned_items",  # newest green r10
-    "q17_small_qty_avg",  # newest green r10
-    "q6_forecast_revenue",  # newest green r10
-    "q7_nation_volume",  # newest green r10
-    "q8_market_share",  # newest green r10
-    "q18_large_orders",  # newest green r10
-    "q4_priority_check",  # newest green r10
-    "q9_product_profit",  # newest green r10
-    "q12_late_shipments",  # newest green r10
-    "q20_excess_sellers",  # newest green r10
-    "events_gapfill_locf",  # newest green r10
-    "dedup_ngram_jaccard",  # newest green r10
-    "semantic_dedup",  # newest green r10
-    "dedup_simhash",  # newest green r10
-    "similarity_ivf_topk",  # newest green r10
+    "multimodal_meta",  # newest green r10
+    "multimodal_resize",  # newest green r10
+    "window_running_sum",  # newest green r10
+    "window_lag_delta",  # newest green r10
+    "skew_salted_topk",  # newest green r10
+    "pivot_order_status",  # newest green r10
+    "approx_distinct_users",  # newest green r10
+    "source_mix_weights",  # newest green r10
+    "corpus_zipf_slope",  # newest green r10
+    "corpus_length_histogram",  # newest green r10
+    "store_time_travel",  # newest green r10
+    "jsonl_ingest",  # newest green r11
+    "logs_filter_conj",  # newest green r11
+    "logs_keyset_page",  # newest green r11
+    "logs_offset_page",  # newest green r11
+    "top1_latest",  # newest green r11
+    "stats_lag",  # newest green r11
+    "evm_logs_address_range",  # newest green r11
+    "evm_logs_cursor_page",  # newest green r11
+    "evm_logs_blockhash_override",  # newest green r11
 ]
 
 

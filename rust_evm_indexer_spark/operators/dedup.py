@@ -27,7 +27,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..util import persist_shared, spread_small_input
+from ..util import persist_shared, register_temp_view, spread_small_input
 
 
 def normalize_text(col: Column | str) -> Column:
@@ -153,13 +153,6 @@ def ngram_jaccard_pairs(
 
 # -- MinHash + LSH -------------------------------------------------------
 
-import itertools as _it
-
-#: unique temp-view suffix per minhash_lsh_pairs call (the staged-SQL
-#: build registers session temp views; the counter keeps concurrent or
-#: repeated calls from clobbering each other's views mid-build)
-_MH_VIEW_SEQ = _it.count()
-
 N_PERM = 64  # minhash permutations
 LSH_BANDS = 16  # 16 bands × 4 rows: P(candidate | J=0.8) ≈ 0.9996
 
@@ -248,13 +241,12 @@ def minhash_lsh_pairs(
     # the IDENTICAL operations (same joins, same predicates, same
     # broadcast hint, same persist boundaries), so the optimized
     # physical plan — and the output — are unchanged.
+    # The views live until the scope's release (util.SessionScope): once
+    # analysis has inlined them into `out` they are no longer needed, but
+    # dropping one here would also uncache its pinned plan (measured
+    # 3.4 s -> 8.6 s on this entry).
     spark = sh.sparkSession
-    seq = next(_MH_VIEW_SEQ)
-    v_sh, v_banded, v_cand, v_shc = (
-        f"_mh_sh_{seq}", f"_mh_banded_{seq}",
-        f"_mh_cand_{seq}", f"_mh_shc_{seq}",
-    )
-    banded.createOrReplaceTempView(v_banded)
+    v_banded = register_temp_view(banded, "mh_banded")
     # candidate pairs: bucket equi-join; pinned — it feeds the verify
     # semi-join and the final join, and without the pin the banded
     # self-join over the 64-wide signature aggregate is embedded in
@@ -266,8 +258,8 @@ def minhash_lsh_pairs(
             f" WHERE a.doc_id < b.doc_id"
         )
     )
-    cand.createOrReplaceTempView(v_cand)
-    sh.createOrReplaceTempView(v_sh)
+    v_cand = register_temp_view(cand, "mh_cand")
+    v_sh = register_temp_view(sh, "mh_sh")
     # verify ONLY candidates: restrict the shingle index to docs that
     # appear in some candidate pair before the (expensive) intersection
     # join — verification cost scales with duplicate density, not
@@ -282,7 +274,7 @@ def minhash_lsh_pairs(
             f" ON s.doc_id = c.doc_id"
         )
     )
-    sh_cand.createOrReplaceTempView(v_shc)
+    v_shc = register_temp_view(sh_cand, "mh_shc")
     # exact Jaccard over the candidate slice — _pair_jaccard's algebra
     # verbatim (intersection equi-join on the shingle, per-doc sizes,
     # |A∩B| / (|A| + |B| − |A∩B|)), one analysis pass
@@ -307,19 +299,6 @@ def minhash_lsh_pairs(
               >= {thr}
         """
     )
-    # analysis has inlined the view subtrees into `out`'s resolved plan,
-    # so the views are only needed during this build — but dropping them
-    # HERE would also uncache the pinned cand/banded frames
-    # (dropTempView invalidates the cache of the view's plan, which IS
-    # the pinned plan; measured 3.4 s -> 8.6 s on this entry).  They are
-    # registered for deferred cleanup instead: catalog.
-    # clear_session_caches drops them right after it drains the
-    # persist_shared pins, so a long session's view catalog still can't
-    # grow unboundedly (ADVICE r12).
-    from ..util import _SESSION_VIEWS
-
-    for v in (v_sh, v_banded, v_cand, v_shc):
-        _SESSION_VIEWS.append((spark, v))
     return out
 
 

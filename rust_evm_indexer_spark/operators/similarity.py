@@ -31,6 +31,8 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..util import persist_shared
+
 
 def _dot(a: Column, b: Column) -> Column:
     """Σ aᵢ·bᵢ in double, sequential fold (deterministic)."""
@@ -287,16 +289,13 @@ def semantic_dedup_pairs(
     # The assigned frame feeds BOTH sides of the pair join below; without
     # the persist the whole assign subtree (corpus scan + centroid
     # crossJoin + rank window) is embedded twice in the physical plan
-    # and the corpus pays two full assignment passes.  The cache is
-    # released with the rest of the session's admit-family caches
-    # (release_admit_caches — wired into the catalog's
-    # clear_session_caches), same lifecycle as semantic_admit's.
-    assigned = assign_cells_join(
-        embeddings, centroids, id_col=id_col, vec_col=vec_col
-    ).select(
-        F.col(id_col), F.col("cell"), F.col(vec_col), _norm(F.col(vec_col)).alias("_n")
-    ).persist()
-    _ADMIT_CACHES.append(assigned)
+    # and the corpus pays two full assignment passes.  The pin lives
+    # until the session scope's release (util.SessionScope).
+    assigned = persist_shared(
+        assign_cells_join(embeddings, centroids, id_col=id_col, vec_col=vec_col).select(
+            F.col(id_col), F.col("cell"), F.col(vec_col), _norm(F.col(vec_col)).alias("_n")
+        )
+    )
     a = assigned.select(
         F.col(id_col).alias("id_a"),
         "cell",
@@ -778,32 +777,6 @@ def ivf_topk_trained(
     )
 
 
-# Live kept_within caches from semantic_admit calls: each admit batch
-# persists one delta-sized frame that must outlive the caller's terminal
-# action on the returned `kept` (see the comment at the return site), so
-# semantic_admit cannot unpersist it itself.  The registry gives
-# long-lived sessions (bench drives, streaming micro-batch loops) a
-# bulk-release path — catalog.clear_session_caches() drains it — while
-# stats["release"] releases a single batch's cache (ADVICE r6).
-_ADMIT_CACHES: list[DataFrame] = []
-
-
-def release_admit_caches() -> int:
-    """Unpersist every live ``semantic_admit`` cache; returns how many.
-    Call only when all previously returned ``kept`` frames are done
-    (collected/written): a later action on one would re-run the
-    within-batch cosine join — against the ALREADY-APPENDED index for
-    ``append=True`` batches, which self-matches and corrupts results."""
-    n = len(_ADMIT_CACHES)
-    for df in _ADMIT_CACHES:
-        try:
-            df.unpersist()
-        except Exception:
-            pass
-    _ADMIT_CACHES.clear()
-    return n
-
-
 def semantic_admit(
     index: IvfIndex,
     new_embeddings: DataFrame,
@@ -834,7 +807,50 @@ def semantic_admit(
     A new vector is dropped iff a smaller-id batch sibling or ANY
     stored vector in its cell has cosine ≥ ``threshold`` (rounded to
     6dp before the compare, cross-engine stable).  Returns
-    ``(kept_df_with_cell, stats)``."""
+    ``(kept_df_with_cell, stats)``.
+
+    ``kept`` is MATERIALIZED (a local checkpoint) before the append and
+    the call keeps no caches: a returned frame that still read the index
+    dir would re-run the cross-round join against the grown index, where
+    every admitted vector matches itself at cosine 1.0."""
+    pins: list[DataFrame] = []
+    try:
+        kept_flagged, n_batch, n_within_dropped = _admit_flag_join(
+            index, new_embeddings, threshold, pins
+        )
+        # pinned: the cross-dropped count and `kept` both read it
+        kept_flagged = kept_flagged.persist()
+        pins.append(kept_flagged)
+        n_cross_dropped = kept_flagged.agg(F.count("_xl").alias("x")).first()["x"]
+        kept = (
+            kept_flagged.where(F.col("_xl").isNull())
+            .select(index.id_col, index.vec_col, "cell")
+            .localCheckpoint(eager=True)
+        )
+        n_kept = n_batch - n_within_dropped - n_cross_dropped
+        if append and n_kept:
+            index.append(kept, cell_col="cell")
+    finally:
+        for df in pins:
+            df.unpersist()
+    stats = {
+        "batch": n_batch,
+        "within_dropped": n_within_dropped,
+        "cross_dropped": n_cross_dropped,
+        "admitted": n_kept,
+    }
+    return kept, stats
+
+
+def _admit_flag_join(
+    index: IvfIndex, new_embeddings: DataFrame, threshold: float,
+    pins: list[DataFrame],
+) -> tuple[DataFrame, int, int]:
+    """:func:`semantic_admit` up to its cross-round join.  Returns
+    ``(kept_flagged, n_batch, n_within_dropped)``: the lazy
+    within-batch survivors, flagged ``_xl`` where a stored vector
+    duplicates them.  Every frame it persists is appended to ``pins``
+    for the caller to unpersist."""
     idc, vc = index.id_col, index.vec_col
     cell_ids = sorted(index.centroids)
     cents = [index.centroids[c] for c in cell_ids]
@@ -849,6 +865,7 @@ def semantic_admit(
     assigned = assigned.select(
         idc, "cell", vc, _norm(F.col(vc)).alias("_n")
     ).persist()
+    pins.append(assigned)
 
     a = assigned.select(
         F.col(idc).alias("id_a"), "cell",
@@ -871,24 +888,20 @@ def semantic_admit(
     # FLAG-join instead of anti-join (r13, guide §2.4 fewer passes):
     # a left join against the distinct loser ids keeps every batch row
     # once, so ONE aggregation job returns n_batch, the within-dropped
-    # count AND the survivors' probe cells — the r12 shape spent a
-    # whole separate job on `assigned.count()` and the caller's later
-    # action re-ran the cross join.  Survivor rows are `_wl IS NULL`
-    # (join key non-null, right side distinct), identical to the old
-    # left_anti.  Persisted: the stats aggregate and the cross-round
-    # probe below both consume it; delta-sized, released via
-    # stats["release"] / release_admit_caches (ADVICE r6 lifecycle).
+    # count AND the survivors' probe cells.  Survivor rows are
+    # `_wl IS NULL` (join key non-null, right side distinct), identical
+    # to a left_anti.  Pinned: the stats aggregate and the cross-round
+    # probe below both consume it.
     flagged = assigned.join(F.broadcast(within_losers), idc, "left").persist()
-    _row = flagged.agg(
+    pins.append(flagged)
+    row = flagged.agg(
         F.count("*").alias("n_batch"),
         F.count("_wl").alias("n_within_dropped"),
         F.collect_set(F.when(F.col("_wl").isNull(), F.col("cell"))).alias(
             "cells"
         ),
     ).first()
-    n_batch = _row["n_batch"]
-    n_within_kept = n_batch - _row["n_within_dropped"]
-    delta_cells = [int(c) for c in _row["cells"]]
+    delta_cells = [int(c) for c in row["cells"]]
     kept_within = flagged.where(F.col("_wl").isNull()).drop("_wl")
     stored = index.vectors().filter(F.col("cell").isin(delta_cells))
     st = stored.select(
@@ -906,48 +919,7 @@ def semantic_admit(
         .select(F.col(idc), F.lit(True).alias("_xl"))
         .distinct()
     )
-    # same flag-join fusion for the cross-round stage: one count(_xl)
-    # aggregate replaces the separate kept.count() job, and the caller's
-    # terminal action on `kept` reads this cache instead of re-running
-    # the stored-side cosine join (which for append=True would be a
-    # correctness hazard after the index mutation, not just a slow path)
-    kept_flagged = kept_within.join(
-        F.broadcast(cross_losers), idc, "left"
-    ).persist()
-    n_cross_dropped = kept_flagged.agg(F.count("_xl").alias("x")).first()["x"]
-    n_kept = n_within_kept - n_cross_dropped
-    kept = (
-        kept_flagged.where(F.col("_xl").isNull()).select(idc, vc, "cell")
-    )
-    stats = {
-        "batch": n_batch,
-        "within_dropped": n_batch - n_within_kept,
-        "cross_dropped": n_cross_dropped,
-        "admitted": n_kept,
-    }
-    if append and n_kept:
-        index.append(kept, cell_col="cell")
-    assigned.unpersist()
-    # the flag-joined frames stay cached ON PURPOSE: the returned `kept`
-    # plan reads through them and the caller's collect comes next.  Both
-    # are delta-sized (bounded by the batch regime, never corpus-sized)
-    # and LRU-evictable.  The caller releases them AFTER its terminal
-    # action on `kept`, either per-batch via stats["release"] or in bulk
-    # via release_admit_caches(); otherwise a long-lived session
-    # accumulates delta-sized caches per admit batch (ADVICE r6).
-    _ADMIT_CACHES.append(flagged)
-    _ADMIT_CACHES.append(kept_flagged)
-
-    def _release() -> None:
-        for f in (flagged, kept_flagged):
-            try:
-                f.unpersist()
-            except Exception:
-                pass
-            try:
-                _ADMIT_CACHES.remove(f)
-            except ValueError:
-                pass  # already drained by release_admit_caches()
-
-    stats["release"] = _release
-    return kept, stats
+    # the same flag-join fusion for the cross-round stage: one
+    # count(_xl) aggregate replaces a separate kept.count() job
+    kept_flagged = kept_within.join(F.broadcast(cross_losers), idc, "left")
+    return kept_flagged, row["n_batch"], row["n_within_dropped"]

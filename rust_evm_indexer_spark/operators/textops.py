@@ -500,7 +500,7 @@ def stupid_backoff_trigram_nll(
     model_df: DataFrame | None = None,
     text_col: str = "text",
     alpha: float = 0.4,
-    trigram_min_count: int = 2,
+    trigram_min_count: float = 2,
 ) -> DataFrame:
     """Trigram Stupid Backoff with count-cutoff pruning — the full
     Brants et al. 2007 recipe (§4: higher orders become tractable at
@@ -584,7 +584,7 @@ def stupid_backoff_trigram_nll(
                                      element_at(ws, i + 2) AS w3))) AS tg
                 FROM {v_model} WHERE size(ws) >= 3)
           GROUP BY tg.w1, tg.w2, tg.w3
-          HAVING count(*) >= {int(trigram_min_count)}),
+          HAVING count(*) >= {trigram_min_count!r}),
         triples AS (
           SELECT doc_id, tg.w1 AS w1, tg.w2 AS w2, tg.w3 AS w3
           FROM (SELECT doc_id, explode(transform(sequence(1, size(ws) - 2),
@@ -660,7 +660,7 @@ def stupid_backoff_ngram_nll(
     text_col: str = "text",
     alpha: float = 0.4,
     n: int = 4,
-    min_count: int = 2,
+    min_count: float = 2,
 ) -> DataFrame:
     """Order-``n`` Stupid Backoff with count-cutoff pruning — the full
     Brants et al. 2007 scheme at arbitrary order (Google ran n=5), one
@@ -722,7 +722,7 @@ def stupid_backoff_ngram_nll(
         keys = ", ".join(f"g.g{j + 1} AS g{j + 1}" for j in range(o))
         gb = ", ".join(f"g.g{j + 1}" for j in range(o))
         having = (
-            f"\n          HAVING count(*) >= {int(min_count)}" if o >= 3 else ""
+            f"\n          HAVING count(*) >= {min_count!r}" if o >= 3 else ""
         )
         gram_ctes.append(
             f"t{o} AS (\n"

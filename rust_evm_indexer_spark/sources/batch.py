@@ -22,34 +22,41 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..schemas import DRIVER_TABLES, EVM_SCHEMAS
+from ..util import SCOPE
 
-# Session-level TABLE-PLAN memo (optimization guide §1.2/§6: planning and
-# file-listing cost is driver-side, single-process work — a real engine
-# resolves a table once per session through its catalog, not once per
-# query).  ``spark.read.parquet`` costs ~150 ms per call on this host
+# Application-level TABLE-PLAN memo (optimization guide §1.2/§6: planning
+# and file-listing cost is driver-side, single-process work — a real
+# engine resolves a table once per session through its catalog, not once
+# per query).  ``spark.read.parquet`` costs ~150 ms per call on this host
 # (file listing + footer schema read + relation resolution), and a full
 # catalog drive issues ~200 such calls for the same ten immutable files.
-# The memo stores the LAZY DataFrame (logical plan + schema) only — no
-# rows, no ``.persist()`` — so every downstream action still scans the
-# parquet from disk; this is metadata caching, the same category as
-# Spark's own session-scoped FileStatusCache.  Keyed by file identity
-# (size + mtime) so a rewritten fixture invalidates naturally.
-_TABLE_PLAN_MEMO: dict[tuple, DataFrame] = {}
+# The memo (util.SCOPE.memo) stores the LAZY DataFrame (logical plan +
+# schema) only — no rows, no ``.persist()`` — so every downstream action
+# still scans the parquet from disk; this is metadata caching, the same
+# category as Spark's own session-scoped FileStatusCache.  Keyed by file
+# identity so a rewritten fixture invalidates naturally.
 
 
-def _memo_key(spark: SparkSession, path: Path, extra: str = "") -> tuple | None:
+def _plan_key(kind: str, path: Path) -> tuple | None:
+    """A file keys on its size + mtime.  A directory keys on its data
+    files, found RECURSIVELY (cell-partitioned exports have no top-level
+    files, and a rewritten cell subdir does not touch the parent's
+    mtime): their count, total bytes and newest mtime, so an append, a
+    rewrite or a deletion all re-resolve the plan."""
     try:
-        st = path.stat()
+        if path.is_dir():
+            sts = [f.stat() for f in path.rglob("*.parquet")]
+            ident = (
+                len(sts),
+                sum(st.st_size for st in sts),
+                max((st.st_mtime_ns for st in sts), default=0),
+            )
+        else:
+            st = path.stat()
+            ident = (st.st_size, st.st_mtime_ns)
     except OSError:
         return None
-    app = spark.sparkContext.applicationId
-    # evict dead-session entries (ADVICE r12): keys from stopped Spark
-    # sessions pin DataFrame/py4j references to dead JVMs and would
-    # otherwise accumulate forever across sessions in one process
-    stale = [k for k in _TABLE_PLAN_MEMO if k[0] != app]
-    for k in stale:
-        _TABLE_PLAN_MEMO.pop(k, None)
-    return (app, str(path), st.st_size, st.st_mtime_ns, extra)
+    return (kind, str(path), *ident)
 
 
 def load_driver_table(spark: SparkSession, sf_dir: str | Path, name: str) -> DataFrame:
@@ -66,40 +73,26 @@ def load_driver_table(spark: SparkSession, sf_dir: str | Path, name: str) -> Dat
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     path = Path(sf_dir) / f"{name}.parquet"
-    key = _memo_key(spark, path)
-    if key is not None and key in _TABLE_PLAN_MEMO:
-        return _TABLE_PLAN_MEMO[key]
-    df = spark.read.parquet(str(path))
-    if name == "events" and isinstance(df.schema["ts"].dataType, T.LongType):
-        df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    if key is not None:
-        _TABLE_PLAN_MEMO[key] = df
-    return df
+
+    def read() -> DataFrame:
+        df = spark.read.parquet(str(path))
+        if name == "events" and isinstance(df.schema["ts"].dataType, T.LongType):
+            df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
+        return df
+
+    return SCOPE.bind(spark).memo(_plan_key("driver", path), read)
 
 
 def read_parquet_memo(spark: SparkSession, path: str | Path) -> DataFrame:
     """``spark.read.parquet`` through the session table-plan memo — for
     immutable materialized exports (PQ codes, IVF stores, fixture
-    snapshots) that many catalog entries re-resolve per call.  For a
-    directory the key uses the newest data-file mtime, so a regenerated
-    export invalidates naturally."""
+    snapshots) that many catalog entries re-resolve per call.  A
+    regenerated, appended or pruned export invalidates naturally
+    (:func:`_plan_key`)."""
     p = Path(path)
-    anchor = p
-    if p.is_dir():
-        # RECURSIVE glob (ADVICE r12): cell-partitioned exports
-        # (codes_by_cell*/cell=N/part.parquet) have no top-level data
-        # files, and a rewritten cell subdir does not touch the parent
-        # dir's mtime — the newest nested data file is the honest
-        # freshness anchor
-        files = sorted(p.rglob("*.parquet"), key=lambda f: f.stat().st_mtime_ns)
-        anchor = files[-1] if files else p
-    key = _memo_key(spark, anchor, extra=f"dir:{p}")
-    if key is not None and key in _TABLE_PLAN_MEMO:
-        return _TABLE_PLAN_MEMO[key]
-    df = spark.read.parquet(str(p))
-    if key is not None:
-        _TABLE_PLAN_MEMO[key] = df
-    return df
+    return SCOPE.bind(spark).memo(
+        _plan_key("parquet", p), lambda: spark.read.parquet(str(p))
+    )
 
 
 def load_driver_tables(
@@ -122,12 +115,8 @@ def load_evm_tables(spark: SparkSession, fixture_dir: str | Path) -> dict[str, D
     for name, schema in EVM_SCHEMAS.items():
         path = Path(fixture_dir) / f"{name}.parquet"
         if path.exists():
-            key = _memo_key(spark, path, extra="evm")
-            if key is not None and key in _TABLE_PLAN_MEMO:
-                out[name] = _TABLE_PLAN_MEMO[key]
-                continue
-            df = spark.read.schema(schema).parquet(str(path))
-            if key is not None:
-                _TABLE_PLAN_MEMO[key] = df
-            out[name] = df
+            out[name] = SCOPE.bind(spark).memo(
+                _plan_key("evm", path),
+                lambda: spark.read.schema(schema).parquet(str(path)),
+            )
     return out

@@ -26,6 +26,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..util import persist_shared
+
 #: the engine-wide documents shape (TESTDATA.md / documents.parquet)
 DOCUMENTS_SCHEMA = T.StructType(
     [
@@ -64,8 +66,9 @@ def read_jsonl_documents(
         .json(str(path))
     )
     # PERMISSIVE parsing needs the corrupt column materialized before
-    # filtering on it (Spark requires a cache/select boundary)
-    raw = raw.cache()
+    # filtering on it (Spark requires a cache/select boundary); pinned
+    # until the session scope's release
+    raw = persist_shared(raw)
     corrupt = raw.where(F.col(_CORRUPT).isNotNull()).select(
         F.col(_CORRUPT).alias("raw_line")
     )
@@ -98,14 +101,14 @@ def read_csv_documents(
         list(DOCUMENTS_SCHEMA.fields)
         + [T.StructField(_CORRUPT, T.StringType(), True)]
     )
-    raw = (
+    raw = persist_shared(  # same corrupt-column boundary as JSONL
         spark.read.schema(read_schema)
         .option("mode", "PERMISSIVE")
         .option("columnNameOfCorruptRecord", _CORRUPT)
         .option("sep", sep)
         .option("header", "true")
         .csv(str(path))
-    ).cache()
+    )
     corrupt = raw.where(F.col(_CORRUPT).isNotNull()).select(
         F.col(_CORRUPT).alias("raw_line")
     )

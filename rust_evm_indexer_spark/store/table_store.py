@@ -1540,8 +1540,8 @@ class TableStore:
         # cores) so a 4-table micro-batch costs ~one write's wall time,
         # not four.  Atomicity is untouched: nothing is visible until
         # the single manifest swap, and any write failure raises before
-        # the swap (measured: tip-following cycle 3.0 s → see
-        # tools/ingest_throughput.py).
+        # the swap (tip-cycle timings: ``perfbench/run.py --workload
+        # index_lifecycle``).
         from concurrent.futures import ThreadPoolExecutor
 
         items = list(writes.items())

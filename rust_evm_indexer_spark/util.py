@@ -4,11 +4,108 @@ from __future__ import annotations
 
 import tempfile
 import zipfile
+from collections.abc import Callable
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 
-_SHIPPED: set[int] = set()
+
+class SessionScope:
+    """Everything the engine keeps between calls, for ONE Spark
+    application.  There are exactly two lifetimes:
+
+    - until :meth:`release` — pinned multi-consumer frames (:meth:`pin`),
+      staged-SQL build views (:meth:`view`) and keyed frames or index
+      objects shared across calls (:meth:`frame`: shingle scans, capped
+      pair lists, IVF indexes).  ``catalog.clear_session_caches()`` is
+      this release; the cold bench calls it between entries so each
+      entry pays its own scans.
+    - the whole application — driver-side metadata memos (:meth:`memo`:
+      lazy table plans, scan-spread decisions, the shipped-package
+      flag).  They hold no rows and no pins, the same category as
+      Spark's own FileStatusCache, which a cache clear keeps too.
+
+    :meth:`bind` drops both when ``sparkContext.applicationId`` changes:
+    a stopped application's frames point into a dead JVM."""
+
+    def __init__(self) -> None:
+        self._reset(None)
+
+    def _reset(self, app_id: str | None) -> None:
+        self.app_id = app_id
+        self.pins: list[DataFrame] = []
+        self.views: list[tuple[SparkSession, str]] = []
+        self.frames: dict[tuple, object] = {}
+        self.memos: dict[tuple, object] = {}
+        self.view_seq = 0
+
+    def bind(self, spark: SparkSession) -> SessionScope:
+        app_id = spark.sparkContext.applicationId
+        if app_id != self.app_id:
+            self._reset(app_id)
+        return self
+
+    def pin(self, df: DataFrame) -> DataFrame:
+        df = df.persist()
+        self.pins.append(df)
+        return df
+
+    def view(self, df: DataFrame, prefix: str) -> str:
+        self.view_seq += 1
+        name = f"_{prefix}_{self.view_seq}"
+        df.createOrReplaceTempView(name)
+        self.views.append((df.sparkSession, name))
+        return name
+
+    def frame(self, key: tuple, build: Callable[[], object]):
+        if key not in self.frames:
+            self.frames[key] = build()
+        return self.frames[key]
+
+    def memo(self, key: tuple | None, build: Callable[[], object]):
+        if key is None:
+            return build()
+        if key not in self.memos:
+            self.memos[key] = build()
+        return self.memos[key]
+
+    def release(self) -> None:
+        """Unpersist the pins, THEN drop the views, then forget the
+        keyed frames.  Views wait for this release because dropTempView
+        also uncaches the view's plan: dropped inline, a view whose plan
+        is a live pin unpins it mid-entry (3.4 s -> 8.6 s on
+        dedup_minhash_lsh).  Metadata memos survive."""
+        for df in self.pins:
+            try:
+                df.unpersist()
+            except Exception:
+                pass
+        for spark, name in self.views:
+            try:
+                spark.catalog.dropTempView(name)
+            except Exception:
+                pass
+        self.pins, self.views, self.frames = [], [], {}
+
+
+SCOPE = SessionScope()
+
+
+def persist_shared(df: DataFrame) -> DataFrame:
+    """Persist an operator-internal frame that feeds SEVERAL consumers
+    of one plan (exploded grams, winnowed fingerprints, span carves):
+    without it the generator subtree is embedded once per consumer.
+    Default MEMORY_AND_DISK level, so it spills rather than OOMs;
+    held until :meth:`SessionScope.release`."""
+    return SCOPE.bind(df.sparkSession).pin(df)
+
+
+def register_temp_view(df: DataFrame, prefix: str) -> str:
+    """Register ``df`` as a uniquely-named temp view for a staged-SQL
+    build (one ``spark.sql`` parse instead of eager re-analysis per
+    DataFrame op), dropped at :meth:`SessionScope.release` — never
+    inline (see there).  Returns the view name."""
+    return SCOPE.bind(df.sparkSession).view(df, prefix)
 
 
 def spread_small_input(
@@ -43,92 +140,18 @@ def spread_small_input(
     # same parquet path share one probe; bounded by the number of
     # distinct source frames in a session (a dozen), never data-scaled.
     try:
-        ck = (sc.applicationId, df._jdf.queryExecution().analyzed().semanticHash(), target)
+        ck = ("spread", df._jdf.queryExecution().analyzed().semanticHash(), target)
     except Exception:
         ck = None
-    small = _SPREAD_DECISIONS.get(ck) if ck is not None else None
-    if small is None:
-        try:
-            small = df.rdd.getNumPartitions() * 2 < target
-        except Exception:  # non-scan frames with exotic plans: leave as-is
-            return df
-        if ck is not None:
-            _SPREAD_DECISIONS[ck] = small
+    try:
+        small = SCOPE.bind(spark).memo(
+            ck, lambda: df.rdd.getNumPartitions() * 2 < target
+        )
+    except Exception:  # non-scan frames with exotic plans: leave as-is
+        return df
     if not small:
         return df
     return df.repartition(target, key) if key else df.repartition(target)
-
-
-_SPREAD_DECISIONS: dict[tuple, bool] = {}
-
-# Operator-internal shared frames (exploded grams, winnowed
-# fingerprints, span carves) that feed SEVERAL consumers of one plan:
-# without a persist the whole generator subtree is embedded once per
-# consumer and the corpus pays 2-4 redundant explode passes.  The
-# frames are bounded multiples of their input partition sizes and use
-# Spark's default MEMORY_AND_DISK level, so they spill rather than OOM
-# at scale; the catalog's clear_session_caches drains the registry
-# between cold-bench entries so no state leaks across measurements.
-_SHARED_PLAN_CACHES: list[DataFrame] = []
-
-
-def persist_shared(df: DataFrame) -> DataFrame:
-    """Persist an operator-internal multi-consumer frame and register
-    it for session-level release (release_shared_caches)."""
-    df = df.persist()
-    _SHARED_PLAN_CACHES.append(df)
-    return df
-
-
-def release_shared_caches() -> int:
-    """Unpersist every registered shared frame; returns how many."""
-    n = len(_SHARED_PLAN_CACHES)
-    for df in _SHARED_PLAN_CACHES:
-        try:
-            df.unpersist()
-        except Exception:
-            pass
-    _SHARED_PLAN_CACHES.clear()
-    return n
-
-
-#: (session, view name) pairs registered by staged-SQL plan builders for
-#: DEFERRED cleanup — drained by drop_registered_views() via
-#: catalog.clear_session_caches.  Never drop a build view inline:
-#: dropTempView invalidates the cache of the view's plan, so dropping a
-#: view whose plan is a persist_shared pin unpins it mid-entry
-#: (measured 3.4 s -> 8.6 s on dedup_minhash_lsh, r13).
-_SESSION_VIEWS: list[tuple[SparkSession, str]] = []
-
-_VIEW_SEQ = 0
-
-
-def register_temp_view(df: DataFrame, prefix: str) -> str:
-    """Register ``df`` as a uniquely-named session temp view for a
-    staged-SQL build (one ``spark.sql`` parse instead of eager
-    re-analysis per DataFrame op) and enqueue it for deferred drop.
-    Returns the view name."""
-    global _VIEW_SEQ
-    _VIEW_SEQ += 1
-    name = f"_{prefix}_{_VIEW_SEQ}"
-    df.createOrReplaceTempView(name)
-    _SESSION_VIEWS.append((df.sparkSession, name))
-    return name
-
-
-def drop_registered_views() -> int:
-    """Drop every registered staged-SQL build view; returns how many.
-    Safe only after the corresponding pinned frames are released
-    (catalog.clear_session_caches orders it that way)."""
-    n = 0
-    for spark, v in _SESSION_VIEWS:
-        try:
-            spark.catalog.dropTempView(v)
-            n += 1
-        except Exception:
-            pass
-    _SESSION_VIEWS.clear()
-    return n
 
 
 def ensure_package_shipped(spark: SparkSession) -> None:
@@ -141,15 +164,16 @@ def ensure_package_shipped(spark: SparkSession) -> None:
     this by running with the repo as cwd; a driver launched elsewhere
     does not).  ``addPyFile`` of a package zip is the cluster-correct
     fix: Spark distributes it to every executor and prepends it to the
-    worker path.  Idempotent per SparkContext.
+    worker path.  Once per Spark application (a scope memo).
     """
-    key = id(spark.sparkContext)
-    if key in _SHIPPED:
-        return
+    SCOPE.bind(spark).memo(("shipped",), lambda: _ship_package(spark))
+
+
+def _ship_package(spark: SparkSession) -> bool:
     pkg_dir = Path(__file__).resolve().parent
     zpath = Path(tempfile.mkdtemp(prefix="pkgship-")) / "rust_evm_indexer_spark.zip"
     with zipfile.ZipFile(zpath, "w") as z:
         for p in sorted(pkg_dir.rglob("*.py")):
             z.write(p, f"{pkg_dir.name}/{p.relative_to(pkg_dir)}")
     spark.sparkContext.addPyFile(str(zpath))
-    _SHIPPED.add(key)
+    return True

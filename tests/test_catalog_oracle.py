@@ -47,62 +47,65 @@ def test_entry_smoke(spark):
 # the data (VERDICT r6 "what's wrong" #4).
 _EXPECTED_OUT_OF_WINDOW = {
     "anti_join_not_exists",  # newest green r12
-    "approx_distinct_users",  # newest green r10
     "approx_quantile_p90",  # newest green r12
     "asof_join_events",  # newest green r12
     "bpe_token_counts",  # newest green r11
     "chunk_documents",  # newest green r12
     "cms_user_frequency",  # newest green r12
-    "corpus_length_histogram",  # newest green r10
     "corpus_shuffle_shards",  # newest green r11
-    "corpus_zipf_slope",  # newest green r10
     "cube_lineitem",  # newest green r12
     "decontaminate_ngram",  # newest green r12
     "dedup_exact",  # newest green r11
+    "dedup_ngram_jaccard",  # newest green r13
+    "dedup_simhash",  # newest green r13
     "dedup_spans_global",  # newest green r12
     "dedup_winnowing",  # newest green r12
     "distinct_agg",  # newest green r12
     "doc_fingerprint",  # newest green r12
     "embedding_pca_whiten",  # newest green r12
+    "events_gapfill_locf",  # newest green r13
     "events_hourly_rollup",  # newest green r11
     "events_sessionize",  # newest green r12
     "events_sliding_rollup",  # newest green r12
     "evm_address_activity",  # newest green r12
     "evm_block_activity",  # newest green r12
     "evm_join_enriched",  # newest green r11
-    "evm_logs_address_range",  # newest green r11
-    "evm_logs_blockhash_override",  # newest green r11
-    "evm_logs_cursor_page",  # newest green r11
     "evm_transfer_volume",  # newest green r11
     "evm_wei_sum_exact",  # newest green r11
     "gopher_quality",  # newest green r12
     "interval_join_events",  # newest green r12
     "json_agg_by_key",  # newest green r12
     "json_extract_props",  # newest green r12
-    "jsonl_ingest",  # newest green r11
     "lang_id",  # newest green r12
-    "logs_filter_conj",  # newest green r11
-    "logs_keyset_page",  # newest green r11
-    "logs_offset_page",  # newest green r11
     "median_per_type",  # newest green r12
     "multimodal_features",  # newest green r11
     "multimodal_frames",  # newest green r12
-    "multimodal_meta",  # newest green r10
-    "multimodal_resize",  # newest green r10
     "orders_having",  # newest green r11
     "orders_monthly",  # newest green r12
     "pack_sequences",  # newest green r12
     "pii_redact",  # newest green r12
-    "pivot_order_status",  # newest green r10
+    "q10_returned_items",  # newest green r13
     "q11_important_parts",  # newest green r11
+    "q12_late_shipments",  # newest green r13
     "q13_order_distribution",  # newest green r11
     "q14_promo_revenue",  # newest green r11
     "q15_top_supplier",  # newest green r11
     "q16_supplier_counts",  # newest green r11
+    "q17_small_qty_avg",  # newest green r13
+    "q18_large_orders",  # newest green r13
     "q19_disjunctive",  # newest green r11
+    "q1_pricing_summary",  # newest green r13
+    "q20_excess_sellers",  # newest green r13
     "q21_sole_supplier",  # newest green r11
     "q22_idle_customers",  # newest green r11
     "q2_min_cost_supplier",  # newest green r11
+    "q3_shipping_priority",  # newest green r13
+    "q4_priority_check",  # newest green r13
+    "q5_local_supplier",  # newest green r13
+    "q6_forecast_revenue",  # newest green r13
+    "q7_nation_volume",  # newest green r13
+    "q8_market_share",  # newest green r13
+    "q9_product_profit",  # newest green r13
     "quality_classifier_scores",  # newest green r12
     "quality_score",  # newest green r12
     "range_join_events",  # newest green r12
@@ -111,28 +114,25 @@ _EXPECTED_OUT_OF_WINDOW = {
     "rollup_orders",  # newest green r12
     "sample_stratified",  # newest green r12
     "sample_weighted",  # newest green r11
+    "semantic_dedup",  # newest green r13
     "semi_join_exists",  # newest green r12
     "set_ops_customers",  # newest green r12
+    "similarity_ivf_topk",  # newest green r13
     "similarity_knn_join",  # newest green r11
     "similarity_opq_residual_knn_join",  # newest green r11
     "similarity_topk",  # newest green r11
-    "skew_salted_topk",  # newest green r10
-    "source_mix_weights",  # newest green r10
-    "stats_lag",  # newest green r11
     "store_changefeed_deletes",  # newest green r12
     "store_compacted_logs",  # newest green r12
     "store_logs_cursor_page",  # newest green r11
-    "store_time_travel",  # newest green r10
+    "store_projection_logs",  # newest green r13
+    "store_stats_manifest",  # newest green r13
     "store_topic0_dict_logs",  # newest green r11
     "store_tx_bloom_lookup",  # newest green r12
     "store_upsert_docs",  # newest green r11
     "store_zorder_logs",  # newest green r12
     "text_stats",  # newest green r11
     "token_counts",  # newest green r11
-    "top1_latest",  # newest green r11
     "unpivot_part_metrics",  # newest green r11
-    "window_lag_delta",  # newest green r10
-    "window_running_sum",  # newest green r10
     "window_topk_per_group",  # newest green r12
 }
 

@@ -735,12 +735,19 @@ def test_semantic_admit_stored_side_partition_pruned_never_shuffled(
     )
     idx = _seed_index(spark, tmp_path, emb)
     batch = emb.filter((F.col("vec_id") >= 300) & (F.col("vec_id") < 310))
-    kept, _ = sim.semantic_admit(idx, batch, threshold=0.999999, append=False)
-    pf = partition_filters(kept)
-    assert any("cell" in f for f in pf), f"no partition filter: {pf}"
-    plan = physical_plan(kept, "simple")
-    assert "BroadcastHashJoin" in plan
-    assert "CartesianProduct" not in plan
+    # the cross-round join as semantic_admit builds it, before `kept`
+    # is materialized (the checkpointed frame no longer shows the plan)
+    pins = []
+    try:
+        joined, _, _ = sim._admit_flag_join(idx, batch, 0.999999, pins)
+        pf = partition_filters(joined)
+        assert any("cell" in f for f in pf), f"no partition filter: {pf}"
+        plan = physical_plan(joined, "simple")
+        assert "BroadcastHashJoin" in plan
+        assert "CartesianProduct" not in plan
+    finally:
+        for df in pins:
+            df.unpersist()
 
 
 # --- round 6c: Stupid Backoff bigram LM + RAG chunking --------------------
@@ -930,10 +937,15 @@ def test_winnowing_density_and_short_docs(spark):
     assert 1 <= per[1] <= 5
 
 
-def test_semantic_admit_caches_are_releasable(spark, tmp_path):
-    """Each admit batch persists one delta-sized frame; a long-lived
-    session must be able to release them — per-batch via
-    stats["release"] or in bulk via release_admit_caches() (ADVICE r6)."""
+def test_semantic_admit_keeps_no_caches_and_kept_never_reads_the_index(
+    spark, tmp_path
+):
+    """The "cached, then written" bug class: once semantic_admit returns,
+    none of its frames is still cached, and the returned `kept` plan has
+    no file scan under the index dir the call appended to — so acting
+    on `kept` after the append can never re-run the cross-round join
+    against the grown index."""
+    from rust_evm_indexer_spark.catalog import clear_session_caches
     from rust_evm_indexer_spark.operators import similarity as sim
     from rust_evm_indexer_spark.sources.batch import load_driver_table
 
@@ -943,24 +955,15 @@ def test_semantic_admit_caches_are_releasable(spark, tmp_path):
         "vec_id", "embedding"
     )
     idx = _seed_index(spark, tmp_path, emb)
-    before = len(sim._ADMIT_CACHES)
-
-    b1 = emb.filter((F.col("vec_id") >= 300) & (F.col("vec_id") < 305))
-    kept1, stats1 = sim.semantic_admit(idx, b1, append=False)
-    kept1.collect()  # terminal action
-    assert len(sim._ADMIT_CACHES) == before + 1
-    assert sim._ADMIT_CACHES[-1].storageLevel.useMemory
-    cached = sim._ADMIT_CACHES[-1]
-    stats1["release"]()
-    assert len(sim._ADMIT_CACHES) == before
-    assert not cached.storageLevel.useMemory  # actually unpersisted
-    stats1["release"]()  # idempotent
-
-    b2 = emb.filter((F.col("vec_id") >= 310) & (F.col("vec_id") < 315))
-    kept2, _ = sim.semantic_admit(idx, b2, append=False)
-    kept2.collect()
-    assert sim.release_admit_caches() >= 1
-    assert len(sim._ADMIT_CACHES) == 0
+    clear_session_caches()
+    spark.catalog.clearCache()  # start from an empty cache manager
+    batch = emb.filter((F.col("vec_id") >= 300) & (F.col("vec_id") < 305))
+    kept, stats = sim.semantic_admit(idx, batch, threshold=0.999999)
+    assert stats["admitted"] == 5
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+    index_dir = str(idx.index_dir)
+    assert not [f for f in kept.inputFiles() if index_dir in f]
+    assert len(kept.collect()) == stats["admitted"]  # after the append
 
 
 # --- round 7: trigram Stupid Backoff with count-cutoff pruning -------------
@@ -1022,6 +1025,22 @@ def test_stupid_backoff_trigram_pruning_lever(spark):
     assert prune > keep
 
 
+def test_backoff_fractional_cutoff_is_not_truncated(spark):
+    """A fractional count cutoff compares as given: at 2.5 the count-2
+    trigram (p,q,r) is pruned exactly as at 3, never retained as at 2
+    (``int(2.5)`` used to turn it into 2)."""
+    df = spark.createDataFrame([("m", "p q r p q r")], ["doc_id", "text"])
+
+    def nll(cut):
+        return (
+            tx.stupid_backoff_trigram_nll(df, trigram_min_count=cut).first()["avg_nll"],
+            tx.stupid_backoff_ngram_nll(df, n=3, min_count=cut).first()["avg_nll"],
+        )
+
+    assert nll(2.5) == nll(3)
+    assert nll(2.5) != nll(2)
+
+
 @pytest.mark.slow
 def test_semantic_gate_index_growth_equals_survivors(spark, tmp_path):
     """The full three-stage 'only the delta pays' admission path
@@ -1068,7 +1087,6 @@ def test_semantic_gate_index_growth_equals_survivors(spark, tmp_path):
         grown = PQ.ivfpq_append(
             idx, cb, codes_dir, kept.select("vec_id", "embedding")
         )
-        stats["release"]()
         now = spark.read.parquet(str(codes_dir)).count()
         # this round's index growth == this round's semantic survivors
         assert grown == stats["admitted"]

@@ -743,19 +743,20 @@ def test_minhash_staged_tail_pinned_and_keyed(spark):
     assert plan.count("SortMergeJoin") <= 1, plan
 
 
-def test_semantic_admit_kept_served_from_cache(spark):
-    """semantic_admit's returned frame (r13 flag-join fusion) must read
-    the pinned flag-joined cache — the caller's terminal action may NOT
-    re-run the stored-side cosine join (for append=True batches that
-    re-execution would self-match against the mutated index: a
-    correctness hazard, not just a slow path).  Lock: the first Join in
-    the returned plan, if any, sits BELOW the first InMemoryTableScan."""
+def test_semantic_admit_kept_served_from_checkpoint(spark):
+    """semantic_admit's returned frame is materialized (a local
+    checkpoint) before the index append — the caller's terminal action
+    may NOT re-run the stored-side cosine join (after an append=True
+    batch that re-execution would self-match against the mutated index:
+    a correctness hazard, not just a slow path).  Lock: the returned
+    plan is one scan of the checkpointed rows — no join, no file scan,
+    and no cache it depends on."""
     df = CATALOG["semantic_admit_delta"].fn(spark, SF)
     plan = physical_plan(df, "simple")
-    imts = plan.find("InMemoryTableScan")
-    join = plan.find("Join")
-    assert imts != -1, plan
-    assert join == -1 or join > imts, plan[:2000]
+    assert "ExistingRDD" in plan, plan
+    assert "Join" not in plan, plan[:2000]
+    assert "InMemoryTableScan" not in plan, plan
+    assert "FileScan" not in plan, plan
 
 
 def test_triangle_count_stays_unpinned_and_keyed(spark):

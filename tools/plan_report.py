@@ -35,7 +35,7 @@ ENTRIES = [
     ("similarity_ivfpq_topk", "partition-pruned cell scan, pure-JVM ADC lookups"),
     ("similarity_opq_residual_topk", "rotated residual ADC: per-cell corrections, unioned pruned scans"),
     ("lm_stupid_backoff_tri", "broadcast vocab + key-partitioned n-gram join chain"),
-    ("semantic_admit_delta", "broadcast delta probes partition-pruned stored cells"),
+    ("semantic_admit_delta", "kept is a local checkpoint: one scan of materialized rows, no join or file scan left to re-run"),
     ("corpus_shuffle_shards", "ONE Exchange on shard_id + per-shard sort"),
     ("corpus_zipf_slope", "per-group rank window + DECIMAL-sum regression"),
     ("corpus_length_histogram", "narrow projection + one (group,bucket) shuffle"),
