@@ -25,12 +25,9 @@ from typing import Any
 
 from pyspark.sql import DataFrame
 
-from .operators.logs import (
-    GetLogsFilter,
-    run_get_logs,
-    run_get_logs_from_store,
-)
-from .operators.lookups import get_block, get_stats, get_transaction
+from .operators.logs import GetLogsFilter, run_get_logs_from_store
+from .operators.lookups import IndexerStats, get_block, get_transaction
+from .serving import ArrowServing, ServingFallback
 
 
 def _camel(s: str) -> str:
@@ -51,76 +48,40 @@ class ApiError(Exception):
 
 
 class EvmApi:
-    """Framework-independent handlers (unit-testable without HTTP).
+    """Framework-independent handlers (unit-testable without HTTP) over a
+    :class:`TableStore`, reading LIVE state: every request re-resolves
+    against the CURRENT manifest (the reference serves each request from
+    a fresh pool query, src/api.rs:184), so a commit after construction
+    is visible on /logs, /block and /transaction, /stats always agrees
+    with them, and a vacuum can never strand a request on deleted
+    fragments of a stale snapshot.
 
-    ``store`` (optional) routes ``/stats`` through the TableStore's
-    manifest tier — exact per-fragment row counts summed manifest-side
-    plus the manifest-inline status row, zero Spark jobs at any table
-    size (the reference keeps /stats always-cheap through its index
-    metadata, src/api.rs:243-258).  :meth:`from_store` builds the whole
-    surface over a store."""
+    One route per endpoint: /logs, /block and /transaction try the Arrow
+    latency tier (``serving.py`` — manifest min/max + dict/bloom pruning
+    and parquet row-group pushdown, no Spark job, property-tested
+    result-identical to the Spark route); when too many fragments
+    survive pruning it raises :class:`ServingFallback` and the request
+    takes the Spark route (``get_logs_from_store``: projection routing,
+    cursor-derived fragment pruning).  /stats never leaves the manifest
+    tier."""
 
-    def __init__(
-        self,
-        blocks: DataFrame | None,
-        transactions: DataFrame | None,
-        logs: DataFrame | None,
-        status: DataFrame | None,
-        store=None,
-        fast: bool = True,
-    ):
-        self._blocks = blocks
-        self._transactions = transactions
-        self._logs = logs
-        self.status = status
+    def __init__(self, store):
         self.store = store
-        # store-backed serving tier (serving.py): manifest-pruned Arrow
-        # point/page reads — sub-Spark-job latency, property-tested
-        # equivalent to the Spark route.  `fast=False` forces every
-        # request through Spark (the escape hatch, and what the
-        # equivalence tests compare against).
-        self._serving = None
-        if store is not None and fast:
-            from .serving import ArrowServing
-
-            self._serving = ArrowServing(store)
-        # store-backed: frames resolve lazily against the CURRENT
-        # manifest, cached by (version, table) — version-keyed so a
-        # slow request that read an older CURRENT can only ever insert
-        # under its OWN version's key, never poison a newer version's
-        # slot (the r11 single-version cache had exactly that race
-        # under a threaded WSGI server).  Reads/inserts are plain
-        # GIL-atomic dict ops; the lock only guards pruning.
+        self._serving = ArrowServing(store)
+        # frames resolve lazily against the CURRENT manifest, cached by
+        # (version, table) — version-keyed so a slow request that read
+        # an older CURRENT can only ever insert under its OWN version's
+        # key, never poison a newer version's slot (the r11
+        # single-version cache had exactly that race under a threaded
+        # WSGI server).  Reads/inserts are plain GIL-atomic dict ops;
+        # the lock only guards pruning.
         self._frames: dict[tuple[int, str], DataFrame] = {}
         self._frames_lock = threading.Lock()
-        if status is None and store is None:
-            raise ValueError("EvmApi needs a status DataFrame or a store")
-        if store is None and (
-            blocks is None or transactions is None or logs is None
-        ):
-            raise ValueError("EvmApi without a store needs all three frames")
 
     @classmethod
-    def from_store(cls, store, *, fast: bool = True) -> "EvmApi":
-        """All four endpoints over a :class:`TableStore`, reading LIVE
-        state: every request re-resolves against the CURRENT manifest
-        (the reference serves each request from a fresh pool query,
-        src/api.rs:184), so a commit after construction is visible on
-        /logs, /block and /transaction, /stats always agrees with them,
-        and a vacuum can never strand a request on deleted fragments of
-        a stale snapshot.  /stats never leaves the manifest tier.
-
-        ``fast`` (default) serves /logs, /block and /transaction from
-        the Arrow latency tier (``serving.py``) — manifest min/max +
-        dict/bloom pruning and parquet row-group pushdown with no Spark
-        job, property-tested result-identical to the Spark route.
-        ``fast=False`` routes everything through Spark
-        (``get_logs_from_store``: projection routing, cursor-derived
-        fragment pruning)."""
-        return cls(
-            blocks=None, transactions=None, logs=None, status=None,
-            store=store, fast=fast,
-        )
+    def from_store(cls, store) -> "EvmApi":
+        """All four endpoints over a :class:`TableStore`."""
+        return cls(store)
 
     def _store_frame(self, table: str) -> DataFrame:
         """Manifest-version-cached live frame: one tiny CURRENT read per
@@ -155,18 +116,6 @@ class EvmApi:
                         self._frames.pop(k, None)
         return frame
 
-    @property
-    def blocks(self) -> DataFrame:
-        return self._store_frame("blocks") if self.store is not None and self._blocks is None else self._blocks
-
-    @property
-    def transactions(self) -> DataFrame:
-        return self._store_frame("transactions") if self.store is not None and self._transactions is None else self._transactions
-
-    @property
-    def logs(self) -> DataFrame:
-        return self._store_frame("logs") if self.store is not None and self._logs is None else self._logs
-
     def get_root(self) -> str:
         """GET / — the reference's welcome handler (src/api.rs:92-94)."""
         return (
@@ -197,24 +146,13 @@ class EvmApi:
             )
         except (TypeError, ValueError) as exc:
             raise ApiError(400, f"invalid filter: {exc}") from exc
-        if self._serving is not None and self._logs is None:
-            from .serving import ServingFallback
-
-            try:
-                # latency tier: same pruning tiers, no Spark job
-                page = self._serving.get_logs_page(flt)
-            except ServingFallback:
-                # too many fragments survive pruning (hot key, no
-                # bounds): the Spark route's projection routing and
-                # distributed scan own this shape
-                page = run_get_logs_from_store(self.store, flt)
-        elif self.store is not None and self._logs is None:
-            # store-backed Spark route: per-request source routing
-            # (projection / bloom / dict / cursor pruning) over the
-            # CURRENT manifest
+        try:
+            page = self._serving.get_logs_page(flt)
+        except ServingFallback:
+            # too many fragments survive pruning (hot key, no bounds):
+            # the Spark route's projection routing and distributed scan
+            # own this shape
             page = run_get_logs_from_store(self.store, flt)
-        else:
-            page = run_get_logs(self.logs, flt)
         return {
             "logs": [to_camel_json(r) for r in page.logs],
             "nextCursorBlock": page.next_cursor_block,
@@ -223,15 +161,10 @@ class EvmApi:
 
     def get_block(self, identifier: str) -> dict[str, Any]:
         try:
-            if self._serving is not None and self._blocks is None:
-                from .serving import ServingFallback
-
-                try:
-                    row = self._serving.get_block(identifier)
-                except ServingFallback:
-                    row = get_block(self.blocks, identifier)
-            else:
-                row = get_block(self.blocks, identifier)
+            try:
+                row = self._serving.get_block(identifier)
+            except ServingFallback:
+                row = get_block(self._store_frame("blocks"), identifier)
         except ValueError as exc:
             raise ApiError(400, str(exc)) from exc
         if row is None:
@@ -240,15 +173,10 @@ class EvmApi:
 
     def get_transaction(self, tx_hash: str) -> dict[str, Any]:
         try:
-            if self._serving is not None and self._transactions is None:
-                from .serving import ServingFallback
-
-                try:
-                    row = self._serving.get_transaction(tx_hash)
-                except ServingFallback:
-                    row = get_transaction(self.transactions, tx_hash)
-            else:
-                row = get_transaction(self.transactions, tx_hash)
+            try:
+                row = self._serving.get_transaction(tx_hash)
+            except ServingFallback:
+                row = get_transaction(self._store_frame("transactions"), tx_hash)
         except ValueError as exc:
             raise ApiError(400, str(exc)) from exc
         if row is None:
@@ -256,35 +184,22 @@ class EvmApi:
         return to_camel_json(row)
 
     def get_stats(self) -> dict[str, Any]:
-        if self.store is not None:
-            # manifest tier: counts are per-fragment row sums resolved
-            # store-side (columnar fraglist prune / delta-tail
-            # arithmetic), checkpoint + lag ride the manifest-inline
-            # status row — no Spark job, no file scan (VERDICT r9
-            # item 3; the scan-path get_stats below stays for raw
-            # parquet directories that have no store behind them)
-            from .operators.lookups import IndexerStats
-
-            status = self.store.read_status() or {}
-            last = status.get("last_processed_block")
-            head = status.get("chain_head_at_last_poll")
-            lag = (
-                (head - last)
-                if head is not None and last is not None
-                else None
-            )
-            s = IndexerStats(
-                total_blocks=self.store.table_rows("blocks"),
-                total_transactions=self.store.table_rows("transactions"),
-                total_logs=self.store.table_rows("logs"),
-                last_processed_block=last,
-                chain_head=head,
-                ingestion_lag=lag,
-            )
-        else:
-            s = get_stats(
-                self.blocks, self.transactions, self.logs, self.status
-            )
+        # manifest tier: counts are per-fragment row sums resolved
+        # store-side (columnar fraglist prune / delta-tail arithmetic),
+        # checkpoint + lag ride the manifest-inline status row — no
+        # Spark job, no file scan (VERDICT r9 item 3)
+        status = self.store.read_status() or {}
+        last = status.get("last_processed_block")
+        head = status.get("chain_head_at_last_poll")
+        lag = (head - last) if head is not None and last is not None else None
+        s = IndexerStats(
+            total_blocks=self.store.table_rows("blocks"),
+            total_transactions=self.store.table_rows("transactions"),
+            total_logs=self.store.table_rows("logs"),
+            last_processed_block=last,
+            chain_head=head,
+            ingestion_lag=lag,
+        )
         return to_camel_json(s.__dict__)
 
 

@@ -16,9 +16,9 @@ atomic store commit:
 
 The connector crosses the Python boundary as a JSON string column —
 Arrow-batched both ways, parsed by Spark's ``from_json`` (codegen), so
-the slow path is exactly the network I/O and nothing else.  Receipt
-enrichment happens inside the kernel with the same bounded thread pool
-as the streaming path (O-3/O-4 semantics per partition).
+the slow path is exactly the network I/O and nothing else.  The kernel
+fetches each block through the same :func:`commit.fetch_block` as the
+tip cycle (O-3/O-4: bounded receipt fan-out, retry with backoff).
 
 Each executor retries transient RPC failures (exponential backoff);
 Spark task retries are the backstop, and the store's idempotent commit
@@ -28,7 +28,6 @@ makes a re-run of the whole backfill a no-op.
 from __future__ import annotations
 
 import json
-import time
 from collections.abc import Iterator
 
 import pandas as pd
@@ -37,50 +36,22 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..store import TableStore
+from .commit import fetch_block
 from .normalize import RAW_BLOCK_SCHEMA, explode_raw
 
 
-def _make_fetch_kernel(client, max_receipt_concurrent: int, retries: int, backoff: float):
+def _make_fetch_kernel(client, backoff: float):
     """Build the per-partition fetch kernel (client is pickled to
     executors; a production client opens its HTTP session lazily)."""
 
-    def with_retry(fn, *args):
-        last: Exception | None = None
-        for attempt in range(1, retries + 1):
-            try:
-                return fn(*args)
-            except Exception as exc:  # noqa: BLE001 — connector boundary
-                last = exc
-                if attempt < retries:
-                    time.sleep(backoff * 2 ** (attempt - 1))
-        raise last
-
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from concurrent.futures import ThreadPoolExecutor
-
         for pdf in batches:
             out: list[str] = []
             numbers: list[int] = []
             for n in pdf["id"]:
-                raw = with_retry(client.get_block_with_txs, int(n))
+                raw = fetch_block(client, int(n), backoff=backoff)
                 if raw is None:
                     continue
-                txs = raw.get("transactions") or []
-                with ThreadPoolExecutor(max_workers=max_receipt_concurrent) as pool:
-                    receipts = list(
-                        pool.map(
-                            lambda t: with_retry(
-                                client.get_transaction_receipt, t["hash"]
-                            ),
-                            txs,
-                        )
-                    )
-                raw = {
-                    **raw,
-                    "transactions": [
-                        {**t, "receipt": r} for t, r in zip(txs, receipts)
-                    ],
-                }
                 numbers.append(int(n))
                 out.append(json.dumps(raw))
             yield pd.DataFrame({"number": numbers, "raw_json": out})
@@ -95,8 +66,6 @@ def fetch_range(
     end_block: int,
     *,
     fetch_partitions: int = 8,
-    max_receipt_concurrent: int = 10,
-    retries: int = 3,
     backoff: float = 0.05,
 ) -> DataFrame:
     """Raw nested frame for [start_block, end_block], fetched
@@ -104,7 +73,7 @@ def fetch_range(
     from ..util import ensure_package_shipped
 
     ensure_package_shipped(spark)
-    kernel = _make_fetch_kernel(client, max_receipt_concurrent, retries, backoff)
+    kernel = _make_fetch_kernel(client, backoff)
     fetched = (
         spark.range(start_block, end_block + 1)
         .repartition(fetch_partitions)
@@ -124,7 +93,7 @@ def backfill(
     *,
     indexer_name: str = "evm_backfill",
     fetch_partitions: int = 8,
-    **fetch_kw,
+    backoff: float = 0.05,
 ) -> dict[str, int]:
     """Fetch + normalize + commit a block range atomically.  Returns row
     counts per table.  Idempotent: txn watermark = end_block.
@@ -143,7 +112,7 @@ def backfill(
         start_block,
         end_block,
         fetch_partitions=fetch_partitions,
-        **fetch_kw,
+        backoff=backoff,
     ).persist(StorageLevel.MEMORY_AND_DISK)
     try:
         raw.count()  # force the single materialized fetch

@@ -2,13 +2,13 @@
 normalize → atomic commit.
 
 The batch re-expression of the reference's ingestion loop
-(``src/main.rs:71-337``), one method per operator:
+(``src/main.rs:71-337``):
 
 - O-1/O-2  head discovery + bounded range scan (``BLOCKS_PER_BATCH``);
 - O-3      per-tx receipt enrichment, concurrency-bounded fan-out
            (ThreadPool(10) ≙ ``buffer_unordered(10)``) — connector I/O,
-           like the reference's; at backfill scale the same fetch runs
-           partition-parallel on executors (see streaming module);
+           like the reference's; :func:`fetch_block` is the one fetch,
+           which backfill runs partition-parallel on executors;
 - O-4      retry with exponential backoff (3 attempts, base 2s defaults);
 - O-5/O-6  normalize + explode (``normalize.explode_batch``);
 - O-7..O-9 atomic cross-table commit with the checkpoint *inside* the
@@ -29,7 +29,7 @@ from dataclasses import dataclass
 from pyspark.sql import SparkSession
 
 from ..datagen import INDEXER_NAME
-from ..store import TableStore
+from ..store import MaintenancePolicy, TableStore
 from .normalize import explode_batch
 
 # operating parameters, values per src/main.rs:24-29
@@ -40,13 +40,54 @@ FETCH_RETRIES = 3
 BACKOFF_BASE_SECONDS = 2.0
 
 
+def with_retry(fn, *args, backoff: float):
+    """O-4: call ``fn(*args)``, retrying transient failures with
+    exponential backoff (``src/main.rs:32-62``)."""
+    last_exc: Exception | None = None
+    for attempt in range(1, FETCH_RETRIES + 1):
+        try:
+            return fn(*args)
+        except Exception as exc:  # noqa: BLE001 — connector boundary
+            last_exc = exc
+            if attempt < FETCH_RETRIES:
+                time.sleep(backoff * 2 ** (attempt - 1))
+    raise last_exc
+
+
+def fetch_block(client, number: int, *, backoff: float) -> dict | None:
+    """One block with every transaction's receipt attached, or None when
+    the node does not serve that height.  The single fetch path: the tip
+    cycle calls it on the driver, the backfill kernel on executors.
+
+    O-3: receipts fan out over a bounded pool (``buffer_unordered(10)``,
+    ``src/main.rs:204-227``); a missing receipt leaves status/logs NULL
+    (LEFT OUTER)."""
+    raw = with_retry(client.get_block_with_txs, number, backoff=backoff)
+    if raw is None:
+        return None
+    txs = raw.get("transactions") or []
+    with ThreadPoolExecutor(max_workers=MAX_RECEIPT_CONCURRENT) as pool:
+        receipts = list(
+            pool.map(
+                lambda t: with_retry(
+                    client.get_transaction_receipt, t["hash"], backoff=backoff
+                ),
+                txs,
+            )
+        )
+    return {
+        **raw,
+        "transactions": [{**t, "receipt": r} for t, r in zip(txs, receipts)],
+    }
+
+
 @dataclass
 class CycleResult:
     kind: str  # "idle" | "ingested" | "reorg"
     from_block: int | None = None
     to_block: int | None = None
     rollback_from: int | None = None
-    maintained: dict | None = None  # per-table maintain() reports, if run
+    maintained: dict | None = None  # maintain_store() report, if run
 
 
 class EvmIngester:
@@ -58,66 +99,28 @@ class EvmIngester:
         *,
         start_block: int,
         indexer_name: str = INDEXER_NAME,
-        blocks_per_batch: int = BLOCKS_PER_BATCH,
-        max_receipt_concurrent: int = MAX_RECEIPT_CONCURRENT,
-        retries: int = FETCH_RETRIES,
         backoff_base: float = BACKOFF_BASE_SECONDS,
-        maintain_every_cycles: int | None = None,
-        maintain_max_fragments: int = 8,
+        maintenance_policy: MaintenancePolicy | None = None,
+        maintain_every: int = 8,
     ):
+        if maintain_every < 1:
+            raise ValueError("maintain_every must be >= 1")
         self.spark = spark
         self.client = client
         self.store = store
         self.start_block = start_block
         self.indexer_name = indexer_name
-        self.blocks_per_batch = blocks_per_batch
-        self.max_receipt_concurrent = max_receipt_concurrent
-        self.retries = retries
         self.backoff_base = backoff_base
-        #: scheduled store maintenance: every N ingesting cycles, run
-        #: TableStore.maintain() on each EVM table — streaming ingest
-        #: writes one fragment per batch, and without compaction small
-        #: queries pay scan cost ∝ fragment count.  None = caller owns
-        #: maintenance (the production default at scale is a separate
-        #: background job; in-loop scheduling suits single-process
-        #: deployments, the reference's own shape).
-        self.maintain_every_cycles = maintain_every_cycles
-        self.maintain_max_fragments = maintain_max_fragments
+        #: scheduled store maintenance: every ``maintain_every``-th
+        #: ingesting cycle runs :meth:`TableStore.maintain_store` with
+        #: this policy — streaming ingest writes one fragment per batch,
+        #: and without compaction small queries pay scan cost ∝ fragment
+        #: count.  It runs inside the cycle, so never concurrently with
+        #: an ingest commit (single writer, like the reference's one
+        #: ingester task).  None = caller owns maintenance.
+        self.maintenance_policy = maintenance_policy
+        self.maintain_every = maintain_every
         self._cycles_since_maintain = 0
-
-    # -- O-4: retry with exponential backoff (src/main.rs:32-62) ----------
-
-    def _with_retry(self, fn, *args):
-        last_exc: Exception | None = None
-        for attempt in range(1, self.retries + 1):
-            try:
-                return fn(*args)
-            except Exception as exc:  # noqa: BLE001 — connector boundary
-                last_exc = exc
-                if attempt < self.retries:
-                    time.sleep(self.backoff_base * 2 ** (attempt - 1))
-        raise last_exc
-
-    # -- O-3: concurrent receipt fan-out (src/main.rs:204-227) ------------
-
-    def _enrich_receipts(self, raw_block: dict) -> dict:
-        txs = raw_block.get("transactions") or []
-        with ThreadPoolExecutor(max_workers=self.max_receipt_concurrent) as pool:
-            receipts = list(
-                pool.map(
-                    lambda t: self._with_retry(
-                        self.client.get_transaction_receipt, t["hash"]
-                    ),
-                    txs,
-                )
-            )
-        # LEFT OUTER: a missing receipt leaves status/logs NULL
-        return {
-            **raw_block,
-            "transactions": [
-                {**t, "receipt": r} for t, r in zip(txs, receipts)
-            ],
-        }
 
     # -- checkpoint helpers ------------------------------------------------
 
@@ -137,41 +140,42 @@ class EvmIngester:
     # -- the cycle (src/main.rs:71-337) -----------------------------------
 
     def run_cycle(self) -> CycleResult:
-        head = self._with_retry(self.client.get_block_number)  # O-1
+        head = with_retry(self.client.get_block_number, backoff=self.backoff_base)  # O-1
         last = self.last_processed()
         if last is None:
             last = self.start_block - 1
         if last >= head:
             return CycleResult("idle")  # caught up; caller sleeps
 
-        # O-2: bounded range scan
-        to_block = min(last + self.blocks_per_batch, head)
-        raw_batch = [
-            self._with_retry(self.client.get_block_with_txs, n)
-            for n in range(last + 1, to_block + 1)
-        ]
-        raw_batch = [b for b in raw_batch if b is not None]
-        if not raw_batch:
+        # O-2/O-3: bounded range scan, each block fetched with receipts
+        first = fetch_block(self.client, last + 1, backoff=self.backoff_base)
+        if first is None:
             return CycleResult("idle")
 
         # O-10: reorg detection — compare the first new block's parent_hash
         # with the stored hash at its parent height (src/main.rs:166-189).
-        first = raw_batch[0]
-        parent_height = first["number"] - 1
-        stored_parent = self._stored_hash_at(parent_height)
+        stored_parent = self._stored_hash_at(last)
         if stored_parent is not None and stored_parent != first["parent_hash"].lower():
             # O-11: the stored parent is not canonical → retract it (and
             # everything above) in one atomic swap; checkpoint steps back
             # so the next cycle re-ingests from the fork. Deep reorgs
             # resolve iteratively, one parent-step per cycle.
-            self.store.rollback_from(
-                parent_height, status=self._status(parent_height - 1, head)
-            )
-            return CycleResult("reorg", rollback_from=parent_height)
+            self.store.rollback_from(last, status=self._status(last - 1, head))
+            return CycleResult("reorg", rollback_from=last)
 
-        # O-3 receipt fan-out, then O-5/O-6 normalize
-        enriched = [self._enrich_receipts(b) for b in raw_batch]
-        tables = explode_batch(self.spark, enriched)
+        # keep the longest linked prefix: a reorg or a missing block
+        # between two fetches of this batch ends it there, and the next
+        # cycle's parent check sees the fork
+        batch = [first]
+        for n in range(last + 2, min(last + BLOCKS_PER_BATCH, head) + 1):
+            block = fetch_block(self.client, n, backoff=self.backoff_base)
+            if block is None or block["parent_hash"].lower() != batch[-1]["hash"].lower():
+                break
+            batch.append(block)
+        to_block = batch[-1]["number"]
+
+        # O-5/O-6 normalize
+        tables = explode_batch(self.spark, batch)
 
         # continuous aggregate: per-batch hourly partials ride in the
         # same atomic commit (ingest/rollup.py)
@@ -188,18 +192,11 @@ class EvmIngester:
             txn_version=to_block,
         )
         maintained = None
-        if self.maintain_every_cycles is not None:
+        if self.maintenance_policy is not None:
             self._cycles_since_maintain += 1
-            if self._cycles_since_maintain >= self.maintain_every_cycles:
+            if self._cycles_since_maintain >= self.maintain_every:
                 self._cycles_since_maintain = 0
-                from .rollup import ROLLUP_TABLE
-
-                maintained = {
-                    t: self.store.maintain(
-                        t, max_fragments=self.maintain_max_fragments
-                    )
-                    for t in ("blocks", "transactions", "logs", ROLLUP_TABLE)
-                }
+                maintained = self.store.maintain_store(self.maintenance_policy)
         return CycleResult(
             "ingested",
             from_block=first["number"],

@@ -214,16 +214,30 @@ class Manifest:
 _FRAGLIST_SCHEMA = None  # built lazily (pyarrow import at module top)
 _FRAGLIST_ROW_GROUP = 2048
 
-#: ``manifest_format="auto"`` crossover: total fragments at which new
-#: manifest versions switch from inline JSON to the parquet fraglist.
+#: manifest-format crossover: total fragments at which new manifest
+#: versions switch from inline JSON to the parquet fraglist.
 #: Below it JSON wins (read_full — what every mutation pays — parses
 #: faster than a columnar load, and pruned reads are sub-5 ms either
 #: way); above it the JSON prune cost grows linearly with the fragment
 #: count while parquet's row-group-stat prune stays near-flat
 #: (tools/manifest_bench.py: at 10k fragments JSON prune is 51 ms vs
 #: parquet 3.7 ms; at 200k, 1.8 s vs 12 ms).  Migration is per-swap, so
-#: a store crossing the threshold converts on its next commit.
+#: a store crossing the threshold converts on its next commit; reads
+#: detect the format per version.
 AUTO_PARQUET_FRAGMENTS = 4096
+
+#: log-structured manifest commits (the Delta-log shape): append-shaped
+#: swaps (:meth:`TableStore.commit`, :meth:`TableStore.set_status`) and
+#: delete/upsert/projection refreshes write an O(changed)-sized delta
+#: record instead of rewriting the full fragment list — at millions of
+#: fragments the append hot path pays O(batch), not O(table history).
+#: Rollback, compaction and projection builds write full checkpoints,
+#: and so does the swap after ``CHECKPOINT_INTERVAL`` chained deltas,
+#: bounding a reader's delta-tail replay.  State lives entirely in the file names
+#: (a delta records its base checkpoint version), so crash/reopen
+#: continues the chain with no in-process bookkeeping.  0 writes
+#: checkpoints only.
+CHECKPOINT_INTERVAL = 16
 
 
 def _fraglist_schema():
@@ -357,7 +371,7 @@ class DeltaManifest(Manifest):
     distinguished from checkpoints by its ``base`` field) — and a
     reader resolves the version as the newest checkpoint at or below it
     plus the delta tail (the Delta-log transaction pattern).  The chain
-    is bounded by ``checkpoint_interval``: every K-th append re-writes
+    is bounded by ``CHECKPOINT_INTERVAL``: every K-th append re-writes
     a full checkpoint, amortizing hydration to O(total/K) per commit.
 
     Like :class:`LazyManifest`, ``tables`` hydrates lazily so every
@@ -575,19 +589,10 @@ class TableStore:
         *,
         bloom_columns: dict[str, tuple[str, ...]] | None = None,
         dict_columns: dict[str, tuple[str, ...]] | None = None,
-        manifest_format: str = "auto",
-        log_commits: bool = True,
-        checkpoint_interval: int = 16,
         manifest_io=None,
         data_io=None,
         claim_grace_seconds: float = 60.0,
     ):
-        if manifest_format not in ("auto", "json", "parquet"):
-            raise ValueError(
-                f"manifest_format must be auto|json|parquet, got {manifest_format!r}"
-            )
-        if checkpoint_interval < 1:
-            raise ValueError("checkpoint_interval must be >= 1")
         self.spark = spark
         self.root = Path(root)
         self.bloom_columns = (
@@ -596,31 +601,6 @@ class TableStore:
         self.dict_columns = (
             DEFAULT_DICT_COLUMNS if dict_columns is None else dict_columns
         )
-        #: how NEW manifest versions are written; reads auto-detect per
-        #: version, so a store can be migrated by simply reopening with
-        #: the other format (the next swap converts).  The default
-        #: ``auto`` picks per swap by total fragment count: inline JSON
-        #: below AUTO_PARQUET_FRAGMENTS (read_full is cheaper and every
-        #: mutation pays it), the columnar parquet fraglist above it
-        #: (pruned reads — the hot query path — stay near-flat in
-        #: fragment count; tools/manifest_bench.py measures the
-        #: crossover, numbers in SCALE.md)
-        self.manifest_format = manifest_format
-        #: log-structured manifest commits (the Delta-log shape): when
-        #: True, append-shaped swaps (:meth:`commit`, :meth:`set_status`)
-        #: write an O(changed)-sized delta record instead of
-        #: rewriting the full fragment list — at millions of fragments
-        #: the append hot path pays O(batch), not O(table history).
-        #: Structural ops (rollback/delete/upsert/compact/projections)
-        #: still write full checkpoints — they already pay O(touched
-        #: fragments) in data movement, so the manifest rewrite is not
-        #: their bottleneck — and every ``checkpoint_interval``-th
-        #: append also checkpoints, bounding a reader's delta-tail
-        #: replay.  State lives entirely in the file names (a delta
-        #: records its base checkpoint version), so crash/reopen
-        #: continues the chain with no in-process bookkeeping.
-        self.log_commits = log_commits
-        self.checkpoint_interval = checkpoint_interval
         #: LRU of bloom sidecar bitsets keyed by (fragment path, column).
         #: Fragments are immutable, so a cached bitset can never go
         #: stale; without it every point lookup re-reads the few-KB
@@ -731,7 +711,7 @@ class TableStore:
         # log-structured version: resolve checkpoint + delta tail.  The
         # newest delta names its base checkpoint, so resolution reads
         # exactly (1 checkpoint envelope + tail) small files — the tail
-        # is bounded by checkpoint_interval, never by history length.
+        # is bounded by CHECKPOINT_INTERVAL, never by history length.
         head = d
         base_v = head["base"]
         base = Manifest() if base_v == 0 else self.manifest_at(base_v)
@@ -1048,11 +1028,8 @@ class TableStore:
             )
         token = self._claim_version(manifest.version, "checkpoint")
         d = manifest.to_json()
-        fmt = self.manifest_format
-        if fmt == "auto":
-            n_frags = sum(len(fs) for fs in manifest.tables.values())
-            fmt = "parquet" if n_frags >= AUTO_PARQUET_FRAGMENTS else "json"
-        if fmt == "parquet":
+        n_frags = sum(len(fs) for fs in manifest.tables.values())
+        if n_frags >= AUTO_PARQUET_FRAGMENTS:
             # fragment list to a columnar sidecar FIRST (an orphaned
             # sidecar from a lost race is reclaimed with its version by
             # vacuum's manifest pruning); the JSON keeps everything else
@@ -1137,18 +1114,14 @@ class TableStore:
 
     def _structural_delta_ok(self, m: Manifest) -> bool:
         """True when a structural op (delete/upsert/projection refresh/
-        status) may ride the log-structured path: log mode on, an
-        anchored base (v>0), and a chain slot free.  Since r10
-        projections no longer gate this off — takedown deltas carry
+        status) may ride the log-structured path: an anchored base (v>0)
+        and a chain slot free (never when ``CHECKPOINT_INTERVAL`` is 0).
+        Since r10 projections no longer gate this off — takedown deltas carry
         the projection fragment-set changes in ``projections_delta``
         (O(touched)), so the one table shape you'd index heavily
         (logs + address projection) keeps O(batch) manifest writes on
         its compliance path too (VERDICT r9 item 2)."""
-        return (
-            self.log_commits
-            and m.version > 0
-            and self._delta_chain_len(m) <= self.checkpoint_interval
-        )
+        return m.version > 0 and self._delta_chain_len(m) <= CHECKPOINT_INTERVAL
 
     def _swap_delta(self, delta: dict) -> None:
         """Log-structured manifest swap: write one O(changed)-sized delta
@@ -3093,71 +3066,6 @@ class TableStore:
             reader = reader.schema(schema)
         return reader.parquet(*paths)
 
-    def maintain(
-        self,
-        table: str,
-        *,
-        max_fragments: int = 8,
-        zorder_by: tuple[str, ...] = (),
-        sort_within: tuple[str, ...] = (),
-        vacuum_grace_seconds: float = 0.0,
-    ) -> dict:
-        """One background-maintenance pass — the job class every
-        docstring defers to, as a single call:
-
-        1. **compact** when the fragment count exceeds ``max_fragments``
-           (streaming ingest leaves one fragment per batch; scan cost of
-           small queries is ∝ fragment count);
-        2. **repair projections**: compaction removes every covered base
-           fragment, so each projection of the table goes stale — rebuild
-           them (full build: compaction invalidated all generations
-           anyway, so the O(delta) refresh path does not apply); fresh
-           projections with a delta tail get the cheap
-           :meth:`refresh_projection` instead;
-        3. **vacuum** unreferenced fragments (old generations, pre-compact
-           layout) past the grace period.
-
-        Order matters: compact-then-project keeps the rebuild reading the
-        freshly clustered layout, and vacuum LAST so in-flight readers of
-        the pre-maintenance snapshot keep their grace window.  Returns
-        ``{"compacted_from": n | 0, "projections_rebuilt": [...],
-        "projections_refreshed": [...], "vacuumed": n}``."""
-        report: dict = {
-            "compacted_from": 0,
-            "projections_rebuilt": [],
-            "projections_refreshed": [],
-            "vacuumed": 0,
-        }
-        n_frags = len(self.current_manifest().tables.get(table, []))
-        if n_frags > max_fragments:
-            report["compacted_from"] = self.compact(
-                table,
-                max_fragments,
-                zorder_by=zorder_by,
-                sort_within=sort_within,
-            )
-        m = self.current_manifest()
-        current_paths = {f.path for f in m.tables.get(table, [])}
-        for name, proj in dict(m.projections.get(table, {})).items():
-            stale = any(p not in current_paths for p in proj["covers"])
-            if stale:
-                kw = (
-                    {"zorder_by": tuple(proj["cluster_by"])}
-                    if proj.get("layout", "range") == "zorder"
-                    else {"cluster_by": tuple(proj["cluster_by"])}
-                )
-                self.build_projection(
-                    table,
-                    name,
-                    max_fragments=max(len(proj["fragments"]), 1),
-                    **kw,
-                )
-                report["projections_rebuilt"].append(name)
-            elif self.refresh_projection(table, name) > 0:
-                report["projections_refreshed"].append(name)
-        report["vacuumed"] = self.vacuum(grace_seconds=vacuum_grace_seconds)
-        return report
-
     def maintain_store(
         self, policy: MaintenancePolicy | None = None
     ) -> dict:
@@ -3457,7 +3365,7 @@ class TableStore:
         # a retained log-structured version resolves as checkpoint +
         # delta tail, so its whole chain must outlive it: pull each kept
         # delta's base checkpoint and intermediate deltas into the keep
-        # set (chains are <= checkpoint_interval long, so this extends
+        # set (chains are <= CHECKPOINT_INTERVAL long, so this extends
         # retention by at most one interval)
         for v in sorted(keep):
             try:

@@ -1,5 +1,5 @@
 """REST surface (O-27/O-28): endpoint behavior + error mapping via the
-Flask test client over the fixture tables."""
+Flask test client over a store holding the fixture tables."""
 
 from __future__ import annotations
 
@@ -10,11 +10,29 @@ from rust_evm_indexer_spark.datagen import TRANSFER_SIG
 
 
 @pytest.fixture(scope="module")
-def client(evm):
-    api = EvmApi(
-        evm["blocks"], evm["transactions"], evm["logs"], evm["indexer_status"]
-    )
-    app = create_app(api)
+def store_api(spark, evm, tmp_path_factory):
+    """A TableStore holding the same fixture tables, and the API over it."""
+    from rust_evm_indexer_spark.store import TableStore
+
+    root = tmp_path_factory.mktemp("api_store")
+    store = TableStore(spark, root, bloom_columns={}, dict_columns={})
+    store.commit({
+        "blocks": evm["blocks"],
+        "transactions": evm["transactions"],
+        "logs": evm["logs"],
+    })
+    srow = evm["indexer_status"].first()
+    store.set_status({
+        "indexer_name": srow["indexer_name"],
+        "last_processed_block": srow["last_processed_block"],
+        "chain_head_at_last_poll": srow["chain_head_at_last_poll"],
+    })
+    return EvmApi.from_store(store), store
+
+
+@pytest.fixture(scope="module")
+def client(store_api):
+    app = create_app(store_api[0])
     app.testing = True
     return app.test_client()
 
@@ -102,28 +120,6 @@ def test_docs_page_renders_full_surface(client):
     assert "/openapi.json" in html
 
 
-@pytest.fixture(scope="module")
-def store_api(spark, evm, tmp_path_factory):
-    """A TableStore holding the same fixture tables, and the API over it."""
-    from rust_evm_indexer_spark.api import EvmApi
-    from rust_evm_indexer_spark.store import TableStore
-
-    root = tmp_path_factory.mktemp("api_store")
-    store = TableStore(spark, root, bloom_columns={}, dict_columns={})
-    store.commit({
-        "blocks": evm["blocks"],
-        "transactions": evm["transactions"],
-        "logs": evm["logs"],
-    })
-    srow = evm["indexer_status"].first()
-    store.set_status({
-        "indexer_name": srow["indexer_name"],
-        "last_processed_block": srow["last_processed_block"],
-        "chain_head_at_last_poll": srow["chain_head_at_last_poll"],
-    })
-    return EvmApi.from_store(store), store
-
-
 def test_store_backed_stats_launches_no_spark_job(store_api, monkeypatch):
     """VERDICT r9 item 3: with a TableStore behind the session, /stats
     must be served ENTIRELY from the manifest tier — table_rows sums +
@@ -146,15 +142,16 @@ def test_store_backed_stats_launches_no_spark_job(store_api, monkeypatch):
 
 
 def test_store_backed_stats_shape_matches_scan_path(store_api, evm):
-    """Same response dict — keys AND values — as the scan-path API over
+    """Same response dict — keys AND values — as the scan operator over
     the same tables."""
-    from rust_evm_indexer_spark.api import EvmApi
+    from rust_evm_indexer_spark.api import to_camel_json
+    from rust_evm_indexer_spark.operators import lookups
 
     api, _ = store_api
-    scan_api = EvmApi(
+    scan = lookups.get_stats(
         evm["blocks"], evm["transactions"], evm["logs"], evm["indexer_status"]
     )
-    assert api.get_stats() == scan_api.get_stats()
+    assert api.get_stats() == to_camel_json(scan.__dict__)
 
 
 def test_store_backed_api_serves_all_endpoints(store_api):
@@ -288,10 +285,10 @@ def test_store_frame_cache_is_version_keyed_under_races(spark, evm, tmp_path, mo
 
 def test_store_backed_logs_routes_through_projection(spark, evm, tmp_path, monkeypatch):
     """Plan pin (VERDICT r10 item 2): an address-filtered POST /logs on
-    the store-backed SPARK route (fast=False — the r12 default serves
-    from the Arrow latency tier instead) goes through
-    get_logs_from_store's source routing and reads ONLY projection
-    fragments; the default fast path must serve the identical body."""
+    the store-backed SPARK route (the fallback, forced here — by default
+    the Arrow latency tier serves it) goes through get_logs_from_store's
+    source routing and reads ONLY projection fragments; the Arrow tier
+    must serve the identical body."""
     from rust_evm_indexer_spark.api import EvmApi, create_app
     from rust_evm_indexer_spark.operators import logs as logs_mod
     from rust_evm_indexer_spark.store import TableStore
@@ -317,7 +314,9 @@ def test_store_backed_logs_routes_through_projection(spark, evm, tmp_path, monke
         return orig(df)
 
     monkeypatch.setattr(logs_mod, "_collect_page", spy)
-    app = create_app(EvmApi.from_store(store, fast=False))
+    spark_api = EvmApi.from_store(store)
+    spark_api._serving.max_fragments = 0  # every request falls back
+    app = create_app(spark_api)
     app.testing = True
     body = app.test_client().post(
         "/logs", json={"address": addr, "pageSize": 100}

@@ -13,6 +13,7 @@ import urllib.error
 from rust_evm_indexer_spark import datagen
 from rust_evm_indexer_spark.ingest import EvmIngester
 from rust_evm_indexer_spark.ingest.backfill import backfill
+from rust_evm_indexer_spark.ingest.commit import with_retry
 from rust_evm_indexer_spark.sources.rpc import MockRpcClient
 from rust_evm_indexer_spark.sources.rpc_http import HttpRpcClient
 from rust_evm_indexer_spark.store import TableStore
@@ -43,9 +44,9 @@ def test_wire_translation_matches_mock(chain):
         assert http.get_block_with_txs(datagen.START_BLOCK + 999) is None
 
 
-def test_http_errors_raise_and_retry_recovers(spark, tmp_path, chain):
-    """HTTP 503s raise (urllib.error) and the ingester's O-4 retry
-    absorbs them — same semantics as the mock's TransientRpcError."""
+def test_http_errors_raise_and_retry_recovers(chain):
+    """HTTP 503s raise (urllib.error) and the ingest O-4 retry absorbs
+    them — same semantics as the mock's TransientRpcError."""
     mock = MockRpcClient(chain)
     with JsonRpcChainServer(mock) as srv:
         http = HttpRpcClient(srv.url)
@@ -53,14 +54,8 @@ def test_http_errors_raise_and_retry_recovers(spark, tmp_path, chain):
         with pytest.raises(urllib.error.HTTPError):
             http.get_block_number()
         srv.fail_budget = 2
-        ing = EvmIngester(
-            spark,
-            http,
-            TableStore(spark, tmp_path / "retry_store"),
-            start_block=datagen.START_BLOCK,
-            backoff_base=0.01,
-        )
-        assert ing._with_retry(http.get_block_number) == mock.get_block_number()
+        got = with_retry(http.get_block_number, backoff=0.01)
+        assert got == mock.get_block_number()
 
 
 def test_ingest_over_http_equals_mock(spark, tmp_path, chain):

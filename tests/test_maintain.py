@@ -1,5 +1,5 @@
-"""TableStore.maintain — the one-call background-maintenance pass:
-compact when fragmented, rebuild stale / refresh fresh projections,
+"""TableStore.maintain_store — the one background-maintenance pass:
+compact when fragmented, rebuild stale / refresh lagging projections,
 vacuum what's unreferenced.  Queries must be answer-identical before and
 after, and the projection must be routable again post-compaction."""
 
@@ -9,7 +9,12 @@ import pytest
 
 from pyspark.sql import functions as F
 
-from rust_evm_indexer_spark.store import TableStore
+from rust_evm_indexer_spark.store import MaintenancePolicy, TableStore
+
+
+def _eager(max_fragments: int, **kw) -> MaintenancePolicy:
+    """Compact above ``max_fragments`` and refresh any projection lag."""
+    return MaintenancePolicy(max_fragments=max_fragments, max_projection_lag=0, **kw)
 
 
 def _mk_store(spark, tmp_path):
@@ -37,11 +42,12 @@ def test_maintain_compacts_rebuilds_and_vacuums(spark, tmp_path):
     store.build_projection("pts", "by_addr", ("addr",), max_fragments=2)
     before = sorted(r["id"] for r in store.read("pts").collect())
 
-    report = store.maintain("pts", max_fragments=2)
+    rep = store.maintain_store(_eager(2))
+    report = rep["tables"]["pts"]
 
     assert report["compacted_from"] == 6
     assert report["projections_rebuilt"] == ["by_addr"]
-    assert report["vacuumed"] > 0  # pre-compact fragments + old generation
+    assert rep["vacuumed"] > 0  # pre-compact fragments + old generation
     # base results identical, fragment count bounded
     after = sorted(r["id"] for r in store.read("pts").collect())
     assert after == before
@@ -59,7 +65,7 @@ def test_maintain_refreshes_fresh_projection_without_rebuild(spark, tmp_path):
     store.build_projection("pts", "by_addr", ("addr",), max_fragments=1)
     _commit_batches(spark, store, 1, start=2)  # uncovered delta tail
 
-    report = store.maintain("pts", max_fragments=8)  # under the cap
+    report = store.maintain_store(_eager(8))["tables"]["pts"]  # under the cap
 
     assert report["compacted_from"] == 0
     assert report["projections_rebuilt"] == []
@@ -75,11 +81,16 @@ def test_maintain_noop_when_healthy(spark, tmp_path):
     store = _mk_store(spark, tmp_path)
     _commit_batches(spark, store, 2)
     v = store.current_manifest().version
-    report = store.maintain("pts", max_fragments=8)
+    report = store.maintain_store(_eager(8))
     assert report == {
-        "compacted_from": 0,
-        "projections_rebuilt": [],
-        "projections_refreshed": [],
+        "tables": {
+            "pts": {
+                "compacted_from": 0,
+                "projections_rebuilt": [],
+                "projections_refreshed": [],
+            }
+        },
+        "triggers": {},
         "vacuumed": 0,
     }
     assert store.current_manifest().version == v  # no manifest churn
@@ -90,10 +101,10 @@ def test_maintain_with_zorder_layout(spark, tmp_path):
     store = _mk_store(spark, tmp_path)
     _commit_batches(spark, store, 6)
     before = sorted(r["id"] for r in store.read("pts").collect())
-    report = store.maintain(
-        "pts", max_fragments=3, zorder_by=("block_number", "addr")
+    report = store.maintain_store(
+        _eager(3, zorder_by={"pts": ("block_number", "addr")})
     )
-    assert report["compacted_from"] == 6
+    assert report["tables"]["pts"]["compacted_from"] == 6
     after = sorted(r["id"] for r in store.read("pts").collect())
     assert after == before
 
@@ -217,8 +228,6 @@ def test_delete_in_purges_projections(spark, tmp_path):
 
 # -- stats()-driven whole-store policy pass (VERDICT r7 item 6) ----------
 
-from rust_evm_indexer_spark.store import MaintenancePolicy  # noqa: E402
-
 
 @pytest.mark.slow
 def test_maintain_store_compacts_by_count_and_is_idempotent(spark, tmp_path):
@@ -340,7 +349,6 @@ def test_maintain_store_safe_under_random_op_interleavings(spark, ops):
     just the soak's schedule)."""
     root = Path(tempfile.mkdtemp(prefix="maint-prop-"))
     store = TableStore(spark, root / "s", bloom_columns={}, dict_columns={})
-    from rust_evm_indexer_spark.store import MaintenancePolicy
 
     pol = MaintenancePolicy(max_fragments=3, max_size_skew=64.0)
     model: dict[int, str] = {}

@@ -3,20 +3,29 @@ serve the identical store lifecycle: commit / idempotent replay / read
 with pruning + blooms / rollback / compaction / projections / time
 travel / vacuum.  The parquet format is the metadata tier for
 million-fragment tables (manifest-read + prune is O(survivors) —
-tools/manifest_bench.py); reads auto-detect the format per version, so
-a store migrates by reopening with the other format."""
+tools/manifest_bench.py); writes pick it once total fragments reach
+``AUTO_PARQUET_FRAGMENTS`` and reads detect the format per version.
+Tests force the parquet layout on small stores by patching that
+threshold to 0."""
 
 from __future__ import annotations
 
 import pytest
 from pyspark.sql import functions as F
 
-from rust_evm_indexer_spark.store import TableStore
+from rust_evm_indexer_spark.store import TableStore, table_store
 from rust_evm_indexer_spark.store.table_store import DeltaManifest, LazyManifest
 
 
+def _force_parquet(monkeypatch):
+    """Every new manifest version crosses the fragment-count threshold."""
+    monkeypatch.setattr(table_store, "AUTO_PARQUET_FRAGMENTS", 0)
+
+
 @pytest.fixture(params=["json", "parquet"])
-def fmt(request):
+def fmt(request, monkeypatch):
+    if request.param == "parquet":
+        _force_parquet(monkeypatch)
     return request.param
 
 
@@ -25,7 +34,6 @@ def _mk(spark, tmp_path, fmt, n_batches=4, rows_per=30):
         spark,
         tmp_path / f"store_{fmt}",
         bloom_columns={"pts": ("addr",)},
-        manifest_format=fmt,
     )
     for b in range(n_batches):
         rows = [
@@ -101,19 +109,15 @@ def test_lifecycle_equivalent_across_formats(spark, tmp_path, fmt):
     assert store.read("pts").count() == 90  # current snapshot intact
 
 
-def test_format_migration_on_reopen(spark, tmp_path):
-    """Reopening with the other format converts at the next swap; reads
-    keep working across mixed-version histories.  log_commits=False:
+def test_format_migration_on_reopen(spark, tmp_path, monkeypatch):
+    """A writer under the other format converts at the next swap; reads
+    keep working across mixed-version histories.  CHECKPOINT_INTERVAL=0:
     this test is about the CHECKPOINT format, which only appends write
     deltas against (delta swaps are format-agnostic by design)."""
     store = _mk(spark, tmp_path, "json", n_batches=2)
-    pq_store = TableStore(
-        spark,
-        store.root,
-        bloom_columns={"pts": ("addr",)},
-        manifest_format="parquet",
-        log_commits=False,
-    )
+    _force_parquet(monkeypatch)
+    monkeypatch.setattr(table_store, "CHECKPOINT_INTERVAL", 0)
+    pq_store = TableStore(spark, store.root, bloom_columns={"pts": ("addr",)})
     assert not isinstance(pq_store.current_manifest(), LazyManifest)
     df = spark.createDataFrame([(7, "0xbeef", 200)], "id: long, addr: string, block_number: long")
     pq_store.commit({"pts": df})
@@ -121,6 +125,7 @@ def test_format_migration_on_reopen(spark, tmp_path):
     assert isinstance(m, LazyManifest)
     assert pq_store.read("pts").count() == 61
     # and back: a json-format writer over the parquet history
+    monkeypatch.undo()
     back = TableStore(spark, store.root, bloom_columns={"pts": ("addr",)})
     back.commit({"pts": df.withColumn("id", F.lit(8).cast("long"))})
     assert not isinstance(back.current_manifest(), LazyManifest)
@@ -141,7 +146,6 @@ def test_auto_format_switches_at_fragment_threshold(spark, tmp_path):
     )
 
     store = TableStore(spark, tmp_path / "auto", bloom_columns={}, dict_columns={})
-    assert store.manifest_format == "auto"
     df = spark.createDataFrame([(1, "a", 100)], "id: long, addr: string, block_number: long")
     store.commit({"pts": df})
     v1 = store.current_manifest().version
@@ -166,16 +170,9 @@ def test_auto_format_switches_at_fragment_threshold(spark, tmp_path):
     )
     assert "tables_pq" in d2  # crossed the threshold: columnar fraglist
     assert isinstance(store.current_manifest(), LazyManifest)
-    # explicit formats still force their layout regardless of size
-    forced = TableStore(
-        spark, tmp_path / "forced", bloom_columns={}, manifest_format="json"
-    )
-    forced.commit({"pts": df})
-    dj = _json.loads((forced.root / "_manifests" / "v000001.json").read_text())
-    assert "tables_pq" not in dj
 
 
-def test_parquet_covers_sidecar_keeps_envelope_small(spark, tmp_path):
+def test_parquet_covers_sidecar_keeps_envelope_small(spark, tmp_path, monkeypatch):
     """r10: projection ``covers`` move into a columnar sidecar under
     the parquet manifest format, so the envelope parse — and every
     operation that never touches projections — stays O(envelope)
@@ -186,6 +183,7 @@ def test_parquet_covers_sidecar_keeps_envelope_small(spark, tmp_path):
     sidecars with their versions."""
     import json as _json
 
+    _force_parquet(monkeypatch)
     store = _mk(spark, tmp_path, "parquet", n_batches=3)
     store.build_projection("pts", "by_addr", ("addr",), max_fragments=1)
     mdir = store.root / "_manifests"
@@ -218,8 +216,7 @@ def test_parquet_covers_sidecar_keeps_envelope_small(spark, tmp_path):
     assert len(cur.projections["pts"]["by_addr"]["covers"]) == 4
     # reopen from files alone and vacuum: old covers sidecars die with
     # their versions, the kept chain stays resolvable
-    reopened = TableStore(spark, tmp_path / "store_parquet",
-                          bloom_columns={}, manifest_format="parquet")
+    reopened = TableStore(spark, tmp_path / "store_parquet", bloom_columns={})
     reopened.vacuum(keep_manifests=2)
     kept_json = {p.name[1:7] for p in mdir.glob("v*.json")}
     for cp in mdir.glob("covers-v*.parquet"):

@@ -25,7 +25,7 @@ import json
 import pytest
 from pyspark.sql import functions as F
 
-from rust_evm_indexer_spark.store import TableStore
+from rust_evm_indexer_spark.store import TableStore, table_store
 from rust_evm_indexer_spark.store.manifest_io import InMemoryObjectStoreIO
 from rust_evm_indexer_spark.store.table_store import DeltaManifest, Manifest
 
@@ -59,6 +59,12 @@ def mk(request, spark):
 
     _make.backend = request.param
     return _make
+
+
+def _interval(monkeypatch, n: int) -> None:
+    """Checkpoint every n-th swap for the rest of the test (0 writes
+    checkpoints only)."""
+    monkeypatch.setattr(table_store, "CHECKPOINT_INTERVAL", n)
 
 
 def _get(store, name: str) -> dict:
@@ -101,8 +107,9 @@ def _commit_n(spark, store, n, start=0):
         store.commit({"pts": _batch(spark, b)}, txn_app_id="t", txn_version=b)
 
 
-def test_commits_write_deltas_and_checkpoint_on_interval(spark, tmp_path, mk):
-    store = mk(tmp_path / "s", checkpoint_interval=3)
+def test_commits_write_deltas_and_checkpoint_on_interval(spark, tmp_path, mk, monkeypatch):
+    _interval(monkeypatch, 3)
+    store = mk(tmp_path / "s")
     _commit_n(spark, store, 6)
     # v1 anchors as a checkpoint; v2..v4 are the first delta chain
     # (3 deltas per interval); v5 re-checkpoints; v6 starts a new chain
@@ -120,12 +127,14 @@ def test_commits_write_deltas_and_checkpoint_on_interval(spark, tmp_path, mk):
 
 
 @pytest.mark.slow
-def test_delta_resolution_matches_full_regime(spark, tmp_path, mk):
-    """The same op sequence under log_commits True/False produces
-    identical query results, version numbers, and statuses."""
-    a = mk(tmp_path / "log", checkpoint_interval=4)
-    b = mk(tmp_path / "full", log_commits=False)
-    for store in (a, b):
+def test_delta_resolution_matches_full_regime(spark, tmp_path, mk, monkeypatch):
+    """The same op sequence with log-structured commits on
+    (CHECKPOINT_INTERVAL=4) and off (0) produces identical query
+    results, version numbers, and statuses."""
+    a = mk(tmp_path / "log")
+    b = mk(tmp_path / "full")
+    for store, interval in ((a, 4), (b, 0)):
+        _interval(monkeypatch, interval)
         _commit_n(spark, store, 7)
         store.set_status({"last": 106})
         store.rollback_from(105)
@@ -141,11 +150,12 @@ def test_delta_resolution_matches_full_regime(spark, tmp_path, mk):
     assert a.table_rows("pts") == b.table_rows("pts")
 
 
-def test_commit_hot_path_never_hydrates(spark, tmp_path, mk):
+def test_commit_hot_path_never_hydrates(spark, tmp_path, mk, monkeypatch):
     """The O(changed) claim, asserted structurally: a delta commit
     resolves the current manifest without materializing the fragment
     list (the write cost a 100x store cares about)."""
-    store = mk(tmp_path / "s", checkpoint_interval=100)
+    _interval(monkeypatch, 100)
+    store = mk(tmp_path / "s")
     _commit_n(spark, store, 3)
     m = store.current_manifest()
     assert isinstance(m, DeltaManifest)
@@ -162,8 +172,9 @@ def test_commit_hot_path_never_hydrates(spark, tmp_path, mk):
     assert m2.__dict__.get("_hydrated") is None
 
 
-def test_block_pruning_spans_checkpoint_and_tail(spark, tmp_path, mk):
-    store = mk(tmp_path / "s", checkpoint_interval=3)
+def test_block_pruning_spans_checkpoint_and_tail(spark, tmp_path, mk, monkeypatch):
+    _interval(monkeypatch, 3)
+    store = mk(tmp_path / "s")
     _commit_n(spark, store, 6)  # blocks 100..105 across ckpt+deltas
     for blk in range(100, 106):
         got = store.read("pts", min_block=blk, max_block=blk)
@@ -172,8 +183,9 @@ def test_block_pruning_spans_checkpoint_and_tail(spark, tmp_path, mk):
         assert len(store.fragments_for("pts", min_block=blk, max_block=blk)) == 1
 
 
-def test_time_travel_into_delta_chain(spark, tmp_path, mk):
-    store = mk(tmp_path / "s", checkpoint_interval=10)
+def test_time_travel_into_delta_chain(spark, tmp_path, mk, monkeypatch):
+    _interval(monkeypatch, 10)
+    store = mk(tmp_path / "s")
     _commit_n(spark, store, 5)
     # version v holds exactly the first v batches
     for v in range(1, 6):
@@ -182,8 +194,9 @@ def test_time_travel_into_delta_chain(spark, tmp_path, mk):
     assert m3.op == "commit" and m3.txns["t"] == 2
 
 
-def test_changefeed_exactly_once_across_deltas(spark, tmp_path, mk):
-    store = mk(tmp_path / "s", checkpoint_interval=3)
+def test_changefeed_exactly_once_across_deltas(spark, tmp_path, mk, monkeypatch):
+    _interval(monkeypatch, 3)
+    store = mk(tmp_path / "s")
     _commit_n(spark, store, 6)
     # full window == full table; disjoint windows partition the rows
     assert store.changes("pts", since_version=0).count() == 60
@@ -197,24 +210,26 @@ def test_changefeed_exactly_once_across_deltas(spark, tmp_path, mk):
     assert store.changes("pts", since_version=v_mid).count() == 30
 
 
-def test_idempotent_replay_and_reopen_continue_chain(spark, tmp_path, mk):
-    store = mk(tmp_path / "s", checkpoint_interval=5)
+def test_idempotent_replay_and_reopen_continue_chain(spark, tmp_path, mk, monkeypatch):
+    _interval(monkeypatch, 5)
+    store = mk(tmp_path / "s")
     _commit_n(spark, store, 3)
     # replayed txn version is a no-op even when the watermark lives in a delta
     assert store.commit({"pts": _batch(spark, 1)}, txn_app_id="t", txn_version=1) is False
     # a fresh handle (crash/restart) continues the same chain from
     # the backend's durable state
-    reopened = mk(tmp_path / "s", checkpoint_interval=5)
+    reopened = mk(tmp_path / "s")
     assert reopened.commit({"pts": _batch(spark, 7)}, txn_app_id="t", txn_version=7)
     m = reopened.current_manifest()
     assert isinstance(m, DeltaManifest) and m.version == 4
     assert reopened.read("pts").count() == 40
 
 
-def test_structural_ops_checkpoint_midchain(spark, tmp_path, mk):
+def test_structural_ops_checkpoint_midchain(spark, tmp_path, mk, monkeypatch):
     """rollback / delete / compact write full checkpoints; the next
     commit starts a fresh chain based on them."""
-    store = mk(tmp_path / "s", checkpoint_interval=10)
+    _interval(monkeypatch, 10)
+    store = mk(tmp_path / "s")
     _commit_n(spark, store, 4)
     store.rollback_from(102)  # drops batches 2,3
     assert _is_ckpt(store, 5)
@@ -227,9 +242,10 @@ def test_structural_ops_checkpoint_midchain(spark, tmp_path, mk):
     assert store.read("pts", version=4).count() == 40
 
 
-def test_vacuum_preserves_kept_chains(spark, tmp_path, mk):
+def test_vacuum_preserves_kept_chains(spark, tmp_path, mk, monkeypatch):
     # interval 2: v1 ckpt, v2-v3 deltas(base 1), v4 ckpt, v5-v6 deltas(base 4)
-    store = mk(tmp_path / "s", checkpoint_interval=2)
+    _interval(monkeypatch, 2)
+    store = mk(tmp_path / "s")
     _commit_n(spark, store, 6)
     m = store.current_manifest()
     store.vacuum(keep_manifests=2)
@@ -269,7 +285,7 @@ def test_concurrent_writers_collide_loudly(spark, tmp_path, mk):
         store.commit({"pts": _batch(spark, 5)})
 
 
-def test_two_writer_race_serialized_by_claim(spark, tmp_path, mk):
+def test_two_writer_race_serialized_by_claim(spark, tmp_path, mk, monkeypatch):
     """ADVICE r9 (medium): the old guard was check-then-create across
     TWO filenames — a delta writer and a checkpoint writer racing on the
     same version could both pass their existence checks and both
@@ -281,9 +297,10 @@ def test_two_writer_race_serialized_by_claim(spark, tmp_path, mk):
     for the loser, and no orphan format file from the loser.  Runs on
     both backends — on the object-store fake the claim is a conditional
     PUT, exactly the S3 primitive the protocol was designed around."""
-    store_a = mk(tmp_path / "s", checkpoint_interval=100)
+    _interval(monkeypatch, 100)
+    store_a = mk(tmp_path / "s")
     _commit_n(spark, store_a, 2)  # v1 ckpt, v2 delta — next is v3 delta
-    store_b = mk(tmp_path / "s", checkpoint_interval=100)
+    store_b = mk(tmp_path / "s")
     v_next = store_a.current_manifest().version + 1
 
     # interleave: writer B (a full-checkpoint swap) performs its claim
@@ -328,7 +345,7 @@ def test_two_writer_race_serialized_by_claim(spark, tmp_path, mk):
     assert _is_delta(store_a, v_next + 1)
 
 
-def test_put_if_absent_is_the_whole_commit_protocol(spark, tmp_path):
+def test_put_if_absent_is_the_whole_commit_protocol(spark, tmp_path, monkeypatch):
     """The object-store seam contract: overriding _put_if_absent alone
     swaps the optimistic-concurrency backend — no swap path O_EXCLs a
     file behind the seam's back.  A subclass emulating a conditional
@@ -347,9 +364,9 @@ def test_put_if_absent_is_the_whole_commit_protocol(spark, tmp_path):
             puts.append(name)
             self._mio.put_text(name, content)  # plain PUT after winning
 
+    _interval(monkeypatch, 10)
     store = ObjectStoreTableStore(
         spark, tmp_path / "s", bloom_columns={}, dict_columns={},
-        checkpoint_interval=10,
     )
     _commit_n(spark, store, 3)
     store.build_projection("pts", "by_addr", ("addr",), max_fragments=1)
@@ -374,7 +391,6 @@ def test_put_if_absent_is_the_whole_commit_protocol(spark, tmp_path):
     # plain TableStore reopen reads the object-store-written state
     reopened = TableStore(
         spark, tmp_path / "s", bloom_columns={}, dict_columns={},
-        checkpoint_interval=10,
     )
     assert reopened.read("pts").count() == 39
 
@@ -392,8 +408,9 @@ def test_vacuum_rejects_zero_keep_manifests(spark, tmp_path, mk):
     assert store.read("pts").count() == 20
 
 
-def test_vacuum_reclaims_claim_files_with_versions(spark, tmp_path, mk):
-    store = mk(tmp_path / "s", checkpoint_interval=2)
+def test_vacuum_reclaims_claim_files_with_versions(spark, tmp_path, mk, monkeypatch):
+    _interval(monkeypatch, 2)
+    store = mk(tmp_path / "s")
     _commit_n(spark, store, 6)
     assert _exists(store, "v000002.claim")
     store.vacuum(keep_manifests=2)
@@ -421,8 +438,9 @@ def test_set_status_writes_o1_delta(spark, tmp_path, mk):
     assert store.read("pts").count() == 20
 
 
-def test_schema_evolution_rides_deltas(spark, tmp_path, mk):
-    store = mk(tmp_path / "s", checkpoint_interval=10)
+def test_schema_evolution_rides_deltas(spark, tmp_path, mk, monkeypatch):
+    _interval(monkeypatch, 10)
+    store = mk(tmp_path / "s")
     _commit_n(spark, store, 2)
     evolved = spark.createDataFrame(
         [(999, "0xff", 200, "tagged")],
@@ -437,8 +455,9 @@ def test_schema_evolution_rides_deltas(spark, tmp_path, mk):
     assert "tag" not in store.read("pts", version=2).columns
 
 
-def test_log_commits_off_preserves_legacy_layout(spark, tmp_path, mk):
-    store = mk(tmp_path / "s", log_commits=False)
+def test_log_commits_off_preserves_legacy_layout(spark, tmp_path, mk, monkeypatch):
+    _interval(monkeypatch, 0)
+    store = mk(tmp_path / "s")
     _commit_n(spark, store, 3)
     jsons = sorted(
         n for n in _names(store) if n.startswith("v") and n.endswith(".json")
@@ -455,7 +474,8 @@ def test_changefeed_tail_fast_path_skips_base_hydration(
     `seen` set costs O(total fragments) per tick at scale).  Spied via
     manifest_at: the only resolution allowed is the schema read at the
     window head."""
-    store = mk(tmp_path / "s", checkpoint_interval=10)
+    _interval(monkeypatch, 10)
+    store = mk(tmp_path / "s")
     _commit_n(spark, store, 5)
     calls: list[int] = []
     orig = TableStore.manifest_at
@@ -487,12 +507,13 @@ def test_changefeed_tail_fast_path_skips_base_hydration(
     assert store.changes("pts", since_version=2).count() == 30
 
 
-def test_delete_and_upsert_ride_deltas_without_projections(spark, tmp_path, mk):
+def test_delete_and_upsert_ride_deltas_without_projections(spark, tmp_path, mk, monkeypatch):
     """r9: takedowns and MERGEs on projection-free tables write
     O(touched) delta records (removed paths + rewritten survivors),
     never a full manifest — and every read surface agrees: snapshot,
     pruning, table_rows, time travel, changefeed with delete replay."""
-    store = mk(tmp_path / "s", checkpoint_interval=20)
+    _interval(monkeypatch, 20)
+    store = mk(tmp_path / "s")
     _commit_n(spark, store, 4)  # v1 ckpt + v2-4 deltas, ids b*100+i
 
     # delete one row committed INSIDE the chain (batch 2, id 205)
@@ -543,12 +564,13 @@ def test_delete_and_upsert_ride_deltas_without_projections(spark, tmp_path, mk):
     assert dels == {(205, 5), (301, 6)}
 
 
-def test_projection_refresh_rides_deltas(spark, tmp_path, mk):
+def test_projection_refresh_rides_deltas(spark, tmp_path, mk, monkeypatch):
     """r10: the LSM maintenance step (refresh_projection, run on the
     ingest cadence by maintain_store) writes one O(drained tail) delta
     — coverage extension + the new clustered generation — instead of a
     full checkpoint per tick."""
-    store = mk(tmp_path / "s", checkpoint_interval=20)
+    _interval(monkeypatch, 20)
+    store = mk(tmp_path / "s")
     _commit_n(spark, store, 2)
     store.build_projection("pts", "by_addr", ("addr",), max_fragments=1)
     v = store.current_manifest().version  # build = checkpoint
@@ -577,18 +599,19 @@ def test_projection_refresh_rides_deltas(spark, tmp_path, mk):
         F.col("id") == 1003
     ).count() == 0
     # pure file-state reopen
-    reopened = mk(tmp_path / "s", checkpoint_interval=20)
+    reopened = mk(tmp_path / "s")
     assert reopened.read_projection("pts", "by_addr").count() == 39
 
 
-def test_table_rows_stays_unhydrated_through_removing_tail(spark, tmp_path, mk):
+def test_table_rows_stays_unhydrated_through_removing_tail(spark, tmp_path, mk, monkeypatch):
     """ADVICE r9: table_rows used to hydrate the full fragment list
     O(total fragments) whenever the delta tail contained a takedown,
     undermining the /stats manifest-only fast path.  Removing deltas
     now record each removed fragment's row count (`removes_rows`), so
     the count is base + adds − removed — O(tail) arithmetic, never
     touching the base fragment list."""
-    store = mk(tmp_path / "s", checkpoint_interval=20)
+    _interval(monkeypatch, 20)
+    store = mk(tmp_path / "s")
     _commit_n(spark, store, 4)
     # removals against BASE fragments (batch 0 rows) and chain adds
     store.delete_equals("pts", "id", 3)          # base frag rewrite
@@ -613,11 +636,11 @@ def test_table_rows_stays_unhydrated_through_removing_tail(spark, tmp_path, mk):
     assert m2.__dict__["_removed_rows_ok"].get("pts") is False
     assert store.table_rows("pts", manifest=m2) == 39  # hydrated sum
     # exactness after vacuum-and-reopen too (pure file-state protocol)
-    reopened = mk(tmp_path / "s", checkpoint_interval=20)
+    reopened = mk(tmp_path / "s")
     assert reopened.table_rows("pts") == 39
 
 
-def test_delete_and_upsert_ride_deltas_WITH_projections(spark, tmp_path, mk):
+def test_delete_and_upsert_ride_deltas_WITH_projections(spark, tmp_path, mk, monkeypatch):
     """VERDICT r9 item 2 (replaces the r9 projection-gate test): a
     table WITH projections now rides the log-structured path for
     delete/upsert — the delta record carries the projection
@@ -626,7 +649,8 @@ def test_delete_and_upsert_ride_deltas_WITH_projections(spark, tmp_path, mk):
     compliance path.  The purge must reach the projection through the
     resolved chain: snapshot, projection read, covers renames, time
     travel, and a checkpoint re-anchoring all agree."""
-    store = mk(tmp_path / "s", checkpoint_interval=20)
+    _interval(monkeypatch, 20)
+    store = mk(tmp_path / "s")
     _commit_n(spark, store, 3)
     store.build_projection("pts", "by_addr", ("addr",), max_fragments=1)
     v = store.current_manifest().version  # checkpoint (build_projection)
@@ -665,7 +689,7 @@ def test_delete_and_upsert_ride_deltas_WITH_projections(spark, tmp_path, mk):
     base_state = store.manifest_at(v).projections["pts"]["by_addr"]
     assert set(base_state["covers"]) != set(mid["covers"])
     # reopen from files alone (pure file-state protocol)
-    reopened = mk(tmp_path / "s", checkpoint_interval=20)
+    reopened = mk(tmp_path / "s")
     assert reopened.read("pts").count() == 29
     assert reopened.read_projection(
         "pts", "by_addr", key_equals="0xup"

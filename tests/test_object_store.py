@@ -35,7 +35,7 @@ import os
 
 import pytest
 
-from rust_evm_indexer_spark.store import TableStore
+from rust_evm_indexer_spark.store import TableStore, table_store
 from rust_evm_indexer_spark.store.manifest_io import (
     InMemoryObjectStoreIO,
     SimulatedCrash,
@@ -62,6 +62,22 @@ def _mk(spark, root, fake=None, **kw):
     if fake is not None:
         kw["manifest_io"] = fake
     return TableStore(spark, root, bloom_columns={}, dict_columns={}, **kw)
+
+
+def _checkpoint_writer(store: TableStore) -> TableStore:
+    """This one handle writes full checkpoints only (what
+    CHECKPOINT_INTERVAL=0 does store-wide) while other handles keep the
+    log-structured default, so a race crosses the two record formats."""
+    store._structural_delta_ok = lambda m: False
+    return store
+
+
+def _regime(monkeypatch, interval: int, parquet: bool = False) -> None:
+    """Checkpoint every ``interval``-th swap (0: checkpoints only) and,
+    with ``parquet``, write every manifest with the columnar fraglist."""
+    monkeypatch.setattr(table_store, "CHECKPOINT_INTERVAL", interval)
+    if parquet:
+        monkeypatch.setattr(table_store, "AUTO_PARQUET_FRAGMENTS", 0)
 
 
 def test_crash_after_claim_fails_loudly_then_self_heals(spark, tmp_path):
@@ -185,10 +201,11 @@ def test_crash_after_manifest_before_current_rolls_forward(spark, tmp_path):
     assert writer2.read("pts").count() == 30
 
 
-def test_crash_after_checkpoint_manifest_rolls_forward(spark, tmp_path):
-    """Same crash point, checkpoint format (log_commits off)."""
+def test_crash_after_checkpoint_manifest_rolls_forward(spark, tmp_path, monkeypatch):
+    """Same crash point, checkpoint format (CHECKPOINT_INTERVAL=0)."""
+    _regime(monkeypatch, 0)
     fake = InMemoryObjectStoreIO()
-    store = _mk(spark, tmp_path / "s", fake, log_commits=False)
+    store = _mk(spark, tmp_path / "s", fake)
     store.commit({"pts": _batch(spark, 0)})
     v = store.current_version()
     fake.crash_after("put_if_absent", f"v{v + 1:06d}.json")
@@ -196,7 +213,7 @@ def test_crash_after_checkpoint_manifest_rolls_forward(spark, tmp_path):
         store.commit({"pts": _batch(spark, 1)})
     assert store.current_version() == v
 
-    writer2 = _mk(spark, tmp_path / "s", fake, log_commits=False)
+    writer2 = _mk(spark, tmp_path / "s", fake)
     fake.age(f"v{v + 1:06d}.claim", writer2.claim_grace_seconds + 1)
     with pytest.raises(RuntimeError, match="rolled forward"):
         writer2.commit({"pts": _batch(spark, 2)})
@@ -243,14 +260,15 @@ def test_vacuum_claim_floor_protects_live_writer_race(spark, tmp_path):
     assert store_a.read("pts").count() == 20
 
 
-def test_eventual_list_vacuum_never_deletes_live_state(spark, tmp_path):
+def test_eventual_list_vacuum_never_deletes_live_state(spark, tmp_path, monkeypatch):
     """LIST on several object stores may lag writes.  Vacuum treats the
     listing as ADVISORY: deletion candidates come from it, but liveness
     (kept manifests, sidecars' owning manifest, claims' manifest) is
     re-checked through strong exists() — so a stale listing can only
     make vacuum do LESS, never delete live state."""
+    _regime(monkeypatch, 2)
     fake = InMemoryObjectStoreIO(eventual_list=True)
-    store = _mk(spark, tmp_path / "s", fake, checkpoint_interval=2)
+    store = _mk(spark, tmp_path / "s", fake)
     for b in range(6):
         store.commit({"pts": _batch(spark, b)})
     # nothing has ever been listed: vacuum sees an empty listing and
@@ -275,16 +293,15 @@ def test_eventual_list_vacuum_never_deletes_live_state(spark, tmp_path):
 
 
 @pytest.mark.slow
-def test_fake_backend_full_lifecycle_matches_posix(spark, tmp_path):
+def test_fake_backend_full_lifecycle_matches_posix(spark, tmp_path, monkeypatch):
     """End-to-end cross-check: the same op sequence on both backends
     yields identical query results, versions, statuses and stats —
     including parquet-format manifests (fraglist + covers sidecars
     round-trip through object bytes)."""
+    _regime(monkeypatch, 3, parquet=True)
     fake = InMemoryObjectStoreIO()
-    a = _mk(spark, tmp_path / "obj", fake, manifest_format="parquet",
-            checkpoint_interval=3)
-    b = _mk(spark, tmp_path / "posix", manifest_format="parquet",
-            checkpoint_interval=3)
+    a = _mk(spark, tmp_path / "obj", fake)
+    b = _mk(spark, tmp_path / "posix")
     for store in (a, b):
         for i in range(4):
             store.commit({"pts": _batch(spark, i)})
@@ -361,7 +378,9 @@ def test_racing_writers_exactly_one_winner_per_version(spark, tmp_path):
         # log-structured deltas — the race also crosses formats, so the
         # claim arbitration (not just same-name conditional puts) is
         # what keeps the xor invariant below
-        store = _mk(spark, tmp_path / "s", fake, log_commits=(w % 2 == 0))
+        store = _mk(spark, tmp_path / "s", fake)
+        if w % 2:
+            _checkpoint_writer(store)
         barrier.wait()
         for a in range(per_writer):
             try:
@@ -409,8 +428,9 @@ def test_slow_writer_forfeits_after_claim_steal(spark, tmp_path, same_format):
     aborts with no manifest written.  Either way the stealing writer's
     commit is the single winner."""
     fake = InMemoryObjectStoreIO()
-    kw = {} if same_format else {"log_commits": False}
-    store_a = _mk(spark, tmp_path / "s", fake, **({} if same_format else kw))
+    store_a = _mk(spark, tmp_path / "s", fake)
+    if not same_format:
+        _checkpoint_writer(store_a)
     store_a.commit({"pts": _batch(spark, 0)})
     v_next = store_a.current_version() + 1
     store_b = _mk(spark, tmp_path / "s", fake)  # delta thief
@@ -486,7 +506,7 @@ def test_acknowledged_winner_never_deleted_by_stalled_loser(spark, tmp_path):
     there is no cross-format window in which the loser could land or
     destructively "arbitrate")."""
     fake = InMemoryObjectStoreIO()
-    store_a = _mk(spark, tmp_path / "s", fake, log_commits=False)
+    store_a = _checkpoint_writer(_mk(spark, tmp_path / "s", fake))
     store_a.commit({"pts": _batch(spark, 0)})
     v_next = store_a.current_version() + 1
     store_b = _mk(spark, tmp_path / "s", fake)  # delta thief
@@ -529,15 +549,15 @@ def test_current_pointer_is_monotonic(tmp_path):
         assert io.get_text("CURRENT") == "6"
 
 
-def test_vacuum_protects_inflight_sidecars(spark, tmp_path):
+def test_vacuum_protects_inflight_sidecars(spark, tmp_path, monkeypatch):
     """r11 review (sidecar reclaim): a live writer's fraglist/covers
     sidecars sit between its claim and its manifest put — vacuum must
     not reclaim them while the claim stands (or while young), else the
     writer commits a manifest referencing deleted objects and bricks
     the store at its own version."""
+    _regime(monkeypatch, 0, parquet=True)
     fake = InMemoryObjectStoreIO()
-    store = _mk(spark, tmp_path / "s", fake, manifest_format="parquet",
-                log_commits=False)
+    store = _mk(spark, tmp_path / "s", fake)
     store.commit({"pts": _batch(spark, 0)})
     v_next = store.current_version() + 1
     # crash after the fraglist sidecar write: claim + sidecar, no manifest
@@ -615,13 +635,14 @@ def test_full_ingest_lifecycle_on_object_store_backend(spark, tmp_path):
     assert store2.table_rows("logs") == want_logs
 
 
-def test_legacy_delta_layout_still_resolves(spark, tmp_path):
+def test_legacy_delta_layout_still_resolves(spark, tmp_path, monkeypatch):
     """Pre-r11 stores named delta records ``v{N}.delta.json``; reads
     fall back to that name, time travel and the changefeed fast path
     keep working across a mixed-name history, and a new commit
     continues the chain at the single-name layout."""
+    _regime(monkeypatch, 10)
     fake = InMemoryObjectStoreIO()
-    store = _mk(spark, tmp_path / "s", fake, checkpoint_interval=10)
+    store = _mk(spark, tmp_path / "s", fake)
     for b in range(3):
         store.commit({"pts": _batch(spark, b)})
     # rewrite v2/v3 into the legacy layout (record content unchanged)
@@ -630,7 +651,7 @@ def test_legacy_delta_layout_still_resolves(spark, tmp_path):
         fake.put_text(f"v{v:06d}.delta.json", rec)
         fake.delete(f"v{v:06d}.json")
 
-    fresh = _mk(spark, tmp_path / "s", fake, checkpoint_interval=10)
+    fresh = _mk(spark, tmp_path / "s", fake)
     assert fresh.read("pts").count() == 30
     assert fresh.table_rows("pts") == 30
     assert fresh.read("pts", version=2).count() == 20  # time travel
@@ -680,18 +701,19 @@ def test_heal_delete_is_conditioned_on_unchanged_claim(spark, tmp_path):
     assert not fake.exists(name)
 
 
-def test_manifest_at_missing_intermediate_delta_is_loud(spark, tmp_path):
+def test_manifest_at_missing_intermediate_delta_is_loud(spark, tmp_path, monkeypatch):
     """ADVICE r11 low: a vacuumed/lost INTERMEDIATE delta in the chain
     walk must raise the same clean 'manifest not found' ValueError the
     head lookup gives, not AttributeError on NoneType."""
+    _regime(monkeypatch, 10)
     fake = InMemoryObjectStoreIO()
-    store = _mk(spark, tmp_path / "s", fake, checkpoint_interval=10)
+    store = _mk(spark, tmp_path / "s", fake)
     for b in range(4):
         store.commit({"pts": _batch(spark, b)})
     head = store.current_version()
     # corrupt the chain: drop an intermediate delta record outright
     fake.delete(f"v{head - 1:06d}.json")
-    fresh = _mk(spark, tmp_path / "s", fake, checkpoint_interval=10)
+    fresh = _mk(spark, tmp_path / "s", fake)
     with pytest.raises(ValueError, match=rf"manifest v{head - 1} not found"):
         fresh.manifest_at(head)
 
@@ -720,7 +742,9 @@ def test_commit_with_retry_both_writers_land_everything(spark, tmp_path):
     failures: list[BaseException] = []
 
     def writer(w: int) -> None:
-        store = _mk(spark, tmp_path / "s", fake, log_commits=(w % 2 == 0))
+        store = _mk(spark, tmp_path / "s", fake)
+        if w % 2:
+            _checkpoint_writer(store)
         barrier.wait()
         try:
             for a in range(per_writer):
@@ -776,17 +800,16 @@ def test_commit_with_retry_gives_up_bounded_and_loud(spark, tmp_path):
             {"pts": _batch(spark, 1)}, max_attempts=3, backoff_seconds=0.0)
 
 
-def test_s3_backend_full_lifecycle_matches_posix(spark, tmp_path, moto_s3):
+def test_s3_backend_full_lifecycle_matches_posix(spark, tmp_path, moto_s3, monkeypatch):
     """VERDICT r11 item 4: the REAL adapter (boto3 against a local moto
     endpoint — genuine HTTP conditional-PUT semantics, not the
     in-memory fake's) runs the same end-to-end lifecycle as POSIX with
     identical results: commits, parquet-format manifests (fraglist +
     covers sidecars as object bytes), projections, deletes, status,
     vacuum."""
-    s3 = _mk(spark, tmp_path / "s3", moto_s3(), manifest_format="parquet",
-             checkpoint_interval=3)
-    posix = _mk(spark, tmp_path / "posix", manifest_format="parquet",
-                checkpoint_interval=3)
+    _regime(monkeypatch, 3, parquet=True)
+    s3 = _mk(spark, tmp_path / "s3", moto_s3())
+    posix = _mk(spark, tmp_path / "posix")
     for store in (s3, posix):
         for i in range(4):
             store.commit({"pts": _batch(spark, i)})
@@ -855,7 +878,7 @@ def test_s3_conditional_put_and_monotonic_pointer_semantics(moto_s3):
 
 
 @pytest.mark.slow
-def test_data_tier_object_store_semantics_full_lifecycle(spark, tmp_path):
+def test_data_tier_object_store_semantics_full_lifecycle(spark, tmp_path, monkeypatch):
     """VERDICT r11 item 5: the DATA tier behind a seam with object-store
     semantics — adoption is copy+delete (no rename), directories exist
     only as key prefixes (no empty dirs, no dir stat), deletes are
@@ -865,12 +888,12 @@ def test_data_tier_object_store_semantics_full_lifecycle(spark, tmp_path):
     identical to the POSIX store."""
     from rust_evm_indexer_spark.store.data_io import ObjectStoreStyleDataTierIO
 
+    _regime(monkeypatch, 3)
     objy = _mk(
         spark, tmp_path / "obj", InMemoryObjectStoreIO(),
         data_io=ObjectStoreStyleDataTierIO(tmp_path / "obj"),
-        checkpoint_interval=3,
     )
-    posix = _mk(spark, tmp_path / "posix", checkpoint_interval=3)
+    posix = _mk(spark, tmp_path / "posix")
     for store in (objy, posix):
         for i in range(4):
             store.commit({"pts": _batch(spark, i)})
@@ -991,7 +1014,9 @@ def test_chaos_committers_vacuum_reader_all_converge(
     barrier = threading.Barrier(n_writers + 2)
 
     def writer(w: int) -> None:
-        store = _mk(spark, tmp_path / "s", fake, log_commits=(w % 2 == 0))
+        store = _mk(spark, tmp_path / "s", fake)
+        if w % 2:
+            _checkpoint_writer(store)
         barrier.wait()
         try:
             for a in range(per_writer):

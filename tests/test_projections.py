@@ -12,7 +12,7 @@ from pyspark.sql import functions as F
 from rust_evm_indexer_spark import datagen
 from rust_evm_indexer_spark.ingest import EvmIngester
 from rust_evm_indexer_spark.sources.rpc import MockRpcClient
-from rust_evm_indexer_spark.store import TableStore
+from rust_evm_indexer_spark.store import MaintenancePolicy, TableStore
 
 
 def _pts_store(spark, tmp_path, n_batches=6, rows_per=40):
@@ -358,9 +358,11 @@ def test_zorder_projection_refresh_and_rebuild_keep_layout(spark, tmp_path):
     assert store.refresh_projection("pts", "z") > 0
     proj = store.projections("pts")["z"]
     assert proj["layout"] == "zorder"
-    # compaction staleness → maintain() rebuilds with the SAME layout
-    rep = store.maintain("pts", max_fragments=2)
-    assert "z" in rep["projections_rebuilt"]
+    # compaction staleness → maintain_store rebuilds with the SAME layout
+    rep = store.maintain_store(
+        MaintenancePolicy(max_fragments=2, max_projection_lag=0)
+    )
+    assert "z" in rep["tables"]["pts"]["projections_rebuilt"]
     assert store.projections("pts")["z"]["layout"] == "zorder"
     # replay equivalence after the whole lifecycle
     got = store.read_projection("pts", "z").count()

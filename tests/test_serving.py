@@ -163,14 +163,14 @@ def test_serving_launches_no_spark_job(served_store, monkeypatch):
 
 
 def test_api_fast_path_wiring(served_store):
-    """EvmApi.from_store defaults to the latency tier for /logs, /block
-    and /transaction; fast=False routes through Spark; both give the
-    same envelope."""
+    """EvmApi.from_store serves /logs, /block and /transaction from the
+    latency tier; the Spark route it falls back to (forced here) gives
+    the same envelope."""
     from rust_evm_indexer_spark.api import EvmApi
 
     fast = EvmApi.from_store(served_store)
-    slow = EvmApi.from_store(served_store, fast=False)
-    assert fast._serving is not None and slow._serving is None
+    slow = EvmApi.from_store(served_store)
+    slow._serving.max_fragments = 0  # every request falls back to Spark
     body = {"pageSize": 3}
     assert fast.post_logs(body) == slow.post_logs(body)
     n = fast.post_logs(body)["logs"][0]["blockNumber"]

@@ -7,6 +7,7 @@ import pytest
 
 from rust_evm_indexer_spark import datagen
 from rust_evm_indexer_spark.ingest import EvmIngester, explode_batch
+from rust_evm_indexer_spark.ingest.commit import fetch_block
 from rust_evm_indexer_spark.sources.rpc import MockRpcClient, TransientRpcError
 from rust_evm_indexer_spark.store import TableStore
 
@@ -76,8 +77,8 @@ def test_commit_idempotent_crash_replay(spark, tmp_path):
     ing, client, store = make_ingester(spark, tmp_path, n_blocks=6)
     ing.run_until_caught_up()
     n0 = store.read("transactions").count()
-    raw = [client.get_block_with_txs(START + i) for i in range(3)]
-    tables = explode_batch(spark, [ing._enrich_receipts(b) for b in raw])
+    raw = [fetch_block(client, START + i, backoff=0.01) for i in range(3)]
+    tables = explode_batch(spark, raw)
     committed = store.commit(
         tables,
         status=store.read_status(),
@@ -113,6 +114,54 @@ def test_reorg_rollback_converges(spark, tmp_path):
     # no duplicate heights survived
     heights = store.read("blocks").groupBy("block_number").count()
     assert heights.filter("count > 1").count() == 0
+
+
+@pytest.mark.parametrize("fault", ["reorg", "missing"])
+def test_mid_batch_fault_never_commits_a_mixed_batch(spark, tmp_path, fault):
+    """A reorg between two fetches of one 5-block batch (or a height the
+    node does not serve yet) must not land blocks from two branches (or
+    a gap) under one checkpoint: the cycle keeps the linked prefix, and
+    the next cycle's parent check sees the fork."""
+    ing, client, store = make_ingester(
+        spark, tmp_path, n_blocks=20, head=START + 14
+    )
+    for _ in range(2):
+        assert ing.run_cycle().kind == "ingested"
+    last = ing.last_processed()
+    assert last == START + 9
+
+    get_block = client.get_block_with_txs
+    fired = []
+
+    def faulty_get_block(number):
+        raw = get_block(number)
+        if number == last + 3 and not fired:
+            fired.append(number)
+            if fault == "missing":
+                return None
+            # head is last+5: the new branch replaces last+3..last+5,
+            # so last+4 and last+5 come from it
+            client.schedule_reorg(depth=3)
+        return raw
+
+    client.get_block_with_txs = faulty_get_block
+    results = ing.run_until_caught_up(max_cycles=20)
+    assert fired
+    assert results[-1].kind == "idle"
+    stored = {
+        r["block_number"]: r["block_hash"]
+        for r in store.read("blocks").collect()
+    }
+    canonical = {
+        n: b["block_hash"]
+        for n, b in client._by_height.items()
+        if n <= client.head
+    }
+    assert stored == canonical
+    assert ing.last_processed() == client.head
+    if fault == "reorg":
+        kinds = [r.kind for r in results]
+        assert kinds == ["ingested", "reorg", "ingested", "idle"], kinds
 
 
 def test_rollback_prunes_without_full_rewrite(spark, tmp_path):
@@ -277,7 +326,7 @@ def test_vacuum_grace_period_and_manifest_gc(spark, tmp_path):
         int(p.name[1:7]) for p in (store.root / "_manifests").glob("v*.json")
     )
     # newest 2 versions survive; the log-structured default additionally
-    # retains each kept delta's chain (<= one checkpoint_interval extra)
+    # retains each kept delta's chain (<= one CHECKPOINT_INTERVAL extra)
     # so every retained version stays resolvable
     assert kept[-2:] == [m.version - 1, m.version]
     for v in kept:
@@ -401,21 +450,23 @@ def test_schema_evolution_survives_compaction_and_rollback(spark, tmp_path):
 
 @pytest.mark.slow
 def test_scheduled_maintenance_bounds_fragments(spark, tmp_path):
-    """In-loop maintenance (maintain_every_cycles): streaming ingest
-    writes one fragment per 5-block batch; with maintenance scheduled
-    every 3 ingesting cycles the fragment count stays bounded while the
-    data remains identical to an unmaintained ingest."""
+    """In-loop maintenance (maintenance_policy/maintain_every): streaming
+    ingest writes one fragment per 5-block batch; with maintenance
+    scheduled every 3 ingesting cycles the fragment count stays bounded
+    while the data remains identical to an unmaintained ingest."""
+    from rust_evm_indexer_spark.store import MaintenancePolicy
+
     ing, client, store = make_ingester(
         spark,
         tmp_path,
         n_blocks=40,
-        maintain_every_cycles=3,
-        maintain_max_fragments=2,
+        maintenance_policy=MaintenancePolicy(max_fragments=2),
+        maintain_every=3,
     )
     results = ing.run_until_caught_up()
     maintained = [r for r in results if r.maintained]
     assert maintained, "maintenance never fired"
-    assert maintained[0].maintained["logs"]["compacted_from"] > 2
+    assert maintained[0].maintained["tables"]["logs"]["compacted_from"] > 2
     # 8 ingest cycles, maintenance after cycles 3 and 6 → at most the
     # compaction cap + the post-maintenance tail of fragments
     assert len(store.current_manifest().tables["logs"]) <= 4

@@ -17,7 +17,7 @@ import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
-from rust_evm_indexer_spark.store import TableStore
+from rust_evm_indexer_spark.store import TableStore, table_store
 
 SCHEMA = "doc_id: long, text: string, block_number: long"
 
@@ -41,13 +41,12 @@ _op = st.one_of(
     suppress_health_check=[HealthCheck.function_scoped_fixture],
 )
 @given(ops=st.lists(_op, min_size=3, max_size=10))
-def _run_sequence(spark, tmp_path_factory, store_kw, projected, ops):
+def _run_sequence(spark, tmp_path_factory, projected, ops):
     store = TableStore(
         spark,
         tmp_path_factory.mktemp("model") / "s",
         bloom_columns={"docs": ("text",)},
         dict_columns={},
-        **store_kw,
     )
     model: dict[int, str] = {}
     version = 0
@@ -119,43 +118,47 @@ def _run_sequence(spark, tmp_path_factory, store_kw, projected, ops):
 
 
 @pytest.mark.parametrize(
-    "store_kw",
+    "interval",
     [
-        {},  # log-structured default (checkpoint every 16 appends)
-        {"checkpoint_interval": 2},  # checkpoint-heavy short chains
-        {"log_commits": False},  # legacy full-manifest regime
+        16,  # log-structured default (checkpoint every 16 appends)
+        2,  # checkpoint-heavy short chains
+        0,  # legacy full-manifest regime
     ],
     ids=["log16", "log2", "full"],
 )
 @pytest.mark.slow
-def test_store_model_random_interleavings(spark, tmp_path_factory, store_kw):
+def test_store_model_random_interleavings(
+    spark, tmp_path_factory, monkeypatch, interval
+):
     """The same random interleavings must hold in every manifest
     regime — the r9 log-structured write path and the legacy full
     rewrite are REQUIRED to be observationally identical (delta
     commits interact with upsert/delete/compact checkpoints and
     chain-aware vacuum inside one history here)."""
-    _run_sequence(spark, tmp_path_factory, store_kw, False)
+    monkeypatch.setattr(table_store, "CHECKPOINT_INTERVAL", interval)
+    _run_sequence(spark, tmp_path_factory, False)
 
 
 @pytest.mark.parametrize(
-    "store_kw",
+    "interval",
     [
-        {},  # delta takedowns carry projections_delta (r10)
-        {"checkpoint_interval": 2},  # chains re-anchor mid-history
-        {"log_commits": False},  # checkpoint-materialized projections
+        16,  # delta takedowns carry projections_delta (r10)
+        2,  # chains re-anchor mid-history
+        0,  # checkpoint-materialized projections
     ],
     ids=["log16", "log2", "full"],
 )
 @pytest.mark.slow
 def test_store_model_random_interleavings_projected(
-    spark, tmp_path_factory, store_kw
+    spark, tmp_path_factory, monkeypatch, interval
 ):
     """The same interleavings with a clustered projection on the table
     (VERDICT r9 item 2): every delete/upsert must purge the replica in
     the SAME swap — via projections_delta on the log path, via the
     materialized checkpoint on the full path — and the projection read
     must agree with the model at every step in all three regimes."""
-    _run_sequence(spark, tmp_path_factory, store_kw, True)
+    monkeypatch.setattr(table_store, "CHECKPOINT_INTERVAL", interval)
+    _run_sequence(spark, tmp_path_factory, True)
 
 
 def test_store_model_upsert_delete_compact_chain(spark, tmp_path):

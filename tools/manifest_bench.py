@@ -13,6 +13,10 @@ Expected shape: JSON read_prune grows linearly with N (the whole list
 parses before pruning); parquet read_prune stays near-flat (row-group
 statistics skip non-matching groups; only survivors materialize).
 
+The store picks the format by fragment count (``AUTO_PARQUET_FRAGMENTS``)
+and the delta-chain length by ``CHECKPOINT_INTERVAL``; this script sets
+both module constants to pin one format and regime per measurement.
+
 Run: ``python tools/manifest_bench.py [Ns...]`` — prints one JSON line.
 """
 
@@ -27,6 +31,7 @@ from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
+from rust_evm_indexer_spark.store import table_store  # noqa: E402
 from rust_evm_indexer_spark.store.table_store import (  # noqa: E402
     Fragment,
     Manifest,
@@ -34,6 +39,14 @@ from rust_evm_indexer_spark.store.table_store import (  # noqa: E402
 )
 
 BLOCKS_PER_FRAG = 5
+
+
+def _store(root: Path, fmt: str, interval: int = 16) -> TableStore:
+    """A metadata-only store whose swaps write ``fmt`` manifests and
+    checkpoint every ``interval``-th swap (0: checkpoints only)."""
+    table_store.AUTO_PARQUET_FRAGMENTS = 0 if fmt == "parquet" else sys.maxsize
+    table_store.CHECKPOINT_INTERVAL = interval
+    return TableStore(None, root)
 
 
 def _fabricate(n_frags: int) -> dict[str, list[Fragment]]:
@@ -55,7 +68,7 @@ def _fabricate(n_frags: int) -> dict[str, list[Fragment]]:
 def _bench_format(fmt: str, n_frags: int, probes: int = 20) -> dict[str, float]:
     root = Path(tempfile.mkdtemp(prefix=f"manifest-bench-{fmt}-"))
     try:
-        store = TableStore(None, root, manifest_format=fmt)
+        store = _store(root, fmt)
         m = Manifest(version=1, tables=_fabricate(n_frags))
         t0 = time.perf_counter()
         store._swap(m)
@@ -99,7 +112,7 @@ def _bench_append(fmt: str, n_frags: int, chain: int = 16) -> dict[str, float]:
     - ``append_delta_s``: the log-structured regime — resolve the
       (unhydrated) current version, write one O(1) delta
       (a ``base``-bearing record at ``v{N}.json``) holding just the new fragment;
-    - ``append_amortized_s``: a full checkpoint_interval-length chain of
+    - ``append_amortized_s``: a full CHECKPOINT_INTERVAL-length chain of
       delta appends PLUS the closing checkpoint, averaged — the honest
       sustained cost including the periodic O(total)/K hydration.
     """
@@ -117,7 +130,7 @@ def _bench_append(fmt: str, n_frags: int, chain: int = 16) -> dict[str, float]:
     # full-manifest regime
     root = Path(tempfile.mkdtemp(prefix=f"manifest-append-full-{fmt}-"))
     try:
-        store = TableStore(None, root, manifest_format=fmt, log_commits=False)
+        store = _store(root, fmt, interval=0)
         store._swap(Manifest(version=1, tables=base))
         t0 = time.perf_counter()
         m = store.current_manifest()
@@ -130,9 +143,7 @@ def _bench_append(fmt: str, n_frags: int, chain: int = 16) -> dict[str, float]:
     # log-structured regime: one delta, then a sustained chain + checkpoint
     root = Path(tempfile.mkdtemp(prefix=f"manifest-append-delta-{fmt}-"))
     try:
-        store = TableStore(
-            None, root, manifest_format=fmt, checkpoint_interval=chain
-        )
+        store = _store(root, fmt, interval=chain)
         store._swap(Manifest(version=1, tables=base))
         t0 = time.perf_counter()
         m = store.current_manifest()
@@ -226,7 +237,7 @@ def _bench_projected_takedown(fmt: str, n_frags: int) -> dict[str, float]:
     # checkpoint regime (what projected tables paid pre-r10)
     root = Path(tempfile.mkdtemp(prefix=f"manifest-td-ckpt-{fmt}-"))
     try:
-        store = TableStore(None, root, manifest_format=fmt, log_commits=False)
+        store = _store(root, fmt, interval=0)
         store._swap(Manifest(version=1, tables=base, projections=projections))
         t0 = time.perf_counter()
         m = store.current_manifest()
@@ -243,7 +254,7 @@ def _bench_projected_takedown(fmt: str, n_frags: int) -> dict[str, float]:
     # delta regime (r10)
     root = Path(tempfile.mkdtemp(prefix=f"manifest-td-delta-{fmt}-"))
     try:
-        store = TableStore(None, root, manifest_format=fmt)
+        store = _store(root, fmt)
         store._swap(Manifest(version=1, tables=base, projections=projections))
         t0 = time.perf_counter()
         m = store.current_manifest()

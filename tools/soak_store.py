@@ -27,7 +27,7 @@ Bounded-amplification assertions via ``stats()``:
   bytes/row at the end ≤ 3x the round-1 baseline (both measured under
   the same grace retention);
 - manifest metadata is pruned to ``keep_manifests`` plus at most one
-  delta chain (``checkpoint_interval``) — the log-structured commit
+  delta chain (``CHECKPOINT_INTERVAL``) — the log-structured commit
   retention contract;
 - and the data is RIGHT throughout: after every round the store's
   visible ids equal the python-side expected set (ingested minus taken
@@ -64,13 +64,14 @@ def main() -> int:
     from pyspark.sql import functions as F
 
     from rust_evm_indexer_spark.session import get_spark
-    from rust_evm_indexer_spark.store import MaintenancePolicy, TableStore
+    from rust_evm_indexer_spark.store import MaintenancePolicy, TableStore, table_store
 
     spark = get_spark("soak-store")
     root = Path(tempfile.mkdtemp(prefix="soak_store_"))
+    table_store.CHECKPOINT_INTERVAL = 4  # short chains: many checkpoints per soak
     store = TableStore(
         spark, root / "store", bloom_columns={"pts": ("addr",)},
-        dict_columns={}, checkpoint_interval=4,
+        dict_columns={},
     )
     pol = MaintenancePolicy(
         max_fragments=6, max_size_skew=16.0, max_projection_lag=2,
@@ -250,7 +251,7 @@ def main() -> int:
         check(pgot == len(live),
               f"r{rnd}: projection rows {pgot} != {len(live)}")
         manifests = len(list((root / "store" / "_manifests").glob("v*.json")))
-        m_bound = pol.keep_manifests + store.checkpoint_interval
+        m_bound = pol.keep_manifests + table_store.CHECKPOINT_INTERVAL
         check(manifests <= m_bound,
               f"r{rnd}: {manifests} manifests kept > {m_bound} "
               "(keep_manifests + one delta chain)")
