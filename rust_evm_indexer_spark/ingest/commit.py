@@ -8,7 +8,8 @@ The batch re-expression of the reference's ingestion loop
 - O-3      per-tx receipt enrichment, concurrency-bounded fan-out
            (ThreadPool(10) ≙ ``buffer_unordered(10)``) — connector I/O,
            like the reference's; :func:`fetch_block` is the one fetch,
-           which backfill runs partition-parallel on executors;
+           which backfill runs partition-parallel on executors (the tip
+           cycle attaches receipts after its reorg check);
 - O-4      retry with exponential backoff (3 attempts, base 2s defaults);
 - O-5/O-6  normalize + explode (``normalize.explode_batch``);
 - O-7..O-9 atomic cross-table commit with the checkpoint *inside* the
@@ -54,17 +55,11 @@ def with_retry(fn, *args, backoff: float):
     raise last_exc
 
 
-def fetch_block(client, number: int, *, backoff: float) -> dict | None:
-    """One block with every transaction's receipt attached, or None when
-    the node does not serve that height.  The single fetch path: the tip
-    cycle calls it on the driver, the backfill kernel on executors.
-
-    O-3: receipts fan out over a bounded pool (``buffer_unordered(10)``,
-    ``src/main.rs:204-227``); a missing receipt leaves status/logs NULL
+def attach_receipts(client, raw: dict, *, backoff: float) -> dict:
+    """O-3: ``raw`` with every transaction's receipt attached; receipts
+    fan out over a bounded pool (``buffer_unordered(10)``,
+    ``src/main.rs:204-227``).  A missing receipt leaves status/logs NULL
     (LEFT OUTER)."""
-    raw = with_retry(client.get_block_with_txs, number, backoff=backoff)
-    if raw is None:
-        return None
     txs = raw.get("transactions") or []
     with ThreadPoolExecutor(max_workers=MAX_RECEIPT_CONCURRENT) as pool:
         receipts = list(
@@ -79,6 +74,15 @@ def fetch_block(client, number: int, *, backoff: float) -> dict | None:
         **raw,
         "transactions": [{**t, "receipt": r} for t, r in zip(txs, receipts)],
     }
+
+
+def fetch_block(client, number: int, *, backoff: float) -> dict | None:
+    """One block with every transaction's receipt attached, or None when
+    the node does not serve that height.  The backfill kernel calls it on
+    executors; the tip cycle runs the same two steps on the driver, with
+    its reorg check between them."""
+    raw = with_retry(client.get_block_with_txs, number, backoff=backoff)
+    return None if raw is None else attach_receipts(client, raw, backoff=backoff)
 
 
 @dataclass
@@ -147,15 +151,26 @@ class EvmIngester:
         if last >= head:
             return CycleResult("idle")  # caught up; caller sleeps
 
-        # O-2/O-3: bounded range scan, each block fetched with receipts
-        first = fetch_block(self.client, last + 1, backoff=self.backoff_base)
-        if first is None:
+        # O-2: bounded range scan, kept to its longest linked prefix: a
+        # reorg or a missing block between two fetches of this batch ends
+        # it there, and the next cycle's parent check sees the fork
+        batch: list[dict] = []
+        for n in range(last + 1, min(last + BLOCKS_PER_BATCH, head) + 1):
+            block = with_retry(
+                self.client.get_block_with_txs, n, backoff=self.backoff_base
+            )
+            if block is None or (
+                batch and block["parent_hash"].lower() != batch[-1]["hash"].lower()
+            ):
+                break
+            batch.append(block)
+        if not batch:
             return CycleResult("idle")
 
         # O-10: reorg detection — compare the first new block's parent_hash
         # with the stored hash at its parent height (src/main.rs:166-189).
         stored_parent = self._stored_hash_at(last)
-        if stored_parent is not None and stored_parent != first["parent_hash"].lower():
+        if stored_parent is not None and stored_parent != batch[0]["parent_hash"].lower():
             # O-11: the stored parent is not canonical → retract it (and
             # everything above) in one atomic swap; checkpoint steps back
             # so the next cycle re-ingests from the fork. Deep reorgs
@@ -163,15 +178,10 @@ class EvmIngester:
             self.store.rollback_from(last, status=self._status(last - 1, head))
             return CycleResult("reorg", rollback_from=last)
 
-        # keep the longest linked prefix: a reorg or a missing block
-        # between two fetches of this batch ends it there, and the next
-        # cycle's parent check sees the fork
-        batch = [first]
-        for n in range(last + 2, min(last + BLOCKS_PER_BATCH, head) + 1):
-            block = fetch_block(self.client, n, backoff=self.backoff_base)
-            if block is None or block["parent_hash"].lower() != batch[-1]["hash"].lower():
-                break
-            batch.append(block)
+        # O-3: receipts only for blocks this cycle commits
+        batch = [
+            attach_receipts(self.client, b, backoff=self.backoff_base) for b in batch
+        ]
         to_block = batch[-1]["number"]
 
         # O-5/O-6 normalize
@@ -199,7 +209,7 @@ class EvmIngester:
                 maintained = self.store.maintain_store(self.maintenance_policy)
         return CycleResult(
             "ingested",
-            from_block=first["number"],
+            from_block=batch[0]["number"],
             to_block=to_block,
             maintained=maintained,
         )
