@@ -99,13 +99,13 @@ def main() -> None:
     # 6b. training-export tail: bigram-LM gate -> RAG chunks ->
     # deterministic shuffled shards written partitioned by shard_id.
     # localCheckpoint truncates the dedup-pipeline lineage first:
-    # stupid_backoff_nll references its input ~6 times (model counts,
-    # pairs, first words), and without truncation each reference
-    # re-derives the whole upstream gate/dedup DAG (measured: thousands
-    # of stages at sf0.01).
+    # `sampled` feeds the LM's scored and model sides, then the join,
+    # chunking and shard map below, and without truncation each
+    # reference re-derives the whole upstream gate/dedup DAG
+    # (measured: thousands of stages at sf0.01).
     sampled = sampled.localCheckpoint()
-    sb = textops.stupid_backoff_nll(
-        sampled, model_df=sampled.where(F.col("lang") == "en")
+    sb = textops.stupid_backoff_ngram_nll(
+        sampled, model_df=sampled.where(F.col("lang") == "en"), n=2
     )
     lm_kept = sampled.join(
         sb.where(F.col("avg_nll") <= 12.0).select("doc_id"), "doc_id"

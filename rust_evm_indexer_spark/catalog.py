@@ -6007,12 +6007,12 @@ def dedup_spans_global_q(spark, sf_dir):
 # driver entry for store time travel
 # ---------------------------------------------------------------------------
 
-# RETIRED (r11 net-zero growth): ``lm_stupid_backoff`` — the bigram
-# (n=2) special case of ``lm_stupid_backoff_quad``'s general operator
-# (operators/textops.py:stupid_backoff_ngram_nll; bit-identity at n=2
-# pinned in tests/test_llm_ops.py::
-# test_stupid_backoff_ngram_generalizes_dedicated_orders).  The
-# dedicated bigram operator stays unit-tested and plan-pinned; the
+# RETIRED (r11 net-zero growth): ``lm_stupid_backoff`` — bigram
+# scoring is ``stupid_backoff_ngram_nll(n=2)`` (operators/textops.py),
+# the one Stupid-Backoff operator that ``lm_stupid_backoff_tri`` (n=3)
+# and ``lm_stupid_backoff_quad`` (n=4) also run; n=2 stays
+# unit-tested (tests/test_llm_ops.py hand references) and plan-pinned
+# (tests/test_plan_hygiene.py::test_stupid_backoff_join_posture).  The
 # catalog slot funded ``bm25_rerank`` (VERDICT r10 item 8), following
 # the r9 ``similarity_ivfpq_residual_topk`` precedent.
 
@@ -6091,18 +6091,21 @@ _SB3_SQL = f"""
 def lm_stupid_backoff_tri_q(spark, sf_dir):
     """Trigram Stupid Backoff with count-cutoff pruning (Brants et al.
     2007 §4 — the tractability lever that makes higher orders feasible
-    at scale; operators/textops.py:stupid_backoff_trigram_nll), fit on
-    the lang='en' slice, scoring EVERY document so all three backoff
-    hops (trigram -> bigram -> unigram floor) run for real.  Trigrams
-    below count 2 are PRUNED from the model — the Zipf tail that
-    dominates trigram volume backs off instead of paying storage.
-    Unigram vocab + total broadcast; the bigram and trigram tables join
-    key-partitioned (bigram twice: context and backoff keys); DECIMAL
-    per-term accumulation keeps both engines bit-identical."""
+    at scale; operators/textops.py::stupid_backoff_ngram_nll at n=3),
+    fit on the lang='en' slice, scoring EVERY document so all three
+    backoff hops (trigram -> bigram -> unigram floor) run for real.
+    Trigrams below count 2 are PRUNED from the model — the Zipf tail
+    that dominates trigram volume backs off instead of paying storage.
+    One position-exploded NULL-padded frame left-joins the trigram
+    table and the bigram table twice (context and backoff keys), all
+    key-partitioned; vocab + total broadcast; DECIMAL per-term
+    accumulation keeps both engines bit-identical.  The oracle is
+    written independently as classic triples, not generated from the
+    operator's order parameter."""
     docs = _t(spark, sf_dir, "documents")
-    return tx.stupid_backoff_trigram_nll(
+    return tx.stupid_backoff_ngram_nll(
         docs, model_df=docs.where(F.col("lang") == "en"),
-        alpha=0.4, trigram_min_count=2,
+        alpha=0.4, n=3, min_count=2,
     )
 
 
@@ -6203,9 +6206,9 @@ def _sbn_sql(n: int, cutoff: int, alpha: float) -> str:
 )
 def lm_stupid_backoff_quad_q(spark, sf_dir):
     """Order-4 Stupid Backoff with count-cutoff pruning
-    (operators/textops.py::stupid_backoff_ngram_nll — the GENERAL
-    Brants'07 implementation at arbitrary order, bit-identical to the
-    dedicated bigram/trigram operators at n=2/3 by test): 4-gram →
+    (operators/textops.py::stupid_backoff_ngram_nll — the one
+    Brants'07 operator, orders 2-5; ``lm_stupid_backoff_tri`` runs it
+    at n=3): 4-gram →
     trigram → bigram → unigram backoff chain, orders ≥3 pruned below
     count 2, scored from ONE position-exploded NULL-padded frame.
     Every n-gram table joins key-partitioned; vocab + total broadcast;

@@ -96,7 +96,9 @@ def backfill(
     backoff: float = 0.05,
 ) -> dict[str, int]:
     """Fetch + normalize + commit a block range atomically.  Returns row
-    counts per table.  Idempotent: txn watermark = end_block.
+    counts per table.  Idempotent: txn watermark = end_block.  Raises,
+    committing nothing, when the node does not serve every height of
+    the range.
 
     The raw frame is persisted and materialized ONCE before the 4-table
     fan-out: ``store.commit`` runs one Spark action per table, and
@@ -115,7 +117,16 @@ def backfill(
         backoff=backoff,
     ).persist(StorageLevel.MEMORY_AND_DISK)
     try:
-        raw.count()  # force the single materialized fetch
+        fetched = raw.count()  # force the single materialized fetch
+        wanted = end_block - start_block + 1
+        if fetched != wanted:
+            # a height the node did not serve: committing would
+            # checkpoint end_block past the gap, and a resuming tip
+            # ingester would skip the missing heights forever
+            raise RuntimeError(
+                f"backfill [{start_block}, {end_block}]: fetched {fetched} "
+                f"of {wanted} blocks; nothing committed"
+            )
         tables = explode_raw(raw)
         from .rollup import ROLLUP_TABLE, rollup_partials
 

@@ -393,267 +393,6 @@ def _token_arrays(df: DataFrame, text_col: str) -> DataFrame:
     ).where((F.size("ws") > 0) & (F.element_at("ws", 1) != ""))
 
 
-def stupid_backoff_nll(
-    df: DataFrame,
-    model_df: DataFrame | None = None,
-    text_col: str = "text",
-    alpha: float = 0.4,
-) -> DataFrame:
-    """Bigram language-model quality score with Stupid Backoff (Brants et
-    al. 2007, "Large Language Models in Machine Translation" — THE
-    distributed n-gram LM: no discounting passes, counts only, designed
-    for MapReduce-scale corpora).  Counts are fit on ``model_df`` (the
-    reference corpus — CCNet fits on Wikipedia) and every document in
-    ``df`` is scored against them, so out-of-model bigrams genuinely
-    exercise the backoff path:
-
-        s(w)        = c1(w)/T           if seen, else  alpha/T
-        s(w2 | w1)  = c2(w1,w2)/c1(w1)  if bigram seen, else alpha*s(w2)
-        avg_nll     = -(log s(w_0) + sum log s(w_i|w_{i-1})) / n_words
-
-    Shape at scale: the unigram vocabulary is Heaps'-law bounded and
-    BROADCASTS; the bigram table is NOT broadcast-bounded (it grows much
-    faster than the vocabulary), so it joins by a key-partitioned
-    equi-join on (w1, w2) — the scale-honest path.  Pair extraction is
-    in-array (element_at over a sequence), so there is NO window and NO
-    per-doc shuffle to recover adjacency.  Per-term NLLs accumulate
-    through DECIMAL(27,15) (order-independent under partial aggregation;
-    same policy as unigram_nll), so Spark and the DuckDB oracle agree
-    bit-for-bit.
-    """
-    from ..util import persist_shared
-
-    # the token arrays fan into unigram/bigram extraction on the model
-    # side and pair/base extraction on the doc side — persist each
-    # (one bounded row per doc), and share one frame when the model IS
-    # the corpus (the default), halving the tokenize passes
-    docs = persist_shared(_token_arrays(df, text_col))
-    model = (
-        docs
-        if model_df is None
-        else persist_shared(_token_arrays(model_df, text_col))
-    )
-
-    m_words = model.select(F.explode("ws").alias("word"))
-    uni = m_words.groupBy("word").agg(F.count("*").alias("c1"))
-    total = uni.agg(F.sum("c1").cast("double").alias("t"))
-
-    _PAIRS = (
-        "transform(sequence(1, size(ws) - 1), "
-        "i -> struct(element_at(ws, i) AS w1, element_at(ws, i + 1) AS w2))"
-    )
-    m_pairs = model.where(F.size("ws") >= 2).select(
-        F.explode(F.expr(_PAIRS)).alias("bg")
-    )
-    bi = m_pairs.groupBy(
-        F.col("bg.w1").alias("w1"), F.col("bg.w2").alias("w2")
-    ).agg(F.count("*").alias("c2"))
-
-    pairs = (
-        docs.where(F.size("ws") >= 2)
-        .select("doc_id", F.explode(F.expr(_PAIRS)).alias("bg"))
-        .select("doc_id", F.col("bg.w1").alias("w1"), F.col("bg.w2").alias("w2"))
-    )
-    u1 = uni.select(F.col("word").alias("w1"), F.col("c1").alias("c1_w1"))
-    u2 = uni.select(F.col("word").alias("w2"), F.col("c1").alias("c1_w2"))
-    score = F.when(
-        F.col("c2").isNotNull(), F.col("c2") / F.col("c1_w1")
-    ).otherwise(
-        alpha * F.coalesce(F.col("c1_w2").cast("double"), F.lit(alpha)) / F.col("t")
-    )
-    pair_nll = (
-        pairs.join(bi, ["w1", "w2"], "left")  # NOT broadcast: bigram vocab unbounded
-        .join(F.broadcast(u1), "w1", "left")
-        .join(F.broadcast(u2), "w2", "left")
-        .crossJoin(F.broadcast(total))
-        .groupBy("doc_id")
-        .agg(F.sum((-F.log(score)).cast("decimal(27,15)")).alias("pair_sum"))
-    )
-    uf = uni.select(F.col("word").alias("fw"), F.col("c1").alias("c1_fw"))
-    base = (
-        docs.select("doc_id", F.size("ws").alias("n_words"),
-                    F.element_at("ws", 1).alias("fw"))
-        .join(F.broadcast(uf), "fw", "left")
-        .crossJoin(F.broadcast(total))
-        .select(
-            "doc_id",
-            "n_words",
-            (-F.log(
-                F.coalesce(F.col("c1_fw").cast("double"), F.lit(alpha)) / F.col("t")
-            )).cast("decimal(27,15)").alias("nll0"),
-        )
-    )
-    zero = F.lit(0).cast("decimal(27,15)")
-    return base.join(pair_nll, "doc_id", "left").select(
-        "doc_id",
-        F.col("n_words").cast("long").alias("n_words"),
-        F.round(
-            (F.col("nll0") + F.coalesce(F.col("pair_sum"), zero)).cast("double")
-            / F.col("n_words"),
-            6,
-        ).alias("avg_nll"),
-    )
-
-
-def stupid_backoff_trigram_nll(
-    df: DataFrame,
-    model_df: DataFrame | None = None,
-    text_col: str = "text",
-    alpha: float = 0.4,
-    trigram_min_count: float = 2,
-) -> DataFrame:
-    """Trigram Stupid Backoff with count-cutoff pruning — the full
-    Brants et al. 2007 recipe (§4: higher orders become tractable at
-    scale only with count cutoffs; Google's 5-gram model pruned at
-    count < 40).  Per word position:
-
-        s(w3 | w1,w2) = c3(w1,w2,w3)/c2(w1,w2)   if trigram RETAINED
-                        alpha * s(w3 | w2)        else (bigram hop)
-        s(w2 | w1)    = c2(w1,w2)/c1(w1)          if seen
-                        alpha * s(w2)             else (unigram hop)
-        s(w)          = c1(w)/T, floor alpha/T
-
-    and a document of words w_1..w_n scores
-    ``-(log s(w1) + log s(w2|w1) + sum_{i>=3} log s(w_i|..)) / n``.
-
-    **Pruning is the tractability lever**: trigrams observed fewer than
-    ``trigram_min_count`` times are DROPPED from the model — the long
-    tail that dominates trigram-table volume (most trigrams are
-    singletons, Zipf) backs off to the bigram chain instead of paying
-    storage + join width.  A retained trigram's context bigram is
-    always in the (unpruned) bigram table, so the seen-branch
-    denominator never nulls.
-
-    Scale shape, same posture as the bigram operator: unigram vocab +
-    1-row total broadcast (Heaps-bounded); the bigram AND trigram
-    tables are NOT broadcast-bounded, so the doc-triple stream joins
-    them by key-partitioned equi-joins (trigram on (w1,w2,w3), bigram
-    twice — context (w1,w2) and backoff (w2,w3)); adjacency is in-array
-    triple extraction, never a window shuffle.  DECIMAL(27,15) per-term
-    accumulation keeps partial-aggregation order out of the result, so
-    the DuckDB oracle matches bit-for-bit.
-
-    The whole chain past the (pinned) token arrays is built as ONE
-    ``spark.sql`` statement over temp views (r13 optimization round,
-    guide §1.2 driver-side planning cost): PySpark classic eagerly
-    re-analyzes the entire logical tree on every DataFrame op, and this
-    operator's ~25 ops over a join tree this wide cost ~1.2 s of plan
-    build per call (opt_profile).  The SQL spells the IDENTICAL
-    operations — same n-gram extraction expressions, same left joins in
-    the same order, same broadcast hints on the Heaps-bounded sides
-    only, same DECIMAL(27,15) accumulation and literal constants
-    (``repr`` + ``D`` suffix keeps the doubles bit-identical) — so the
-    optimized physical plan and the output are unchanged
-    (oracle-verified at sf0.001/0.01/0.1 and under the hostile tz)."""
-    from ..util import persist_shared, register_temp_view
-
-    # persist the token arrays (bounded: one row per doc) — they fan
-    # into every n-gram extraction below; share one frame when the
-    # model IS the corpus (the default)
-    docs = persist_shared(_token_arrays(df, text_col))
-    model = (
-        docs
-        if model_df is None
-        else persist_shared(_token_arrays(model_df, text_col))
-    )
-    spark = df.sparkSession
-    v_docs = register_temp_view(docs, "sbt_docs")
-    v_model = v_docs if model_df is None else register_temp_view(model, "sbt_model")
-
-    a = f"{float(alpha)!r}D"  # 0.4D — the exact double F.lit(alpha) built
-    a2 = f"{float(alpha * alpha)!r}D"  # Python's 0.4*0.4, bit-exact
-    zero = "CAST(0 AS DECIMAL(27,15))"
-    return spark.sql(f"""
-        WITH uni AS (
-          SELECT word, count(*) AS c1
-          FROM (SELECT explode(ws) AS word FROM {v_model})
-          GROUP BY word),
-        total AS (SELECT CAST(sum(c1) AS DOUBLE) AS t FROM uni),
-        bi AS (
-          SELECT bg.w1 AS w1, bg.w2 AS w2, count(*) AS c2
-          FROM (SELECT explode(transform(sequence(1, size(ws) - 1),
-                         i -> struct(element_at(ws, i) AS w1,
-                                     element_at(ws, i + 1) AS w2))) AS bg
-                FROM {v_model} WHERE size(ws) >= 2)
-          GROUP BY bg.w1, bg.w2),
-        tri AS (
-          SELECT tg.w1 AS w1, tg.w2 AS w2, tg.w3 AS w3, count(*) AS c3
-          FROM (SELECT explode(transform(sequence(1, size(ws) - 2),
-                         i -> struct(element_at(ws, i) AS w1,
-                                     element_at(ws, i + 1) AS w2,
-                                     element_at(ws, i + 2) AS w3))) AS tg
-                FROM {v_model} WHERE size(ws) >= 3)
-          GROUP BY tg.w1, tg.w2, tg.w3
-          HAVING count(*) >= {trigram_min_count!r}),
-        triples AS (
-          SELECT doc_id, tg.w1 AS w1, tg.w2 AS w2, tg.w3 AS w3
-          FROM (SELECT doc_id, explode(transform(sequence(1, size(ws) - 2),
-                         i -> struct(element_at(ws, i) AS w1,
-                                     element_at(ws, i + 1) AS w2,
-                                     element_at(ws, i + 2) AS w3))) AS tg
-                FROM {v_docs} WHERE size(ws) >= 3)),
-        tri_nll AS (
-          SELECT /*+ BROADCAST(u2), BROADCAST(u3), BROADCAST(total) */
-                 d.doc_id,
-                 sum(CAST(-ln(
-                   CASE WHEN t3.c3 IS NOT NULL THEN t3.c3 / bc.c2_ctx
-                        WHEN bn.c2_nxt IS NOT NULL
-                          THEN {a} * bn.c2_nxt / u2.c1_w2
-                        ELSE {a2} * coalesce(CAST(u3.c1_w3 AS DOUBLE), {a})
-                             / total.t
-                   END) AS DECIMAL(27,15))) AS tri_sum
-          FROM triples d
-          LEFT JOIN tri t3
-            ON d.w1 = t3.w1 AND d.w2 = t3.w2 AND d.w3 = t3.w3
-          LEFT JOIN (SELECT w1, w2, c2 AS c2_ctx FROM bi) bc
-            ON d.w1 = bc.w1 AND d.w2 = bc.w2
-          LEFT JOIN (SELECT w1 AS w2, w2 AS w3, c2 AS c2_nxt FROM bi) bn
-            ON d.w2 = bn.w2 AND d.w3 = bn.w3
-          LEFT JOIN (SELECT word AS w2, c1 AS c1_w2 FROM uni) u2
-            ON d.w2 = u2.w2
-          LEFT JOIN (SELECT word AS w3, c1 AS c1_w3 FROM uni) u3
-            ON d.w3 = u3.w3
-          CROSS JOIN total
-          GROUP BY d.doc_id),
-        second AS (
-          SELECT /*+ BROADCAST(u1f), BROADCAST(u2b), BROADCAST(total) */
-                 s.doc_id,
-                 CAST(-ln(
-                   CASE WHEN b.c2 IS NOT NULL THEN b.c2 / u1f.c1_w1
-                        ELSE {a} * coalesce(CAST(u2b.c1_w2 AS DOUBLE), {a})
-                             / total.t
-                   END) AS DECIMAL(27,15)) AS nll2
-          FROM (SELECT doc_id, element_at(ws, 1) AS w1,
-                       element_at(ws, 2) AS w2
-                FROM {v_docs} WHERE size(ws) >= 2) s
-          LEFT JOIN bi b ON s.w1 = b.w1 AND s.w2 = b.w2
-          LEFT JOIN (SELECT word AS w1, c1 AS c1_w1 FROM uni) u1f
-            ON s.w1 = u1f.w1
-          LEFT JOIN (SELECT word AS w2, c1 AS c1_w2 FROM uni) u2b
-            ON s.w2 = u2b.w2
-          CROSS JOIN total),
-        base AS (
-          SELECT /*+ BROADCAST(uf), BROADCAST(total) */
-                 d0.doc_id, d0.n_words,
-                 CAST(-ln(coalesce(CAST(uf.c1_fw AS DOUBLE), {a}) / total.t)
-                      AS DECIMAL(27,15)) AS nll0
-          FROM (SELECT doc_id, size(ws) AS n_words,
-                       element_at(ws, 1) AS fw FROM {v_docs}) d0
-          LEFT JOIN (SELECT word AS fw, c1 AS c1_fw FROM uni) uf
-            ON d0.fw = uf.fw
-          CROSS JOIN total)
-        SELECT base.doc_id,
-               CAST(base.n_words AS BIGINT) AS n_words,
-               round(CAST(base.nll0
-                          + coalesce(second.nll2, {zero})
-                          + coalesce(tri_nll.tri_sum, {zero}) AS DOUBLE)
-                     / base.n_words, 6) AS avg_nll
-        FROM base
-        LEFT JOIN second ON base.doc_id = second.doc_id
-        LEFT JOIN tri_nll ON base.doc_id = tri_nll.doc_id
-    """)
-
-
 def stupid_backoff_ngram_nll(
     df: DataFrame,
     model_df: DataFrame | None = None,
@@ -663,8 +402,11 @@ def stupid_backoff_ngram_nll(
     min_count: float = 2,
 ) -> DataFrame:
     """Order-``n`` Stupid Backoff with count-cutoff pruning — the full
-    Brants et al. 2007 scheme at arbitrary order (Google ran n=5), one
-    uniform implementation replacing per-order special cases:
+    Brants et al. 2007 scheme at arbitrary order (Google ran n=5); the
+    one Stupid-Backoff operator, bigram (n=2) and trigram (n=3) scoring
+    included.  Counts are fit on ``model_df`` (the reference corpus,
+    default ``df`` itself) and every document in ``df`` is scored
+    against them, so out-of-model grams exercise the backoff path:
 
         score(w_i) = α^hops · c_o(gram) / c_{o-1}(context)
 

@@ -60,6 +60,22 @@ def test_backfill_rerun_is_noop(spark, tmp_path):
     assert store.read("transactions").count() == n
 
 
+def test_backfill_never_checkpoints_past_an_unserved_height(spark, tmp_path):
+    """A range reaching past the node's head must fail the chunk, not
+    commit the blocks it did get under an end_block checkpoint that a
+    resuming tip ingester would trust."""
+    chain = datagen.generate_chain(n_blocks=10, seed=80)
+    store = TableStore(spark, tmp_path / "gap")
+    client = MockRpcClient(chain)
+    with pytest.raises(RuntimeError, match="fetched 10 of 15 blocks"):
+        backfill(spark, client, store, START, START + 14, backoff=0.01)
+    assert store.read_status() is None
+    assert store.table_rows("blocks") == 0
+    counts = backfill(spark, client, store, START, START + 9, backoff=0.01)
+    assert counts["blocks"] == 10
+    assert store.read_status()["last_processed_block"] == START + 9
+
+
 def test_fetch_range_is_distributed(spark):
     """The fetch plan fans out over the requested partitions (no driver
     loop): check partition count of the raw frame."""

@@ -773,7 +773,7 @@ def test_stupid_backoff_matches_hand_reference(spark):
     model = df.where(F.col("doc_id") == "m1")
     got = {
         r["doc_id"]: (r["n_words"], r["avg_nll"])
-        for r in tx.stupid_backoff_nll(df, model_df=model).collect()
+        for r in tx.stupid_backoff_ngram_nll(df, model_df=model, n=2).collect()
     }
     # model: c1 = {a:2, b:1, c:1}, T=4; bigrams (a,b),(b,a),(a,c) once each
     ref = {
@@ -788,6 +788,9 @@ def test_stupid_backoff_matches_hand_reference(spark):
     for k, (n, nll) in ref.items():
         assert got[k][0] == n
         assert got[k][1] == pytest.approx(nll, abs=1e-6), k
+    for bad in (1, 6):  # orders outside 2..5 are refused up front
+        with pytest.raises(ValueError, match="n must be"):
+            tx.stupid_backoff_ngram_nll(df, n=bad)
 
 
 def test_stupid_backoff_self_model_never_backs_off(spark):
@@ -799,7 +802,7 @@ def test_stupid_backoff_self_model_never_backs_off(spark):
     df = _sb_docs(spark).where(F.col("doc_id").isin("m1", "d3"))
     got = {
         r["doc_id"]: r["avg_nll"]
-        for r in tx.stupid_backoff_nll(df).collect()
+        for r in tx.stupid_backoff_ngram_nll(df, n=2).collect()
     }
     # corpus: c1 = {a:2, b:2, c:1}, T=5; doc m1 bigrams all seen once
     exp = -(math.log(2 / 5) + math.log(1 / 2) + math.log(1 / 2)
@@ -986,8 +989,8 @@ def test_stupid_backoff_trigram_matches_hand_reference(spark):
     model = df.where(F.col("doc_id") == "m1")
     got = {
         r["doc_id"]: (r["n_words"], r["avg_nll"])
-        for r in tx.stupid_backoff_trigram_nll(
-            df, model_df=model, alpha=0.4, trigram_min_count=2
+        for r in tx.stupid_backoff_ngram_nll(
+            df, model_df=model, alpha=0.4, n=3, min_count=2
         ).collect()
     }
     # model: c1={a:2,b:2,c:2} T=6; c2={(a,b):2,(b,c):2,(c,a):1};
@@ -1018,10 +1021,10 @@ def test_stupid_backoff_trigram_pruning_lever(spark):
     multiplies by alpha < 1), never better."""
     rows = [("m", "p q r p q r p q r")]  # (p,q,r) x3
     df = spark.createDataFrame(rows, ["doc_id", "text"])
-    keep = tx.stupid_backoff_trigram_nll(
-        df, trigram_min_count=1).first()["avg_nll"]
-    prune = tx.stupid_backoff_trigram_nll(
-        df, trigram_min_count=10).first()["avg_nll"]
+    keep = tx.stupid_backoff_ngram_nll(
+        df, n=3, min_count=1).first()["avg_nll"]
+    prune = tx.stupid_backoff_ngram_nll(
+        df, n=3, min_count=10).first()["avg_nll"]
     assert prune > keep
 
 
@@ -1032,10 +1035,8 @@ def test_backoff_fractional_cutoff_is_not_truncated(spark):
     df = spark.createDataFrame([("m", "p q r p q r")], ["doc_id", "text"])
 
     def nll(cut):
-        return (
-            tx.stupid_backoff_trigram_nll(df, trigram_min_count=cut).first()["avg_nll"],
-            tx.stupid_backoff_ngram_nll(df, n=3, min_count=cut).first()["avg_nll"],
-        )
+        return tx.stupid_backoff_ngram_nll(
+            df, n=3, min_count=cut).first()["avg_nll"]
 
     assert nll(2.5) == nll(3)
     assert nll(2.5) != nll(2)
@@ -1171,8 +1172,8 @@ def test_stupid_backoff_trigram_matches_python_model(spark):
         model = df.where(F.col("doc_id").startswith("m"))
         got = {
             r["doc_id"]: r["avg_nll"]
-            for r in tx.stupid_backoff_trigram_nll(
-                df, model_df=model, alpha=0.4, trigram_min_count=2
+            for r in tx.stupid_backoff_ngram_nll(
+                df, model_df=model, alpha=0.4, n=3, min_count=2
             ).collect()
         }
         for i, t in enumerate(score_texts):
@@ -1233,30 +1234,6 @@ def test_length_histogram_exact_buckets(spark):
         ("s1", 1): (2, 2, 3, 5),
         ("s1", 5): (2, 32, 63, 95),
     }
-
-
-def test_stupid_backoff_ngram_generalizes_dedicated_orders(spark):
-    """The general order-n implementation must be BIT-identical to the
-    dedicated bigram (n=2) and trigram (n=3) operators on the same
-    corpus — same chain, same floors, same DECIMAL accumulation."""
-    rows = [("m1", "a b c a b c d a b"), ("d2", "a b d zz"), ("d3", "c"),
-            ("d4", "b c a b c a")]
-    df = spark.createDataFrame(rows, ["doc_id", "text"])
-    model = df.where(F.col("doc_id").isin("m1", "d4"))
-    bi = {r["doc_id"]: r["avg_nll"] for r in
-          tx.stupid_backoff_nll(df, model_df=model).collect()}
-    bi_n = {r["doc_id"]: r["avg_nll"] for r in
-            tx.stupid_backoff_ngram_nll(df, model_df=model, n=2).collect()}
-    assert bi == bi_n
-    tri = {r["doc_id"]: r["avg_nll"] for r in
-           tx.stupid_backoff_trigram_nll(
-               df, model_df=model, trigram_min_count=2).collect()}
-    tri_n = {r["doc_id"]: r["avg_nll"] for r in
-             tx.stupid_backoff_ngram_nll(
-                 df, model_df=model, n=3, min_count=2).collect()}
-    assert tri == tri_n
-    with pytest.raises(ValueError, match="n must be"):
-        tx.stupid_backoff_ngram_nll(df, n=6)
 
 
 def test_stupid_backoff_quad_hand_reference(spark):

@@ -586,29 +586,34 @@ def test_chunk_documents_is_one_narrow_projection(spark):
     assert "Generate" in plan, plan  # the posexplode fan-out
 
 
-def test_stupid_backoff_join_posture(spark):
-    """Unigram vocab + 1-row total broadcast; the bigram table — NOT
-    broadcast-bounded at scale — joins by key-partitioned equi-join;
-    no cartesian product, no Python anywhere.  (The catalog slot
-    retired in r11 — bigram is the n=2 case of the general ngram
-    operator — but the dedicated operator keeps its plan pin.)"""
-    from pyspark.sql import functions as F
+@pytest.mark.parametrize("n", [2, 3, 4])
+def test_stupid_backoff_join_posture(spark, n):
+    """Stupid Backoff at orders 2-4 (a direct operator call for n=2,
+    the ``lm_stupid_backoff_tri``/``_quad`` entries for n=3/4): unigram
+    vocab + 1-row total broadcast; every n-gram table — NOT
+    broadcast-bounded at scale — joins by key-partitioned equi-join; no
+    cartesian product, no Python anywhere."""
+    if n == 2:
+        from pyspark.sql import functions as F
 
-    from rust_evm_indexer_spark.operators import textops as tx
+        from rust_evm_indexer_spark.operators import textops as tx
 
-    docs = spark.read.parquet(f"{SF}/documents.parquet")
-    df = tx.stupid_backoff_nll(
-        docs, model_df=docs.where(F.col("lang") == "en"), alpha=0.4
-    )
+        docs = spark.read.parquet(f"{SF}/documents.parquet")
+        df = tx.stupid_backoff_ngram_nll(
+            docs, model_df=docs.where(F.col("lang") == "en"), alpha=0.4, n=2
+        )
+    else:
+        entry = {3: "lm_stupid_backoff_tri", 4: "lm_stupid_backoff_quad"}[n]
+        df = CATALOG[entry].fn(spark, SF)
     plan = physical_plan(df)
     assert "CartesianProduct" not in plan, plan
     assert "EvalPython" not in plan, plan
     assert "BroadcastHashJoin" in plan, plan
-    # exactly the five BOUNDED frames are hint-forced (u1, u2, first-word
-    # vocab, and the 1-row total twice); the bigram-count join must carry
-    # NO hint — at sf0.01 the planner may still size-broadcast it, but at
-    # 100 TB it degrades gracefully to a key-partitioned equi-join
-    assert broadcast_hint_count(df) == 5, broadcast_hint_count(df)
+    # exactly the three bounded frames carry hints (u_prev, u_cur, the
+    # 1-row total) at every order; the n-gram joins carry NONE — at
+    # sf0.01 the planner may still size-broadcast them, but at 100 TB
+    # they degrade gracefully to key-partitioned equi-joins
+    assert broadcast_hint_count(df) == 3, broadcast_hint_count(df)
 
 
 def test_winnowing_join_posture(spark):
@@ -620,37 +625,6 @@ def test_winnowing_join_posture(spark):
     assert "CartesianProduct" not in plan, plan
     assert "EvalPython" not in plan, plan
     assert broadcast_hint_count(df) == 0  # both join sides scale with data
-
-
-def test_stupid_backoff_trigram_join_posture(spark):
-    """Trigram SB: unigram vocab + 1-row total broadcast; the bigram
-    AND trigram tables — neither broadcast-bounded at scale — join by
-    key-partitioned equi-joins (bigram twice: context + backoff keys);
-    no cartesian, no Python."""
-    df = CATALOG["lm_stupid_backoff_tri"].fn(spark, SF)
-    plan = physical_plan(df)
-    assert "CartesianProduct" not in plan, plan
-    assert "EvalPython" not in plan, plan
-    assert "BroadcastHashJoin" in plan, plan
-    # exactly the EIGHT bounded frames carry hints (u2/u3/total in the
-    # trigram leg, u1/u2/total in the second-word leg, first-word
-    # vocab/total in the base leg); the trigram and three bigram joins
-    # carry NO hint — size-broadcastable at sf0.01, key-partitioned at
-    # 100 TB
-    assert broadcast_hint_count(df) == 8, broadcast_hint_count(df)
-
-
-def test_stupid_backoff_quad_join_posture(spark):
-    """Order-4 SB: vocab + total broadcast; every n-gram table joins
-    key-partitioned (unhinted); no cartesian, no Python."""
-    df = CATALOG["lm_stupid_backoff_quad"].fn(spark, SF)
-    plan = physical_plan(df)
-    assert "CartesianProduct" not in plan, plan
-    assert "EvalPython" not in plan, plan
-    # exactly the three bounded frames carry hints (u_prev, u_cur, the
-    # 1-row total); the five n-gram joins (t4, t3 ctx+next, t2 ctx+next)
-    # carry NONE
-    assert broadcast_hint_count(df) == 3, broadcast_hint_count(df)
 
 
 def test_opq_search_stays_jvm_same_shape_as_flat(spark):

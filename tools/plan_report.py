@@ -34,7 +34,7 @@ ENTRIES = [
     ("dedup_winnowing", "in-array window-min (zero shuffle pre-explode) + inverted index"),
     ("similarity_ivfpq_topk", "partition-pruned cell scan, pure-JVM ADC lookups"),
     ("similarity_opq_residual_topk", "rotated residual ADC: per-cell corrections, unioned pruned scans"),
-    ("lm_stupid_backoff_tri", "broadcast vocab + key-partitioned n-gram join chain"),
+    ("lm_stupid_backoff_tri", "order-n chain at n=3: one position frame, broadcast vocab, key-partitioned n-gram joins"),
     ("semantic_admit_delta", "kept is a local checkpoint: one scan of materialized rows, no join or file scan left to re-run"),
     ("corpus_shuffle_shards", "ONE Exchange on shard_id + per-shard sort"),
     ("corpus_zipf_slope", "per-group rank window + DECIMAL-sum regression"),
