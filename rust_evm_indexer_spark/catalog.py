@@ -540,9 +540,6 @@ def _ensure_reorg_fixture(spark: SparkSession) -> Path:
         from .sources.rpc import MockRpcClient
         from .store import TableStore
 
-        # hour bucketing at ingest happens in session tz; pin UTC (the
-        # fixture epochs are hour-aligned only under whole-hour offsets)
-        spark.conf.set("spark.sql.session.timeZone", "UTC")
         chain = datagen.generate_chain(n_blocks=24, seed=77)
         client = MockRpcClient(chain)
         store = TableStore(spark, _REORG_DIR / "store")

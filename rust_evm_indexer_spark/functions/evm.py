@@ -1,4 +1,4 @@
-"""Column-level EVM helpers: hex normalization, U256 arithmetic, topics.
+"""Column-level EVM helpers: case-insensitive hex equality, U256 arithmetic.
 
 All pure built-in ``pyspark.sql.functions`` compositions — JVM-side,
 whole-stage-codegen'd, no Python UDFs.  These mirror the value conventions of
@@ -15,11 +15,6 @@ from pyspark.sql import functions as F
 #: DecimalType wide enough for any practical wei value (< 10^38 covers total
 #: ETH supply in wei ~1.2e26; full U256 overflows → stays NULL, documented).
 U256_DECIMAL = "decimal(38,0)"
-
-
-def norm_hex(col: Column | str) -> Column:
-    """Canonical lowercase hex, mirroring Rust ``format!("{:#x}")``."""
-    return F.lower(F.col(col) if isinstance(col, str) else col)
 
 
 def hex_eq(col: Column | str, value: str) -> Column:
@@ -57,14 +52,6 @@ def wei_to_eth(col: Column | str) -> Column:
     int_part = padded.substr(F.lit(1), F.length(padded) - 18)
     frac = padded.substr(F.length(padded) - 17, F.lit(18))
     return F.concat(int_part, F.lit("."), frac).try_cast("decimal(38,18)")
-
-
-def flatten_topics(topics: Column | str) -> list[Column]:
-    """``array<string>`` topics → positional ``topic0..topic3`` columns
-    (mirrors src/db.rs:164-167; 1-based, NULL beyond the array end —
-    try_element_at because ANSI-mode element_at throws out-of-bounds)."""
-    c = F.col(topics) if isinstance(topics, str) else topics
-    return [F.try_element_at(c, F.lit(i + 1)).alias(f"topic{i}") for i in range(4)]
 
 
 def hex_to_u256_decimal(col: Column | str) -> Column:
@@ -159,33 +146,6 @@ def u256_string_from_limb_sums(
     )
     trimmed = F.regexp_replace(digits, "^0+", "")
     return F.when(trimmed == "", F.lit("0")).otherwise(trimmed)
-
-
-#: bit widths for the packed deterministic log id (see :func:`pack_log_id`)
-_TXI_BITS = 18  # up to 262k txs per block (mainnet max ≈ 1.4k)
-_LI_BITS = 12  # up to 4096 logs per tx (mainnet max ≈ hundreds)
-
-
-def pack_log_id(block_number: Column, tx_index: Column, log_index: Column) -> Column:
-    """Deterministic surrogate for the reference's ``id BIGSERIAL``
-    (init.sql:50): ``(block_number << 30) | (tx_index << 12) | log_index``.
-
-    Properties the cursor semantics need (SURVEY.md §7 hard-part 1):
-    - strictly increasing in ``(block_number, tx_index, log_index)``, so
-      ORDER BY (block_number, id) equals the reference's insertion order;
-    - stable across crash-replays and reorg rewrites (pure function of
-      position — unlike ``monotonically_increasing_id()``);
-    - assigned with zero coordination: no window, no shuffle, no driver
-      sequence — each executor computes it locally at any scale.
-
-    Bounds: block_number < 2^33, tx_index < 2^18, log_index < 2^12 —
-    all orders of magnitude beyond real chains.
-    """
-    return (
-        F.shiftleft(block_number, _TXI_BITS + _LI_BITS)
-        .bitwiseOR(F.shiftleft(F.coalesce(tx_index, F.lit(0)), _LI_BITS))
-        .bitwiseOR(F.coalesce(log_index, F.lit(0)))
-    )
 
 
 def ts_seconds_to_timestamp(col: Column | str) -> Column:

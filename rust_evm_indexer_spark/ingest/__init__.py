@@ -1,2 +1,2 @@
 from .commit import CycleResult, EvmIngester  # noqa: F401
-from .normalize import RAW_BLOCK_SCHEMA, explode_batch  # noqa: F401
+from .normalize import explode_batch  # noqa: F401

@@ -2,86 +2,68 @@
 
 The reference syncs history 5 blocks per 10 s cycle (``src/main.rs:25``)
 — fine for tip-following, hopeless for a 20M-block history.  The Spark
-shape: distribute the block range across executors, fetch + enrich
-*partition-parallel* through the chain client, and land everything in one
-atomic store commit:
+shape: distribute the block range across executors, fetch, normalize and
+write *partition-parallel*, and land everything in one atomic store
+commit:
 
-    spark.range(start, end+1)            # block numbers, no data motion
-      .repartition(fetch_partitions)     # fan out across executors
-      .mapInPandas(fetch_kernel)         # RPC fan-out per partition
-      → from_json(RAW_BLOCK_SCHEMA)      # JVM-side parse to nested rows
-      → explode_raw(...)                 # the same normalize plan as
-                                         # streaming ingest
-      → store.commit(...)                # one manifest swap
+    spark.range(start, end+1,            # block numbers in fetch_partitions
+                numPartitions=n)         # contiguous slices, no shuffle
+      .mapInArrow(_kernel)               # per partition: fetch_block each
+                                         # height, explode_batch (the tip
+                                         # cycle's normalizer), one parquet
+                                         # part per table into staging
+      .collect()                         # (table, part, rows) reports
+      → store.commit({table: [parts]})   # one manifest swap
 
-The connector crosses the Python boundary as a JSON string column —
-Arrow-batched both ways, parsed by Spark's ``from_json`` (codegen), so
-the slow path is exactly the network I/O and nothing else.  The kernel
-fetches each block through the same :func:`commit.fetch_block` as the
-tip cycle (O-3/O-4: bounded receipt fan-out, retry with backoff).
-
-Each executor retries transient RPC failures (exponential backoff);
-Spark task retries are the backstop, and the store's idempotent commit
-makes a re-run of the whole backfill a no-op.
+One Spark job per chunk.  The kernel fetches each block through the same
+:func:`commit.fetch_block` as the tip cycle (O-3/O-4: bounded receipt
+fan-out, retry with backoff) and normalizes it with the same
+:func:`normalize.explode_batch`, so both paths write the same rows.
+Only the parts that successful task attempts report are committed; the
+staging prefixes, with whatever failed attempts left there, are removed
+on every path out.  Spark task retries are the backstop for RPC
+failures, and the store's idempotent commit makes a re-run of the whole
+backfill a no-op.
 """
 
 from __future__ import annotations
 
-import json
-from collections.abc import Iterator
+from functools import partial
+from pathlib import Path
 
-import pandas as pd
-
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+import pyarrow as pa
+from pyspark.sql import SparkSession
 
 from ..store import TableStore
+from ..store.data_io import make_staging_rel
+from ..store.table_store import write_arrow_part
 from .commit import fetch_block
-from .normalize import RAW_BLOCK_SCHEMA, explode_raw
+from .normalize import explode_batch as explode_raw  # the kernel's normalize step
+from .rollup import ROLLUP_TABLE
+
+TABLES = ("blocks", "transactions", "logs", ROLLUP_TABLE)
+_REPORT = pa.schema([("table", pa.string()), ("part", pa.string()), ("rows", pa.int64())])
+_REPORT_DDL = "table string, part string, rows long"
 
 
-def _make_fetch_kernel(client, backoff: float):
-    """Build the per-partition fetch kernel (client is pickled to
-    executors; a production client opens its HTTP session lazily)."""
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out: list[str] = []
-            numbers: list[int] = []
-            for n in pdf["id"]:
-                raw = fetch_block(client, int(n), backoff=backoff)
-                if raw is None:
-                    continue
-                numbers.append(int(n))
-                out.append(json.dumps(raw))
-            yield pd.DataFrame({"number": numbers, "raw_json": out})
-
-    return kernel
-
-
-def fetch_range(
-    spark: SparkSession,
-    client,
-    start_block: int,
-    end_block: int,
-    *,
-    fetch_partitions: int = 8,
-    backoff: float = 0.05,
-) -> DataFrame:
-    """Raw nested frame for [start_block, end_block], fetched
-    executor-parallel.  Lazy: nothing is fetched until an action runs."""
-    from ..util import ensure_package_shipped
-
-    ensure_package_shipped(spark)
-    kernel = _make_fetch_kernel(client, backoff)
-    fetched = (
-        spark.range(start_block, end_block + 1)
-        .repartition(fetch_partitions)
-        .mapInPandas(kernel, schema="number long, raw_json string")
-    )
-    return fetched.select(
-        F.from_json("raw_json", RAW_BLOCK_SCHEMA).alias("b")
-    ).select("b.*")
+def _kernel(batches, *, client, backoff: float, root: str, staging: dict[str, str]):
+    """One partition: fetch its heights, normalize them in one batch and
+    write one part file per non-empty table; report each part (module
+    level, so it ships to executors by reference)."""
+    raw = []
+    for batch in batches:
+        for n in batch.column("id").to_pylist():
+            block = fetch_block(client, n, backoff=backoff)
+            if block is not None:
+                raw.append(block)
+    report = {"table": [], "part": [], "rows": []}
+    for table, tbl in explode_raw(raw).items():
+        if tbl.num_rows:
+            part = write_arrow_part(Path(root) / staging[table], tbl)
+            report["table"].append(table)
+            report["part"].append(part.relative_to(root).as_posix())
+            report["rows"].append(tbl.num_rows)
+    yield pa.RecordBatch.from_pydict(report, schema=_REPORT)
 
 
 def backfill(
@@ -95,44 +77,36 @@ def backfill(
     fetch_partitions: int = 8,
     backoff: float = 0.05,
 ) -> dict[str, int]:
-    """Fetch + normalize + commit a block range atomically.  Returns row
-    counts per table.  Idempotent: txn watermark = end_block.  Raises,
-    committing nothing, when the node does not serve every height of
-    the range.
+    """Fetch + normalize + commit a block range atomically.  Returns the
+    rows this call committed per table (all 0 for a replay).
+    Idempotent: txn watermark = end_block.  Raises, committing nothing,
+    when the node does not serve every height of the range."""
+    from ..util import ensure_package_shipped
 
-    The raw frame is persisted and materialized ONCE before the 4-table
-    fan-out: ``store.commit`` runs one Spark action per table, and
-    without the pin each action would re-run the RPC fetch kernel (4-5×
-    the network cost — and, against a live chain, each table could
-    materialize from a *different* chain snapshot, silently breaking the
-    cross-table consistency the single manifest swap guarantees)."""
-    from pyspark.storagelevel import StorageLevel
-
-    raw = fetch_range(
-        spark,
-        client,
-        start_block,
-        end_block,
-        fetch_partitions=fetch_partitions,
-        backoff=backoff,
-    ).persist(StorageLevel.MEMORY_AND_DISK)
+    ensure_package_shipped(spark)
+    staging = {t: make_staging_rel(t, "backfill") for t in TABLES}
+    kernel = partial(
+        _kernel, client=client, backoff=backoff, root=str(store.root), staging=staging
+    )
     try:
-        fetched = raw.count()  # force the single materialized fetch
+        reports = (
+            spark.range(start_block, end_block + 1, numPartitions=fetch_partitions)
+            .mapInArrow(kernel, _REPORT_DDL)
+            .collect()
+        )
+        parts = {t: [r["part"] for r in reports if r["table"] == t] for t in TABLES}
+        rows = {t: sum(r["rows"] for r in reports if r["table"] == t) for t in TABLES}
         wanted = end_block - start_block + 1
-        if fetched != wanted:
+        if rows["blocks"] != wanted:
             # a height the node did not serve: committing would
             # checkpoint end_block past the gap, and a resuming tip
             # ingester would skip the missing heights forever
             raise RuntimeError(
-                f"backfill [{start_block}, {end_block}]: fetched {fetched} "
+                f"backfill [{start_block}, {end_block}]: fetched {rows['blocks']} "
                 f"of {wanted} blocks; nothing committed"
             )
-        tables = explode_raw(raw)
-        from .rollup import ROLLUP_TABLE, rollup_partials
-
-        tables[ROLLUP_TABLE] = rollup_partials(tables["logs"], tables["blocks"])
         committed = store.commit(
-            tables,
+            {t: p for t, p in parts.items() if p},
             status={
                 "indexer_name": indexer_name,
                 "last_processed_block": end_block,
@@ -141,8 +115,7 @@ def backfill(
             txn_app_id=indexer_name,
             txn_version=end_block,
         )
-        if not committed:
-            return {t: 0 for t in tables}
-        return {t: store.table_rows(t) for t in tables}
+        return rows if committed else {t: 0 for t in TABLES}
     finally:
-        raw.unpersist()
+        for rel in staging.values():
+            store._dio.delete_dir(rel)

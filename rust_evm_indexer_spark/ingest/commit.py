@@ -11,10 +11,17 @@ The batch re-expression of the reference's ingestion loop
            which backfill runs partition-parallel on executors (the tip
            cycle attaches receipts after its reorg check);
 - O-4      retry with exponential backoff (3 attempts, base 2s defaults);
-- O-5/O-6  normalize + explode (``normalize.explode_batch``);
+- O-5/O-6  normalize + explode (``normalize.explode_batch``: Arrow
+           tables on the driver, no Spark job);
 - O-7..O-9 atomic cross-table commit with the checkpoint *inside* the
-           same manifest swap, idempotent on (app_id, last_block);
-- O-10/O-11 parent-hash reorg detection → rollback_from(fork height).
+           same manifest swap, idempotent on (app_id, last_block); the
+           store writes the Arrow tables with pyarrow;
+- O-10/O-11 parent-hash reorg detection (the stored parent hash comes
+           from the Arrow serving tier's pruned point read) →
+           rollback_from(fork height).
+
+A steady ingest cycle therefore runs no Spark job; only a reorg's
+rollback (and scheduled maintenance) rewrites through Spark.
 
 Failure semantics mirror the reference (``src/main.rs:313-329``): any
 error aborts the whole batch before the manifest swap, so the store never
@@ -23,13 +30,16 @@ holds a partial block; the next cycle retries from the checkpoint.
 
 from __future__ import annotations
 
+import sys
 import time
 from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass
 
+import pyarrow.dataset as pa_ds
 from pyspark.sql import SparkSession
 
 from ..datagen import INDEXER_NAME
+from ..serving import ArrowServing
 from ..store import MaintenancePolicy, TableStore
 from .normalize import explode_batch
 
@@ -125,6 +135,9 @@ class EvmIngester:
         self.maintenance_policy = maintenance_policy
         self.maintain_every = maintain_every
         self._cycles_since_maintain = 0
+        # the parent-hash check's point read; unbounded, because a
+        # height prunes to the few fragments whose block range holds it
+        self._serving = ArrowServing(store, max_fragments=sys.maxsize)
 
     # -- checkpoint helpers ------------------------------------------------
 
@@ -184,14 +197,8 @@ class EvmIngester:
         ]
         to_block = batch[-1]["number"]
 
-        # O-5/O-6 normalize
-        tables = explode_batch(self.spark, batch)
-
-        # continuous aggregate: per-batch hourly partials ride in the
-        # same atomic commit (ingest/rollup.py)
-        from .rollup import ROLLUP_TABLE, rollup_partials
-
-        tables[ROLLUP_TABLE] = rollup_partials(tables["logs"], tables["blocks"])
+        # O-5/O-6 normalize (+ the rollup partials)
+        tables = explode_batch(batch)
 
         # O-7/O-8/O-9: one atomic manifest swap for data + checkpoint;
         # idempotent under crash-replay via the txn watermark.
@@ -215,14 +222,15 @@ class EvmIngester:
         )
 
     def _stored_hash_at(self, height: int) -> str | None:
-        rows = (
-            self.store.read("blocks", min_block=height, max_block=height)
-            .filter(f"block_number = {height}")
-            .select("block_hash")
-            .limit(1)
-            .collect()
+        rows = self._serving._scan(
+            "blocks",
+            pa_filter=pa_ds.field("block_number") == height,
+            columns=["block_hash"],
+            min_block=height,
+            max_block=height,
+            stop_after=1,
         )
-        return rows[0][0] if rows else None
+        return rows[0]["block_hash"] if rows else None
 
     def run_until_caught_up(self, max_cycles: int = 100) -> list[CycleResult]:
         """Drive cycles until idle (test/backfill helper; the streaming

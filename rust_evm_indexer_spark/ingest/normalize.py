@@ -1,154 +1,138 @@
 """Normalize/shape transform: raw RPC block batches → relational tables.
 
-The Spark re-expression of the reference's per-block shaping code
+The re-expression of the reference's per-block shaping code
 (``src/main.rs:191-296``): unwrap options with defaults, extract
 ``receipt.status``, lowercase every hash/address (≙ ``format!("{:#x}")``,
 ``src/db.rs:84-89,116-127,161-170``), and fan the nested
-block→transactions→receipt→logs structure out into three flat tables.
+block→transactions→receipt→logs structure out into flat tables.
 
-Where the reference loops row by row in Rust, this is three declarative
-``select``/``explode`` plans over ONE nested DataFrame — executors shape
-whole batches column-at-a-time under whole-stage codegen, and the same
-plan serves 5 blocks (streaming micro-batch) or 5 million (backfill).
+:func:`explode_batch` is the one normalizer: plain Python over the
+connector dicts, built into Arrow tables typed by the declared schemas
+(``schemas.EVM_SCHEMAS``).  The tip cycle calls it on the driver and
+backfill calls it inside its executor kernel, so a 5-block micro-batch
+costs milliseconds of data work and no Spark job, and both paths write
+the same rows.
 
-Operator coverage: O-5 (normalize/shape), O-6 (topics flattening via
-``element_at``), and the join half of O-3 (receipts arrive merged into the
-tx struct — a LEFT OUTER tx⟕receipt in dataflow terms; a missing receipt
-leaves status/logs NULL exactly like the reference's ``Option<receipt>``).
+Operator coverage: O-5 (normalize/shape), O-6 (topics flattening to
+``topic0..3``), and the join half of O-3 (receipts arrive merged into
+the tx dict — a LEFT OUTER tx⟕receipt in dataflow terms; a missing
+receipt leaves status/logs NULL exactly like the reference's
+``Option<receipt>``).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
-from pyspark.sql import types as T
+import pyarrow as pa
+from pyspark.sql.pandas.types import to_arrow_schema
 
-from ..functions.evm import norm_hex, pack_log_id
+from ..schemas import EVM_SCHEMAS
+from . import rollup
 
-# Raw connector batch schema: one row per block, transactions nested, the
-# receipt (status + logs) already merged per-tx by the connector fetch.
-RAW_LOG_SCHEMA = T.StructType(
-    [
-        T.StructField("log_index", T.LongType(), True),
-        T.StructField("address", T.StringType(), True),
-        T.StructField("data", T.StringType(), True),
-        T.StructField("topics", T.ArrayType(T.StringType()), True),
-    ]
-)
+#: Arrow form of the declared table schemas (types and nullability)
+ARROW_SCHEMAS: dict[str, pa.Schema] = {
+    t: to_arrow_schema(EVM_SCHEMAS[t]) for t in ("blocks", "transactions", "logs")
+}
 
-RAW_RECEIPT_SCHEMA = T.StructType(
-    [
-        T.StructField("transaction_hash", T.StringType(), True),
-        T.StructField("status", T.ShortType(), True),
-        T.StructField("logs", T.ArrayType(RAW_LOG_SCHEMA), True),
-    ]
-)
-
-RAW_TX_SCHEMA = T.StructType(
-    [
-        T.StructField("hash", T.StringType(), False),
-        T.StructField("transaction_index", T.LongType(), True),
-        T.StructField("from", T.StringType(), True),
-        T.StructField("to", T.StringType(), True),
-        T.StructField("value", T.StringType(), True),
-        T.StructField("gas_price", T.StringType(), True),
-        T.StructField("max_fee_per_gas", T.StringType(), True),
-        T.StructField("max_priority_fee_per_gas", T.StringType(), True),
-        T.StructField("gas", T.StringType(), True),
-        T.StructField("input", T.StringType(), True),
-        T.StructField("receipt", RAW_RECEIPT_SCHEMA, True),
-    ]
-)
-
-RAW_BLOCK_SCHEMA = T.StructType(
-    [
-        T.StructField("hash", T.StringType(), False),
-        T.StructField("number", T.LongType(), False),
-        T.StructField("parent_hash", T.StringType(), False),
-        T.StructField("timestamp", T.LongType(), False),
-        T.StructField("gas_used", T.StringType(), True),
-        T.StructField("gas_limit", T.StringType(), True),
-        T.StructField("base_fee_per_gas", T.StringType(), True),
-        T.StructField("transactions", T.ArrayType(RAW_TX_SCHEMA), True),
-    ]
-)
+#: bit widths for the packed deterministic log id (see :func:`pack_log_id`)
+_TXI_BITS = 18  # up to 262k txs per block (mainnet max ≈ 1.4k)
+_LI_BITS = 12  # up to 4096 logs per tx (mainnet max ≈ hundreds)
 
 
-def explode_batch(
-    spark: SparkSession, raw_blocks: list[dict]
-) -> dict[str, DataFrame]:
-    """One nested batch → ``{"blocks": df, "transactions": df, "logs": df}``.
+def pack_log_id(block_number: int, tx_index: int | None, log_index: int | None) -> int:
+    """Deterministic surrogate for the reference's ``id BIGSERIAL``
+    (init.sql:50): ``(block_number << 30) | (tx_index << 12) | log_index``,
+    NULL indexes counting as 0.
 
-    Driver-list convenience wrapper over :func:`explode_raw` — the
-    streaming micro-batch path (≤ BLOCKS_PER_BATCH rows).  The backfill
-    path builds the raw frame executor-side instead (``backfill.py``).
-    """
-    return explode_raw(spark.createDataFrame(raw_blocks, RAW_BLOCK_SCHEMA))
-
-
-def explode_raw(raw: DataFrame) -> dict[str, DataFrame]:
-    """Nested RAW_BLOCK_SCHEMA frame → the three relational tables."""
-    blocks = raw.select(
-        norm_hex("hash").alias("block_hash"),
-        F.col("number").alias("block_number"),
-        norm_hex("parent_hash").alias("parent_hash"),
-        F.col("timestamp"),
-        F.coalesce("gas_used", F.lit("0")).alias("gas_used"),
-        F.coalesce("gas_limit", F.lit("0")).alias("gas_limit"),
-        F.col("base_fee_per_gas"),
+    Strictly increasing in ``(block_number, tx_index, log_index)``, so
+    ORDER BY (block_number, id) equals the reference's insertion order,
+    and a pure function of position: stable across crash-replays and
+    reorg rewrites, assigned with no coordination (SURVEY.md §7
+    hard-part 1).  Bounds: block_number < 2^33, tx_index < 2^18,
+    log_index < 2^12 — orders of magnitude beyond real chains."""
+    return (
+        block_number << (_TXI_BITS + _LI_BITS)
+        | (tx_index or 0) << _LI_BITS
+        | (log_index or 0)
     )
 
-    tx_flat = raw.select(
-        F.col("number").alias("block_number"),
-        norm_hex("hash").alias("block_hash"),
-        F.explode("transactions").alias("t"),
-    )
 
-    transactions = tx_flat.select(
-        norm_hex("t.hash").alias("tx_hash"),
-        "block_number",
-        "block_hash",
-        F.col("t.transaction_index").alias("transaction_index"),
-        norm_hex("t.from").alias("from_address"),
-        norm_hex("t.to").alias("to_address"),
-        F.coalesce("t.value", F.lit("0")).alias("value"),
-        F.col("t.gas_price").alias("gas_price"),
-        F.col("t.max_fee_per_gas").alias("max_fee_per_gas"),
-        F.col("t.max_priority_fee_per_gas").alias("max_priority_fee_per_gas"),
-        F.coalesce("t.gas", F.lit("0")).alias("gas_provided"),
-        F.col("t.input").alias("input_data"),
-        F.col("t.receipt.status").alias("status"),  # src/main.rs:250-253
-    )
+def _lower(v: str | None) -> str | None:
+    return None if v is None else v.lower()
 
-    log_flat = tx_flat.select(
-        "block_number",
-        "block_hash",
-        norm_hex("t.hash").alias("transaction_hash"),
-        F.col("t.transaction_index").alias("transaction_index_in_block"),
-        F.explode("t.receipt.logs").alias("l"),
-    )
 
-    topics = F.col("l.topics")
-    logs = log_flat.select(
-        pack_log_id(
-            F.col("block_number"),
-            F.col("transaction_index_in_block"),
-            F.col("l.log_index"),
-        ).alias("id"),
-        F.col("l.log_index").alias("log_index_in_tx"),
-        "transaction_hash",
-        "transaction_index_in_block",
-        "block_number",
-        "block_hash",
-        norm_hex("l.address").alias("contract_address"),
-        F.col("l.data").alias("data"),
-        *[
-            # O-6; try_element_at: NULL beyond the array end (ANSI-safe),
-            # 1-based like PG array indexing
-            F.try_element_at(topics, F.lit(i + 1)).alias(f"topic{i}")
-            for i in range(4)
-        ],
-        topics.alias("all_topics"),
-    )
+def _or0(v: str | None) -> str:
+    return "0" if v is None else v
 
-    return {"blocks": blocks, "transactions": transactions, "logs": logs}
+
+def _table(name: str, rows: list[tuple]) -> pa.Table:
+    """Rows (tuples in schema order) → a table of the declared schema.
+    A NULL in a NOT NULL column raises: parquet would write it as a
+    corrupt REQUIRED column, and the reference's DDL rejects it too."""
+    schema = ARROW_SCHEMAS[name]
+    cols = list(zip(*rows)) if rows else [()] * len(schema)
+    tbl = pa.table(cols, schema=schema)
+    for f in schema:
+        if not f.nullable and tbl[f.name].null_count:
+            raise ValueError(f"{name}.{f.name} is NOT NULL; the batch has NULLs")
+    return tbl
+
+
+def explode_batch(raw_blocks: list[dict]) -> dict[str, pa.Table]:
+    """Raw connector blocks → ``{"blocks", "transactions", "logs",
+    "log_rollup"}`` Arrow tables; the rollup partials come from
+    :func:`rollup.rollup_partials` over the batch's logs and blocks."""
+    blocks, txs, logs = [], [], []
+    for b in raw_blocks:
+        number, block_hash = b["number"], _lower(b["hash"])
+        blocks.append((
+            block_hash,
+            number,
+            _lower(b["parent_hash"]),
+            b["timestamp"],
+            _or0(b.get("gas_used")),
+            _or0(b.get("gas_limit")),
+            b.get("base_fee_per_gas"),
+        ))
+        for t in b.get("transactions") or ():
+            tx_hash, tx_index = _lower(t["hash"]), t.get("transaction_index")
+            receipt = t.get("receipt") or {}
+            txs.append((
+                tx_hash,
+                number,
+                block_hash,
+                tx_index,
+                _lower(t.get("from")),
+                _lower(t.get("to")),
+                _or0(t.get("value")),
+                t.get("gas_price"),
+                t.get("max_fee_per_gas"),
+                t.get("max_priority_fee_per_gas"),
+                _or0(t.get("gas")),
+                t.get("input"),
+                receipt.get("status"),  # src/main.rs:250-253
+            ))
+            for lg in receipt.get("logs") or ():
+                topics = lg.get("topics")
+                # O-6: 0-based positions, NULL beyond the array end
+                flat = [topics[i] if topics and i < len(topics) else None for i in range(4)]
+                logs.append((
+                    pack_log_id(number, tx_index, lg.get("log_index")),
+                    lg.get("log_index"),
+                    tx_hash,
+                    tx_index,
+                    number,
+                    block_hash,
+                    _lower(lg.get("address")),
+                    lg.get("data"),
+                    *flat,
+                    topics,
+                ))
+    out = {
+        "blocks": _table("blocks", blocks),
+        "transactions": _table("transactions", txs),
+        "logs": _table("logs", logs),
+    }
+    # continuous aggregate: per-batch hourly partials ride in the same
+    # atomic commit (ingest/rollup.py)
+    out[rollup.ROLLUP_TABLE] = rollup.rollup_partials(out["logs"], out["blocks"])
+    return out

@@ -11,7 +11,7 @@ node unchanged.
 
 Stdlib ``urllib`` only, and deliberately PICKLABLE: the client carries
 just ``(url, timeout)`` and opens a connection per request, so it ships
-to executors inside backfill's ``mapInPandas`` fetch kernel.  Network
+to executors inside backfill's ``mapInArrow`` fetch kernel.  Network
 and server errors raise — the retry/backoff wrappers (O-4) around every
 call site are the recovery path, mirroring the reference's
 ``retry_with_backoff`` (``src/main.rs:32-62``).

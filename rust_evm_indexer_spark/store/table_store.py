@@ -67,6 +67,7 @@ from dataclasses import dataclass, field
 from pathlib import Path
 from typing import Any
 
+import pyarrow as pa
 import pyarrow.dataset as pa_ds
 import pyarrow.parquet as pq
 
@@ -76,6 +77,16 @@ from ..schemas import EVM_SCHEMAS
 from .data_io import make_staging_rel as _make_staging_rel
 
 _CURRENT = "CURRENT"
+
+
+def write_arrow_part(out_dir: Path, tbl: "pa.Table") -> Path:
+    """One parquet part file of ``tbl`` under ``out_dir`` (created if
+    absent), uniquely named so concurrent writers and retried task
+    attempts never collide."""
+    out_dir.mkdir(parents=True, exist_ok=True)
+    part = out_dir / f"part-{uuid.uuid4().hex}.parquet"
+    pq.write_table(tbl, part)
+    return part
 
 
 @dataclass
@@ -1221,12 +1232,35 @@ class TableStore:
                 frag.dicts = {}
             frag.dicts[col] = norm
 
-    def _write_fragment(self, table: str, df: DataFrame) -> Fragment | None:
-        """Materialize one immutable fragment dir; stats from the parquet
-        footers (no second data pass)."""
+    def _write_fragment(self, table: str, data) -> Fragment | None:
+        """Materialize one immutable fragment dir from a commit write —
+        a DataFrame (one Spark write), a ``pa.Table`` (one pyarrow part
+        file, no Spark job; empty → no fragment) or a list of part files
+        the caller staged under the store root (moved in, not rewritten)
+        — then adopt it: stats from the parquet footers, no second data
+        pass."""
         rel = f"data/{table}/frag-{uuid.uuid4().hex}"
-        df.write.mode("overwrite").parquet(str(self.root / rel))
+        if isinstance(data, DataFrame):
+            data.write.mode("overwrite").parquet(str(self.root / rel))
+        elif isinstance(data, pa.Table):
+            if data.num_rows == 0:
+                return None
+            write_arrow_part(self.root / rel, data)
+        else:
+            for part in data:
+                self._dio.adopt_file(part, f"{rel}/{part.rsplit('/', 1)[-1]}")
         return self._stat_fragment_dir(table, rel)
+
+    def _write_schema(self, data, frag: Fragment):
+        """The Spark schema a commit write brings to schema evolution:
+        the DataFrame's, else the one pyarrow wrote into the parts."""
+        if isinstance(data, DataFrame):
+            return data.schema
+        from pyspark.sql.pandas.types import from_arrow_schema
+
+        return from_arrow_schema(
+            pa_ds.dataset(str(self.root / frag.path), format="parquet").schema
+        )
 
     def _stat_fragment_dir(self, table: str, rel: str) -> Fragment | None:
         """Adopt an already-materialized fragment directory: row count +
@@ -1370,7 +1404,7 @@ class TableStore:
 
     def commit(
         self,
-        writes: dict[str, DataFrame],
+        writes: dict[str, "DataFrame | pa.Table | list[str]"],
         *,
         status: dict | None = None,
         txn_app_id: str | None = None,
@@ -1378,7 +1412,10 @@ class TableStore:
     ) -> bool:
         """Atomically append fragments for any subset of tables (+ the
         checkpoint).  Returns False if (txn_app_id, txn_version) was
-        already committed — the idempotent crash-replay path.
+        already committed — the idempotent crash-replay path.  Each
+        write is a DataFrame, a ``pa.Table`` (written without Spark) or
+        a list of root-relative parquet part files already staged by
+        the caller (see :meth:`_write_fragment`).
 
         Loses a concurrent-writer race LOUDLY (RuntimeError naming the
         conflict) — single-writer ingest never sees this; use
@@ -1395,7 +1432,7 @@ class TableStore:
 
     def commit_with_retry(
         self,
-        writes: dict[str, DataFrame],
+        writes: dict[str, "DataFrame | pa.Table | list[str]"],
         *,
         status: dict | None = None,
         txn_app_id: str | None = None,
@@ -1505,16 +1542,14 @@ class TableStore:
                     "the operation"
                 )
 
-    def _write_commit_fragments(
-        self, writes: dict[str, DataFrame]
-    ) -> tuple[list, list]:
-        # The per-table fragment writes are independent Spark jobs; run
-        # them concurrently (Spark's scheduler interleaves them across
-        # cores) so a 4-table micro-batch costs ~one write's wall time,
-        # not four.  Atomicity is untouched: nothing is visible until
-        # the single manifest swap, and any write failure raises before
-        # the swap (tip-cycle timings: ``perfbench/run.py --workload
-        # index_lifecycle``).
+    def _write_commit_fragments(self, writes: dict) -> tuple[list, list]:
+        # The per-table fragment writes are independent (Spark jobs for
+        # DataFrames); run them concurrently (Spark's scheduler
+        # interleaves them across cores) so a 4-table batch costs ~one
+        # write's wall time, not four.  Atomicity is untouched: nothing
+        # is visible until the single manifest swap, and any write
+        # failure raises before the swap (tip-cycle timings:
+        # ``perfbench/run.py --workload index_lifecycle``).
         from concurrent.futures import ThreadPoolExecutor
 
         items = list(writes.items())
@@ -1543,13 +1578,15 @@ class TableStore:
             txns[txn_app_id] = txn_version
         schemas = dict(m.schemas)
         adds: dict[str, list[Fragment]] = {}
-        for (table, df), frag in zip(items, frags_out):
+        for (table, data), frag in zip(items, frags_out):
             if frag is not None:
                 adds.setdefault(table, []).append(frag)
                 # schema evolution lands WITH its data, inside the same
                 # atomic swap: readers see new columns and new rows
                 # together or neither
-                evolved = _evolve_schema(self._read_schema(m, table), df.schema)
+                evolved = _evolve_schema(
+                    self._read_schema(m, table), self._write_schema(data, frag)
+                )
                 schemas[table] = evolved.jsonValue()
         new_status = status if status is not None else m.status
         # first-ever swap checkpoints (the v>0 term of the shared

@@ -1,5 +1,5 @@
-"""Executor-parallel backfill: equivalence with the streaming ingest path
-+ idempotent re-run."""
+"""Executor-parallel backfill: equivalence with the streaming ingest path,
+idempotent re-run, per-call row counts, and failure cleanup."""
 
 from __future__ import annotations
 
@@ -7,17 +7,21 @@ import pytest
 
 from rust_evm_indexer_spark import datagen
 from rust_evm_indexer_spark.ingest import EvmIngester
-from rust_evm_indexer_spark.ingest.backfill import backfill, fetch_range
+from rust_evm_indexer_spark.ingest.backfill import TABLES, backfill
 from rust_evm_indexer_spark.sources.rpc import MockRpcClient
 from rust_evm_indexer_spark.store import TableStore
 
 START = datagen.START_BLOCK
 
 
-@pytest.mark.slow
+def _staged_dirs(store) -> list[str]:
+    return [p.name for p in (store.root / "data").glob("*/.backfill-*")]
+
+
 def test_backfill_matches_streaming_ingest(spark, tmp_path):
     """The distributed backfill and the per-cycle streaming ingest must
-    produce identical tables from the same chain."""
+    produce identical tables (the rollup partials included) and record
+    the same manifest schemas from the same chain."""
     chain = datagen.generate_chain(n_blocks=25, seed=77)
 
     s_store = TableStore(spark, tmp_path / "stream")
@@ -43,10 +47,14 @@ def test_backfill_matches_streaming_ingest(spark, tmp_path):
             for r in rows
         }
 
-    for table in ("blocks", "transactions", "logs"):
+    for table in TABLES:
         a = canon(s_store.read(table).collect())
         b = canon(b_store.read(table).collect())
         assert a == b, f"{table} differs between streaming and backfill"
+        assert counts[table] == len(b)
+    schemas = s_store.current_manifest().schemas
+    assert set(schemas) == set(TABLES)
+    assert b_store.current_manifest().schemas == schemas
 
 
 def test_backfill_rerun_is_noop(spark, tmp_path):
@@ -58,6 +66,26 @@ def test_backfill_rerun_is_noop(spark, tmp_path):
     counts = backfill(spark, client, store, START, START + 9, backoff=0.01)
     assert counts["transactions"] == 0  # watermark made it a no-op
     assert store.read("transactions").count() == n
+    assert _staged_dirs(store) == []
+
+
+def test_backfill_returns_rows_this_call_committed(spark, tmp_path):
+    """Two consecutive ranges into one store: each call reports only the
+    rows it committed, not the table totals."""
+    chain = datagen.generate_chain(n_blocks=20, seed=81)
+    store = TableStore(spark, tmp_path / "two")
+    client = MockRpcClient(chain)
+    first = backfill(spark, client, store, START, START + 9, backoff=0.01)
+    totals = {t: store.table_rows(t) for t in TABLES}
+    assert first == totals
+    second = backfill(spark, client, store, START + 10, START + 19, backoff=0.01)
+    assert second["blocks"] == 10
+    assert second == {t: store.table_rows(t) - totals[t] for t in TABLES}
+    want_txs = sum(
+        1 for t in chain.transactions if t["block_number"] >= START + 10
+        and t["block_hash"] in {b["block_hash"] for b in client._by_height.values()}
+    )
+    assert second["transactions"] == want_txs
 
 
 def test_backfill_never_checkpoints_past_an_unserved_height(spark, tmp_path):
@@ -71,17 +99,50 @@ def test_backfill_never_checkpoints_past_an_unserved_height(spark, tmp_path):
         backfill(spark, client, store, START, START + 14, backoff=0.01)
     assert store.read_status() is None
     assert store.table_rows("blocks") == 0
+    assert _staged_dirs(store) == []  # the parts the kernel wrote are gone
     counts = backfill(spark, client, store, START, START + 9, backoff=0.01)
     assert counts["blocks"] == 10
     assert store.read_status()["last_processed_block"] == START + 9
 
 
-def test_fetch_range_is_distributed(spark):
-    """The fetch plan fans out over the requested partitions (no driver
-    loop): check partition count of the raw frame."""
+def test_backfill_fetch_is_distributed(spark, tmp_path):
+    """The fetch fans out over the requested partitions (no driver
+    loop): each partition's kernel writes its own part file, and the
+    committed fragment holds exactly those parts."""
     chain = datagen.generate_chain(n_blocks=12, seed=79)
-    raw = fetch_range(
-        spark, MockRpcClient(chain), START, START + 11, fetch_partitions=5
+    store = TableStore(spark, tmp_path / "fan")
+    counts = backfill(
+        spark, MockRpcClient(chain), store, START, START + 11,
+        fetch_partitions=5, backoff=0.01,
     )
-    assert raw.rdd.getNumPartitions() == 5
-    assert raw.count() == 12
+    assert counts["blocks"] == 12
+    (frag,) = store.current_manifest().tables["blocks"]
+    assert frag.rows == 12
+    assert len(list((store.root / frag.path).glob("part-*.parquet"))) == 5
+    assert _staged_dirs(store) == []
+
+
+def test_failing_kernel_commits_nothing(spark, tmp_path):
+    """A kernel that fails (RPC retries exhausted) fails the backfill: no
+    manifest version, no checkpoint, no staged dir left; a healthy
+    re-run then commits exactly its own parts."""
+    chain = datagen.generate_chain(n_blocks=12, seed=82)
+    store = TableStore(spark, tmp_path / "fail")
+    down = MockRpcClient(chain)
+    down.inject_failures(10**6)  # every executor copy keeps failing
+    with pytest.raises(Exception, match="injected transient failure"):
+        backfill(spark, down, store, START, START + 11, fetch_partitions=3, backoff=0.01)
+    assert store.current_version() == 0
+    assert store.read_status() is None
+    assert _staged_dirs(store) == []
+    counts = backfill(
+        spark, MockRpcClient(chain), store, START, START + 11,
+        fetch_partitions=3, backoff=0.01,
+    )
+    assert counts["blocks"] == 12
+    m = store.current_manifest()
+    for table in TABLES:
+        (frag,) = m.tables[table]
+        assert frag.rows == counts[table]
+        assert 1 <= len(list((store.root / frag.path).glob("part-*.parquet"))) <= 3
+    assert m.status["last_processed_block"] == START + 11

@@ -10,6 +10,7 @@ from pyspark.sql import functions as F
 
 from rust_evm_indexer_spark import datagen
 from rust_evm_indexer_spark.ingest import EvmIngester
+from rust_evm_indexer_spark.ingest.backfill import backfill
 from rust_evm_indexer_spark.ingest.rollup import ROLLUP_TABLE, read_rollup
 from rust_evm_indexer_spark.sources.rpc import MockRpcClient
 from rust_evm_indexer_spark.store import TableStore
@@ -65,3 +66,44 @@ def test_rollup_survives_reorg_and_compaction(spark, tmp_path):
     assert rollup_agg(store) == direct_agg(store)
     store.compact(ROLLUP_TABLE, max_fragments=1)
     assert rollup_agg(store) == direct_agg(store)
+
+
+def test_rollup_hours_are_utc_under_any_session_tz(spark, tmp_path):
+    """Backfill and tip cycles write hour buckets aligned to UTC epoch
+    hours even under a fractional-offset session time zone, and every
+    partial equals a UTC re-aggregation of the base tables."""
+    chain = datagen.generate_chain(n_blocks=20, seed=33)
+    client = MockRpcClient(chain)
+    store = TableStore(spark, tmp_path / "tz")
+    start = datagen.START_BLOCK
+    prior = spark.conf.get("spark.sql.session.timeZone")
+    spark.conf.set("spark.sql.session.timeZone", "Asia/Kolkata")
+    try:
+        backfill(spark, client, store, start, start + 9, indexer_name=datagen.INDEXER_NAME,
+                 backoff=0.01)
+        results = EvmIngester(
+            spark, client, store, start_block=start, backoff_base=0.01
+        ).run_until_caught_up()
+        assert [r.kind for r in results] == ["ingested", "ingested", "idle"]
+        got = {
+            (r["block_number"], r["hour_s"], r["contract_address"], r["topic0"]): r["n_logs"]
+            for r in store.read(ROLLUP_TABLE)
+            .select("block_number", F.unix_seconds("hour_ts").alias("hour_s"),
+                    "contract_address", "topic0", "n_logs")
+            .collect()
+        }
+        hours = store.read("blocks").select(
+            "block_hash", (F.col("timestamp") - F.col("timestamp") % 3600).alias("hour_s")
+        )
+        want = {
+            (r["block_number"], r["hour_s"], r["contract_address"], r["topic0"]): r["n"]
+            for r in store.read("logs")
+            .join(hours, "block_hash")
+            .groupBy("block_number", "hour_s", "contract_address", "topic0")
+            .agg(F.count("*").alias("n"))
+            .collect()
+        }
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", prior)
+    assert got and all(hour_s % 3600 == 0 for _, hour_s, _, _ in got)
+    assert got == want

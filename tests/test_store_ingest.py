@@ -78,7 +78,7 @@ def test_commit_idempotent_crash_replay(spark, tmp_path):
     ing.run_until_caught_up()
     n0 = store.read("transactions").count()
     raw = [fetch_block(client, START + i, backoff=0.01) for i in range(3)]
-    tables = explode_batch(spark, raw)
+    tables = explode_batch(raw)
     committed = store.commit(
         tables,
         status=store.read_status(),
