@@ -187,15 +187,18 @@ class EvmApi:
         # manifest tier: counts are per-fragment row sums resolved
         # store-side (columnar fraglist prune / delta-tail arithmetic),
         # checkpoint + lag ride the manifest-inline status row — no
-        # Spark job, no file scan (VERDICT r9 item 3)
-        status = self.store.read_status() or {}
+        # Spark job, no file scan (VERDICT r9 item 3).  One manifest
+        # resolution: counts and checkpoint come from the same version
+        # even while a commit lands mid-request.
+        m = self.store.current_manifest()
+        status = m.status or {}
         last = status.get("last_processed_block")
         head = status.get("chain_head_at_last_poll")
         lag = (head - last) if head is not None and last is not None else None
         s = IndexerStats(
-            total_blocks=self.store.table_rows("blocks"),
-            total_transactions=self.store.table_rows("transactions"),
-            total_logs=self.store.table_rows("logs"),
+            total_blocks=self.store.table_rows("blocks", manifest=m),
+            total_transactions=self.store.table_rows("transactions", manifest=m),
+            total_logs=self.store.table_rows("logs", manifest=m),
             last_processed_block=last,
             chain_head=head,
             ingestion_lag=lag,

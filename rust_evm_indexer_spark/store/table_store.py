@@ -8,9 +8,13 @@ NOTHING (``src/db.rs:97,136``), and reorg rollback via three DELETEs
 are per table — so this store provides the equivalent with a *single
 versioned manifest covering every table*:
 
-- a **manifest** (JSON) lists, per table, the immutable parquet fragment
+- a **manifest** lists, per table, the immutable parquet fragment
   directories that make up the current snapshot, with per-fragment
-  ``min/max block_number`` stats and row counts;
+  ``min/max block_number`` stats and row counts.  One encoding: a log of
+  O(changed) delta records over periodic checkpoints, each checkpoint a
+  JSON envelope whose fragment list is a parquet sidecar (bounded reads
+  prune it by row-group stats); all of it planned in
+  :meth:`TableStore._swap_next`;
 - a **commit** writes new fragments for any subset of tables, then swaps
   the CURRENT pointer to a new manifest version with one atomic rename —
   readers see the whole batch or none of it (the cross-table atomicity
@@ -23,7 +27,8 @@ versioned manifest covering every table*:
   a replayed version is a no-op (the Delta ``txnAppId/txnVersion``
   pattern, ≙ ON CONFLICT DO NOTHING at batch granularity);
 - **rollback_from(height)** drops every fragment wholly ≥ height and
-  rewrites straddling fragments with a pushdown filter — across all
+  rewrites straddling fragments with a pushdown filter (pyarrow, so a
+  tip reorg runs no Spark job) — across all
   tables in one manifest swap, so the children-first delete ordering the
   reference needs is moot;
 - **additive schema evolution**: the manifest carries each table's
@@ -211,31 +216,32 @@ class Manifest:
         )
 
 
-#: columnar fragment-list schema for the parquet manifest format (the
-#: "manifest of manifests" tier — SCALE.md "Storage layout").  At millions
-#: of fragments the inline-JSON fragment list is the metadata bottleneck:
-#: every manifest read parses O(fragments) JSON before pruning a single
-#: path.  The parquet form stores the fragment list as a columnar sidecar
-#: (sorted by (table, min_block), small row groups), so a bounded read
-#: prunes via row-group min/max statistics and materializes only the
-#: surviving rows — manifest-read + prune cost is O(survivors), near-flat
-#: in total fragment count.  Swap semantics are untouched: fraglist
-#: parquet first, then the JSON manifest referencing it, then the CURRENT
-#: pointer rename.
-_FRAGLIST_SCHEMA = None  # built lazily (pyarrow import at module top)
+#: columnar fragment-list schema of every checkpoint (the "manifest of
+#: manifests" tier — SCALE.md "Storage layout").  The checkpoint stores
+#: its fragment list as a parquet sidecar (sorted by (table, min_block),
+#: small row groups), so a bounded read prunes via row-group min/max
+#: statistics and materializes only the surviving rows — manifest-read +
+#: prune cost is O(survivors), near-flat in total fragment count, where
+#: an inline-JSON list parses O(fragments) before pruning a single path
+#: (tools/manifest_bench.py).  Swap semantics: fraglist parquet first,
+#: then the JSON envelope referencing it, then the CURRENT pointer.
+#: Inline-JSON checkpoints written before this layout stay readable.
+_FRAGLIST_SCHEMA = pa.schema(
+    [
+        ("table", pa.string()),
+        ("path", pa.string()),
+        ("rows", pa.int64()),
+        ("min_block", pa.int64()),
+        ("max_block", pa.int64()),
+        ("min_key", pa.string()),
+        ("max_key", pa.string()),
+        ("blooms_json", pa.string()),
+        ("dicts_json", pa.string()),
+        ("derived", pa.bool_()),
+        ("bytes", pa.int64()),
+    ]
+)
 _FRAGLIST_ROW_GROUP = 2048
-
-#: manifest-format crossover: total fragments at which new manifest
-#: versions switch from inline JSON to the parquet fraglist.
-#: Below it JSON wins (read_full — what every mutation pays — parses
-#: faster than a columnar load, and pruned reads are sub-5 ms either
-#: way); above it the JSON prune cost grows linearly with the fragment
-#: count while parquet's row-group-stat prune stays near-flat
-#: (tools/manifest_bench.py: at 10k fragments JSON prune is 51 ms vs
-#: parquet 3.7 ms; at 200k, 1.8 s vs 12 ms).  Migration is per-swap, so
-#: a store crossing the threshold converts on its next commit; reads
-#: detect the format per version.
-AUTO_PARQUET_FRAGMENTS = 4096
 
 #: log-structured manifest commits (the Delta-log shape): append-shaped
 #: swaps (:meth:`TableStore.commit`, :meth:`TableStore.set_status`) and
@@ -251,32 +257,7 @@ AUTO_PARQUET_FRAGMENTS = 4096
 CHECKPOINT_INTERVAL = 16
 
 
-def _fraglist_schema():
-    import pyarrow as pa
-
-    global _FRAGLIST_SCHEMA
-    if _FRAGLIST_SCHEMA is None:
-        _FRAGLIST_SCHEMA = pa.schema(
-            [
-                ("table", pa.string()),
-                ("path", pa.string()),
-                ("rows", pa.int64()),
-                ("min_block", pa.int64()),
-                ("max_block", pa.int64()),
-                ("min_key", pa.string()),
-                ("max_key", pa.string()),
-                ("blooms_json", pa.string()),
-                ("dicts_json", pa.string()),
-                ("derived", pa.bool_()),
-                ("bytes", pa.int64()),
-            ]
-        )
-    return _FRAGLIST_SCHEMA
-
-
 def _write_fraglist(path: Path, tables: dict[str, list[Fragment]]) -> None:
-    import pyarrow as pa
-
     rows = []
     for table in sorted(tables):
         frags = sorted(
@@ -298,7 +279,7 @@ def _write_fraglist(path: Path, tables: dict[str, list[Fragment]]) -> None:
                     "bytes": f.bytes,
                 }
             )
-    tbl = pa.Table.from_pylist(rows, schema=_fraglist_schema())
+    tbl = pa.Table.from_pylist(rows, schema=_FRAGLIST_SCHEMA)
     pq.write_table(tbl, path, row_group_size=_FRAGLIST_ROW_GROUP)
 
 
@@ -446,9 +427,16 @@ def _apply_projection_updates(proj_state: dict, updates: dict) -> dict:
     swap rewritten projection fragments.  Shared by the checkpoint
     materialization and the delta-chain resolution in ``manifest_at``,
     so both swap formats produce the same projection state by
-    construction (VERDICT r9 item 2)."""
+    construction (VERDICT r9 item 2).  A ``{"set": entry}`` record
+    (build_projection; ``None`` for drop_projection) replaces the whole
+    entry — checkpoint-only, never serialized into a delta."""
     new_state = dict(proj_state)
     for name, ch in updates.items():
+        if "set" in ch:
+            new_state[name] = ch["set"]
+            if ch["set"] is None:
+                del new_state[name]
+            continue
         proj = new_state[name]
         cm = ch["covers_map"]
         rm = set(ch["pfrags_remove"])
@@ -1039,57 +1027,50 @@ class TableStore:
             )
         token = self._claim_version(manifest.version, "checkpoint")
         d = manifest.to_json()
-        n_frags = sum(len(fs) for fs in manifest.tables.values())
-        if n_frags >= AUTO_PARQUET_FRAGMENTS:
-            # fragment list to a columnar sidecar FIRST (an orphaned
-            # sidecar from a lost race is reclaimed with its version by
-            # vacuum's manifest pruning); the JSON keeps everything else
-            # (txns/status/schemas/projection geometry — all O(1)-ish)
-            # inline
-            # writer-unique name: a stalled loser whose claim was
-            # stolen must never overwrite the winner's LIVE sidecar
-            # with an unconditional put — the envelope records the
-            # exact name, so uniqueness is free (r11 review)
-            pq_rel = f"frags-v{manifest.version:06d}-{token[:8]}.parquet"
-            buf = _io_mod.BytesIO()
-            _write_fraglist(buf, manifest.tables)
-            self._mio.put_bytes(pq_rel, buf.getvalue())
-            d["tables"] = {}
-            d["tables_pq"] = pq_rel
-            # projection ``covers`` lists are the other O(big) payload:
-            # they grow with the COVERED BASE fragment count, so at
-            # millions of fragments an inline-JSON covers list makes
-            # every envelope parse O(covered) (measured in
-            # tools/manifest_bench.py, named in SCALE.md r10).  Move
-            # them to a columnar sidecar with the same lifecycle; the
-            # envelope keeps only the projection geometry and
-            # LazyManifest hydrates covers on first .projections access
-            cov_rows = [
-                (t, name, p)
-                for t, projs in manifest.projections.items()
-                for name, pr in projs.items()
-                for p in pr["covers"]
-            ]
-            if cov_rows:
-                import pyarrow as pa
-
-                cov_rel = f"covers-v{manifest.version:06d}-{token[:8]}.parquet"
-                cbuf = _io_mod.BytesIO()
-                pq.write_table(
-                    pa.table(
-                        {
-                            "table": [r[0] for r in cov_rows],
-                            "proj": [r[1] for r in cov_rows],
-                            "path": [r[2] for r in cov_rows],
-                        }
-                    ),
-                    cbuf,
-                )
-                self._mio.put_bytes(cov_rel, cbuf.getvalue())
-                for t, projs in d["projections"].items():
-                    for name in projs:
-                        projs[name]["covers"] = []
-                d["covers_pq"] = cov_rel
+        # fragment list to a columnar sidecar FIRST (an orphaned sidecar
+        # from a lost race is reclaimed with its version by vacuum's
+        # manifest pruning); the JSON keeps everything else (txns/status/
+        # schemas/projection geometry — all O(1)-ish) inline.
+        # writer-unique name: a stalled loser whose claim was stolen
+        # must never overwrite the winner's LIVE sidecar with an
+        # unconditional put — the envelope records the exact name, so
+        # uniqueness is free (r11 review)
+        pq_rel = f"frags-v{manifest.version:06d}-{token[:8]}.parquet"
+        buf = _io_mod.BytesIO()
+        _write_fraglist(buf, manifest.tables)
+        self._mio.put_bytes(pq_rel, buf.getvalue())
+        d["tables"] = {}
+        d["tables_pq"] = pq_rel
+        # projection ``covers`` lists are the other O(big) payload: they
+        # grow with the COVERED BASE fragment count, so an inline-JSON
+        # covers list makes every envelope parse O(covered).  They go to
+        # a columnar sidecar with the same lifecycle; the envelope keeps
+        # only the projection geometry and LazyManifest hydrates covers
+        # on first .projections access
+        cov_rows = [
+            (t, name, p)
+            for t, projs in manifest.projections.items()
+            for name, pr in projs.items()
+            for p in pr["covers"]
+        ]
+        if cov_rows:
+            cov_rel = f"covers-v{manifest.version:06d}-{token[:8]}.parquet"
+            cbuf = _io_mod.BytesIO()
+            pq.write_table(
+                pa.table(
+                    {
+                        "table": [r[0] for r in cov_rows],
+                        "proj": [r[1] for r in cov_rows],
+                        "path": [r[2] for r in cov_rows],
+                    }
+                ),
+                cbuf,
+            )
+            self._mio.put_bytes(cov_rel, cbuf.getvalue())
+            for projs in d["projections"].values():
+                for name in projs:
+                    projs[name]["covers"] = []
+            d["covers_pq"] = cov_rel
         # fence: the sidecar writes above may have outlived the liveness
         # envelope — verify we still own the claim BEFORE the put
         self._assert_claim_owned(manifest.version, token)
@@ -1109,13 +1090,6 @@ class TableStore:
         # read-compare-rename; object stores: If-Match CAS.
         self._mio.advance_monotonic(_CURRENT, manifest.version)
 
-    def _delta_chain_len(self, m: Manifest) -> int:
-        """How many deltas the NEXT version would stack on its base —
-        the checkpoint-cadence input."""
-        if isinstance(m, DeltaManifest):
-            return m.version - m.__dict__["_base_version"] + 1
-        return 1  # m itself is a checkpoint (or the empty store)
-
     def _delta_base(self, m: Manifest) -> int:
         return (
             m.__dict__["_base_version"]
@@ -1124,15 +1098,12 @@ class TableStore:
         )
 
     def _structural_delta_ok(self, m: Manifest) -> bool:
-        """True when a structural op (delete/upsert/projection refresh/
-        status) may ride the log-structured path: an anchored base (v>0)
-        and a chain slot free (never when ``CHECKPOINT_INTERVAL`` is 0).
-        Since r10 projections no longer gate this off — takedown deltas carry
-        the projection fragment-set changes in ``projections_delta``
-        (O(touched)), so the one table shape you'd index heavily
-        (logs + address projection) keeps O(batch) manifest writes on
-        its compliance path too (VERDICT r9 item 2)."""
-        return m.version > 0 and self._delta_chain_len(m) <= CHECKPOINT_INTERVAL
+        """True when :meth:`_swap_next` may write ``m``'s successor as a
+        delta record: an anchored base (v>0) and a chain slot free
+        (never when ``CHECKPOINT_INTERVAL`` is 0)."""
+        # deltas already stacked on m's base, counting the one to write
+        chain = m.version - self._delta_base(m) + 1
+        return m.version > 0 and chain <= CHECKPOINT_INTERVAL
 
     def _swap_delta(self, delta: dict) -> None:
         """Log-structured manifest swap: write one O(changed)-sized delta
@@ -1140,9 +1111,7 @@ class TableStore:
         conditional-put guard as :meth:`_swap` (one shared per-version
         claim file), so a delta writer and a checkpoint writer racing on
         the same version collide loudly instead of both landing (ADVICE
-        r9 lost-update fix).  Used by commit/set_status (adds only) and,
-        since r9, by delete/upsert on projection-free tables (adds +
-        removes + the op_info the changefeed replays)."""
+        r9 lost-update fix).  Written only by :meth:`_swap_next`."""
         version = delta["version"]
         # legacy-layout belt: see _swap — never shadow a pre-r11 delta
         if self._mio.exists(f"v{version:06d}.delta.json"):
@@ -1166,6 +1135,85 @@ class TableStore:
                 "already exists (another writer advanced the store)"
             ) from exc
         self._mio.advance_monotonic(_CURRENT, version)  # see _swap
+
+    def _swap_next(
+        self,
+        m: Manifest,
+        *,
+        op: str,
+        adds: dict[str, list[Fragment]] | None = None,
+        removes: dict[str, list[str]] | None = None,
+        removes_rows: dict[str, dict[str, int]] | None = None,
+        proj_updates: dict[str, dict] | None = None,
+        txns: dict[str, int] | None = None,
+        status: dict | None = None,
+        schemas: dict[str, dict] | None = None,
+        op_info: dict | None = None,
+        checkpoint: bool = False,
+    ) -> None:
+        """Plan and swap the successor of manifest ``m`` from one change
+        set — the single place every writer's encoding is decided.
+
+        ``adds``/``removes`` are per-table fragments in / paths out
+        (``removes_rows`` their manifest row counts, kept so
+        ``table_rows`` stays O(tail) through takedowns); ``proj_updates``
+        per-table projection update records (:func:`_apply_projection_updates`).
+        ``txns``/``status``/``schemas`` default to ``m``'s.  Writes the
+        O(changed) delta record while a chain slot is free, else (or
+        with ``checkpoint=True``) the full successor checkpoint: base
+        minus removes, plus adds.  A pure function of ``m`` and the
+        already-written fragments, so :meth:`commit_with_retry` can
+        re-plan against a newer ``m``."""
+        adds = adds or {}
+        removes = removes or {}
+        proj_updates = proj_updates or {}
+        txns = dict(m.txns) if txns is None else txns
+        status = m.status if status is None else status
+        schemas = dict(m.schemas) if schemas is None else schemas
+        if not checkpoint and self._structural_delta_ok(m):
+            # None of this touches m.tables, so a lazy/delta CURRENT
+            # stays unhydrated — the ingest hot path never reads the
+            # fragment list at all
+            delta = {
+                "version": m.version + 1,
+                "base": self._delta_base(m),
+                "op": op,
+                **({"op_info": op_info} if op_info is not None else {}),
+                "txns": txns,
+                "status": status,
+                "schemas": schemas,
+                "adds": {t: [f.to_json() for f in fl] for t, fl in adds.items()},
+            }
+            if removes:
+                delta["removes"] = {t: sorted(ps) for t, ps in removes.items()}
+                delta["removes_rows"] = removes_rows or {}
+            if proj_updates:
+                delta["projections_delta"] = {
+                    t: _proj_updates_to_json(upd) for t, upd in proj_updates.items()
+                }
+            self._swap_delta(delta)
+            return
+        tables = {t: list(fs) for t, fs in m.tables.items()}
+        for t, ps in removes.items():
+            gone = set(ps)
+            tables[t] = [f for f in tables.get(t, []) if f.path not in gone]
+        for t, fl in adds.items():
+            tables.setdefault(t, []).extend(fl)
+        projections = {t: dict(ps) for t, ps in m.projections.items()}
+        for t, upd in proj_updates.items():
+            projections[t] = _apply_projection_updates(projections.get(t, {}), upd)
+        self._swap(
+            Manifest(
+                version=m.version + 1,
+                txns=txns,
+                status=status,
+                op=op,
+                op_info=op_info,
+                tables=tables,
+                schemas=schemas,
+                projections=projections,
+            )
+        )
 
     # -- writes ------------------------------------------------------------
 
@@ -1588,52 +1636,34 @@ class TableStore:
                     self._read_schema(m, table), self._write_schema(data, frag)
                 )
                 schemas[table] = evolved.jsonValue()
-        new_status = status if status is not None else m.status
-        # first-ever swap checkpoints (the v>0 term of the shared
-        # gate): a v1 full manifest is O(batch) anyway and anchors
-        # every chain
-        if self._structural_delta_ok(m):
-            # log-structured append: O(batch) manifest write.  None of
-            # the fields below touches m.tables, so a LazyManifest /
-            # DeltaManifest current version stays unhydrated — the hot
-            # ingest path never reads the fragment list at all.
-            base_v = self._delta_base(m)
-            self._swap_delta(
-                {
-                    "version": m.version + 1,
-                    "base": base_v,
-                    "op": "commit",
-                    "txns": txns,
-                    "status": new_status,
-                    "schemas": schemas,
-                    "adds": {
-                        t: [f.to_json() for f in fl] for t, fl in adds.items()
-                    },
-                }
-            )
-            return
-        new = Manifest(
-            version=m.version + 1,
-            txns=txns,
-            status=new_status,
-            op="commit",
-            tables={t: list(frags) for t, frags in m.tables.items()},
-            schemas=schemas,
-            projections={t: dict(ps) for t, ps in m.projections.items()},
+        # first-ever swap checkpoints (the v>0 term of the shared gate):
+        # a v1 full manifest is O(batch) anyway and anchors every chain
+        self._swap_next(
+            m, op="commit", adds=adds, txns=txns, status=status, schemas=schemas
         )
-        for t, fl in adds.items():
-            new.tables.setdefault(t, []).extend(fl)
-        self._swap(new)
 
     def rollback_from(self, height: int, *, status: dict | None = None) -> int:
         """Reorg retraction: remove all rows with block_number >= height
         from every table, in ONE atomic swap (≙ the reference's three
         DELETEs inside a txn, src/db.rs:34-50).  Fragments wholly ≥ height
         are dropped by manifest edit alone; straddling fragments are
-        rewritten with a pushed-down filter.  Returns fragments touched."""
-        from pyspark.sql import functions as F
-
+        rewritten with a pushed-down filter (pyarrow, no Spark job).
+        Returns fragments touched."""
         m = self.current_manifest()
+        removes: dict[str, list[str]] = {}
+        adds: dict[str, list[Fragment]] = {}
+        for table, frags in m.tables.items():
+            for frag in frags:
+                if frag.max_block is None or frag.max_block < height:
+                    continue  # wholly below the fork: kept by reference
+                removes.setdefault(table, []).append(frag.path)
+                if frag.min_block is not None and frag.min_block >= height:
+                    continue  # wholly at/above the fork: manifest edit only
+                rewritten = self._rewrite_below(m, table, frag, height)
+                if rewritten is not None:
+                    rewritten.derived = True  # rewrite: no first-seen rows
+                    adds.setdefault(table, []).append(rewritten)
+        self._touch_or_fail([f for fl in adds.values() for f in fl])
         # Regress idempotency watermarks past the fork: a watermark is
         # "last committed block version", and versions ≥ height were just
         # retracted — leaving them high makes every re-ingest batch whose
@@ -1641,38 +1671,54 @@ class TableStore:
         # deeper than BLOCKS_PER_BATCH (found by the deep-reorg property
         # test; depth ≤ batch size masked it because the single re-ingest
         # batch overtopped the stale watermark).
-        new = Manifest(
-            version=m.version + 1,
-            txns={app: min(v, height - 1) for app, v in m.txns.items()},
-            status=status if status is not None else m.status,
+        self._swap_next(
+            m,
             op="rollback",
-            tables={},
-            schemas=dict(m.schemas),
-            projections={t: dict(ps) for t, ps in m.projections.items()},
+            adds=adds,
+            removes=removes,
+            txns={app: min(v, height - 1) for app, v in m.txns.items()},
+            status=status,
+            checkpoint=True,
         )
-        touched = 0
-        rewrites: list[Fragment] = []
-        for table, frags in m.tables.items():
-            kept: list[Fragment] = []
-            for frag in frags:
-                if frag.min_block is not None and frag.min_block >= height:
-                    touched += 1  # drop whole fragment: manifest edit only
-                    continue
-                if frag.max_block is not None and frag.max_block >= height:
-                    touched += 1  # straddles the fork: rewrite the survivors
-                    df = self.spark.read.parquet(str(self.root / frag.path))
-                    surv = df.filter(F.col("block_number") < height)
-                    rewritten = self._write_fragment(table, surv)
-                    if rewritten is not None:
-                        rewritten.derived = True  # rewrite: no first-seen rows
-                        kept.append(rewritten)
-                        rewrites.append(rewritten)
-                    continue
-                kept.append(frag)
-            new.tables[table] = kept
-        self._touch_or_fail(rewrites)
-        self._swap(new)
-        return touched
+        return sum(map(len, removes.values()))
+
+    def _rewrite_below(
+        self, m: Manifest, table: str, frag: Fragment, height: int
+    ) -> Fragment | None:
+        """The rows of ``frag`` below ``height`` as a new fragment, written
+        the way tip commits write (pyarrow, one part file), streamed
+        batch by batch so a compacted ~1 GB fragment never sits in
+        memory whole.  Each column is cast to its type in the snapshot's
+        read schema: a Spark-written fragment stores timestamps as INT96,
+        which pyarrow reads as ``timestamp[ns]`` and would write back in
+        a form Spark rejects (``PARQUET_COLUMN_DATA_TYPE_MISMATCH``)."""
+        import pyarrow.compute as pc
+        from pyspark.sql.pandas.types import to_arrow_schema
+
+        ds = pa_ds.dataset(str(self.root / frag.path), format="parquet")
+        read_schema = self._read_schema(m, table)
+        want = {} if read_schema is None else {
+            f.name: f.type for f in to_arrow_schema(read_schema)
+        }
+        schema = pa.schema(
+            [f.with_type(want.get(f.name, f.type)) for f in ds.schema]
+        )
+        rel = f"data/{table}/frag-{uuid.uuid4().hex}"
+        out = self.root / rel
+        out.mkdir(parents=True)
+        with pq.ParquetWriter(out / f"part-{uuid.uuid4().hex}.parquet", schema) as w:
+            for batch in ds.to_batches(
+                filter=pc.field("block_number") < height,
+                batch_readahead=1,
+                fragment_readahead=1,
+            ):
+                w.write_batch(
+                    pa.RecordBatch.from_arrays(
+                        [c.cast(f.type) for c, f in zip(batch.columns, schema)],
+                        schema=schema,
+                    )
+                )
+        return self._stat_fragment_dir(table, rel)
 
     def delete_equals(self, table: str, column: str, value) -> dict:
         """Targeted row deletion by key — the "remove this document /
@@ -1746,108 +1792,79 @@ class TableStore:
         """Shared delete kernel: ``probe`` is the scalar or key list the
         index tiers prune on; ``pred`` the match predicate; ``op_info``
         what the manifest records for changefeed replay."""
-        from pyspark.sql import functions as F
-
         m = self.current_manifest()
-        # pruned-path listing: stays unhydrated on a delta/lazy CURRENT
-        # (the checkpoint swap below hydrates only when actually taken)
-        frags = self.fragments_for(table, manifest=m)
-        new_frags: list[Fragment] = []
-        rewritten_frags: list[Fragment] = []
-        replaced: dict[str, str | None] = {}  # old base path -> new (None = emptied)
-        removed_rows: dict[str, int] = {}  # old path -> its manifest row count
-        stats = {
-            "candidates": 0,
-            "rewritten": 0,
-            "deleted_rows": 0,
-            "projection_fragments_rewritten": 0,
-        }
         # per-key index pruning is driver-side O(fragments); past a few
         # thousand keys nearly every bloom admits something anyway —
         # skip straight to the shared scan (same policy as upsert)
         prune = not isinstance(probe, list) or len(probe) <= 2048
-        candidates = [
-            f for f in frags
-            if not prune or self._frag_keeps(f, {column: probe})
-        ]
-        stats["candidates"] = len(candidates)
-        # two Spark jobs TOTAL for the whole candidate set (hit counts,
-        # then all survivor rewrites partitioned per source fragment) —
-        # not two per fragment; see _maintain_fragments_batched
-        hits, new_by_old = self._maintain_fragments_batched(
-            table, candidates, pred, self._read_schema(m, table)
+        n_cand, n_rows, rewritten, replaced, rm_rows = self._rewrite_matches(
+            m, table, column, probe, pred, prune
         )
-        for frag in frags:
-            if frag.path not in hits:
-                # definitely clean (index-pruned) or bloom false
-                # positive (scan only): keep by manifest reference
-                new_frags.append(frag)
-                continue
-            stats["rewritten"] += 1
-            stats["deleted_rows"] += hits[frag.path]
-            rewritten = new_by_old[frag.path]
-            replaced[frag.path] = rewritten.path if rewritten is not None else None
-            removed_rows[frag.path] = frag.rows
-            if rewritten is not None:
-                rewritten.derived = True  # rewrite: no first-seen rows
-                new_frags.append(rewritten)
-                rewritten_frags.append(rewritten)
-        if stats["rewritten"] == 0:
+        stats = {
+            "candidates": n_cand,
+            "rewritten": len(replaced),
+            "deleted_rows": n_rows,
+            "projection_fragments_rewritten": 0,
+        }
+        if not replaced:
             return stats  # nothing changed — don't burn a version
-        # projection replicas rewrite BEFORE the swap decision — both
-        # formats consume the same O(touched) update records
+        # projection replicas rewrite BEFORE the swap — both encodings
+        # consume the same O(touched) update records
         proj_updates = self._takedown_projection_updates(
             m, table, replaced, pred,
             {column: probe} if prune else None, stats,
         )
         self._touch_or_fail(
-            rewritten_frags
+            rewritten
             + [f for upd in proj_updates.values() for f in upd["pfrags_add"]]
         )
-        if self._structural_delta_ok(m):
-            # log-structured takedown (r9): the delete knows exactly
-            # which fragments it replaced, so the manifest write is
-            # O(touched) — removed paths + rewritten survivors in one
-            # delta record; op/op_info ride along for changefeed
-            # replay; since r10 projection fragment-set changes ride
-            # the same record
-            delta = {
-                "version": m.version + 1,
-                "base": self._delta_base(m),
-                "op": "delete",
-                "op_info": op_info,
-                "txns": dict(m.txns),
-                "status": m.status,
-                "schemas": dict(m.schemas),
-                "adds": {
-                    table: [f.to_json() for f in rewritten_frags]
-                },
-                "removes": {table: sorted(replaced)},
-                "removes_rows": {table: removed_rows},
-            }
-            if proj_updates:
-                delta["projections_delta"] = {
-                    table: _proj_updates_to_json(proj_updates)
-                }
-            self._swap_delta(delta)
-            return stats
-        new = Manifest(
-            version=m.version + 1,
-            txns=dict(m.txns),
-            status=m.status,
+        # the delete knows exactly which fragments it replaced, so the
+        # delta is O(touched): removed paths + rewritten survivors,
+        # op/op_info for changefeed replay, projection changes (r10)
+        self._swap_next(
+            m,
             op="delete",
             op_info=op_info,
-            tables={t: list(fs) for t, fs in m.tables.items()},
-            schemas=dict(m.schemas),
-            projections={t: dict(ps) for t, ps in m.projections.items()},
+            adds={table: rewritten},
+            removes={table: list(replaced)},
+            removes_rows={table: rm_rows},
+            proj_updates={table: proj_updates} if proj_updates else None,
         )
-        new.tables[table] = new_frags
-        if proj_updates:
-            new.projections[table] = _apply_projection_updates(
-                new.projections.get(table, {}), proj_updates
-            )
-        self._swap(new)
         return stats
+
+    def _rewrite_matches(
+        self, m: Manifest, table: str, column: str, probe, pred, prune: bool
+    ) -> tuple[int, int, list[Fragment], dict[str, str | None], dict[str, int]]:
+        """The fragment half of a takedown (delete or upsert): prune the
+        table's fragments with the index tiers on ``probe``, then rewrite
+        the ones actually holding ``pred`` matches — two Spark jobs for
+        the whole candidate set, see :meth:`_maintain_fragments_batched`.
+        Fragments the tiers exclude, and bloom false positives, stay by
+        manifest reference.  Returns ``(candidates, matched rows,
+        rewritten survivors, replaced {old path: new path or None when
+        emptied}, {old path: its manifest row count})``."""
+        # pruned-path listing: stays unhydrated on a delta/lazy CURRENT
+        frags = self.fragments_for(table, manifest=m)
+        candidates = [
+            f for f in frags
+            if not prune or self._frag_keeps(f, {column: probe})
+        ]
+        hits, new_by_old = self._maintain_fragments_batched(
+            table, candidates, pred, self._read_schema(m, table)
+        )
+        rewritten: list[Fragment] = []
+        replaced: dict[str, str | None] = {}
+        removed_rows: dict[str, int] = {}
+        for frag in candidates:
+            if frag.path not in hits:
+                continue
+            new = new_by_old[frag.path]
+            replaced[frag.path] = None if new is None else new.path
+            removed_rows[frag.path] = frag.rows
+            if new is not None:
+                new.derived = True  # rewrite: no first-seen rows
+                rewritten.append(new)
+        return len(candidates), sum(hits.values()), rewritten, replaced, removed_rows
 
     def _takedown_projection_updates(
         self,
@@ -2011,153 +2028,61 @@ class TableStore:
                 "upsert is for delta batches; rewrite the table for bulk loads"
             )
         keys = [r[0] for r in df.select(key_col).distinct().collect()]
-        stats = {
-            "keys": len(keys),
-            "candidates": 0,
-            "rewritten": 0,
-            "replaced_rows": 0,
-            "inserted_rows": n_rows,
-            "projection_fragments_rewritten": 0,
-        }
         m = self.current_manifest()
         pred = self._in_pred(key_col, keys)
         # per-key index pruning is driver-side O(keys x fragments); past
         # a few thousand keys the loop costs more than the scans it
         # would save AND almost every bloom admits some key anyway —
-        # skip straight to scanning (parquet pushdown still applies)
+        # skip straight to scanning (parquet pushdown still applies).
+        # The dict/bloom tiers take the key list as ONE IN-list probe.
         prune = len(keys) <= 2048
-        new_frags: list[Fragment] = []
-        rewritten_frags: list[Fragment] = []
-        replaced: dict[str, str | None] = {}
-        removed_rows: dict[str, int] = {}
-        frags = self.fragments_for(table, manifest=m)
-        # ONE list-probe per fragment (the dict/bloom tiers take IN-list
-        # probes natively: "keep if ANY key might be present") — probing
-        # per key re-read the bloom sidecar keys× times per fragment
-        candidates = [
-            f for f in frags
-            if not prune or self._frag_keeps(f, {key_col: keys})
-        ]
-        stats["candidates"] = len(candidates)
-        # two Spark jobs TOTAL for the whole candidate set (hit counts,
-        # then all survivor rewrites partitioned per source fragment) —
-        # not two per fragment; see _maintain_fragments_batched
-        hits, new_by_old = self._maintain_fragments_batched(
-            table, candidates, pred, self._read_schema(m, table)
+        n_cand, n_replaced, rewritten, replaced, rm_rows = self._rewrite_matches(
+            m, table, key_col, keys, pred, prune
         )
-        for frag in frags:
-            if frag.path not in hits:
-                # index tiers exclude every key, or bloom false positive
-                # (costs the one shared scan): keep by manifest reference
-                new_frags.append(frag)
-                continue
-            stats["rewritten"] += 1
-            stats["replaced_rows"] += hits[frag.path]
-            rewritten = new_by_old[frag.path]
-            replaced[frag.path] = rewritten.path if rewritten is not None else None
-            removed_rows[frag.path] = frag.rows
-            if rewritten is not None:
-                rewritten.derived = True
-                new_frags.append(rewritten)
-                rewritten_frags.append(rewritten)
+        stats = {
+            "keys": len(keys),
+            "candidates": n_cand,
+            "rewritten": len(replaced),
+            "replaced_rows": n_replaced,
+            "inserted_rows": n_rows,
+            "projection_fragments_rewritten": 0,
+        }
         batch_frag = self._write_fragment(table, df)
-        if batch_frag is not None:
-            new_frags.append(batch_frag)
-        elif stats["rewritten"] == 0:
+        if batch_frag is None and not replaced:
             return stats  # empty batch, nothing matched: don't burn a version
-        # projection replicas rewrite BEFORE the swap decision — both
-        # formats consume the same O(touched) update records (the new
-        # batch fragment is NOT covered: it lands as projection lag,
-        # drained by refresh_projection, same as a commit's)
+        adds = rewritten + ([batch_frag] if batch_frag is not None else [])
+        # projection replicas rewrite BEFORE the swap (the new batch
+        # fragment is NOT covered: it lands as projection lag, drained by
+        # refresh_projection, same as a commit's)
         proj_updates = self._takedown_projection_updates(
             m, table, replaced, pred,
             {key_col: keys} if prune else None, stats,
         )
         self._touch_or_fail(
-            rewritten_frags
-            + ([batch_frag] if batch_frag is not None else [])
-            + [f for upd in proj_updates.values() for f in upd["pfrags_add"]]
+            adds + [f for upd in proj_updates.values() for f in upd["pfrags_add"]]
         )
-        if self._structural_delta_ok(m):
-            # log-structured MERGE (r9): superseded fragment paths out,
-            # rewritten survivors + the batch fragment in — O(touched)
-            # manifest write; schema evolution rides the delta like a
-            # commit's; since r10 projection changes ride it too
-            schemas = dict(m.schemas)
-            schemas[table] = _evolve_schema(
-                self._read_schema(m, table), df.schema
-            ).jsonValue()
-            delta_adds = list(rewritten_frags)
-            if batch_frag is not None:
-                delta_adds.append(batch_frag)
-            delta = {
-                "version": m.version + 1,
-                "base": self._delta_base(m),
-                "op": "upsert",
-                "op_info": {
-                    "table": table, "column": key_col, "values": keys
-                },
-                "txns": dict(m.txns),
-                "status": m.status,
-                "schemas": schemas,
-                "adds": {table: [f.to_json() for f in delta_adds]},
-                "removes": {table: sorted(replaced)},
-                "removes_rows": {table: removed_rows},
-            }
-            if proj_updates:
-                delta["projections_delta"] = {
-                    table: _proj_updates_to_json(proj_updates)
-                }
-            self._swap_delta(delta)
-            return stats
-        new = Manifest(
-            version=m.version + 1,
-            txns=dict(m.txns),
-            status=m.status,
+        # superseded fragment paths out, rewritten survivors + the batch
+        # fragment in; schema evolution rides along like a commit's
+        schemas = dict(m.schemas)
+        schemas[table] = _evolve_schema(
+            self._read_schema(m, table), df.schema
+        ).jsonValue()
+        self._swap_next(
+            m,
             op="upsert",
             op_info={"table": table, "column": key_col, "values": keys},
-            tables={t: list(fs) for t, fs in m.tables.items()},
-            schemas=dict(m.schemas),
-            projections={t: dict(ps) for t, ps in m.projections.items()},
+            adds={table: adds},
+            removes={table: list(replaced)},
+            removes_rows={table: rm_rows},
+            proj_updates={table: proj_updates} if proj_updates else None,
+            schemas=schemas,
         )
-        evolved = _evolve_schema(self._read_schema(m, table), df.schema)
-        new.schemas[table] = evolved.jsonValue()
-        new.tables[table] = new_frags
-        if proj_updates:
-            new.projections[table] = _apply_projection_updates(
-                new.projections.get(table, {}), proj_updates
-            )
-        self._swap(new)
         return stats
 
     def set_status(self, status: dict) -> None:
         """Checkpoint-only upsert (O-9) when no data moved."""
-        m = self.current_manifest()
-        if self._structural_delta_ok(m):
-            # a status-only swap moves zero fragments — the O(1) delta
-            self._swap_delta(
-                {
-                    "version": m.version + 1,
-                    "base": self._delta_base(m),
-                    "op": "status",
-                    "txns": dict(m.txns),
-                    "status": status,
-                    "schemas": dict(m.schemas),
-                    "adds": {},
-                }
-            )
-            return
-        self._swap(
-            Manifest(
-                version=m.version + 1,
-                txns=dict(m.txns),
-                status=status,
-                op="status",
-                tables=m.tables,
-                schemas=dict(m.schemas),
-            projections={t: dict(ps) for t, ps in m.projections.items()},
-            )
-        )
+        # a status-only swap moves zero fragments — the O(1) delta
+        self._swap_next(self.current_manifest(), op="status", status=status)
 
     # -- reads -------------------------------------------------------------
 
@@ -2787,21 +2712,14 @@ class TableStore:
                     new_frags.append(frag)
         finally:
             self._dio.delete_dir(staging_rel)
-        new_frags.sort(
-            key=lambda f: (f.min_block is None, f.min_block, f.path)
-        )
         self._touch_or_fail(new_frags)
-        new = Manifest(
-            version=m.version + 1,
-            txns=dict(m.txns),
-            status=m.status,
+        self._swap_next(
+            m,
             op="compact",
-            tables={t: list(fs) for t, fs in m.tables.items()},
-            schemas=dict(m.schemas),
-            projections={t: dict(ps) for t, ps in m.projections.items()},
+            adds={table: new_frags},
+            removes={table: [f.path for f in frags]},
+            checkpoint=True,
         )
-        new.tables[table] = new_frags
-        self._swap(new)
         return len(frags)
 
     # -- clustered projections --------------------------------------------
@@ -2861,23 +2779,19 @@ class TableStore:
             table, name, self.read(table), cluster_by, max_fragments,
             layout=layout,
         )
-        new = Manifest(
-            version=m.version + 1,
-            txns=dict(m.txns),
-            status=m.status,
-            op="projection",
-            tables={t: list(fs) for t, fs in m.tables.items()},
-            schemas=dict(m.schemas),
-            projections={t: dict(ps) for t, ps in m.projections.items()},
-        )
-        new.projections.setdefault(table, {})[name] = {
+        self._touch_or_fail(frags)
+        entry = {
             "cluster_by": list(cluster_by),
             "layout": layout,
             "covers": [f.path for f in base],
             "fragments": frags,
         }
-        self._touch_or_fail(frags)
-        self._swap(new)
+        self._swap_next(
+            m,
+            op="projection",
+            proj_updates={table: {name: {"set": entry}}},
+            checkpoint=True,
+        )
         return len(frags)
 
     def _write_clustered_fragments(
@@ -2984,40 +2898,11 @@ class TableStore:
             }
         }
         self._touch_or_fail(frags)
-        if self._structural_delta_ok(m):
-            # the refresh is the LSM maintenance step that runs on the
-            # ingest cadence (maintain_store), so since r10 it rides
-            # the delta log like the takedowns: one O(drained tail)
-            # record — coverage extension + the new clustered
-            # generation — instead of a full checkpoint per tick
-            self._swap_delta(
-                {
-                    "version": m.version + 1,
-                    "base": self._delta_base(m),
-                    "op": "projection_refresh",
-                    "txns": dict(m.txns),
-                    "status": m.status,
-                    "schemas": dict(m.schemas),
-                    "adds": {},
-                    "projections_delta": {
-                        table: _proj_updates_to_json(update)
-                    },
-                }
-            )
-            return len(frags)
-        new = Manifest(
-            version=m.version + 1,
-            txns=dict(m.txns),
-            status=m.status,
-            op="projection_refresh",
-            tables={t: list(fs) for t, fs in m.tables.items()},
-            schemas=dict(m.schemas),
-            projections={t: dict(ps) for t, ps in m.projections.items()},
-        )
-        new.projections[table] = _apply_projection_updates(
-            new.projections.get(table, {}), update
-        )
-        self._swap(new)
+        # the refresh is the LSM maintenance step that runs on the ingest
+        # cadence (maintain_store), so since r10 it rides the delta log
+        # like the takedowns: one O(drained tail) record — coverage
+        # extension + the new clustered generation
+        self._swap_next(m, op="projection_refresh", proj_updates={table: update})
         return len(frags)
 
     def read_projection(
@@ -3243,19 +3128,12 @@ class TableStore:
         m = self.current_manifest()
         if name not in m.projections.get(table, {}):
             return
-        new = Manifest(
-            version=m.version + 1,
-            txns=dict(m.txns),
-            status=m.status,
+        self._swap_next(
+            m,
             op="projection_drop",
-            tables={t: list(fs) for t, fs in m.tables.items()},
-            schemas=dict(m.schemas),
-            projections={t: dict(ps) for t, ps in m.projections.items()},
+            proj_updates={table: {name: {"set": None}}},
+            checkpoint=True,
         )
-        new.projections[table] = {
-            n: p for n, p in new.projections[table].items() if n != name
-        }
-        self._swap(new)
 
     @staticmethod
     def _footer_min_max(md, column: str):
@@ -3459,9 +3337,10 @@ class TableStore:
                 continue
             # checkpoint record: read path columns straight off the
             # record — projection fragment lists live inline in the
-            # envelope even in the parquet posture (only covers are
-            # offloaded), and the fraglist sidecar yields its `path`
-            # column without materializing stats — so classification
+            # envelope (only covers are offloaded), the fraglist sidecar
+            # yields its `path` column without materializing stats, and
+            # older inline-JSON checkpoints list theirs under `tables`
+            # — so classification
             # never hydrates a manifest (r12 review: manifest_at here
             # cost O(keep_manifests x fragments) + a covers hydration
             # per retained checkpoint, per vacuum pass)

@@ -141,6 +141,35 @@ def test_store_backed_stats_launches_no_spark_job(store_api, monkeypatch):
     assert body["ingestionLag"] == body["chainHead"] - body["lastProcessedBlock"]
 
 
+def test_stats_reads_one_snapshot(spark, evm, tmp_path, monkeypatch):
+    """/stats resolves the manifest once: a commit landing between its
+    reads cannot pair one version's counts with another's checkpoint."""
+    from rust_evm_indexer_spark.store import TableStore
+
+    store = TableStore(spark, tmp_path / "snap", bloom_columns={}, dict_columns={})
+    tables = ("blocks", "transactions", "logs")
+    writes = {t: evm[t] for t in tables}
+    store.commit(writes, status={"last_processed_block": 10, "chain_head_at_last_poll": 12})
+    v0 = store.current_manifest()
+    want = [store.table_rows(t, manifest=v0) for t in tables]
+    api = EvmApi.from_store(store)
+    real_rows, landed = store.table_rows, []
+
+    def racing_rows(table, **kw):
+        if not landed:  # a concurrent ingest commit lands mid-request
+            landed.append(store.commit(
+                writes,
+                status={"last_processed_block": 20, "chain_head_at_last_poll": 21},
+            ))
+        return real_rows(table, **kw)
+
+    monkeypatch.setattr(store, "table_rows", racing_rows)
+    body = api.get_stats()
+    assert landed and store.current_version() == v0.version + 1
+    assert [body["totalBlocks"], body["totalTransactions"], body["totalLogs"]] == want
+    assert (body["lastProcessedBlock"], body["chainHead"]) == (10, 12)
+
+
 def test_store_backed_stats_shape_matches_scan_path(store_api, evm):
     """Same response dict — keys AND values — as the scan operator over
     the same tables."""

@@ -15,7 +15,7 @@ import pytest
 
 from pyspark.sql import functions as F
 
-from rust_evm_indexer_spark.store import TableStore, table_store
+from rust_evm_indexer_spark.store import TableStore
 from rust_evm_indexer_spark.store.table_store import DICT_MAX_DISTINCT
 
 
@@ -102,9 +102,7 @@ def test_high_cardinality_column_degrades_to_no_dict(spark, tmp_path):
     assert pruned.filter(F.col("sig") == "0xuniq00003").count() == 1
 
 
-def test_dict_survives_parquet_manifest_roundtrip(spark, tmp_path, monkeypatch):
-    # every manifest version crosses the fragment-count threshold
-    monkeypatch.setattr(table_store, "AUTO_PARQUET_FRAGMENTS", 0)
+def test_dict_survives_parquet_manifest_roundtrip(spark, tmp_path):
     store = _mk_store(spark, tmp_path)
     _commit_batches(spark, store, n_batches=4)
     # a fresh handle reads the fraglist parquet, not in-memory state

@@ -1,38 +1,29 @@
-"""Both manifest formats (inline-JSON and parquet fragment list) must
-serve the identical store lifecycle: commit / idempotent replay / read
-with pruning + blooms / rollback / compaction / projections / time
-travel / vacuum.  The parquet format is the metadata tier for
-million-fragment tables (manifest-read + prune is O(survivors) —
-tools/manifest_bench.py); writes pick it once total fragments reach
-``AUTO_PARQUET_FRAGMENTS`` and reads detect the format per version.
-Tests force the parquet layout on small stores by patching that
-threshold to 0."""
+"""The checkpoint encoding (envelope JSON + parquet fragment list) must
+serve the whole store lifecycle: commit / idempotent replay / read with
+pruning + blooms / rollback / compaction / projections / time travel /
+vacuum.  The parquet fraglist is the metadata tier for million-fragment
+tables (manifest-read + prune is O(survivors) — tools/manifest_bench.py);
+every checkpoint writes it, and inline-JSON checkpoints from older
+stores stay readable until their next checkpoint converts them."""
 
 from __future__ import annotations
 
-import pytest
+import json
+
 from pyspark.sql import functions as F
 
-from rust_evm_indexer_spark.store import TableStore, table_store
-from rust_evm_indexer_spark.store.table_store import DeltaManifest, LazyManifest
+from rust_evm_indexer_spark.store import TableStore
+from rust_evm_indexer_spark.store.table_store import (
+    DeltaManifest,
+    LazyManifest,
+    Manifest,
+)
 
 
-def _force_parquet(monkeypatch):
-    """Every new manifest version crosses the fragment-count threshold."""
-    monkeypatch.setattr(table_store, "AUTO_PARQUET_FRAGMENTS", 0)
-
-
-@pytest.fixture(params=["json", "parquet"])
-def fmt(request, monkeypatch):
-    if request.param == "parquet":
-        _force_parquet(monkeypatch)
-    return request.param
-
-
-def _mk(spark, tmp_path, fmt, n_batches=4, rows_per=30):
+def _mk(spark, tmp_path, n_batches=4, rows_per=30):
     store = TableStore(
         spark,
-        tmp_path / f"store_{fmt}",
+        tmp_path / "store",
         bloom_columns={"pts": ("addr",)},
     )
     for b in range(n_batches):
@@ -45,15 +36,18 @@ def _mk(spark, tmp_path, fmt, n_batches=4, rows_per=30):
     return store
 
 
-def test_lifecycle_equivalent_across_formats(spark, tmp_path, fmt):
-    store = _mk(spark, tmp_path, fmt)
-    if fmt == "parquet":
-        # log-structured default: CURRENT is a delta chain whose BASE
-        # checkpoint carries the columnar fraglist
-        m = store.current_manifest()
-        base = m.__dict__["_base"] if isinstance(m, DeltaManifest) else m
-        assert isinstance(base, LazyManifest)
-    # idempotent replay is a no-op in both formats
+def _record(store, version: int) -> dict:
+    return json.loads((store.root / "_manifests" / f"v{version:06d}.json").read_text())
+
+
+def test_lifecycle(spark, tmp_path):
+    store = _mk(spark, tmp_path)
+    # log-structured default: CURRENT is a delta chain whose BASE
+    # checkpoint carries the columnar fraglist
+    m = store.current_manifest()
+    assert isinstance(m, DeltaManifest)
+    assert isinstance(m.__dict__["_base"], LazyManifest)
+    # idempotent replay is a no-op
     df = spark.createDataFrame([(1, "0xdead", 100)], "id: long, addr: string, block_number: long")
     assert store.commit({"pts": df}, txn_app_id="t", txn_version=0) is False
     assert store.read("pts").count() == 120
@@ -72,7 +66,7 @@ def test_lifecycle_equivalent_across_formats(spark, tmp_path, fmt):
     assert len(via.inputFiles()) < len(store.read("pts").inputFiles())
     assert via.filter(F.col("addr") == probe).count() >= 1
 
-    # time travel across formats; rollback drops the tail atomically
+    # time travel; rollback drops the tail atomically
     v_before = store.current_manifest().version
     assert store.rollback_from(103) > 0
     assert store.read("pts").count() == 90
@@ -93,102 +87,80 @@ def test_lifecycle_equivalent_across_formats(spark, tmp_path, fmt):
     removed = store.vacuum(keep_manifests=2)
     assert removed > 0
     mdir = store.root / "_manifests"
-    if fmt == "parquet":
-        # sidecar names are writer-unique (frags-vNNNNNN-<token8>); each
-        # survivor must belong to a kept version AND be the exact name
-        # its envelope references
-        import json as _json
-        import re as _re
+    # sidecar names are writer-unique (frags-vNNNNNN-<token8>); each
+    # survivor must belong to a kept version AND be the exact name its
+    # envelope references
+    import re as _re
 
-        kept = {int(p.name[1:7]) for p in mdir.glob("v*.json")}
-        for fp in mdir.glob("frags-v*.parquet"):
-            ver = int(_re.match(r"frags-v(\d{6})", fp.name).group(1))
-            assert ver in kept
-            env = _json.loads((mdir / f"v{ver:06d}.json").read_text())
-            assert env["tables_pq"] == fp.name
+    kept = {int(p.name[1:7]) for p in mdir.glob("v*.json")}
+    for fp in mdir.glob("frags-v*.parquet"):
+        ver = int(_re.match(r"frags-v(\d{6})", fp.name).group(1))
+        assert ver in kept
+        assert _record(store, ver)["tables_pq"] == fp.name
     assert store.read("pts").count() == 90  # current snapshot intact
 
 
-def test_format_migration_on_reopen(spark, tmp_path, monkeypatch):
-    """A writer under the other format converts at the next swap; reads
-    keep working across mixed-version histories.  CHECKPOINT_INTERVAL=0:
-    this test is about the CHECKPOINT format, which only appends write
-    deltas against (delta swaps are format-agnostic by design)."""
-    store = _mk(spark, tmp_path, "json", n_batches=2)
-    _force_parquet(monkeypatch)
-    monkeypatch.setattr(table_store, "CHECKPOINT_INTERVAL", 0)
-    pq_store = TableStore(spark, store.root, bloom_columns={"pts": ("addr",)})
-    assert not isinstance(pq_store.current_manifest(), LazyManifest)
-    df = spark.createDataFrame([(7, "0xbeef", 200)], "id: long, addr: string, block_number: long")
-    pq_store.commit({"pts": df})
-    m = pq_store.current_manifest()
-    assert isinstance(m, LazyManifest)
-    assert pq_store.read("pts").count() == 61
-    # and back: a json-format writer over the parquet history
-    monkeypatch.undo()
-    back = TableStore(spark, store.root, bloom_columns={"pts": ("addr",)})
-    back.commit({"pts": df.withColumn("id", F.lit(8).cast("long"))})
-    assert not isinstance(back.current_manifest(), LazyManifest)
-    assert back.read("pts").count() == 62
-
-
-def test_auto_format_switches_at_fragment_threshold(spark, tmp_path):
-    """The default ``auto`` writes inline JSON while the store is small
-    (read_full — what every mutation pays — is cheaper) and switches new
-    versions to the parquet fraglist once total fragments cross
-    AUTO_PARQUET_FRAGMENTS, converting on the next swap."""
-    import json as _json
-
-    from rust_evm_indexer_spark.store.table_store import (
-        AUTO_PARQUET_FRAGMENTS,
-        Fragment,
-        Manifest,
-    )
-
-    store = TableStore(spark, tmp_path / "auto", bloom_columns={}, dict_columns={})
+def test_first_checkpoint_of_small_store_is_parquet(spark, tmp_path):
+    """One encoding at every size: the first checkpoint of a store
+    holding a single fragment already carries the columnar fraglist,
+    with no inline fragment list, and resolves lazily."""
+    store = TableStore(spark, tmp_path / "one", bloom_columns={}, dict_columns={})
     df = spark.createDataFrame([(1, "a", 100)], "id: long, addr: string, block_number: long")
     store.commit({"pts": df})
-    v1 = store.current_manifest().version
-    d = _json.loads((store.root / "_manifests" / f"v{v1:06d}.json").read_text())
-    assert "tables_pq" not in d  # small store: inline JSON
-
-    # fabricate a version holding >= threshold fragments (metadata only)
+    d = _record(store, store.current_version())
+    assert "base" not in d and d["tables"] == {}
+    assert (store.root / "_manifests" / d["tables_pq"]).exists()
     m = store.current_manifest()
-    big = Manifest(
-        version=m.version + 1,
-        tables={
-            "pts": m.tables["pts"]
-            + [
-                Fragment(path=f"data/pts/fake-{i}", rows=1, min_block=i, max_block=i)
-                for i in range(AUTO_PARQUET_FRAGMENTS)
-            ]
-        },
-    )
-    store._swap(big)
-    d2 = _json.loads(
-        (store.root / "_manifests" / f"v{big.version:06d}.json").read_text()
-    )
-    assert "tables_pq" in d2  # crossed the threshold: columnar fraglist
-    assert isinstance(store.current_manifest(), LazyManifest)
+    assert isinstance(m, LazyManifest)
+    assert store.table_rows("pts") == 1
+    assert [f.rows for f in m.tables["pts"]] == [1]
 
 
-def test_parquet_covers_sidecar_keeps_envelope_small(spark, tmp_path, monkeypatch):
-    """r10: projection ``covers`` move into a columnar sidecar under
-    the parquet manifest format, so the envelope parse — and every
+def test_format_migration_on_reopen(spark, tmp_path):
+    """A store whose checkpoint is inline JSON (the layout written before
+    every checkpoint carried the parquet fraglist) reopens, reads, time-
+    travels and rolls back; its next checkpoint converts to the fraglist.
+    The v1 checkpoint is re-written by hand as ``Manifest.to_json()``
+    with its sidecar removed; the v2-v4 delta records are the same JSON
+    in both layouts."""
+    store = _mk(spark, tmp_path)
+    mdir = store.root / "_manifests"
+    inline = Manifest.to_json(store.manifest_at(1))  # hydrates the fraglist
+    assert inline["tables"]["pts"] and "tables_pq" not in inline
+    sidecar = _record(store, 1)["tables_pq"]
+    (mdir / "v000001.json").write_text(json.dumps(inline, indent=1))
+    (mdir / sidecar).unlink()
+
+    reopened = TableStore(spark, store.root, bloom_columns={"pts": ("addr",)})
+    m1 = reopened.manifest_at(1)
+    assert type(m1) is Manifest  # inline checkpoint, read eagerly
+    assert reopened.read("pts").count() == 120
+    assert reopened.table_rows("pts") == 120
+    assert len(reopened.fragments_for("pts", min_block=101, max_block=101)) == 1
+    for v in range(1, 5):  # time travel across the inline base + deltas
+        assert reopened.read("pts", version=v).count() == 30 * v
+    assert reopened.rollback_from(103) == 1
+    assert reopened.read("pts").count() == 90
+    assert reopened.read("pts", version=4).count() == 120
+    d = _record(reopened, reopened.current_version())
+    assert d["op"] == "rollback" and "tables_pq" in d and d["tables"] == {}
+    assert isinstance(reopened.current_manifest(), LazyManifest)
+
+
+def test_parquet_covers_sidecar_keeps_envelope_small(spark, tmp_path):
+    """r10: projection ``covers`` move into a columnar sidecar in every
+    checkpoint, so the envelope parse — and every
     operation that never touches projections — stays O(envelope)
     regardless of how many base fragments the projections cover.
     Contract under test: envelope covers empty + covers_pq present,
     lazy hydration on first .projections access only, identical reads,
     delta takedowns/refreshes stacking on top, vacuum reclaiming the
     sidecars with their versions."""
-    import json as _json
-
-    _force_parquet(monkeypatch)
-    store = _mk(spark, tmp_path, "parquet", n_batches=3)
+    store = _mk(spark, tmp_path, n_batches=3)
     store.build_projection("pts", "by_addr", ("addr",), max_fragments=1)
     mdir = store.root / "_manifests"
     v = store.current_manifest().version
-    d = _json.loads((mdir / f"v{v:06d}.json").read_text())
+    d = _record(store, v)
     assert d["covers_pq"].startswith(f"covers-v{v:06d}")  # writer-unique name
     assert d["projections"]["pts"]["by_addr"]["covers"] == []
     assert (mdir / d["covers_pq"]).exists()
@@ -216,7 +188,7 @@ def test_parquet_covers_sidecar_keeps_envelope_small(spark, tmp_path, monkeypatc
     assert len(cur.projections["pts"]["by_addr"]["covers"]) == 4
     # reopen from files alone and vacuum: old covers sidecars die with
     # their versions, the kept chain stays resolvable
-    reopened = TableStore(spark, tmp_path / "store_parquet", bloom_columns={})
+    reopened = TableStore(spark, tmp_path / "store", bloom_columns={})
     reopened.vacuum(keep_manifests=2)
     kept_json = {p.name[1:7] for p in mdir.glob("v*.json")}
     for cp in mdir.glob("covers-v*.parquet"):

@@ -128,26 +128,54 @@ def test_commits_write_deltas_and_checkpoint_on_interval(spark, tmp_path, mk, mo
 
 @pytest.mark.slow
 def test_delta_resolution_matches_full_regime(spark, tmp_path, mk, monkeypatch):
-    """The same op sequence with log-structured commits on
-    (CHECKPOINT_INTERVAL=4) and off (0) produces identical query
-    results, version numbers, and statuses."""
+    """Every writer through both encodings: the same op sequence with
+    log-structured swaps on (CHECKPOINT_INTERVAL=5) and off (0) produces
+    identical query results, projection reads, changefeeds, version
+    numbers and statuses — so each op's delta record resolves to the
+    checkpoint its planner would have written."""
     a = mk(tmp_path / "log")
     b = mk(tmp_path / "full")
-    for store, interval in ((a, 4), (b, 0)):
+    upsert_rows = [(301, "0xnew", 103), (9999, "0xins", 108)]
+    snap = {}
+    for store, interval in ((a, 5), (b, 0)):
         _interval(monkeypatch, interval)
-        _commit_n(spark, store, 7)
+        _commit_n(spark, store, 7)  # v7: the interval's checkpoint
         store.set_status({"last": 106})
-        store.rollback_from(105)
+        store.build_projection("pts", "by_addr", ("addr",), max_fragments=1)
+        _commit_n(spark, store, 1, start=7)
+        assert store.refresh_projection("pts", "by_addr") >= 1
+        assert store.delete_equals("pts", "id", 0)["deleted_rows"] == 1
+        assert store.delete_in("pts", "id", [101, 702])["deleted_rows"] == 2
+        assert store.upsert(
+            "pts", spark.createDataFrame(upsert_rows, SCHEMA), "id"
+        )["replaced_rows"] == 1
+        snap[interval] = (
+            sorted(store.read_projection("pts", "by_addr").collect()),
+            sorted(store.changes("pts", since_version=8, include_deletes=True).collect()),
+        )
+        store.rollback_from(105)  # cuts through the upsert's batch fragment
         _commit_n(spark, store, 2, start=20)
-    assert a.current_manifest().version == b.current_manifest().version
-    assert a.read_status() == b.read_status()
+        store.compact("pts", max_fragments=2)
+        assert any(  # the next rollback cuts through a compacted fragment
+            f.min_block < 121 <= f.max_block
+            for f in store.current_manifest().tables["pts"]
+        )
+        store.rollback_from(121)
+        _commit_n(spark, store, 1, start=30)
+    assert [v for v in range(1, 21) if _is_delta(a, v)] == [
+        2, 3, 4, 5, 6, 8, 10, 11, 12, 13, 14, 16, 17, 20
+    ]
+    assert not any(_is_delta(b, v) for v in range(1, 21))
+    assert snap[5] == snap[0] and len(snap[0][1]) == 16
+    assert a.current_manifest().version == b.current_manifest().version == 20
+    assert a.read_status() == b.read_status() == {"last": 106}
     rows_a = sorted(a.read("pts").collect())
     rows_b = sorted(b.read("pts").collect())
-    assert rows_a == rows_b
+    assert rows_a == rows_b and len(rows_a) == 68
     bounded_a = sorted(a.read("pts", min_block=102, max_block=121).collect())
     bounded_b = sorted(b.read("pts", min_block=102, max_block=121).collect())
     assert bounded_a == bounded_b
-    assert a.table_rows("pts") == b.table_rows("pts")
+    assert a.table_rows("pts") == b.table_rows("pts") == 68
 
 
 def test_commit_hot_path_never_hydrates(spark, tmp_path, mk, monkeypatch):

@@ -72,12 +72,9 @@ def _checkpoint_writer(store: TableStore) -> TableStore:
     return store
 
 
-def _regime(monkeypatch, interval: int, parquet: bool = False) -> None:
-    """Checkpoint every ``interval``-th swap (0: checkpoints only) and,
-    with ``parquet``, write every manifest with the columnar fraglist."""
+def _regime(monkeypatch, interval: int) -> None:
+    """Checkpoint every ``interval``-th swap (0: checkpoints only)."""
     monkeypatch.setattr(table_store, "CHECKPOINT_INTERVAL", interval)
-    if parquet:
-        monkeypatch.setattr(table_store, "AUTO_PARQUET_FRAGMENTS", 0)
 
 
 def test_crash_after_claim_fails_loudly_then_self_heals(spark, tmp_path):
@@ -298,7 +295,7 @@ def test_fake_backend_full_lifecycle_matches_posix(spark, tmp_path, monkeypatch)
     yields identical query results, versions, statuses and stats —
     including parquet-format manifests (fraglist + covers sidecars
     round-trip through object bytes)."""
-    _regime(monkeypatch, 3, parquet=True)
+    _regime(monkeypatch, 3)
     fake = InMemoryObjectStoreIO()
     a = _mk(spark, tmp_path / "obj", fake)
     b = _mk(spark, tmp_path / "posix")
@@ -555,7 +552,7 @@ def test_vacuum_protects_inflight_sidecars(spark, tmp_path, monkeypatch):
     not reclaim them while the claim stands (or while young), else the
     writer commits a manifest referencing deleted objects and bricks
     the store at its own version."""
-    _regime(monkeypatch, 0, parquet=True)
+    _regime(monkeypatch, 0)
     fake = InMemoryObjectStoreIO()
     store = _mk(spark, tmp_path / "s", fake)
     store.commit({"pts": _batch(spark, 0)})
@@ -807,7 +804,7 @@ def test_s3_backend_full_lifecycle_matches_posix(spark, tmp_path, moto_s3, monke
     identical results: commits, parquet-format manifests (fraglist +
     covers sidecars as object bytes), projections, deletes, status,
     vacuum."""
-    _regime(monkeypatch, 3, parquet=True)
+    _regime(monkeypatch, 3)
     s3 = _mk(spark, tmp_path / "s3", moto_s3())
     posix = _mk(spark, tmp_path / "posix")
     for store in (s3, posix):

@@ -1,27 +1,28 @@
-"""Manifest-format pruning benchmark (VERDICT r4 item 7).
+"""Manifest metadata benchmark (VERDICT r4 item 7).
 
-Fabricates manifests with N fragment records (no data files needed —
-this measures METADATA cost only) in both formats and times, per N:
+Fabricates stores with N fragment records (no data files needed — this
+measures METADATA cost only) and times, per N:
 
 - ``read_full``: load the manifest and materialize every fragment
   (what any mutation op pays);
 - ``read_prune``: load the manifest and resolve a narrow block-range
   probe to its surviving fragments (what every bounded query pays —
-  the hot path at 100 TB, where a table holds millions of fragments).
+  the hot path at 100 TB, where a table holds millions of fragments);
+- per-append and per-takedown manifest cost, as a full checkpoint and
+  as an O(changed) delta record.
 
-Expected shape: JSON read_prune grows linearly with N (the whole list
-parses before pruning); parquet read_prune stays near-flat (row-group
-statistics skip non-matching groups; only survivors materialize).
-
-The store picks the format by fragment count (``AUTO_PARQUET_FRAGMENTS``)
-and the delta-chain length by ``CHECKPOINT_INTERVAL``; this script sets
-both module constants to pin one format and regime per measurement.
+Every checkpoint stores its fragment list as a parquet sidecar, so
+read_prune stays near-flat in N (row-group statistics skip
+non-matching groups; only survivors materialize).  The delta-chain
+length is the ``CHECKPOINT_INTERVAL`` module constant; this script sets
+it per measurement.
 
 Run: ``python tools/manifest_bench.py [Ns...]`` — prints one JSON line.
 """
 
 from __future__ import annotations
 
+import itertools
 import json
 import shutil
 import sys
@@ -41,10 +42,9 @@ from rust_evm_indexer_spark.store.table_store import (  # noqa: E402
 BLOCKS_PER_FRAG = 5
 
 
-def _store(root: Path, fmt: str, interval: int = 16) -> TableStore:
-    """A metadata-only store whose swaps write ``fmt`` manifests and
-    checkpoint every ``interval``-th swap (0: checkpoints only)."""
-    table_store.AUTO_PARQUET_FRAGMENTS = 0 if fmt == "parquet" else sys.maxsize
+def _store(root: Path, interval: int = 16) -> TableStore:
+    """A metadata-only store that checkpoints every ``interval``-th swap
+    (0: checkpoints only)."""
     table_store.CHECKPOINT_INTERVAL = interval
     return TableStore(None, root)
 
@@ -65,13 +65,12 @@ def _fabricate(n_frags: int) -> dict[str, list[Fragment]]:
     return {"logs": frags}
 
 
-def _bench_format(fmt: str, n_frags: int, probes: int = 20) -> dict[str, float]:
-    root = Path(tempfile.mkdtemp(prefix=f"manifest-bench-{fmt}-"))
+def _bench_read(n_frags: int, probes: int = 20) -> dict[str, float]:
+    root = Path(tempfile.mkdtemp(prefix="manifest-bench-"))
     try:
-        store = _store(root, fmt)
-        m = Manifest(version=1, tables=_fabricate(n_frags))
+        store = _store(root)
         t0 = time.perf_counter()
-        store._swap(m)
+        store._swap_next(Manifest(), op="commit", adds=_fabricate(n_frags))
         write_s = time.perf_counter() - t0
 
         # full materialization (mutation-path cost)
@@ -102,16 +101,16 @@ def _bench_format(fmt: str, n_frags: int, probes: int = 20) -> dict[str, float]:
         shutil.rmtree(root, ignore_errors=True)
 
 
-def _bench_append(fmt: str, n_frags: int, chain: int = 16) -> dict[str, float]:
+def _bench_append(n_frags: int, chain: int = 16) -> dict[str, float]:
     """Per-append MANIFEST cost at a store already holding n_frags
-    fragments (the data write is identical across regimes and excluded):
+    fragments (the data write is identical across encodings and
+    excluded):
 
-    - ``append_full_s``: the full-manifest regime — hydrate the current
+    - ``append_full_s``: a full checkpoint — hydrate the current
       fragment list, append one record, rewrite the whole list
-      (O(total fragments) per commit; what every commit paid pre-r9);
-    - ``append_delta_s``: the log-structured regime — resolve the
-      (unhydrated) current version, write one O(1) delta
-      (a ``base``-bearing record at ``v{N}.json``) holding just the new fragment;
+      (O(total fragments) per commit);
+    - ``append_delta_s``: resolve the (unhydrated) current version and
+      write one O(1) delta record holding just the new fragment;
     - ``append_amortized_s``: a full CHECKPOINT_INTERVAL-length chain of
       delta appends PLUS the closing checkpoint, averaged — the honest
       sustained cost including the periodic O(total)/K hydration.
@@ -126,60 +125,32 @@ def _bench_append(fmt: str, n_frags: int, chain: int = 16) -> dict[str, float]:
             max_block=9_000_000 + (i + 1) * BLOCKS_PER_FRAG - 1,
         )
 
-    out: dict[str, float] = {}
-    # full-manifest regime
-    root = Path(tempfile.mkdtemp(prefix=f"manifest-append-full-{fmt}-"))
-    try:
-        store = _store(root, fmt, interval=0)
-        store._swap(Manifest(version=1, tables=base))
-        t0 = time.perf_counter()
-        m = store.current_manifest()
-        tables = {t: list(fs) for t, fs in m.tables.items()}
-        tables["logs"] = tables["logs"] + [_new_frag(0)]
-        store._swap(Manifest(version=2, txns=dict(m.txns), tables=tables))
-        out["append_full_s"] = round(time.perf_counter() - t0, 5)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
-    # log-structured regime: one delta, then a sustained chain + checkpoint
-    root = Path(tempfile.mkdtemp(prefix=f"manifest-append-delta-{fmt}-"))
-    try:
-        store = _store(root, fmt, interval=chain)
-        store._swap(Manifest(version=1, tables=base))
-        t0 = time.perf_counter()
-        m = store.current_manifest()
-        store._swap_delta(
-            {
-                "version": 2,
-                "base": 1,
-                "op": "commit",
-                "txns": dict(m.txns),
-                "status": m.status,
-                "schemas": dict(m.schemas),
-                "adds": {"logs": [_new_frag(0).to_json()]},
-            }
+    seq = itertools.count()
+
+    def _append(store: TableStore, checkpoint: bool = False) -> None:
+        store._swap_next(
+            store.current_manifest(), op="commit",
+            adds={"logs": [_new_frag(next(seq))]}, checkpoint=checkpoint,
         )
-        out["append_delta_s"] = round(time.perf_counter() - t0, 5)
+
+    out: dict[str, float] = {}
+    root = Path(tempfile.mkdtemp(prefix="manifest-append-"))
+    try:
+        store = _store(root, interval=chain)
+        store._swap_next(Manifest(), op="commit", adds=base)
         t0 = time.perf_counter()
-        for i in range(1, chain + 1):
-            m = store.current_manifest()
-            nxt = m.version + 1
-            if store._delta_chain_len(m) <= chain:
-                base_v = m.__dict__.get("_base_version", m.version)
-                store._swap_delta(
-                    {
-                        "version": nxt,
-                        "base": base_v,
-                        "op": "commit",
-                        "txns": dict(m.txns),
-                        "status": m.status,
-                        "schemas": dict(m.schemas),
-                        "adds": {"logs": [_new_frag(i).to_json()]},
-                    }
-                )
-            else:  # the closing checkpoint: hydrate once per K appends
-                tables = {t: list(fs) for t, fs in m.tables.items()}
-                tables["logs"] = tables["logs"] + [_new_frag(i)]
-                store._swap(Manifest(version=nxt, txns=dict(m.txns), tables=tables))
+        _append(store, checkpoint=True)
+        out["append_full_s"] = round(time.perf_counter() - t0, 5)
+        t0 = time.perf_counter()
+        _append(store)
+        out["append_delta_s"] = round(time.perf_counter() - t0, 5)
+        # finish this chain, then time one whole chain + its checkpoint
+        while store._structural_delta_ok(store.current_manifest()):
+            _append(store)
+        _append(store)
+        t0 = time.perf_counter()
+        for _ in range(chain + 1):
+            _append(store)
         out["append_amortized_s"] = round(
             (time.perf_counter() - t0) / (chain + 1), 5
         )
@@ -188,39 +159,29 @@ def _bench_append(fmt: str, n_frags: int, chain: int = 16) -> dict[str, float]:
     return out
 
 
-def _bench_projected_takedown(fmt: str, n_frags: int) -> dict[str, float]:
-    """Per-takedown MANIFEST cost on a table WITH a projection (the
-    r10 projections_delta path vs the checkpoint it replaced).  Data
-    rewrite cost is identical across regimes and excluded — this
+def _bench_projected_takedown(n_frags: int) -> dict[str, float]:
+    """Per-takedown MANIFEST cost on a table WITH a projection, as a
+    full checkpoint and as the r10 ``projections_delta`` record.  Data
+    rewrite cost is identical across encodings and excluded — this
     isolates what the compliance path pays in metadata when one
     fragment is purged from a heavily-indexed table:
 
     - ``takedown_ckpt_s``: hydrate every table's fragment list, apply
       the replace, rewrite the FULL manifest including the projection
-      state — O(total fragments) per purge (pre-r10 behavior for
-      projected tables);
+      state — O(total fragments) per purge;
     - ``takedown_delta_s``: one O(touched) delta record — removed path
       + rewritten survivor + removes_rows + the projection's
-      covers_map/pfrag swap (r10)."""
-    from rust_evm_indexer_spark.store.table_store import (
-        _apply_projection_updates,
-        _proj_updates_to_json,
-    )
-
+      covers_map/pfrag swap."""
     base = _fabricate(n_frags)
-    projections = {
-        "logs": {
-            "by_addr": {
-                "cluster_by": ["contract_address"],
-                "layout": "range",
-                "covers": [f.path for f in base["logs"]],
-                "fragments": [
-                    Fragment(path=f"data/logs__proj__by_addr/p-{i:04x}",
-                             rows=(n_frags * 1200) // 2)
-                    for i in range(2)
-                ],
-            }
-        }
+    proj = {
+        "cluster_by": ["contract_address"],
+        "layout": "range",
+        "covers": [f.path for f in base["logs"]],
+        "fragments": [
+            Fragment(path=f"data/logs__proj__by_addr/p-{i:04x}",
+                     rows=(n_frags * 1200) // 2)
+            for i in range(2)
+        ],
     }
     rewritten = Fragment(path="data/logs/frag-rw", rows=1199, derived=True)
     pfrag_new = Fragment(path="data/logs__proj__by_addr/p-rw", rows=599,
@@ -229,53 +190,33 @@ def _bench_projected_takedown(fmt: str, n_frags: int) -> dict[str, float]:
     update = {
         "by_addr": {
             "covers_map": {victim.path: rewritten.path},
-            "pfrags_remove": [projections["logs"]["by_addr"]["fragments"][0].path],
+            "pfrags_remove": [proj["fragments"][0].path],
             "pfrags_add": [pfrag_new],
         }
     }
     out: dict[str, float] = {}
-    # checkpoint regime (what projected tables paid pre-r10)
-    root = Path(tempfile.mkdtemp(prefix=f"manifest-td-ckpt-{fmt}-"))
-    try:
-        store = _store(root, fmt, interval=0)
-        store._swap(Manifest(version=1, tables=base, projections=projections))
-        t0 = time.perf_counter()
-        m = store.current_manifest()
-        tables = {t: list(fs) for t, fs in m.tables.items()}
-        tables["logs"] = [
-            rewritten if f.path == victim.path else f for f in tables["logs"]
-        ]
-        projs = {t: dict(ps) for t, ps in m.projections.items()}
-        projs["logs"] = _apply_projection_updates(projs["logs"], update)
-        store._swap(Manifest(version=2, tables=tables, projections=projs))
-        out["takedown_ckpt_s"] = round(time.perf_counter() - t0, 5)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
-    # delta regime (r10)
-    root = Path(tempfile.mkdtemp(prefix=f"manifest-td-delta-{fmt}-"))
-    try:
-        store = _store(root, fmt)
-        store._swap(Manifest(version=1, tables=base, projections=projections))
-        t0 = time.perf_counter()
-        m = store.current_manifest()
-        store._swap_delta(
-            {
-                "version": 2,
-                "base": 1,
-                "op": "delete",
-                "op_info": {"table": "logs", "column": "id", "value": 1},
-                "txns": dict(m.txns),
-                "status": m.status,
-                "schemas": dict(m.schemas),
-                "adds": {"logs": [rewritten.to_json()]},
-                "removes": {"logs": [victim.path]},
-                "removes_rows": {"logs": {victim.path: victim.rows}},
-                "projections_delta": {"logs": _proj_updates_to_json(update)},
-            }
-        )
-        out["takedown_delta_s"] = round(time.perf_counter() - t0, 5)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+    for key, checkpoint in (("takedown_ckpt_s", True), ("takedown_delta_s", False)):
+        root = Path(tempfile.mkdtemp(prefix="manifest-td-"))
+        try:
+            store = _store(root)
+            store._swap_next(
+                Manifest(), op="commit", adds=base,
+                proj_updates={"logs": {"by_addr": {"set": proj}}},
+            )
+            t0 = time.perf_counter()
+            store._swap_next(
+                store.current_manifest(),
+                op="delete",
+                op_info={"table": "logs", "column": "id", "value": 1},
+                adds={"logs": [rewritten]},
+                removes={"logs": [victim.path]},
+                removes_rows={"logs": {victim.path: victim.rows}},
+                proj_updates={"logs": update},
+                checkpoint=checkpoint,
+            )
+            out[key] = round(time.perf_counter() - t0, 5)
+        finally:
+            shutil.rmtree(root, ignore_errors=True)
     return out
 
 
@@ -284,40 +225,21 @@ def main() -> None:
     out = {"metric": "manifest_prune_bench", "results": {}}
     for n in ns:
         out["results"][str(n)] = {
-            fmt: {
-                **_bench_format(fmt, n),
-                **_bench_append(fmt, n),
-                **_bench_projected_takedown(fmt, n),
-            }
-            for fmt in ("json", "parquet")
+            **_bench_read(n),
+            **_bench_append(n),
+            **_bench_projected_takedown(n),
         }
-    # flatness check: parquet prune time from smallest to largest N
-    first, last = str(ns[0]), str(ns[-1])
-    pq_growth = (
-        out["results"][last]["parquet"]["read_prune_s"]
-        / max(out["results"][first]["parquet"]["read_prune_s"], 1e-9)
-    )
-    json_growth = (
-        out["results"][last]["json"]["read_prune_s"]
-        / max(out["results"][first]["json"]["read_prune_s"], 1e-9)
-    )
+    # flatness checks from smallest to largest N: bounded prune and the
+    # delta append (the VERDICT r8 item-2 "near-flat COMMIT cost"
+    # check) against the O(total) full-checkpoint append they replace
+    first, last = out["results"][str(ns[0])], out["results"][str(ns[-1])]
     out["n_growth"] = round(ns[-1] / ns[0], 1)
-    out["parquet_prune_growth"] = round(pq_growth, 2)
-    out["json_prune_growth"] = round(json_growth, 2)
-    # commit-cost flatness: delta-append growth across the N sweep per
-    # format (the VERDICT r8 item-2 "near-flat COMMIT cost" check —
-    # append_full_s is the O(total) cost it replaces)
-    for fmt in ("json", "parquet"):
-        out[f"{fmt}_delta_append_growth"] = round(
-            out["results"][last][fmt]["append_delta_s"]
-            / max(out["results"][first][fmt]["append_delta_s"], 1e-9),
-            2,
-        )
-        out[f"{fmt}_full_append_growth"] = round(
-            out["results"][last][fmt]["append_full_s"]
-            / max(out["results"][first][fmt]["append_full_s"], 1e-9),
-            2,
-        )
+    for key, metric in (
+        ("prune_growth", "read_prune_s"),
+        ("delta_append_growth", "append_delta_s"),
+        ("full_append_growth", "append_full_s"),
+    ):
+        out[key] = round(last[metric] / max(first[metric], 1e-9), 2)
     print(json.dumps(out))
 
 
