@@ -74,7 +74,7 @@ from pathlib import Path
 sys.path.insert(0, str(Path(__file__).resolve().parent))
 
 from rust_evm_indexer_spark.catalog import CATALOG, clear_session_caches  # noqa: E402
-from rust_evm_indexer_spark.session import get_spark  # noqa: E402
+from rust_evm_indexer_spark.session import default_cpus, get_spark  # noqa: E402
 
 _TPCH_KEY = re.compile(r"^(q\d+)_")
 
@@ -117,7 +117,7 @@ def _write_sidecar(result: dict, timings: dict[str, float], regime: str) -> None
     }[regime]
     (Path(__file__).resolve().parent / sidecar).write_text(
         json.dumps(
-            {**result, "queries": timings, "cpus": os.cpu_count()}, indent=1
+            {**result, "queries": timings, "cpus": default_cpus()}, indent=1
         )
     )
 

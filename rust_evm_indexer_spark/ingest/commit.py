@@ -7,9 +7,9 @@ The batch re-expression of the reference's ingestion loop
 - O-1/O-2  head discovery + bounded range scan (``BLOCKS_PER_BATCH``);
 - O-3      per-tx receipt enrichment, concurrency-bounded fan-out
            (ThreadPool(10) ≙ ``buffer_unordered(10)``) — connector I/O,
-           like the reference's; :func:`fetch_block` is the one fetch,
-           which backfill runs partition-parallel on executors (the tip
-           cycle attaches receipts after its reorg check);
+           like the reference's; :func:`attach_receipts` is the one
+           enrichment, per batch after the tip cycle's reorg check and
+           per task in backfill's executor kernel;
 - O-4      retry with exponential backoff (3 attempts, base 2s defaults);
 - O-5/O-6  normalize + explode (``normalize.explode_batch``: Arrow
            tables on the driver, no Spark job);
@@ -34,6 +34,7 @@ import sys
 import time
 from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass
+from functools import partial
 
 import pyarrow.dataset as pa_ds
 from pyspark.sql import SparkSession
@@ -65,34 +66,21 @@ def with_retry(fn, *args, backoff: float):
     raise last_exc
 
 
-def attach_receipts(client, raw: dict, *, backoff: float) -> dict:
-    """O-3: ``raw`` with every transaction's receipt attached; receipts
-    fan out over a bounded pool (``buffer_unordered(10)``,
-    ``src/main.rs:204-227``).  A missing receipt leaves status/logs NULL
-    (LEFT OUTER)."""
-    txs = raw.get("transactions") or []
+def attach_receipts(client, blocks: list[dict], *, backoff: float) -> list[dict]:
+    """O-3: ``blocks`` with every transaction's receipt attached; the
+    receipts of all of them fan out over one bounded pool
+    (``buffer_unordered(10)``, ``src/main.rs:204-227``).  A missing
+    receipt leaves status/logs NULL (LEFT OUTER)."""
+    fetch = partial(with_retry, client.get_transaction_receipt, backoff=backoff)
+    hashes = [t["hash"] for b in blocks for t in b.get("transactions") or []]
     with ThreadPoolExecutor(max_workers=MAX_RECEIPT_CONCURRENT) as pool:
-        receipts = list(
-            pool.map(
-                lambda t: with_retry(
-                    client.get_transaction_receipt, t["hash"], backoff=backoff
-                ),
-                txs,
-            )
-        )
-    return {
-        **raw,
-        "transactions": [{**t, "receipt": r} for t, r in zip(txs, receipts)],
-    }
-
-
-def fetch_block(client, number: int, *, backoff: float) -> dict | None:
-    """One block with every transaction's receipt attached, or None when
-    the node does not serve that height.  The backfill kernel calls it on
-    executors; the tip cycle runs the same two steps on the driver, with
-    its reorg check between them."""
-    raw = with_retry(client.get_block_with_txs, number, backoff=backoff)
-    return None if raw is None else attach_receipts(client, raw, backoff=backoff)
+        receipts = iter(list(pool.map(fetch, hashes)))
+    return [
+        {**b, "transactions": [
+            {**t, "receipt": next(receipts)} for t in b.get("transactions") or []
+        ]}
+        for b in blocks
+    ]
 
 
 @dataclass
@@ -192,9 +180,7 @@ class EvmIngester:
             return CycleResult("reorg", rollback_from=last)
 
         # O-3: receipts only for blocks this cycle commits
-        batch = [
-            attach_receipts(self.client, b, backoff=self.backoff_base) for b in batch
-        ]
+        batch = attach_receipts(self.client, batch, backoff=self.backoff_base)
         to_block = batch[-1]["number"]
 
         # O-5/O-6 normalize (+ the rollup partials)

@@ -31,6 +31,12 @@ _BASE_CONF = {
 }
 
 
+def default_cpus() -> int:
+    """The session's core count: ``$SPARK_GRAFT_CPUS`` (driver contract)
+    else all cores."""
+    return int(os.environ.get("SPARK_GRAFT_CPUS", "0")) or os.cpu_count() or 4
+
+
 def get_spark(
     app_name: str = "rust_evm_indexer_spark",
     *,
@@ -40,12 +46,12 @@ def get_spark(
 ) -> SparkSession:
     """Build (or fetch) the process-wide SparkSession.
 
-    ``cpus`` defaults to ``$SPARK_GRAFT_CPUS`` (driver contract) else all
-    cores.  ``shuffle_partitions`` defaults to the core count: at local
-    scale 200 partitions would just add scheduling overhead; on a real
-    cluster callers pass an explicit value sized to the data.
+    ``cpus`` defaults to :func:`default_cpus`.  ``shuffle_partitions``
+    defaults to the core count: at local scale 200 partitions would just
+    add scheduling overhead; on a real cluster callers pass an explicit
+    value sized to the data.
     """
-    cpus = cpus or int(os.environ.get("SPARK_GRAFT_CPUS", "0")) or os.cpu_count() or 4
+    cpus = cpus or default_cpus()
     shuffle = shuffle_partitions or cpus
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")

@@ -1,12 +1,16 @@
 """Executor-parallel backfill: equivalence with the streaming ingest path,
-idempotent re-run, per-call row counts, and failure cleanup."""
+idempotent re-run, per-call row counts, failure cleanup, and the shape of
+its one Spark job."""
 
 from __future__ import annotations
+
+import math
 
 import pytest
 
 from rust_evm_indexer_spark import datagen
 from rust_evm_indexer_spark.ingest import EvmIngester
+from rust_evm_indexer_spark.ingest import backfill as backfill_mod
 from rust_evm_indexer_spark.ingest.backfill import TABLES, backfill
 from rust_evm_indexer_spark.sources.rpc import MockRpcClient
 from rust_evm_indexer_spark.store import TableStore
@@ -16,6 +20,21 @@ START = datagen.START_BLOCK
 
 def _staged_dirs(store) -> list[str]:
     return [p.name for p in (store.root / "data").glob("*/.backfill-*")]
+
+
+def _traced_backfill(spark, group: str, *args, **kwargs):
+    """``backfill(*args)`` under job group ``group``: its result and, per
+    Spark job it ran, the task count of each stage (read back through
+    the status tracker)."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, "backfill")
+    try:
+        out = backfill(spark, *args, **kwargs)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    tracker = sc.statusTracker()
+    jobs = [tracker.getJobInfo(j) for j in sorted(tracker.getJobIdsForGroup(group))]
+    return out, [[tracker.getStageInfo(s).numTasks for s in j.stageIds] for j in jobs]
 
 
 def test_backfill_matches_streaming_ingest(spark, tmp_path):
@@ -36,7 +55,6 @@ def test_backfill_matches_streaming_ingest(spark, tmp_path):
         b_store,
         START,
         START + 24,
-        fetch_partitions=6,
         backoff=0.01,
     )
     assert counts["blocks"] == 25
@@ -106,20 +124,41 @@ def test_backfill_never_checkpoints_past_an_unserved_height(spark, tmp_path):
 
 
 def test_backfill_fetch_is_distributed(spark, tmp_path):
-    """The fetch fans out over the requested partitions (no driver
-    loop): each partition's kernel writes its own part file, and the
-    committed fragment holds exactly those parts."""
-    chain = datagen.generate_chain(n_blocks=12, seed=79)
+    """A 60-block chunk fans out as one Spark job of one stage with one
+    task per core (no driver loop, and no second wave: every Python task
+    costs a fixed start-up); each task's kernel writes its own part
+    file, and the committed fragment holds exactly those parts."""
+    chain = datagen.generate_chain(n_blocks=60, seed=79)
     store = TableStore(spark, tmp_path / "fan")
-    counts = backfill(
-        spark, MockRpcClient(chain), store, START, START + 11,
-        fetch_partitions=5, backoff=0.01,
+    counts, jobs = _traced_backfill(
+        spark, "bf-fan", MockRpcClient(chain), store, START, START + 59, backoff=0.01
     )
-    assert counts["blocks"] == 12
+    assert counts["blocks"] == 60
+    [[tasks]] = jobs  # one job, one stage
+    assert tasks == min(60, spark.sparkContext.defaultParallelism) > 1
     (frag,) = store.current_manifest().tables["blocks"]
-    assert frag.rows == 12
-    assert len(list((store.root / frag.path).glob("part-*.parquet"))) == 5
+    assert frag.rows == 60
+    assert len(list((store.root / frag.path).glob("part-*.parquet"))) == tasks
     assert _staged_dirs(store) == []
+
+
+def test_backfill_bounds_blocks_per_task(spark, tmp_path, monkeypatch):
+    """Past ``parallelism x MAX_BLOCKS_PER_TASK`` heights the range splits
+    into ceil(n / MAX_BLOCKS_PER_TASK) tasks, so no task holds more raw
+    blocks than the cap; each task still writes one part per table."""
+    monkeypatch.setattr(backfill_mod, "MAX_BLOCKS_PER_TASK", 2)
+    parallelism = spark.sparkContext.defaultParallelism
+    n = 2 * parallelism + 3
+    chain = datagen.generate_chain(n_blocks=n, seed=84)
+    store = TableStore(spark, tmp_path / "cap")
+    counts, jobs = _traced_backfill(
+        spark, "bf-cap", MockRpcClient(chain), store, START, START + n - 1,
+        backoff=0.01,
+    )
+    assert counts["blocks"] == n
+    assert jobs == [[math.ceil(n / 2)]]
+    (frag,) = store.current_manifest().tables["blocks"]
+    assert len(list((store.root / frag.path).glob("part-*.parquet"))) == math.ceil(n / 2)
 
 
 def test_failing_kernel_commits_nothing(spark, tmp_path):
@@ -131,18 +170,17 @@ def test_failing_kernel_commits_nothing(spark, tmp_path):
     down = MockRpcClient(chain)
     down.inject_failures(10**6)  # every executor copy keeps failing
     with pytest.raises(Exception, match="injected transient failure"):
-        backfill(spark, down, store, START, START + 11, fetch_partitions=3, backoff=0.01)
+        backfill(spark, down, store, START, START + 11, backoff=0.01)
     assert store.current_version() == 0
     assert store.read_status() is None
     assert _staged_dirs(store) == []
-    counts = backfill(
-        spark, MockRpcClient(chain), store, START, START + 11,
-        fetch_partitions=3, backoff=0.01,
+    counts, [[tasks]] = _traced_backfill(
+        spark, "bf-fail", MockRpcClient(chain), store, START, START + 11, backoff=0.01
     )
     assert counts["blocks"] == 12
     m = store.current_manifest()
     for table in TABLES:
         (frag,) = m.tables[table]
         assert frag.rows == counts[table]
-        assert 1 <= len(list((store.root / frag.path).glob("part-*.parquet"))) <= 3
+        assert 1 <= len(list((store.root / frag.path).glob("part-*.parquet"))) <= tasks
     assert m.status["last_processed_block"] == START + 11

@@ -86,7 +86,7 @@ def test_ingest_over_http_equals_mock(spark, tmp_path, chain):
 
 def test_backfill_over_http(spark, tmp_path, chain):
     """The pickled client fetches from EXECUTORS over HTTP inside the
-    mapInPandas kernel (the 100 TB backfill path)."""
+    mapInArrow kernel (the 100 TB backfill path)."""
     with JsonRpcChainServer(MockRpcClient(chain)) as srv:
         store = TableStore(spark, tmp_path / "bf_http")
         counts = backfill(
@@ -95,7 +95,6 @@ def test_backfill_over_http(spark, tmp_path, chain):
             store,
             datagen.START_BLOCK,
             datagen.START_BLOCK + 11,
-            fetch_partitions=4,
             backoff=0.01,
         )
     assert counts["blocks"] == 12

@@ -200,6 +200,54 @@ def test_commit_hot_path_never_hydrates(spark, tmp_path, mk, monkeypatch):
     assert m2.__dict__.get("_hydrated") is None
 
 
+def test_fraglist_sidecar_is_decoded_once_per_store(spark, tmp_path, mk, monkeypatch):
+    """A checkpoint's fraglist sidecar is read once per store: later
+    resolutions, from many threads at once, filter the decoded list and
+    agree with a fresh store's answers; the next checkpoint's sidecar
+    (a new name) is read once more."""
+    import sys
+    import threading
+
+    _interval(monkeypatch, 0)  # every version a checkpoint
+    store = mk(tmp_path / "s")
+    _commit_n(spark, store, 3)
+
+    def answers(s):
+        bounded = s.fragments_for("pts", min_block=101, max_block=102)
+        return s.table_rows("pts"), sorted(f.path for f in bounded)
+
+    want = answers(mk(tmp_path / "s"))
+    assert want[0] == 30 and len(want[1]) == 2
+    opened: list[str] = []
+    read = store._mio.parquet_dataset
+    monkeypatch.setattr(
+        store._mio, "parquet_dataset", lambda name: opened.append(name) or read(name)
+    )
+    assert answers(store) == want
+    assert len(opened) == 1
+    got: list = []
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        threads = [
+            threading.Thread(target=lambda: got.extend(answers(store) for _ in range(5)))
+            for _ in range(8)
+        ]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=60)
+            assert not t.is_alive()
+    finally:
+        sys.setswitchinterval(old)
+    assert got == [want] * 40
+    assert len(opened) == 1
+    _commit_n(spark, store, 1, start=3)
+    assert store.table_rows("pts") == 40
+    assert len(opened) == 2 and opened[0] != opened[1]
+    assert mk(tmp_path / "s").table_rows("pts") == 40
+
+
 def test_block_pruning_spans_checkpoint_and_tail(spark, tmp_path, mk, monkeypatch):
     _interval(monkeypatch, 3)
     store = mk(tmp_path / "s")

@@ -8,7 +8,7 @@ import pytest
 from pyspark.sql.pandas.types import to_arrow_schema
 
 from rust_evm_indexer_spark import datagen
-from rust_evm_indexer_spark.ingest.commit import fetch_block
+from rust_evm_indexer_spark.ingest.commit import attach_receipts
 from rust_evm_indexer_spark.ingest.normalize import explode_batch, pack_log_id
 from rust_evm_indexer_spark.schemas import EVM_SCHEMAS
 from rust_evm_indexer_spark.sources.rpc import MockRpcClient
@@ -34,7 +34,9 @@ def test_normalize_matches_generated_chain():
     declared schema of every table."""
     chain = datagen.generate_chain(n_blocks=40, seed=5)
     client = MockRpcClient(chain)
-    raw = [fetch_block(client, START + i, backoff=0.01) for i in range(40)]
+    raw = attach_receipts(
+        client, [client.get_block_with_txs(START + i) for i in range(40)], backoff=0.01
+    )
     out = explode_batch(raw)
 
     assert set(out) == set(TABLES)

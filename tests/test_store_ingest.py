@@ -7,7 +7,7 @@ import pytest
 
 from rust_evm_indexer_spark import datagen
 from rust_evm_indexer_spark.ingest import EvmIngester, explode_batch
-from rust_evm_indexer_spark.ingest.commit import fetch_block
+from rust_evm_indexer_spark.ingest.commit import attach_receipts
 from rust_evm_indexer_spark.sources.rpc import MockRpcClient, TransientRpcError
 from rust_evm_indexer_spark.store import TableStore
 
@@ -77,7 +77,9 @@ def test_commit_idempotent_crash_replay(spark, tmp_path):
     ing, client, store = make_ingester(spark, tmp_path, n_blocks=6)
     ing.run_until_caught_up()
     n0 = store.read("transactions").count()
-    raw = [fetch_block(client, START + i, backoff=0.01) for i in range(3)]
+    raw = attach_receipts(
+        client, [client.get_block_with_txs(START + i) for i in range(3)], backoff=0.01
+    )
     tables = explode_batch(raw)
     committed = store.commit(
         tables,
