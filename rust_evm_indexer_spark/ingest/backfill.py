@@ -17,9 +17,11 @@ commit:
       → store.commit({table: [parts]})   # one manifest swap
 
 One Spark job per chunk, its task count sized to the range and the
-cluster: a Python task costs about 0.2-0.3 s of PySpark start-up
-(SCALE.md, "cost of one Python task"), so more tasks than cores only
-bound what one task holds.  The kernel fetches through the tip cycle's
+cluster: one wave over every core, and more tasks only to bound what one
+task holds.  The kernel is a :func:`util.python_task`, so a reused
+worker starts its next task without re-reading PySpark's zip archives
+(about 0.2 s a task otherwise; SCALE.md, "Cost of one Python task").
+The kernel fetches through the tip cycle's
 :func:`commit.with_retry` (O-4) and :func:`commit.attach_receipts` (O-3)
 and normalizes with the same :func:`normalize.explode_batch`, so both
 paths write the same rows.  Only the parts that successful task attempts
@@ -42,6 +44,7 @@ from pyspark.sql import SparkSession
 from ..store import TableStore
 from ..store.data_io import make_staging_rel
 from ..store.table_store import write_arrow_part
+from ..util import ensure_package_shipped, python_task
 from .commit import MAX_RECEIPT_CONCURRENT, attach_receipts, with_retry
 from .normalize import explode_batch as explode_raw  # the kernel's normalize step
 from .rollup import ROLLUP_TABLE
@@ -56,6 +59,7 @@ _REPORT_DDL = "table string, part string, rows long"
 MAX_BLOCKS_PER_TASK = 256
 
 
+@python_task
 def _kernel(batches, *, client, backoff: float, root: str, staging: dict[str, str]):
     """One task: fetch its heights, normalize them in one batch and
     write one part file per non-empty table; report each part (module
@@ -90,8 +94,6 @@ def backfill(
     rows this call committed per table (all 0 for a replay).
     Idempotent: txn watermark = end_block.  Raises, committing nothing,
     when the node does not serve every height of the range."""
-    from ..util import ensure_package_shipped
-
     ensure_package_shipped(spark)
     staging = {t: make_staging_rel(t, "backfill") for t in TABLES}
     kernel = partial(

@@ -38,6 +38,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..util import ensure_package_shipped, python_task
 from .dedup import normalize_text
 
 
@@ -182,8 +183,6 @@ def vocab_token_counts(
     of a trained tokenizer: token counting then reduces to a corpus-side
     JVM join + sum against this table (see the ``bpe_token_counts``
     catalog entry, which the DuckDB oracle replays over the export)."""
-    from ..util import ensure_package_shipped
-
     # the UDF closes over module-level _encode_word — pickled by module
     # REFERENCE, so workers outside the repo cwd need the package zip
     # (only bites when the export cache is cold; the drive script runs
@@ -192,6 +191,7 @@ def vocab_token_counts(
     ranks = {pair: i for i, pair in enumerate(merges)}
 
     @F.pandas_udf("int")
+    @python_task
     def enc_len(words: pd.Series) -> pd.Series:
         return words.map(lambda w: len(_encode_word(w, ranks)))
 
@@ -213,12 +213,11 @@ def encode_corpus(
     The Python encode runs over the DISTINCT words only (Arrow-batched
     pandas UDF, cost ∝ vocab); the corpus-sized side is a JVM explode +
     broadcast join + collect_list — no per-corpus-row Python."""
-    from ..util import ensure_package_shipped
-
     ensure_package_shipped(docs.sparkSession)  # _encode_word by module ref
     ranks = {pair: i for i, pair in enumerate(merges)}
 
     @F.pandas_udf("array<string>")
+    @python_task
     def enc(words: pd.Series) -> pd.Series:
         return words.map(lambda w: _encode_word(w, ranks))
 

@@ -24,6 +24,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..util import ensure_package_shipped, python_task
+
 #: schema of a multimodal asset table: payload + typed metadata struct
 ASSET_SCHEMA = (
     "asset_id long, payload binary, media_type string, "
@@ -93,10 +95,9 @@ def extract_features(
     real media pipeline uses on Spark.
     """
 
-    from ..util import ensure_package_shipped
-
     ensure_package_shipped(assets.sparkSession)
 
+    @python_task
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             if batch_note is not None:  # test hook: observe batch shapes
@@ -196,11 +197,10 @@ def resize_images(
     struct updated, Arrow batch shape, content-hash verification — is
     production-real either way.
     """
-    from ..util import ensure_package_shipped
-
     ensure_package_shipped(assets.sparkSession)
     has_meta = "meta" in assets.columns
 
+    @python_task
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         import hashlib
 
@@ -255,10 +255,9 @@ def sample_frames(
     slices ``frame_bytes`` windows — again: fake pixels, real schema,
     real row-explosion, real timestamps.
     """
-    from ..util import ensure_package_shipped
-
     ensure_package_shipped(assets.sparkSession)
 
+    @python_task
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             ids, idxs, tss, frames = [], [], [], []

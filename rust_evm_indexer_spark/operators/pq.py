@@ -37,6 +37,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..sources.batch import read_parquet_memo
+from ..util import ensure_package_shipped, python_task
 
 DEFAULT_M = 8
 DEFAULT_K = 16
@@ -187,8 +188,6 @@ def pq_encode(
     codebooks.  Only the argmax consumes the rotated values, so the
     encode side needs no cross-engine float-order care (the exported
     CODES are what both engines read)."""
-    from ..util import ensure_package_shipped
-
     ensure_package_shipped(embeddings.sparkSession)  # cold-cache safety
     import numpy as np
 
@@ -200,6 +199,7 @@ def pq_encode(
           else np.asarray(rotation, dtype=np.float64).T)
 
     @F.pandas_udf("array<int>")
+    @python_task
     def enc(vecs: pd.Series) -> pd.Series:
         X = np.asarray(vecs.tolist(), dtype=np.float64)  # (n, dim)
         if Rt is not None:

@@ -31,7 +31,7 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..util import persist_shared
+from ..util import persist_shared, python_task
 
 
 def _dot(a: Column, b: Column) -> Column:
@@ -688,6 +688,7 @@ def hyperplane_lsh_pairs(
     # once — this is the documented good use of a Pandas UDF: dense
     # linear algebra the built-ins can't express compactly.
     @F.pandas_udf("long")
+    @python_task
     def _sig(v: pd.Series) -> pd.Series:
         import numpy as np
 

@@ -23,6 +23,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql import types as T
 
+from ..util import python_task
+
 OUTPUT_SCHEMA = T.StructType(
     [
         T.StructField("user_id", T.LongType()),
@@ -39,6 +41,7 @@ STATE_SCHEMA = T.StructType(
 )
 
 
+@python_task
 def _update(key, pdfs: Iterator[pd.DataFrame], state: GroupState):
     n, cents = state.get if state.exists else (0, 0)
     for pdf in pdfs:

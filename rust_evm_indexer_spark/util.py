@@ -2,8 +2,12 @@
 
 from __future__ import annotations
 
+import functools
+import inspect
+import sys
 import tempfile
 import zipfile
+import zipimport
 from collections.abc import Callable
 from pathlib import Path
 
@@ -152,6 +156,59 @@ def spread_small_input(
     if not small:
         return df
     return df.repartition(target, key) if key else df.repartition(target)
+
+
+def python_task(fn: Callable) -> Callable:
+    """Wrap a function that runs on a Python worker (a ``mapInArrow`` /
+    ``mapInPandas`` / ``applyInPandasWithState`` kernel or a
+    ``pandas_udf`` body) so that when it returns, or a generator kernel
+    is exhausted, the worker forgets its cached zipimporters.
+
+    Why: every task PySpark starts on a reused worker calls
+    ``importlib.invalidate_caches()`` (``worker_util.setup_spark_files``),
+    and on CPython 3.11 each zipimporter in ``sys.path_importer_cache``
+    then re-reads its archive's central directory: ~10 ms for each of
+    the dozen ``pyspark.zip`` sub-package importers and 25-45 ms for
+    each of the two spark-core jar importers, ~0.2 s per task in all
+    (SCALE.md, "Cost of one Python task").  Dropping the entries leaves nothing to re-read.
+    Modules already imported keep their loaders, and a later import
+    rebuilds the importer it needs from zipimport's module-level
+    directory cache without reading the archive.  The kernel's own
+    thread pools must be joined before it returns.
+
+    The wrapper carries ``fn``'s signature and type hints, so pandas UDF
+    eval-type inference sees ``fn`` itself, and it references nothing of
+    this package: a kernel pickled by value still runs on a worker that
+    cannot import the package."""
+
+    def drop_zipimporters() -> None:
+        cache = sys.path_importer_cache
+        for path, finder in list(cache.items()):
+            if isinstance(finder, zipimport.zipimporter):
+                cache.pop(path, None)
+
+    if inspect.isgeneratorfunction(fn):
+
+        @functools.wraps(fn)
+        def task(*args, **kwargs):
+            try:
+                yield from fn(*args, **kwargs)
+            finally:
+                drop_zipimporters()
+
+    else:
+
+        @functools.wraps(fn)
+        def task(*args, **kwargs):
+            try:
+                return fn(*args, **kwargs)
+            finally:
+                drop_zipimporters()
+
+    # getfullargspec (pandas UDF validation, the worker's arity checks)
+    # does not follow __wrapped__, but honours __signature__
+    task.__signature__ = inspect.signature(fn)
+    return task
 
 
 def ensure_package_shipped(spark: SparkSession) -> None:
