@@ -128,7 +128,10 @@ def main() -> None:
     # — rotation and codebooks are frozen with the quantizer; every
     # later append encodes under the same (R, codebooks)
     rot = PQ.opq_train_rotation(seed_emb, m=4)
-    cb = PQ.ivfpq_train_residual(idx, m=4, k=8, iters=4, rotation=rot)
+    cb = PQ.pq_train(
+        PQ.residual_frame(idx, idx.vectors()),
+        m=4, k=8, iters=4, rotation=rot,
+    )
     PQ.ivfpq_write_codes(idx, cb, root / "codes", by_residual=True,
                          rotation=rot)
     later = store.changes("corpus", since_version=1)
@@ -160,7 +163,7 @@ def main() -> None:
     n_codes = spark.read.parquet(str(root / "codes")).count()
     probe_vec = [float(x) for x in seed_emb.first()["embedding"]]
     hit = PQ.ivfpq_search(
-        spark, idx, root / "codes", cb, probe_vec, topk=1, n_probe=2,
+        idx, root / "codes", cb, probe_vec, topk=1, n_probe=2,
         by_residual=True, rotation=rot,
     ).first()
     print(f"IVFPQ index: seeded round-0, appended {n_appended} delta "

@@ -3000,12 +3000,9 @@ def _export_ivf_oracle(spark, idx, flavor: str, sf_dir: str) -> None:
     key = f"{idx.index_dir}|{_IVF_BUILD_PARAMS[flavor]}|{_IVF_EXPORT_VERSION}"
     if marker.exists() and marker.read_text() == key:
         return
-    cent_rows = [
-        (int(c), [float(x) for x in v]) for c, v in sorted(idx.centroids.items())
-    ]
-    spark.createDataFrame(
-        cent_rows, "cell int, centroid array<double>"
-    ).coalesce(1).write.mode("overwrite").parquet(str(out / "centroids"))
+    idx.centroid_frame().coalesce(1).write.mode("overwrite").parquet(
+        str(out / "centroids")
+    )
     marker.write_text(key)
 
 
@@ -3195,46 +3192,78 @@ _PQ_SQL = f"""
 """
 
 
-def _ensure_pq_export(spark, sf_dir) -> tuple[list, Path]:
-    """Train-or-load the PQ codebooks for ``sf_dir`` and export
-    codebooks + codes + codes_long, keyed by corpus identity AND the
-    training params so a regeneration or parameter change can never
-    leave Spark and DuckDB reading diverged exports.  Returns
-    (codebooks, export_dir)."""
+def _pq_key(sf_dir, enc: str, ivf=None) -> str:
+    """Freshness key of a PQ export: corpus identity (+ the IVF
+    quantizer dir) AND the training params, so a regeneration or
+    parameter change can never leave Spark and DuckDB reading diverged
+    exports."""
     from .operators import pq as PQ
 
-    emb = _t(spark, sf_dir, "embeddings")
-    out = Path(f"{FIXTURE_CACHE}/pq_{Path(sf_dir).name}")
     src = Path(sf_dir) / "embeddings.parquet"
     st = src.stat()
-    src_key = (
+    return (
         f"{src}:{st.st_size}:{st.st_mtime_ns}"
-        f"|m={_PQ_M},k={_PQ_K},iters={_PQ_ITERS},"
-        f"sample={PQ.TRAIN_SAMPLE_CAP},enc=v1"
+        + (f"|ivf={ivf}" if ivf is not None else "")
+        + f"|m={_PQ_M},k={_PQ_K},iters={_PQ_ITERS},"
+        f"sample={PQ.TRAIN_SAMPLE_CAP},enc={enc}"
     )
-    marker = out / "_EXPORTED_FROM"
-    if not (marker.exists() and marker.read_text() == src_key):
-        cb = PQ.pq_train(emb, m=_PQ_M, k=_PQ_K, iters=_PQ_ITERS)
-        rows = [
+
+
+def _export_once(marker: Path, key: str, build) -> None:
+    """Run ``build()`` unless ``marker`` already holds ``key``."""
+    if not (marker.exists() and marker.read_text() == key):
+        build()
+        marker.write_text(key)
+
+
+def _write_codebooks(spark, cb: list, path: Path) -> None:
+    """Codebooks as (s, j, cent) rows — the layout every PQ oracle
+    joins codes against."""
+    spark.createDataFrame(
+        [
             (s, j, [float(x) for x in cent])
             for s, book in enumerate(cb)
             for j, cent in enumerate(book)
-        ]
-        spark.createDataFrame(
-            rows, "s: int, j: int, cent: array<double>"
-        ).coalesce(1).write.mode("overwrite").parquet(str(out / "codebooks"))
-        codes = PQ.pq_encode(emb, cb)
-        codes.write.mode("overwrite").parquet(str(out / "codes"))
-        codes.select(
-            "vec_id", F.posexplode("codes").alias("s", "code")
-        ).write.mode("overwrite").parquet(str(out / "codes_long"))
-        marker.write_text(src_key)
-        return cb, out
-    cb_rows = _pa_rows(out / "codebooks")  # driver-side, zero Spark jobs
+        ],
+        "s: int, j: int, cent: array<double>",
+    ).coalesce(1).write.mode("overwrite").parquet(str(path))
+
+
+def _read_codebooks(path: Path) -> list:
+    """Driver-side inverse of :func:`_write_codebooks` — zero Spark jobs."""
     cb = [[None] * _PQ_K for _ in range(_PQ_M)]
-    for r in cb_rows:
+    for r in _pa_rows(path):
         cb[r["s"]][r["j"]] = list(r["cent"])
-    return cb, out
+    return cb
+
+
+def _write_codes_long(spark, codes_dir: Path, path: Path) -> None:
+    """An exported code table as (vec_id, s, code) rows — the layout the
+    oracles replay ADC from."""
+    spark.read.parquet(str(codes_dir)).select(
+        "vec_id", F.posexplode("codes").alias("s", "code")
+    ).write.mode("overwrite").parquet(str(path))
+
+
+def _ensure_pq_export(spark, sf_dir) -> tuple[list, Path]:
+    """Train-or-load the PQ codebooks for ``sf_dir`` and export
+    codebooks + codes + codes_long (freshness-keyed by :func:`_pq_key`).
+    Returns (codebooks, export_dir)."""
+    from .operators import pq as PQ
+
+    out = FIXTURE_CACHE / f"pq_{Path(sf_dir).name}"
+
+    def build():
+        emb = _t(spark, sf_dir, "embeddings")
+        cb = PQ.pq_train(emb, m=_PQ_M, k=_PQ_K, iters=_PQ_ITERS)
+        _write_codebooks(spark, cb, out / "codebooks")
+        PQ.pq_encode(emb, cb).write.mode("overwrite").parquet(
+            str(out / "codes")
+        )
+        _write_codes_long(spark, out / "codes", out / "codes_long")
+
+    _export_once(out / "_EXPORTED_FROM", _pq_key(sf_dir, "v1"), build)
+    return _read_codebooks(out / "codebooks"), out
 
 
 @register(
@@ -3251,7 +3280,6 @@ def similarity_pq_topk(spark, sf_dir):
     engine's own quantization end-to-end."""
     from .operators import pq as PQ
 
-    emb = _t(spark, sf_dir, "embeddings")
     cb, out = _ensure_pq_export(spark, sf_dir)
     stored_codes = read_parquet_memo(spark, out / "codes")
     qvec = _fixture_qvec(sf_dir)
@@ -3305,17 +3333,10 @@ def _ensure_opq_export(spark, sf_dir) -> tuple[list, list, Path]:
     (rotation, codebooks, export_dir)."""
     from .operators import pq as PQ
 
-    emb = _t(spark, sf_dir, "embeddings")
-    out = Path(f"{FIXTURE_CACHE}/opq_{Path(sf_dir).name}")
-    src = Path(sf_dir) / "embeddings.parquet"
-    st = src.stat()
-    src_key = (
-        f"{src}:{st.st_size}:{st.st_mtime_ns}"
-        f"|m={_PQ_M},k={_PQ_K},iters={_PQ_ITERS},"
-        f"sample={PQ.TRAIN_SAMPLE_CAP},enc=opq1"
-    )
-    marker = out / "_EXPORTED_FROM"
-    if not (marker.exists() and marker.read_text() == src_key):
+    out = FIXTURE_CACHE / f"opq_{Path(sf_dir).name}"
+
+    def build():
+        emb = _t(spark, sf_dir, "embeddings")
         rot = PQ.opq_train_rotation(emb, m=_PQ_M)
         cb = PQ.pq_train(emb, m=_PQ_M, k=_PQ_K, iters=_PQ_ITERS,
                          rotation=rot)
@@ -3323,30 +3344,18 @@ def _ensure_opq_export(spark, sf_dir) -> tuple[list, list, Path]:
             [(i, row) for i, row in enumerate(rot)],
             "i: int, vrow: array<double>",
         ).coalesce(1).write.mode("overwrite").parquet(str(out / "rotation"))
-        spark.createDataFrame(
-            [
-                (s, j, [float(x) for x in cent])
-                for s, book in enumerate(cb)
-                for j, cent in enumerate(book)
-            ],
-            "s: int, j: int, cent: array<double>",
-        ).coalesce(1).write.mode("overwrite").parquet(str(out / "codebooks"))
-        codes = PQ.pq_encode(emb, cb, rotation=rot)
-        codes.write.mode("overwrite").parquet(str(out / "codes"))
-        codes.select(
-            "vec_id", F.posexplode("codes").alias("s", "code")
-        ).write.mode("overwrite").parquet(str(out / "codes_long"))
-        marker.write_text(src_key)
-        return rot, cb, out
+        _write_codebooks(spark, cb, out / "codebooks")
+        PQ.pq_encode(emb, cb, rotation=rot).write.mode("overwrite").parquet(
+            str(out / "codes")
+        )
+        _write_codes_long(spark, out / "codes", out / "codes_long")
+
+    _export_once(out / "_EXPORTED_FROM", _pq_key(sf_dir, "opq1"), build)
     rot_rows = _pa_rows(out / "rotation")  # driver-side, zero Spark jobs
     rot = [None] * len(rot_rows)
     for r in rot_rows:
         rot[r["i"]] = list(r["vrow"])
-    cb_rows = _pa_rows(out / "codebooks")
-    cb = [[None] * _PQ_K for _ in range(_PQ_M)]
-    for r in cb_rows:
-        cb[r["s"]][r["j"]] = list(r["cent"])
-    return rot, cb, out
+    return rot, _read_codebooks(out / "codebooks"), out
 
 
 @register(
@@ -3366,7 +3375,6 @@ def similarity_opq_topk(spark, sf_dir):
     rotated ADC to the same 6dp."""
     from .operators import pq as PQ
 
-    emb = _t(spark, sf_dir, "embeddings")
     rot, cb, out = _ensure_opq_export(spark, sf_dir)
     stored_codes = read_parquet_memo(spark, out / "codes")
     qvec = _fixture_qvec(sf_dir)
@@ -3434,11 +3442,10 @@ def similarity_ivfpq_topk(spark, sf_dir):
     TakeOrderedAndProject (plan-asserted in tests/test_pq.py)."""
     from .operators import pq as PQ
 
-    emb = _t(spark, sf_dir, "embeddings")
     idx, cb, codes_dir = _ensure_ivfpq_codes(spark, sf_dir)
     qvec = _fixture_qvec(sf_dir)
     return PQ.ivfpq_search(
-        spark, idx, codes_dir, cb, qvec, topk=10, n_probe=2, exclude_ids=(0,)
+        idx, codes_dir, cb, qvec, topk=10, n_probe=2, exclude_ids=(0,)
     )
 
 
@@ -3452,54 +3459,47 @@ def _ensure_ivfpq_codes(spark, sf_dir):
     _export_ivf_oracle(spark, idx, "kmeans8", sf_dir)
     cb, out = _ensure_pq_export(spark, sf_dir)
     codes_dir = out / "codes_by_cell"
-    cmarker = out / "_CODES_BY_CELL_FROM"
-    ckey = f"{(out / '_EXPORTED_FROM').read_text()}|ivf={idx.index_dir}"
-    if not (cmarker.exists() and cmarker.read_text() == ckey):
-        PQ.ivfpq_write_codes(idx, cb, codes_dir)
-        cmarker.write_text(ckey)
+    _export_once(
+        out / "_CODES_BY_CELL_FROM",
+        f"{(out / '_EXPORTED_FROM').read_text()}|ivf={idx.index_dir}",
+        lambda: PQ.ivfpq_write_codes(idx, cb, codes_dir),
+    )
     return idx, cb, codes_dir
 
 
-def _ensure_ivfpq_res_export(spark, sf_dir):
-    """Residual-IVFADC exports: residual codebooks (trained against the
-    kmeans8 coarse quantizer) + the residual code table, keyed on corpus
-    identity, the quantizer dir, AND the training params (same
-    staleness contract as _ensure_pq_export).  Returns (index,
-    codebooks, codes_dir)."""
+def _ensure_residual_export(spark, idx, out: Path, key: str, rot=None):
+    """Residual-IVFADC exports of ``idx`` under ``out``: codebooks fit
+    on the residuals (under ``rot`` when given), the cell-partitioned
+    residual code table and its codes_long form.  Returns (codebooks,
+    codes_dir)."""
     from .operators import pq as PQ
 
+    codes_dir = out / "codes_by_cell_res"
+
+    def build():
+        cb = PQ.pq_train(
+            PQ.residual_frame(idx, idx.vectors()),
+            m=_PQ_M, k=_PQ_K, iters=_PQ_ITERS, rotation=rot,
+        )
+        _write_codebooks(spark, cb, out / "codebooks_res")
+        PQ.ivfpq_write_codes(idx, cb, codes_dir, by_residual=True,
+                             rotation=rot)
+        _write_codes_long(spark, codes_dir, out / "codes_long_res")
+
+    _export_once(out / "_EXPORTED_FROM", key, build)
+    return _read_codebooks(out / "codebooks_res"), codes_dir
+
+
+def _ensure_ivfpq_res_export(spark, sf_dir):
+    """Residual-IVFADC exports against the kmeans8 coarse quantizer,
+    keyed on corpus identity, the quantizer dir AND the training
+    params.  Returns (index, codebooks, codes_dir)."""
     idx = _ivf_index(spark, sf_dir, "kmeans8")
     _export_ivf_oracle(spark, idx, "kmeans8", sf_dir)
-    out = Path(f"{FIXTURE_CACHE}/pqres_{Path(sf_dir).name}")
-    src = Path(sf_dir) / "embeddings.parquet"
-    st = src.stat()
-    key = (
-        f"{src}:{st.st_size}:{st.st_mtime_ns}|ivf={idx.index_dir}"
-        f"|m={_PQ_M},k={_PQ_K},iters={_PQ_ITERS},"
-        f"sample={PQ.TRAIN_SAMPLE_CAP},enc=res-v1"
+    cb, codes_dir = _ensure_residual_export(
+        spark, idx, FIXTURE_CACHE / f"pqres_{Path(sf_dir).name}",
+        _pq_key(sf_dir, "res-v1", ivf=idx.index_dir),
     )
-    marker = out / "_EXPORTED_FROM"
-    codes_dir = out / "codes_by_cell_res"
-    if marker.exists() and marker.read_text() == key:
-        cb_rows = _pa_rows(out / "codebooks_res")  # driver-side, no job
-        cb = [[None] * _PQ_K for _ in range(_PQ_M)]
-        for r in cb_rows:
-            cb[r["s"]][r["j"]] = list(r["cent"])
-        return idx, cb, codes_dir
-    cb = PQ.ivfpq_train_residual(idx, m=_PQ_M, k=_PQ_K, iters=_PQ_ITERS)
-    spark.createDataFrame(
-        [
-            (s, j, [float(x) for x in centv])
-            for s, book in enumerate(cb)
-            for j, centv in enumerate(book)
-        ],
-        "s: int, j: int, cent: array<double>",
-    ).coalesce(1).write.mode("overwrite").parquet(str(out / "codebooks_res"))
-    PQ.ivfpq_write_codes(idx, cb, codes_dir, by_residual=True)
-    spark.read.parquet(str(codes_dir)).select(
-        "vec_id", F.posexplode("codes").alias("s", "code")
-    ).write.mode("overwrite").parquet(str(out / "codes_long_res"))
-    marker.write_text(key)
     return idx, cb, codes_dir
 
 
@@ -3586,40 +3586,15 @@ def _ensure_opq_res_export(spark, sf_dir):
     corpus covariance, not the regime), residual codebooks train under
     it against the kmeans8 quantizer, and codes are written rotated.
     Returns (index, rotation, codebooks, codes_dir)."""
-    from .operators import pq as PQ
-
     idx = _ivf_index(spark, sf_dir, "kmeans8")
     _export_ivf_oracle(spark, idx, "kmeans8", sf_dir)
     rot, _, opq_out = _ensure_opq_export(spark, sf_dir)
-    out = Path(f"{FIXTURE_CACHE}/opqres_{Path(sf_dir).name}")
-    key = (
+    cb, codes_dir = _ensure_residual_export(
+        spark, idx, FIXTURE_CACHE / f"opqres_{Path(sf_dir).name}",
         f"{(opq_out / '_EXPORTED_FROM').read_text()}"
-        f"|ivf={idx.index_dir}|enc=opqres1"
+        f"|ivf={idx.index_dir}|enc=opqres1",
+        rot,
     )
-    marker = out / "_EXPORTED_FROM"
-    codes_dir = out / "codes_by_cell_res"
-    if marker.exists() and marker.read_text() == key:
-        cb_rows = _pa_rows(out / "codebooks_res")  # driver-side, no job
-        cb = [[None] * _PQ_K for _ in range(_PQ_M)]
-        for r in cb_rows:
-            cb[r["s"]][r["j"]] = list(r["cent"])
-        return idx, rot, cb, codes_dir
-    cb = PQ.ivfpq_train_residual(
-        idx, m=_PQ_M, k=_PQ_K, iters=_PQ_ITERS, rotation=rot
-    )
-    spark.createDataFrame(
-        [
-            (s, j, [float(x) for x in centv])
-            for s, book in enumerate(cb)
-            for j, centv in enumerate(book)
-        ],
-        "s: int, j: int, cent: array<double>",
-    ).coalesce(1).write.mode("overwrite").parquet(str(out / "codebooks_res"))
-    PQ.ivfpq_write_codes(idx, cb, codes_dir, by_residual=True, rotation=rot)
-    spark.read.parquet(str(codes_dir)).select(
-        "vec_id", F.posexplode("codes").alias("s", "code")
-    ).write.mode("overwrite").parquet(str(out / "codes_long_res"))
-    marker.write_text(key)
     return idx, rot, cb, codes_dir
 
 
@@ -3643,11 +3618,10 @@ def similarity_opq_residual_topk(spark, sf_dir):
     the complete chain."""
     from .operators import pq as PQ
 
-    emb = _t(spark, sf_dir, "embeddings")
     idx, rot, cb, codes_dir = _ensure_opq_res_export(spark, sf_dir)
     qvec = _fixture_qvec(sf_dir)
     return PQ.ivfpq_search(
-        spark, idx, codes_dir, cb, qvec, topk=10, n_probe=2,
+        idx, codes_dir, cb, qvec, topk=10, n_probe=2,
         exclude_ids=(0,), by_residual=True, rotation=rot,
     )
 
@@ -3722,9 +3696,7 @@ def similarity_ivfpq_knn_join(spark, sf_dir):
     queries = emb.filter(F.col("vec_id") < 4).select(
         F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_vec")
     )
-    return PQ.ivfpq_knn_join(
-        spark, idx, codes_dir, cb, queries, k=5, n_probe=2
-    )
+    return PQ.ivfpq_knn_join(idx, codes_dir, cb, queries, k=5, n_probe=2)
 
 
 _IVFPQ_RES_KNN_SQL = f"""
@@ -3808,8 +3780,7 @@ def similarity_ivfpq_residual_knn_join(spark, sf_dir):
         F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_vec")
     )
     return PQ.ivfpq_knn_join(
-        spark, idx, codes_dir, cb, queries, k=5, n_probe=2,
-        by_residual=True,
+        idx, codes_dir, cb, queries, k=5, n_probe=2, by_residual=True,
     )
 
 
@@ -3909,7 +3880,7 @@ def similarity_opq_residual_knn_join(spark, sf_dir):
         F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_vec")
     )
     return PQ.ivfpq_knn_join(
-        spark, idx, codes_dir, cb, queries, k=5, n_probe=2,
+        idx, codes_dir, cb, queries, k=5, n_probe=2,
         by_residual=True, rotation=rot,
     )
 

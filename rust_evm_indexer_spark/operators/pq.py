@@ -31,9 +31,12 @@ cosine estimate needs only the two lookup tables.
 
 from __future__ import annotations
 
+import functools
+import math
+
 import pandas as pd
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..sources.batch import read_parquet_memo
@@ -130,23 +133,24 @@ def pq_train(
     *,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    sample_cap: int = TRAIN_SAMPLE_CAP,
     rotation: list[list[float]] | None = None,
 ) -> list[list[list[float]]]:
     """Fit per-subspace codebooks; returns ``codebooks[m][k][dim/m]``.
 
-    Deterministic end-to-end: the training sample is the ``sample_cap``
-    lowest-id rows, initialization is the first ``k`` sample subvectors,
-    and Lloyd updates are numpy float64 — identical codebooks every
-    run.  ``rotation`` (an OPQ matrix from :func:`opq_train_rotation`)
-    trains the codebooks in the ROTATED space — encode/search must then
-    be given the same matrix."""
+    Deterministic end-to-end: the training sample is the
+    ``TRAIN_SAMPLE_CAP`` lowest-id rows, initialization is the first
+    ``k`` sample subvectors, and Lloyd updates are numpy float64 —
+    identical codebooks every run.  ``rotation`` (an OPQ matrix from
+    :func:`opq_train_rotation`) trains the codebooks in the ROTATED
+    space — encode/search must then be given the same matrix.  Residual
+    IVFADC codebooks are this same fit over
+    ``residual_frame(index, index.vectors())``."""
     import numpy as np
 
     rows = (
         embeddings.select(id_col, vec_col)
         .orderBy(id_col)
-        .limit(sample_cap)
+        .limit(TRAIN_SAMPLE_CAP)
         .collect()
     )
     X = np.asarray([r[vec_col] for r in rows], dtype=np.float64)
@@ -192,7 +196,6 @@ def pq_encode(
     import numpy as np
 
     m = len(codebooks)
-    k = len(codebooks[0])
     d_sub = len(codebooks[0][0])
     C = np.asarray(codebooks, dtype=np.float64)  # (m, k, d_sub)
     Rt = (None if rotation is None
@@ -213,10 +216,50 @@ def pq_encode(
             out[:, s] = scores.argmax(axis=1)
         return pd.Series(list(out))
 
-    _ = k  # (k is implied by the codebook shape; kept for clarity)
     return embeddings.select(
         id_col, *keep, enc(F.col(vec_col)).alias("codes")
     )
+
+
+def _adc_dots(
+    codebooks: list[list[list[float]]], vec: list[float]
+) -> list[list[float]]:
+    """Driver-side ADC lookup table ``dot(vec_s, C_s[j])`` for every
+    subspace s and codeword j, each a left-to-right float64 sum (the
+    order DuckDB's ``list_inner_product`` replays).  ``vec`` is the
+    (rotated) query for the dot table, a (rotated) centroid for the
+    residual cross table."""
+    d_sub = len(codebooks[0][0])
+    return [
+        [
+            sum(q * c for q, c in zip(vec[s * d_sub : (s + 1) * d_sub], cent))
+            for cent in book
+        ]
+        for s, book in enumerate(codebooks)
+    ]
+
+
+def _adc_norms(codebooks: list[list[list[float]]]) -> list[list[float]]:
+    """Driver-side lookup table ``|C_s[j]|²``, left-to-right sums."""
+    return [[sum(c * c for c in cent) for cent in book] for book in codebooks]
+
+
+def _cross_table(
+    codebooks: list[list[list[float]]],
+    centroid: list[float],
+    rotation: list[list[float]] | None,
+) -> list[list[float]]:
+    """Residual cross table ``dot(c_s, C_s[j])`` of one cell — query-
+    independent.  The codes reconstruct R(x − c), so the slices come
+    from the ROTATED centroid (R orthogonal: dot(c, x − c) =
+    dot(Rc, R(x − c)))."""
+    return _adc_dots(
+        codebooks, rotate_vec(rotation, [float(x) for x in centroid])
+    )
+
+
+def _qnorm(vec: list[float]) -> float:
+    return math.sqrt(sum(x * x for x in vec)) or 1.0
 
 
 def _adc_sum_expr(tables: list[list[float]], codes_col: str = "codes") -> str:
@@ -229,6 +272,23 @@ def _adc_sum_expr(tables: list[list[float]], codes_col: str = "codes") -> str:
         + f"), element_at({codes_col}, {s + 1}) + 1)"
         for s in range(len(tables))
     )
+
+
+def _adc_sim(
+    dot: Column,
+    norm2: Column,
+    qnorm: Column,
+    residual: tuple[Column, Column, Column] | None = None,
+) -> Column:
+    """The ADC cosine estimate every search path scores with, rounded to
+    6dp: ``Σ dt / (|q| · sqrt(Σ nr))``.  ``residual = (qc, nc, cross)``
+    adds the per-cell corrections of the residual encoding:
+    ``(dot(q, c) + Σ dt) / (|q| · sqrt(|c|² + 2·Σ cs + Σ nr))``."""
+    if residual is not None:
+        qc, nc, cross = residual
+        dot = qc + dot
+        norm2 = nc + F.lit(2.0) * cross + norm2
+    return F.round(dot / (qnorm * F.sqrt(norm2)), 6)
 
 
 def pq_search(
@@ -251,37 +311,23 @@ def pq_search(
     estimates the SAME cosine) and the lookup tables are built from
     the rotated query against the rotated-space codebooks; nothing on
     the corpus side changes shape."""
-    import math
-
     query_vec = rotate_vec(rotation, query_vec)
-    m = len(codebooks)
-    dots: list[list[float]] = []
-    norms: list[list[float]] = []
-    d_sub = len(codebooks[0][0])
-    qnorm = math.sqrt(sum(x * x for x in query_vec)) or 1.0
-    for s in range(m):
-        qs = query_vec[s * d_sub : (s + 1) * d_sub]
-        dots.append(
-            [sum(q * c for q, c in zip(qs, cent)) for cent in codebooks[s]]
-        )
-        norms.append([sum(c * c for c in cent) for cent in codebooks[s]])
-
     # the m lookup tables × k literals each are built as ONE F.expr parse
     # instead of m·k py4j Column constructions (~0.3-0.5 s of plan build
     # per query at m=8,k=16; r12 optimization round).  repr() emits the
     # shortest round-trip decimal and the 'D' suffix makes it a double
     # literal, so the parsed values are bit-identical to F.lit(float).
-    sum_dot = F.expr(_adc_sum_expr(dots))
-    sum_norm = F.expr(_adc_sum_expr(norms))
+    sum_dot = F.expr(_adc_sum_expr(_adc_dots(codebooks, query_vec)))
+    sum_norm = F.expr(_adc_sum_expr(_adc_norms(codebooks)))
     out = codes
     if exclude_ids:
         out = out.where(~F.col(id_col).isin(*exclude_ids))
     return (
         out.select(
             id_col,
-            F.round(
-                sum_dot / (F.lit(qnorm) * F.sqrt(sum_norm)), 6
-            ).alias("sim_pq"),
+            _adc_sim(sum_dot, sum_norm, F.lit(_qnorm(query_vec))).alias(
+                "sim_pq"
+            ),
         )
         .orderBy(F.desc("sim_pq"), id_col)
         .limit(topk)
@@ -294,22 +340,25 @@ def pq_search(
 # row than raw vectors, but still O(corpus).  Composing with the
 # materialized IVF index (similarity.py::IvfIndex) restores the probe
 # economics: codes are stored PARTITIONED BY CELL, the coarse quantizer
-# picks n_probe cells driver-side (k×dim floats, no Spark job), and ADC
+# picks n_probe cells (IvfIndex.probe_cells / probe_join), and ADC
 # scores only the probe cells' residents — scan cost n_probe/n_cells of
 # the code table, which is itself 32× smaller than the corpus.
 #
-# Two encoding regimes, selected by ``by_residual`` (default False):
+# Both encoding regimes run one estimator, :func:`_adc_sim`; they
+# differ only in what is encoded and in the per-cell correction terms
+# (``by_residual``, default False):
 #
-# - **global-codebook** (FAISS IndexIVFPQ ``by_residual=False``): the
-#   same code means the same reconstruction everywhere, one codebook
-#   export serves both the flat and IVF path, and the ADC lookup
-#   tables stay query-only.
+# - **global-codebook** (FAISS IndexIVFPQ ``by_residual=False``): codes
+#   of x itself under :func:`pq_train` codebooks — the same code means
+#   the same reconstruction everywhere, one codebook export serves both
+#   the flat and IVF path, and the ADC lookup tables stay query-only.
 # - **residual** (``by_residual=True`` — FAISS's DEFAULT IVFADC
-#   configuration, Jégou §IV): each vector is encoded as PQ codes of
-#   its residual x − centroid(cell).  Residuals concentrate around the
-#   origin, so the same k codewords cover a much tighter distribution —
-#   measurably better recall at identical code size.  The price is
-#   per-probe-cell correction terms:
+#   configuration, Jégou §IV): codes of the residual x − centroid(cell)
+#   (:func:`residual_frame`), under codebooks that :func:`pq_train` fits
+#   on the same residuals.  Residuals concentrate around the origin, so
+#   the same k codewords cover a much tighter distribution — measurably
+#   better recall at identical code size.  The price is per-probe-cell
+#   correction terms:
 #       dot(q, x)  ≈ dot(q, cₚ) + Σₛ dot(qₛ, Cₛ[codeₛ])
 #       |x|²       ≈ |cₚ|² + 2·Σₛ dot(cₚ,ₛ, Cₛ[codeₛ]) + Σₛ |Cₛ[codeₛ]|²
 #   where cₚ is the cell centroid.  dot(q, cₚ)/|cₚ|² are per-(query,
@@ -317,83 +366,50 @@ def pq_search(
 #   query-INDEPENDENT — n_cells·m·k scalars, precomputable and bounded
 #   by index design — so the corpus-side scoring stays pure-JVM table
 #   lookups in both regimes.
+#
+# The global regime is NOT the residual formula with a zero centroid:
+# that would add a join and literal terms to its plans, and the flat
+# OPQ path normalizes by |Rq| where the residual path uses |q|.
 
 
-def ivfpq_train_residual(
-    index,
-    m: int = DEFAULT_M,
-    k: int = DEFAULT_K,
-    iters: int = 10,
-    *,
-    sample_cap: int = TRAIN_SAMPLE_CAP,
-    rotation: list[list[float]] | None = None,
-) -> list[list[list[float]]]:
-    """Fit per-subspace codebooks on RESIDUALS against the index's
-    coarse centroids (Jégou §IV) — same deterministic recipe as
-    :func:`pq_train` (lowest-id sample, first-k init, float64 Lloyd),
-    but each training vector is first reduced to x − centroid(cell).
-    Residuals cluster around the origin regardless of which coarse cell
-    the vector came from, so k codewords buy more precision than over
-    raw vectors.  ``rotation`` trains on R(x − centroid) — OPQ over the
-    residual space (search must get the same matrix)."""
-    import numpy as np
-
-    rows = (
-        index.vectors()
-        .select(index.id_col, index.vec_col, "cell")
-        .orderBy(index.id_col)
-        .limit(sample_cap)
-        .collect()
-    )
-    cents = {int(c): np.asarray(v, dtype=np.float64)
-             for c, v in index.centroids.items()}
-    X = np.asarray(
-        [np.asarray(r[index.vec_col], dtype=np.float64) - cents[int(r["cell"])]
-         for r in rows]
-    )
-    if rotation is not None:
-        X = np.asarray([rotate_vec(rotation, row) for row in X.tolist()])
-    dim = X.shape[1]
-    if dim % m != 0:
-        raise ValueError(f"dim {dim} not divisible by m={m}")
-    d_sub = dim // m
-    codebooks: list[list[list[float]]] = []
-    for s in range(m):
-        Xs = X[:, s * d_sub : (s + 1) * d_sub]
-        C = Xs[:k].copy()
-        for _ in range(iters):
-            d2 = ((Xs[:, None, :] - C[None, :, :]) ** 2).sum(axis=2)
-            assign = d2.argmin(axis=1)
-            for j in range(k):
-                mask = assign == j
-                if mask.any():
-                    C[j] = Xs[mask].mean(axis=0)
-        codebooks.append(C.tolist())
-    return codebooks
-
-
-def _residual_frame(index, assigned: DataFrame) -> DataFrame:
-    """Replace the vector column with x − centroid(cell): a broadcast
-    join against the bounded centroid table + one zip_with — JVM-side,
-    no Python before the encode kernel."""
-    spark = assigned.sparkSession
-    cent = spark.createDataFrame(
-        [
-            (int(c), [float(x) for x in v])
-            for c, v in sorted(index.centroids.items())
-        ],
-        "cell int, _cent array<double>",
-    )
+def residual_frame(index, vectors: DataFrame) -> DataFrame:
+    """Cell-assigned ``vectors`` with the vector column replaced by
+    x − centroid(cell): a broadcast join against the index's centroid
+    table + one zip_with, float64 subtraction — JVM-side, no Python
+    before the encode kernel."""
     return (
-        assigned.join(F.broadcast(cent), "cell")
+        vectors.join(F.broadcast(index.centroid_frame()), "cell")
         .withColumn(
             index.vec_col,
             F.expr(
-                f"zip_with({index.vec_col}, _cent, (x, y) -> double(x) - y)"
+                f"zip_with({index.vec_col}, centroid, (x, y) -> double(x) - y)"
             ),
         )
-        .drop("_cent")
+        .drop("centroid")
     )
+
+
+def _write_cell_codes(
+    index,
+    codebooks: list[list[list[float]]],
+    codes_dir: "str | Path",
+    assigned: DataFrame,
+    mode: str,
+    by_residual: bool,
+    rotation: list[list[float]] | None,
+) -> None:
+    """Encode cell-assigned vectors and write them partitioned by
+    ``cell`` — the one code writer of the index build and the append."""
+    if by_residual:
+        assigned = residual_frame(index, assigned)
+    pq_encode(
+        assigned,
+        codebooks,
+        id_col=index.id_col,
+        vec_col=index.vec_col,
+        keep=("cell",),
+        rotation=rotation,
+    ).write.mode(mode).partitionBy("cell").parquet(str(codes_dir))
 
 
 def ivfpq_write_codes(
@@ -408,27 +424,18 @@ def ivfpq_write_codes(
     ``cell`` — the one-time index-build step (Arrow-batched encode, one
     pass; the write is cell-partitioned so the probe filter prunes at
     file-listing level, same layout contract as IvfIndex.VECTORS).
-    With ``by_residual=True`` the codebooks must come from
-    :func:`ivfpq_train_residual` and each vector is encoded as its
-    residual against the cell centroid.  ``rotation`` must match the
-    matrix the codebooks were trained under (applied inside the encode
-    kernel, after the residual subtraction when both are set)."""
-    src = index.vectors()
-    if by_residual:
-        src = _residual_frame(index, src)
-    enc = pq_encode(
-        src,
-        codebooks,
-        id_col=index.id_col,
-        vec_col=index.vec_col,
-        keep=("cell",),
-        rotation=rotation,
+    With ``by_residual=True`` the codebooks must be fit on
+    :func:`residual_frame` and each vector is encoded as its residual
+    against the cell centroid.  ``rotation`` must match the matrix the
+    codebooks were trained under (applied inside the encode kernel,
+    after the residual subtraction when both are set)."""
+    _write_cell_codes(
+        index, codebooks, codes_dir, index.vectors(), "overwrite",
+        by_residual, rotation,
     )
-    enc.write.mode("overwrite").partitionBy("cell").parquet(str(codes_dir))
 
 
 def ivfpq_search(
-    spark,
     index,
     codes_dir: "str | Path",
     codebooks: list[list[list[float]]],
@@ -441,18 +448,18 @@ def ivfpq_search(
     rotation: list[list[float]] | None = None,
 ) -> DataFrame:
     """IVFADC top-k: probe cells from the stored coarse centroids
-    (driver-side), then flat ADC over ONLY the probe cells' code
-    partitions — ``cell IN (...)``/``cell = c`` is a partition filter
+    (driver-side), then ADC over ONLY the probe cells' code partitions
+    — ``cell IN (...)``/``cell = c`` is a partition filter
     (plan-asserted in tests/test_pq.py), scoring is pure-JVM
     ``element_at`` lookup chains, top-k is TakeOrderedAndProject.
 
+    ``by_residual=False``: flat :func:`pq_search` over the probe cells.
     ``by_residual=True`` (the stored codes must have been written under
-    the same flag): each probe cell scans with its own literal tables —
-    residual-codebook dots/norms PLUS the per-cell correction scalars
-    dot(q, cₚ) and |cₚ|² and the query-independent cross table
-    dot(cₚ,ₛ, Cₛ[j]) — all m·k(+2) driver-side floats per probe cell,
-    bounded by index design.  The n_probe per-cell scans union before
-    one global top-k.
+    the same flag): each probe cell scans with the query's lookup tables
+    PLUS its own correction scalars dot(q, cₚ), |cₚ|² and cross table
+    dot(cₚ,ₛ, Cₛ[j]) — m·k+2 driver-side floats per probe cell, bounded
+    by index design.  The n_probe per-cell scans union before one
+    global top-k.
 
     ``rotation`` (OPQ): the coarse probe and the per-cell correction
     scalars stay in the ORIGINAL space (the coarse quantizer is not
@@ -460,15 +467,13 @@ def ivfpq_search(
     cross table from R·centroid slices — because the stored codes
     reconstruct the ROTATED residual R(x − c), and R orthogonal makes
     dot(q, x−c) = dot(Rq, R(x−c))."""
-    import math
-
     probe = index.probe_cells(query_vec, n_probe)
+    # a memoized read of the immutable codes export: one parquet
+    # resolution however many cells are probed (r12 optimization round)
+    codes = read_parquet_memo(index.spark, codes_dir)
     if not by_residual:
-        codes = read_parquet_memo(spark, codes_dir).filter(
-            F.col("cell").isin(probe)
-        )
         return pq_search(
-            codes,
+            codes.filter(F.col("cell").isin(probe)),
             codebooks,
             query_vec,
             topk,
@@ -477,64 +482,36 @@ def ivfpq_search(
             rotation=rotation,
         )
 
-    m = len(codebooks)
-    d_sub = len(codebooks[0][0])
-    qnorm = math.sqrt(sum(x * x for x in query_vec)) or 1.0
-    q_rot = rotate_vec(rotation, query_vec)
-    dots = []
-    norms = []
-    for s in range(m):
-        qs = q_rot[s * d_sub : (s + 1) * d_sub]
-        dots.append(
-            [sum(q * c for q, c in zip(qs, cent)) for cent in codebooks[s]]
-        )
-        norms.append([sum(c * c for c in cent) for cent in codebooks[s]])
-
+    sum_dot = F.expr(
+        _adc_sum_expr(_adc_dots(codebooks, rotate_vec(rotation, query_vec)))
+    )
+    sum_norm = F.expr(_adc_sum_expr(_adc_norms(codebooks)))
+    qnorm = F.lit(_qnorm(query_vec))
     scans = []
     for c in probe:
         cent = [float(x) for x in index.centroids[c]]
-        qc = sum(q * v for q, v in zip(query_vec, cent))
-        nc = sum(v * v for v in cent)
-        cent_rot = rotate_vec(rotation, cent)
-        cross = [
-            [
-                sum(
-                    cv * cb
-                    for cv, cb in zip(
-                        cent_rot[s * d_sub : (s + 1) * d_sub], codebooks[s][j]
-                    )
-                )
-                for j in range(len(codebooks[s]))
-            ]
-            for s in range(m)
-        ]
-        # single-parse ADC folds (see _adc_sum_expr) + a memoized read of
-        # the immutable codes export — the per-cell loop otherwise pays
-        # m·k·3 py4j literal constructions and a fresh parquet resolution
-        # per probe cell (r12 optimization round)
-        sum_dot = F.expr(_adc_sum_expr(dots))
-        sum_norm = F.expr(_adc_sum_expr(norms))
-        sum_cross = F.expr(_adc_sum_expr(cross))
-        sim = (F.lit(qc) + sum_dot) / (
-            F.lit(qnorm)
-            * F.sqrt(F.lit(nc) + F.lit(2.0) * sum_cross + sum_norm)
+        sim = _adc_sim(
+            sum_dot,
+            sum_norm,
+            qnorm,
+            (
+                F.lit(sum(q * v for q, v in zip(query_vec, cent))),
+                F.lit(sum(v * v for v in cent)),
+                F.expr(_adc_sum_expr(_cross_table(codebooks, cent, rotation))),
+            ),
         )
-        scan = (
-            read_parquet_memo(spark, codes_dir)
-            .filter(F.col("cell") == int(c))
-            .select(index.id_col, F.round(sim, 6).alias("sim_pq"))
+        scans.append(
+            codes.filter(F.col("cell") == int(c)).select(
+                index.id_col, sim.alias("sim_pq")
+            )
         )
-        scans.append(scan)
-    out = scans[0]
-    for s in scans[1:]:
-        out = out.unionByName(s)
+    out = functools.reduce(DataFrame.unionByName, scans)
     if exclude_ids:
         out = out.where(~F.col(index.id_col).isin(*exclude_ids))
     return out.orderBy(F.desc("sim_pq"), index.id_col).limit(topk)
 
 
 def ivfpq_knn_join(
-    spark,
     index,
     codes_dir: "str | Path",
     codebooks: list[list[list[float]]],
@@ -552,19 +529,12 @@ def ivfpq_knn_join(
     works for 5 queries or 5 billion, and the corpus side stays PQ
     codes, never raw vectors.
 
-    ``by_residual=True``: the correction terms ride the same bounded
-    frames — dot(q, cₚ)/|cₚ|² computed per (query, probe-cell) row in
-    the probe assignment (JVM folds), and the query-independent cross
-    table dot(cₚ,ₛ, Cₛ[j]) broadcasts as n_cells·m·k rows joined on
-    (cell, s, code) — so the corpus-side shape is identical to the
-    global-codebook path plus one broadcast join.
-
     Plan shape, all JVM:
 
-    1. probe assignment is DISTRIBUTED — the centroid table (n_cells
-       rows, bounded by index design) broadcasts against the query
-       frame, a per-query rank window keeps the ``n_probe`` most-similar
-       cells (ties → lower cell id, matching ``probe_cells``);
+    1. probe assignment is DISTRIBUTED (:meth:`IvfIndex.probe_join`) —
+       the centroid table broadcasts against the query frame, a
+       per-query rank window keeps the ``n_probe`` most-similar cells
+       (ties → lower cell id, matching ``probe_cells``);
     2. each query's ADC lookup table materializes as ROWS, not plan
        literals: query frame × broadcast exploded codebook (m·k rows,
        bounded by index design) → ONE compact zip_with/aggregate fold
@@ -584,6 +554,12 @@ def ivfpq_knn_join(
        would wobble last bits vs the oracle's ORDER BY s replay);
        per-query rank window keeps k.
 
+    ``by_residual=True`` adds only the correction terms of
+    :func:`_adc_sim`: dot(q, cₚ)/|cₚ|² as ``_qc``/``_nc`` columns of
+    the probe rows (JVM folds), and the query-independent cross table
+    dot(cₚ,ₛ, Cₛ[j]) as n_cells·m·k broadcast rows joined on (cell, s,
+    code).
+
     Output: (q_id, vec_id, sim_pq, rank), rank ≤ k per query.
 
     ``rotation`` (OPQ): queries rotate JVM-side as ROWS — the dim-row
@@ -597,58 +573,33 @@ def ivfpq_knn_join(
     left-to-right folds."""
     from pyspark.sql import Window
 
-    m = len(codebooks)
-    kk = len(codebooks[0])
+    spark = index.spark
     d_sub = len(codebooks[0][0])
-
-    cent = spark.createDataFrame(
-        [
-            (int(c), [float(x) for x in v])
-            for c, v in sorted(index.centroids.items())
-        ],
-        "cell int, centroid array<double>",
-    )
-    csim = F.expr(
-        f"aggregate(zip_with({q_vec_col}, centroid, (x, y) -> x * y),"
-        " 0D, (a, x) -> a + x)"
-    ) / (
-        F.sqrt(
-            F.expr(
-                f"aggregate({q_vec_col}, 0D, (a, x) -> a + double(x) * double(x))"
-            )
-        )
-        * F.sqrt(F.expr("aggregate(centroid, 0D, (a, x) -> a + x * x)"))
-    )
-    by_query = Window.partitionBy(q_id_col)
     # residual corrections per (query, probe cell): dot(q, centroid)
     # and |centroid|^2 — left-to-right IEEE folds matching the oracle's
     # list_inner_product
-    _extra = (
-        [
-            F.expr(
-                f"aggregate(zip_with({q_vec_col}, centroid,"
-                " (x, y) -> double(x) * y), 0D, (a, x) -> a + x)"
-            ).alias("_qc"),
-            F.expr(
-                "aggregate(centroid, 0D, (a, x) -> a + x * x)"
-            ).alias("_nc"),
-        ]
-        if by_residual
-        else []
-    )
-    probes = (
-        queries.crossJoin(F.broadcast(cent))
-        .withColumn(
-            "_rk",
-            F.row_number().over(by_query.orderBy(F.desc(csim), F.asc("cell"))),
-        )
-        .where(F.col("_rk") <= n_probe)
-        .select(q_id_col, q_vec_col, "cell", *_extra)
+    corr = ["_qc", "_nc"] if by_residual else []
+    probes = index.probe_join(queries, n_probe, q_id_col, q_vec_col).select(
+        q_id_col,
+        q_vec_col,
+        "cell",
+        *(
+            [
+                F.expr(
+                    f"aggregate(zip_with({q_vec_col}, centroid,"
+                    " (x, y) -> double(x) * y), 0D, (a, x) -> a + x)"
+                ).alias("_qc"),
+                F.expr(
+                    "aggregate(centroid, 0D, (a, x) -> a + x * x)"
+                ).alias("_nc"),
+            ]
+            if by_residual
+            else []
+        ),
     )
     qv_eff = q_vec_col
     if rotation is not None:
-        spark_ = queries.sparkSession
-        rotdf = spark_.createDataFrame(
+        rotdf = spark.createDataFrame(
             [(i, [float(x) for x in row]) for i, row in enumerate(rotation)],
             "i int, vrow array<double>",
         )
@@ -677,16 +628,12 @@ def ivfpq_knn_join(
 
     # exploded codebook: (s, code, cent, nr) — m·k rows, bounded by
     # index design, broadcast-safe
+    norms = _adc_norms(codebooks)
     cbdf = spark.createDataFrame(
         [
-            (
-                s,
-                j,
-                [float(c) for c in codebooks[s][j]],
-                float(sum(c * c for c in codebooks[s][j])),
-            )
-            for s in range(m)
-            for j in range(kk)
+            (s, j, [float(c) for c in cent], float(norms[s][j]))
+            for s, book in enumerate(codebooks)
+            for j, cent in enumerate(book)
         ],
         "s int, code int, cent array<double>, nr double",
     )
@@ -720,117 +667,60 @@ def ivfpq_knn_join(
         )
     )
 
-    codes = read_parquet_memo(spark, codes_dir)
-    if not by_residual:
-        cand = probes.select(q_id_col, "cell").join(codes, "cell").select(
+    keep = ["cell", *corr] if by_residual else []
+    cand = (
+        probes.select(q_id_col, "cell", *corr)
+        .join(read_parquet_memo(spark, codes_dir), "cell")
+        .select(
             q_id_col,
+            *keep,
             F.col(index.id_col),
             F.posexplode("codes").alias("s", "code"),
         )
-        scored = (
-            cand.join(qd, [q_id_col, "s", "code"])
-            .select(
-                q_id_col,
-                index.id_col,
-                "_qnorm",
-                F.struct("s", "dt", "nr").alias("term"),
-            )
-            .groupBy(q_id_col, index.id_col, "_qnorm")
-            .agg(F.array_sort(F.collect_list("term")).alias("terms"))
-            .select(
-                q_id_col,
-                index.id_col,
-                F.round(
-                    F.expr("aggregate(terms, 0D, (a, x) -> a + x.dt)")
-                    / (
-                        F.col("_qnorm")
-                        * F.sqrt(
-                            F.expr("aggregate(terms, 0D, (a, x) -> a + x.nr)")
-                        )
-                    ),
-                    6,
-                ).alias("sim_pq"),
-            )
-        )
-    else:
-        # query-independent cross table: dot(centroid_slice_s, C_s[j])
-        # — n_cells·m·k rows, bounded by index design, broadcast-safe
-        # rotated regime: codes reconstruct R(x − c), so the cross term
-        # dot(c, x − c) needs ROTATED centroid slices (R orthogonal)
+    )
+    terms = ["s", "dt", "nr"]
+    scored = cand.join(qd, [q_id_col, "s", "code"])
+    if by_residual:
+        # query-independent cross table: n_cells·m·k rows, bounded by
+        # index design, broadcast-safe
         crossdf = spark.createDataFrame(
             [
-                (
-                    int(c),
-                    s,
-                    j,
-                    float(
-                        sum(
-                            cv * cb
-                            for cv, cb in zip(
-                                rotate_vec(
-                                    rotation, [float(x) for x in v]
-                                )[s * d_sub : (s + 1) * d_sub],
-                                codebooks[s][j],
-                            )
-                        )
-                    ),
-                )
+                (int(c), s, j, float(cs))
                 for c, v in sorted(index.centroids.items())
-                for s in range(m)
-                for j in range(kk)
+                for s, row in enumerate(_cross_table(codebooks, v, rotation))
+                for j, cs in enumerate(row)
             ],
             "cell int, s int, code int, cs double",
         )
-        cand = (
-            probes.select(q_id_col, "cell", "_qc", "_nc")
-            .join(codes, "cell")
-            .select(
-                q_id_col,
-                "cell",
-                "_qc",
-                "_nc",
-                F.col(index.id_col),
-                F.posexplode("codes").alias("s", "code"),
-            )
+        scored = scored.join(F.broadcast(crossdf), ["cell", "s", "code"])
+        terms.append("cs")
+
+    def fold(field: str) -> Column:
+        return F.expr(f"aggregate(terms, 0D, (a, x) -> a + x.{field})")
+
+    scored = (
+        scored.select(
+            q_id_col,
+            index.id_col,
+            "_qnorm",
+            *corr,
+            F.struct(*terms).alias("term"),
         )
-        scored = (
-            cand.join(qd, [q_id_col, "s", "code"])
-            .join(F.broadcast(crossdf), ["cell", "s", "code"])
-            .select(
-                q_id_col,
-                index.id_col,
-                "_qnorm",
-                "_qc",
-                "_nc",
-                F.struct("s", "dt", "nr", "cs").alias("term"),
-            )
-            .groupBy(q_id_col, index.id_col, "_qnorm", "_qc", "_nc")
-            .agg(F.array_sort(F.collect_list("term")).alias("terms"))
-            .select(
-                q_id_col,
-                index.id_col,
-                F.round(
-                    (
-                        F.col("_qc")
-                        + F.expr("aggregate(terms, 0D, (a, x) -> a + x.dt)")
-                    )
-                    / (
-                        F.col("_qnorm")
-                        * F.sqrt(
-                            F.col("_nc")
-                            + F.lit(2.0)
-                            * F.expr(
-                                "aggregate(terms, 0D, (a, x) -> a + x.cs)"
-                            )
-                            + F.expr(
-                                "aggregate(terms, 0D, (a, x) -> a + x.nr)"
-                            )
-                        )
-                    ),
-                    6,
-                ).alias("sim_pq"),
-            )
+        .groupBy(q_id_col, index.id_col, "_qnorm", *corr)
+        .agg(F.array_sort(F.collect_list("term")).alias("terms"))
+        .select(
+            q_id_col,
+            index.id_col,
+            _adc_sim(
+                fold("dt"),
+                fold("nr"),
+                F.col("_qnorm"),
+                (F.col("_qc"), F.col("_nc"), fold("cs"))
+                if by_residual
+                else None,
+            ).alias("sim_pq"),
         )
+    )
     return (
         scored.withColumn(
             "rank",
@@ -857,41 +747,22 @@ def ivfpq_append(
     """Admit NEW vectors into an existing IVFPQ index — the delta-only
     maintenance step a continuously-growing corpus needs.
 
-    Cells come from the STORED coarse quantizer and codes from the
-    STORED codebooks, both frozen: the production regime (quantizers
-    train once on a bounded sample and the index grows under them;
-    retraining is a rebuild, not maintenance).  New codes append as
-    extra files inside the cell partitions — resident codes are never
-    rewritten, and searches see the union at the next partition
-    listing.  Cost is O(delta): one assignment pass + one Arrow encode
-    pass over the new vectors only.
+    Cells come from the STORED coarse quantizer (:meth:`IvfIndex.assign`)
+    and codes from the STORED codebooks, both frozen: the production
+    regime (quantizers train once on a bounded sample and the index
+    grows under them; retraining is a rebuild, not maintenance).  New
+    codes append as extra files inside the cell partitions — resident
+    codes are never rewritten, and searches see the union at the next
+    partition listing.  Cost is O(delta): one assignment pass + one
+    Arrow encode pass over the new vectors only.
 
     Pairs with ``TableStore.changes``: feed each round's survivor delta
     here and the ANN index keeps pace with the corpus — the same
     "only the delta pays" regime as the incremental deduper.  Returns
     the number of vectors appended."""
-    from .similarity import assign_cells
-
-    cell_ids = sorted(index.centroids)
-    cents = [index.centroids[c] for c in cell_ids]
-    assigned = assign_cells(new_embeddings, cents, vec_col=index.vec_col)
-    if cell_ids != list(range(len(cell_ids))):
-        # label-built indexes can have non-contiguous cell ids: map the
-        # quantizer's positional argmax back to the stored id space
-        id_map = F.array(*[F.lit(int(c)) for c in cell_ids])
-        assigned = assigned.withColumn(
-            "cell", F.element_at(id_map, F.col("cell") + 1)
-        )
-    if by_residual:
-        assigned = _residual_frame(index, assigned)
-    enc = pq_encode(
-        assigned,
-        codebooks,
-        id_col=index.id_col,
-        vec_col=index.vec_col,
-        keep=("cell",),
-        rotation=rotation,
-    )
     n = new_embeddings.count()
-    enc.write.mode("append").partitionBy("cell").parquet(str(codes_dir))
+    _write_cell_codes(
+        index, codebooks, codes_dir, index.assign(new_embeddings), "append",
+        by_residual, rotation,
+    )
     return n

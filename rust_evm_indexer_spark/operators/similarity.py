@@ -5,19 +5,23 @@ precision through ``zip_with`` + ``aggregate`` folds (deterministic
 left-to-right accumulation — important for oracle parity and for
 reproducible top-k boundaries).  No Python touches the hot path.
 
-Three tiers:
+Tiers:
 
 - :func:`brute_force_topk` — exact cosine top-k for one query vector.
-  The baseline and the verifier for approximate tiers.  Plans as
-  scan → narrow projection → TakeOrderedAndProject: no shuffle at all.
+  The baseline and the verifier for approximate tiers, and the scoring
+  step of both IVF searches below.  Plans as scan → narrow projection →
+  TakeOrderedAndProject: no shuffle at all.
 - :func:`knn_join` — exact k-NN for a (small) query *set* via broadcast
   nested-loop + per-query top-k window.  Right side must be broadcastable.
-- :func:`ivf_topk` — IVF-style approximate search: vectors are bucketed
-  into cells (here: a provided ``cell`` column — e.g. a k-means label
-  computed offline), the query probes the ``n_probe`` nearest cell
-  centroids, and only those cells are scanned.  This is the 100 TB path:
-  cell pruning turns a full scan into a partition-pruned scan when the
-  table is written partitioned by cell.
+- :class:`IvfIndex` — the MATERIALIZED IVF index (label cells or a
+  k-means quantizer, corpus written partitioned by cell): one centroid
+  table, one driver-side probe (:meth:`IvfIndex.probe_cells`), one
+  distributed probe (:meth:`IvfIndex.probe_join`) and one cell
+  assignment for new vectors (:meth:`IvfIndex.assign`), shared with the
+  IVFADC paths in ``pq.py``.  This is the 100 TB path: the probe filter
+  is a partition filter, so unprobed cells' files are never opened.
+- :func:`ivf_topk` — IVF without a materialized index: centroids of a
+  provided ``cell`` column recomputed per call, for one-off queries.
 """
 
 from __future__ import annotations
@@ -146,16 +150,15 @@ def kmeans_fit(
     seeds = (
         embeddings.orderBy(id_col).limit(k).select(vec_col).collect()
     )
+    if len(seeds) < k:
+        raise ValueError(
+            f"k-means needs at least k={k} vectors, got n={len(seeds)}"
+        )
     cents = [list(map(float, r[0])) for r in seeds]
     for _ in range(iters):
-        # same argmax rule either way; the join form keeps large-k
-        # assignment inside codegen (see assign_cells_join)
-        if k > 16:
-            assigned = assign_cells_join(
-                embeddings, cents, id_col=id_col, vec_col=vec_col
-            )
-        else:
-            assigned = assign_cells(embeddings, cents, vec_col=vec_col)
+        assigned = assign_cells(
+            embeddings, cents, id_col=id_col, vec_col=vec_col
+        )
         new = (
             assigned.select("cell", F.posexplode(vec_col).alias("pos", "v"))
             .groupBy("cell", "pos")
@@ -175,16 +178,24 @@ def assign_cells(
     embeddings: DataFrame,
     centroids: list[list[float]],
     *,
+    id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
     """Add a 0-based ``cell`` column: argmax cosine over the centroid
-    list (k sim columns + array_position argmax — all codegen'd; ties →
-    lowest cell id).
+    list, ties → lowest cell id.
 
-    Centroid norms are constants — computed driver-side (left-to-right
-    double sum + sqrt, bit-identical to the JVM fold) — and the row's
-    norm folds once behind a select boundary, so each row costs k dot
-    folds + 1, not 3k (the SCALE.md lambda-re-evaluation lesson)."""
+    Up to 16 centroids: k sim columns + array_position argmax, all
+    codegen'd.  Centroid norms are constants — computed driver-side
+    (left-to-right double sum + sqrt, bit-identical to the JVM fold) —
+    and the row's norm folds once behind a select boundary, so each row
+    costs k dot folds + 1, not 3k (the SCALE.md lambda-re-evaluation
+    lesson).  Above 16 the literal array leaves codegen, so the
+    broadcast-join form :func:`_assign_cells_join` runs instead — same
+    rule, bit-identical sims."""
+    if len(centroids) > 16:
+        return _assign_cells_join(
+            embeddings, centroids, id_col=id_col, vec_col=vec_col
+        )
     cnorms = []
     for c in centroids:
         acc = 0.0
@@ -205,7 +216,7 @@ def assign_cells(
     ).select(*cols, "cell")
 
 
-def assign_cells_join(
+def _assign_cells_join(
     embeddings: DataFrame,
     centroids: list[list[float]],
     *,
@@ -283,16 +294,16 @@ def semantic_dedup_pairs(
     # fold ‖a‖ and ‖b‖ per PAIR (3 array folds × Σ|cell|² pairs; measured
     # 3× the whole entry's cost at sf0.1).  dot/(na·nb) is the exact same
     # IEEE expression the oracle computes, so parity is unaffected.
-    # Assignment goes through the broadcast-join form: k grows with the
-    # corpus under the SemDeDup scaling rule, and the literal-array form
-    # leaves codegen at large k.
+    # Assignment goes through assign_cells, which picks the
+    # broadcast-join form once k outgrows the literal form: k grows
+    # with the corpus under the SemDeDup scaling rule.
     # The assigned frame feeds BOTH sides of the pair join below; without
-    # the persist the whole assign subtree (corpus scan + centroid
-    # crossJoin + rank window) is embedded twice in the physical plan
+    # the persist the whole assign subtree (corpus scan + assignment)
+    # is embedded twice in the physical plan
     # and the corpus pays two full assignment passes.  The pin lives
     # until the session scope's release (util.SessionScope).
     assigned = persist_shared(
-        assign_cells_join(embeddings, centroids, id_col=id_col, vec_col=vec_col).select(
+        assign_cells(embeddings, centroids, id_col=id_col, vec_col=vec_col).select(
             F.col(id_col), F.col("cell"), F.col(vec_col), _norm(F.col(vec_col)).alias("_n")
         )
     )
@@ -327,6 +338,11 @@ def _py_cos(a: list[float], b: list[float]) -> float:
     return d / (na * nb) if na and nb else 0.0
 
 
+def _check_n_probe(n_probe: int) -> None:
+    if n_probe < 1:
+        raise ValueError(f"n_probe must be >= 1, got {n_probe}")
+
+
 class IvfIndex:
     """A MATERIALIZED IVF index — the 100 TB search path.
 
@@ -339,9 +355,10 @@ class IvfIndex:
     so Spark never opens the other cells' files.  Scan cost is
     n_probe/n_cells of the corpus — physically, not nominally.
 
-    This replaces the round-1 shape (centroids recomputed per query +
-    full-corpus cell assignment at query time, graded "scan-everything"
-    in VERDICT.md) with the index the docstrings were promising.
+    The index owns the stages every IVF and IVFADC path shares: the
+    centroid table (:meth:`centroid_frame`), the driver-side and the
+    distributed probe (:meth:`probe_cells`, :meth:`probe_join`) and the
+    cell assignment of new vectors (:meth:`assign`).
     """
 
     VECTORS = "vectors"
@@ -402,7 +419,9 @@ class IvfIndex:
             trained = kmeans_fit(
                 embeddings, k=k, iters=iters, id_col=id_col, vec_col=vec_col
             )
-            assigned = assign_cells(embeddings, trained, vec_col=vec_col)
+            assigned = assign_cells(
+                embeddings, trained, id_col=id_col, vec_col=vec_col
+            )
             cents = dict(enumerate(trained))
         index_dir.mkdir(parents=True, exist_ok=True)
         assigned.write.mode("overwrite").partitionBy("cell").parquet(
@@ -431,14 +450,69 @@ class IvfIndex:
         }
         return cls(spark, index_dir, cents, id_col=id_col, vec_col=vec_col)
 
-    # -- query -------------------------------------------------------------
+    # -- shared stages -----------------------------------------------------
+
+    def centroid_frame(self) -> DataFrame:
+        """(cell int, centroid array<double>) — n_cells rows, bounded by
+        index design, so every consumer may broadcast it."""
+        return self.spark.createDataFrame(
+            [
+                (int(c), [float(x) for x in v])
+                for c, v in sorted(self.centroids.items())
+            ],
+            "cell int, centroid array<double>",
+        )
 
     def probe_cells(self, query_vec: list[float], n_probe: int) -> list[int]:
-        """Driver-side coarse quantization: k×dim floats, no Spark job."""
+        """Driver-side coarse quantization: the ``n_probe`` cells whose
+        centroids are most cosine-similar to the query, ties → lower
+        cell id.  k×dim floats, no Spark job."""
+        _check_n_probe(n_probe)
         q = [float(x) for x in query_vec]
         return sorted(
             self.centroids, key=lambda c: (-_py_cos(self.centroids[c], q), c)
         )[:n_probe]
+
+    def probe_join(
+        self, queries: DataFrame, n_probe: int, q_id_col: str, q_vec_col: str
+    ) -> DataFrame:
+        """DISTRIBUTED probe for a query frame: (q_id, q_vec, cell,
+        centroid), one row per (query, probe cell).  The centroid table
+        broadcasts against the queries and a per-query rank window keeps
+        the ``n_probe`` most-similar cells — the same rule and the same
+        cosine folds as :meth:`probe_cells`."""
+        from pyspark.sql import Window
+
+        _check_n_probe(n_probe)
+        rank = Window.partitionBy(q_id_col).orderBy(
+            F.desc(cosine(F.col(q_vec_col), F.col("centroid"))), F.asc("cell")
+        )
+        return (
+            queries.crossJoin(F.broadcast(self.centroid_frame()))
+            .withColumn("_rk", F.row_number().over(rank))
+            .where(F.col("_rk") <= n_probe)
+            .select(q_id_col, q_vec_col, "cell", "centroid")
+        )
+
+    def assign(self, embeddings: DataFrame) -> DataFrame:
+        """Cells of NEW vectors under the FROZEN quantizer, in the
+        index's cell-id space (:func:`assign_cells`, whose form is
+        chosen from the cell count)."""
+        cell_ids = sorted(self.centroids)
+        assigned = assign_cells(
+            embeddings,
+            [self.centroids[c] for c in cell_ids],
+            id_col=self.id_col,
+            vec_col=self.vec_col,
+        )
+        if cell_ids != list(range(len(cell_ids))):
+            # label-built indexes can have non-contiguous cell ids: map
+            # the positional argmax back to the stored id space
+            id_map = F.array(*[F.lit(int(c)) for c in cell_ids])
+            assigned = assigned.withColumn(
+                "cell", F.element_at(id_map, F.col("cell") + 1)
+            )
+        return assigned
 
     def vectors(self) -> DataFrame:
         # through the session table-plan memo (~150 ms of listing +
@@ -452,28 +526,21 @@ class IvfIndex:
 
         return read_parquet_memo(self.spark, self.index_dir / self.VECTORS)
 
+    # -- maintenance and query ----------------------------------------------
+
     def append(self, embeddings: DataFrame, *, cell_col: str | None = None) -> int:
         """Admit NEW vectors under the FROZEN coarse quantizer — the
         delta-only maintenance step of a continuously-growing corpus
         (quantizers train once on a bounded sample and the index grows
-        under them; retraining is a rebuild).  Cells assigned via the
-        broadcast-rank form (scales to any k), appended as new files
-        inside the cell partitions; resident files never rewritten,
-        searches see the union at the next partition listing.  Pass
-        ``cell_col`` when rows are already assigned (e.g. the survivors
-        of :func:`semantic_admit` — avoids a second assignment pass).
+        under them; retraining is a rebuild).  Cells come from
+        :meth:`assign`, appended as new files inside the cell
+        partitions; resident files never rewritten, searches see the
+        union at the next partition listing.  Pass ``cell_col`` when
+        rows are already assigned (e.g. the survivors of
+        :func:`semantic_admit` — avoids a second assignment pass).
         Returns the number of vectors appended."""
         if cell_col is None:
-            cell_ids = sorted(self.centroids)
-            cents = [self.centroids[c] for c in cell_ids]
-            assigned = assign_cells_join(
-                embeddings, cents, id_col=self.id_col, vec_col=self.vec_col
-            )
-            if cell_ids != list(range(len(cell_ids))):
-                id_map = F.array(*[F.lit(int(c)) for c in cell_ids])
-                assigned = assigned.withColumn(
-                    "cell", F.element_at(id_map, F.col("cell") + 1)
-                )
+            assigned = self.assign(embeddings)
         else:
             assigned = embeddings.withColumnRenamed(cell_col, "cell")
         # appended files must match the resident parquet schema exactly
@@ -497,21 +564,18 @@ class IvfIndex:
         *,
         exclude_ids: tuple[int, ...] = (),
     ) -> DataFrame:
-        """Partition-pruned approximate top-k: the scan touches only the
-        probe cells' parquet files (``PartitionFilters: cell IN ...`` —
-        asserted by tests/test_plan_hygiene.py)."""
+        """Partition-pruned approximate top-k: :func:`brute_force_topk`
+        over the probe cells only — the scan touches only their parquet
+        files (``PartitionFilters: cell IN ...`` — asserted by
+        tests/test_plan_hygiene.py)."""
         probe = self.probe_cells(query_vec, n_probe)
-        df = self.vectors().filter(F.col("cell").isin(probe))
-        if exclude_ids:
-            df = df.filter(~F.col(self.id_col).isin(*exclude_ids))
-        q = F.array(*[F.lit(float(x)) for x in query_vec])
-        return (
-            df.select(
-                F.col(self.id_col),
-                F.round(cosine(F.col(self.vec_col), q), 6).alias("sim"),
-            )
-            .orderBy(F.desc("sim"), F.asc(self.id_col))
-            .limit(k)
+        return brute_force_topk(
+            self.vectors().filter(F.col("cell").isin(probe)),
+            query_vec,
+            k,
+            id_col=self.id_col,
+            vec_col=self.vec_col,
+            exclude_ids=exclude_ids,
         )
 
     def knn_join(
@@ -528,40 +592,19 @@ class IvfIndex:
         whole query side in a broadcast nested loop; this one never
         does).
 
-        Probe assignment is DISTRIBUTED: the centroid table (n_cells
-        rows — bounded by index design, never by corpus size) broadcasts
-        against the query frame, a per-query rank window keeps the
-        ``n_probe`` most-similar cells (ties → lower cell id, matching
-        :meth:`probe_cells`), and candidates come from a ``cell``
-        equi-join against the cell-partitioned corpus — shuffle keyed by
-        cell, all-pairs never materializes, and dynamic partition
-        pruning can skip unprobed cells' files entirely.  Works for 5
-        queries or 5 billion.
+        Probe assignment is DISTRIBUTED (:meth:`probe_join`), and
+        candidates come from a ``cell`` equi-join against the
+        cell-partitioned corpus — shuffle keyed by cell, all-pairs never
+        materializes, and dynamic partition pruning can skip unprobed
+        cells' files entirely.  Works for 5 queries or 5 billion.
 
         Output: (q_id, vec_id, sim, rank), rank ≤ k per query — same
         shape as :func:`knn_join`.
         """
         from pyspark.sql import Window
 
-        cent = self.spark.createDataFrame(
-            [
-                (int(c), [float(x) for x in v])
-                for c, v in sorted(self.centroids.items())
-            ],
-            "cell int, centroid array<double>",
-        )
-        csim = cosine(F.col(q_vec_col), F.col("centroid"))
-        by_query = Window.partitionBy(q_id_col)
-        probes = (
-            queries.crossJoin(F.broadcast(cent))
-            .withColumn(
-                "_rk",
-                F.row_number().over(
-                    by_query.orderBy(F.desc(csim), F.asc("cell"))
-                ),
-            )
-            .where(F.col("_rk") <= n_probe)
-            .select(q_id_col, q_vec_col, "cell")
+        probes = self.probe_join(queries, n_probe, q_id_col, q_vec_col).select(
+            q_id_col, q_vec_col, "cell"
         )
         cand = probes.join(
             self.vectors().select(self.id_col, self.vec_col, "cell"), "cell"
@@ -577,7 +620,9 @@ class IvfIndex:
             scored.withColumn(
                 "rank",
                 F.row_number().over(
-                    by_query.orderBy(F.desc("sim"), F.asc(self.id_col))
+                    Window.partitionBy(q_id_col).orderBy(
+                        F.desc("sim"), F.asc(self.id_col)
+                    )
                 ),
             )
             .where(F.col("rank") <= k)
@@ -598,13 +643,14 @@ def ivf_topk(
 ) -> DataFrame:
     """IVF approximate top-k WITHOUT a materialized index: probe the
     ``n_probe`` cells whose centroids are most cosine-similar to the
-    query, brute-force only inside them.
+    query, then :func:`brute_force_topk` inside them.
 
     This flavor recomputes centroids from the corpus per call — fine for
     exploratory one-offs; repeated querying should go through
     :class:`IvfIndex` (build once, partition-pruned scans per query),
     which is what the catalog entries use.
     """
+    _check_n_probe(n_probe)
     cents = cell_centroids(embeddings, cell_col=cell_col, vec_col=vec_col)
     q = F.array(*[F.lit(float(x)) for x in query_vec])
     probe = [
@@ -616,15 +662,13 @@ def ivf_topk(
         .limit(n_probe)
         .collect()
     ]
-    df = embeddings.filter(F.col(cell_col).isin(probe))
-    if exclude_ids:
-        df = df.filter(~F.col(id_col).isin(*exclude_ids))
-    return (
-        df.select(
-            F.col(id_col), F.round(cosine(F.col(vec_col), q), 6).alias("sim")
-        )
-        .orderBy(F.desc("sim"), F.asc(id_col))
-        .limit(k)
+    return brute_force_topk(
+        embeddings.filter(F.col(cell_col).isin(probe)),
+        query_vec,
+        k,
+        id_col=id_col,
+        vec_col=vec_col,
+        exclude_ids=exclude_ids,
     )
 
 
@@ -743,41 +787,6 @@ def hyperplane_lsh_pairs(
     )
 
 
-def ivf_topk_trained(
-    embeddings: DataFrame,
-    query_vec: list[float],
-    centroids: list[list[float]],
-    k: int = 10,
-    n_probe: int = 2,
-    *,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    exclude_ids: tuple[int, ...] = (),
-) -> DataFrame:
-    """IVF search against a k-means-trained quantizer WITHOUT a
-    materialized index: probe cells are picked driver-side (centroid math
-    on a k×dim list is trivial) but cell assignment runs over the whole
-    corpus per call — k cosines per row with no physical pruning.  Use
-    :class:`IvfIndex` (assignment written once, partitioned by cell) for
-    repeated querying; this remains for ad-hoc centroids."""
-    qd = [float(x) for x in query_vec]
-    probe = sorted(
-        range(len(centroids)), key=lambda i: (-_py_cos(centroids[i], qd), i)
-    )[:n_probe]
-    assigned = assign_cells(embeddings, centroids, vec_col=vec_col)
-    df = assigned.filter(F.col("cell").isin(probe))
-    if exclude_ids:
-        df = df.filter(~F.col(id_col).isin(*exclude_ids))
-    q = F.array(*[F.lit(float(x)) for x in query_vec])
-    return (
-        df.select(
-            F.col(id_col), F.round(cosine(F.col(vec_col), q), 6).alias("sim")
-        )
-        .orderBy(F.desc("sim"), F.asc(id_col))
-        .limit(k)
-    )
-
-
 def semantic_admit(
     index: IvfIndex,
     new_embeddings: DataFrame,
@@ -792,8 +801,8 @@ def semantic_admit(
 
     Per-batch cost, by construction:
 
-    - cells assigned under the FROZEN quantizer (broadcast-rank — the
-      SemDeDup blocking step, cost ∝ delta);
+    - cells assigned under the FROZEN quantizer (:meth:`IvfIndex.assign`
+      — the SemDeDup blocking step, cost ∝ delta);
     - within-batch semantic losers: same-cell pairwise cosine among the
       DELTA only (keep-first by id — `dedup.dedup_survivors` policy);
     - cross-round candidates: the stored vector table is read with a
@@ -853,17 +862,7 @@ def _admit_flag_join(
     duplicates them.  Every frame it persists is appended to ``pins``
     for the caller to unpersist."""
     idc, vc = index.id_col, index.vec_col
-    cell_ids = sorted(index.centroids)
-    cents = [index.centroids[c] for c in cell_ids]
-    assigned = assign_cells_join(
-        new_embeddings, cents, id_col=idc, vec_col=vc
-    )
-    if cell_ids != list(range(len(cell_ids))):
-        id_map = F.array(*[F.lit(int(c)) for c in cell_ids])
-        assigned = assigned.withColumn(
-            "cell", F.element_at(id_map, F.col("cell") + 1)
-        )
-    assigned = assigned.select(
+    assigned = index.assign(new_embeddings).select(
         idc, "cell", vc, _norm(F.col(vc)).alias("_n")
     ).persist()
     pins.append(assigned)

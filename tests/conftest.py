@@ -22,6 +22,31 @@ SF_SMOKE = TESTDATA / "sf0.001"
 SF_ORACLE = TESTDATA / "sf0.01"
 
 
+def assert_no_cache_leak(spark, call, *written):
+    """The "cached, then written" guard every mutating operator's test
+    runs its call through: ``call()`` starts from an empty cache
+    manager, and once it returns no cache may remain and no DataFrame
+    it returned (alone or in a tuple) may read a file under a path in
+    ``written`` — so acting on a returned frame after the write can
+    never re-run a plan against the mutated data.  Returns ``call()``'s
+    result."""
+    from pyspark.sql import DataFrame
+
+    from rust_evm_indexer_spark.catalog import clear_session_caches
+
+    clear_session_caches()
+    spark.catalog.clearCache()
+    out = call()
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+    for df in out if isinstance(out, tuple) else (out,):
+        if isinstance(df, DataFrame):
+            hits = [
+                f for f in df.inputFiles() for w in written if str(w) in f
+            ]
+            assert not hits, hits
+    return out
+
+
 @pytest.fixture(scope="session")
 def spark():
     s = get_spark("tests", cpus=8, shuffle_partitions=8)

@@ -319,7 +319,7 @@ def test_approx_distinct_accuracy(spark, sf_dir):
 
 
 @pytest.mark.slow
-def test_kmeans_ivf_improves_over_label_cells(emb):
+def test_kmeans_ivf_improves_over_label_cells(emb, tmp_path):
     """Trained quantizer: k-means cells must give ≥ recall of arbitrary
     label cells at the same probe budget, and assignment is deterministic."""
     q = emb.filter(F.col("vec_id") == 0).first()["embedding"]
@@ -332,9 +332,10 @@ def test_kmeans_ivf_improves_over_label_cells(emb):
     cents2 = sim.kmeans_fit(emb, k=8, iters=4)
     assert cents == cents2  # deterministic
 
+    idx = sim.IvfIndex.build(emb, tmp_path / "ivf", k=8, iters=4)
     trained = {
         r["vec_id"]
-        for r in sim.ivf_topk_trained(emb, q, cents, 10, n_probe=2, exclude_ids=(0,)).collect()
+        for r in idx.search(q, 10, n_probe=2, exclude_ids=(0,)).collect()
     }
     label_cells = {
         r["vec_id"]
@@ -948,25 +949,70 @@ def test_semantic_admit_keeps_no_caches_and_kept_never_reads_the_index(
     no file scan under the index dir the call appended to — so acting
     on `kept` after the append can never re-run the cross-round join
     against the grown index."""
-    from rust_evm_indexer_spark.catalog import clear_session_caches
     from rust_evm_indexer_spark.operators import similarity as sim
     from rust_evm_indexer_spark.sources.batch import load_driver_table
 
-    from conftest import SF_ORACLE
+    from conftest import SF_ORACLE, assert_no_cache_leak
 
     emb = load_driver_table(spark, str(SF_ORACLE), "embeddings").select(
         "vec_id", "embedding"
     )
     idx = _seed_index(spark, tmp_path, emb)
-    clear_session_caches()
-    spark.catalog.clearCache()  # start from an empty cache manager
     batch = emb.filter((F.col("vec_id") >= 300) & (F.col("vec_id") < 305))
-    kept, stats = sim.semantic_admit(idx, batch, threshold=0.999999)
+    kept, stats = assert_no_cache_leak(
+        spark,
+        lambda: sim.semantic_admit(idx, batch, threshold=0.999999),
+        idx.index_dir,
+    )
     assert stats["admitted"] == 5
-    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
-    index_dir = str(idx.index_dir)
-    assert not [f for f in kept.inputFiles() if index_dir in f]
     assert len(kept.collect()) == stats["admitted"]  # after the append
+
+
+def test_ivf_index_append_assigns_frozen_cells_and_keeps_no_cache(
+    spark, tmp_path
+):
+    """IvfIndex.append: the delta lands in the cells the frozen
+    quantizer assigns (the same rule as the build), resident files are
+    never rewritten, and the call leaves no cache behind."""
+    from rust_evm_indexer_spark.operators import similarity as sim
+    from rust_evm_indexer_spark.sources.batch import load_driver_table
+
+    from conftest import SF_ORACLE, assert_no_cache_leak
+
+    emb = load_driver_table(spark, str(SF_ORACLE), "embeddings").select(
+        "vec_id", "embedding"
+    )
+    idx = _seed_index(spark, tmp_path, emb)
+    vec_dir = idx.index_dir / idx.VECTORS
+    before = set(map(str, vec_dir.rglob("*.parquet")))
+    delta = emb.filter((F.col("vec_id") >= 300) & (F.col("vec_id") < 320))
+    n = assert_no_cache_leak(spark, lambda: idx.append(delta), vec_dir)
+    assert n == 20
+    after = set(map(str, vec_dir.rglob("*.parquet")))
+    assert before < after
+    cents = [idx.centroids[c] for c in sorted(idx.centroids)]
+    want = {
+        r["vec_id"]: r["cell"]
+        for r in sim.assign_cells(delta, cents).collect()
+    }
+    got = {
+        r["vec_id"]: r["cell"]
+        for r in idx.vectors().filter(F.col("vec_id") >= 300).collect()
+    }
+    assert got == want
+
+
+def test_kmeans_rejects_fewer_vectors_than_cells(spark, tmp_path):
+    """A corpus smaller than k cannot seed k centroids: the build must
+    say so (n and k named) instead of failing on a missing seed."""
+    from rust_evm_indexer_spark.operators import similarity as sim
+
+    tiny = spark.createDataFrame(
+        [(i, [float(i), 1.0, 0.5]) for i in range(5)],
+        "vec_id: long, embedding: array<double>",
+    )
+    with pytest.raises(ValueError, match=r"k=8.*n=5"):
+        sim.IvfIndex.build(tiny, tmp_path / "ivf")
 
 
 # --- round 7: trigram Stupid Backoff with count-cutoff pruning -------------

@@ -92,15 +92,20 @@ def test_identity_rotation_is_bit_identical_everywhere(spark, tmp_path):
     assert got_plain == got_eye
 
     idx = sim.IvfIndex.build(df, tmp_path / "ivf", k=4, iters=2)
-    rcb = PQ.ivfpq_train_residual(idx, m=4, k=8, iters=4)
-    assert PQ.ivfpq_train_residual(idx, m=4, k=8, iters=4,
-                                   rotation=eye) == rcb
+    rcb = PQ.pq_train(
+        PQ.residual_frame(idx, idx.vectors()),
+        m=4, k=8, iters=4,
+    )
+    assert PQ.pq_train(
+        PQ.residual_frame(idx, idx.vectors()),
+        m=4, k=8, iters=4, rotation=eye,
+    ) == rcb
     PQ.ivfpq_write_codes(idx, rcb, tmp_path / "rc", by_residual=True)
     PQ.ivfpq_write_codes(idx, rcb, tmp_path / "rc_eye", by_residual=True,
                          rotation=eye)
-    a = PQ.ivfpq_search(spark, idx, tmp_path / "rc", rcb, q, topk=5,
+    a = PQ.ivfpq_search(idx, tmp_path / "rc", rcb, q, topk=5,
                         n_probe=2, by_residual=True).collect()
-    b = PQ.ivfpq_search(spark, idx, tmp_path / "rc_eye", rcb, q, topk=5,
+    b = PQ.ivfpq_search(idx, tmp_path / "rc_eye", rcb, q, topk=5,
                         n_probe=2, by_residual=True, rotation=eye).collect()
     assert a == b
 
@@ -158,7 +163,10 @@ def test_rotated_knn_join_matches_per_query_search(spark, tmp_path):
 
     for res in (False, True):
         if res:
-            cb = PQ.ivfpq_train_residual(idx, m=4, k=8, iters=4, rotation=R)
+            cb = PQ.pq_train(
+                PQ.residual_frame(idx, idx.vectors()),
+                m=4, k=8, iters=4, rotation=R,
+            )
         else:
             cb = PQ.pq_train(df, m=4, k=8, iters=4, rotation=R)
         d = tmp_path / f"codes_{res}"
@@ -166,13 +174,13 @@ def test_rotated_knn_join_matches_per_query_search(spark, tmp_path):
         joined = {
             (r["q_id"], r["rank"]): (r["vec_id"], r["sim_pq"])
             for r in PQ.ivfpq_knn_join(
-                spark, idx, d, cb, queries, k=5, n_probe=2,
+                idx, d, cb, queries, k=5, n_probe=2,
                 by_residual=res, rotation=R).collect()
         }
         for q in range(3):
             qv = [float(x) for x in X[q]]
             want = PQ.ivfpq_search(
-                spark, idx, d, cb, qv, topk=5, n_probe=2,
+                idx, d, cb, qv, topk=5, n_probe=2,
                 by_residual=res, rotation=R).collect()
             for rank, r in enumerate(want, start=1):
                 assert joined[(q, rank)] == (r["vec_id"], r["sim_pq"]), (
@@ -188,7 +196,10 @@ def test_rotated_append_matches_bulk_encode(spark, tmp_path):
     df = _frame(spark, X)
     idx_all = sim.IvfIndex.build(df, tmp_path / "ivf_all", k=4, iters=2)
     R = PQ.opq_train_rotation(df, m=4)
-    cb = PQ.ivfpq_train_residual(idx_all, m=4, k=8, iters=4, rotation=R)
+    cb = PQ.pq_train(
+        PQ.residual_frame(idx_all, idx_all.vectors()),
+        m=4, k=8, iters=4, rotation=R,
+    )
 
     bulk = tmp_path / "bulk"
     PQ.ivfpq_write_codes(idx_all, cb, bulk, by_residual=True, rotation=R)

@@ -4,13 +4,14 @@ never touches Python."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from rust_evm_indexer_spark.operators import pq as PQ
 from rust_evm_indexer_spark.operators import similarity as sim
 from rust_evm_indexer_spark.sources.batch import load_driver_table
 
-from conftest import SF_ORACLE
+from conftest import SF_ORACLE, assert_no_cache_leak
 
 
 def _emb(spark):
@@ -91,7 +92,7 @@ def test_ivfpq_prunes_partitions_and_stays_jvm(spark, tmp_path):
     cb = PQ.pq_train(emb, m=8, k=16, iters=3)
     PQ.ivfpq_write_codes(idx, cb, tmp_path / "codes")
     q = emb.filter(F.col("vec_id") == 0).first()["embedding"]
-    res = PQ.ivfpq_search(spark, idx, tmp_path / "codes", cb, q, topk=10, n_probe=2)
+    res = PQ.ivfpq_search(idx, tmp_path / "codes", cb, q, topk=10, n_probe=2)
     pf = partition_filters(res)
     assert any("cell" in f for f in pf), f"no partition filter on cell: {pf}"
     plan = physical_plan(res, "simple")
@@ -109,7 +110,7 @@ def test_ivfpq_matches_flat_pq_on_probed_cells(spark, tmp_path):
     PQ.ivfpq_write_codes(idx, cb, tmp_path / "codes")
     q = emb.filter(F.col("vec_id") == 0).first()["embedding"]
     got = PQ.ivfpq_search(
-        spark, idx, tmp_path / "codes", cb, q, topk=10, n_probe=2,
+        idx, tmp_path / "codes", cb, q, topk=10, n_probe=2,
         exclude_ids=(0,),
     ).collect()
 
@@ -153,7 +154,7 @@ def test_ivfpq_knn_join_matches_per_query_search(spark, tmp_path):
         F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_vec")
     )
     joined = PQ.ivfpq_knn_join(
-        spark, idx, tmp_path / "codes", cb, queries, k=5, n_probe=2
+        idx, tmp_path / "codes", cb, queries, k=5, n_probe=2
     )
     got = {
         (r["q_id"], r["rank"]): (r["vec_id"], r["sim_pq"])
@@ -162,7 +163,7 @@ def test_ivfpq_knn_join_matches_per_query_search(spark, tmp_path):
     for q in range(4):
         qv = emb.filter(F.col("vec_id") == q).first()["embedding"]
         want = PQ.ivfpq_search(
-            spark, idx, tmp_path / "codes", cb, qv, topk=5, n_probe=2
+            idx, tmp_path / "codes", cb, qv, topk=5, n_probe=2
         ).collect()
         for rank, r in enumerate(want, start=1):
             assert got[(q, rank)] == (r["vec_id"], r["sim_pq"]), (q, rank)
@@ -184,7 +185,11 @@ def test_ivfpq_append_equals_full_build(spark, tmp_path):
     cb = PQ.pq_train(first, m=8, k=16, iters=5)
     PQ.ivfpq_write_codes(idx, cb, tmp_path / "codes")
     before = set(map(str, (tmp_path / "codes").rglob("*.parquet")))
-    n = PQ.ivfpq_append(idx, cb, tmp_path / "codes", rest)
+    n = assert_no_cache_leak(
+        spark,
+        lambda: PQ.ivfpq_append(idx, cb, tmp_path / "codes", rest),
+        tmp_path / "codes",
+    )
     assert n == rest.count()
     after = set(map(str, (tmp_path / "codes").rglob("*.parquet")))
     assert before <= after and len(after) > len(before)
@@ -210,9 +215,42 @@ def test_ivfpq_append_equals_full_build(spark, tmp_path):
     # the nearest reconstruction to itself)
     q = emb.filter(F.col("vec_id") == 1).first()["embedding"]  # appended row
     top = PQ.ivfpq_search(
-        spark, idx, tmp_path / "codes", cb, q, topk=1, n_probe=4
+        idx, tmp_path / "codes", cb, q, topk=1, n_probe=4
     ).first()
     assert top["vec_id"] == 1
+
+
+def test_every_probe_rejects_n_probe_below_one(spark, tmp_path):
+    """n_probe < 1 is an error on every IVF path — the single-query
+    searches (both IVFADC regimes) and both k-NN joins — never an empty
+    result or a silently shortened probe list."""
+    emb = _emb(spark)
+    idx = sim.IvfIndex.build(emb, tmp_path / "ivf", k=4, iters=2)
+    cb = PQ.pq_train(emb, m=8, k=16, iters=2)
+    codes = tmp_path / "codes"
+    q = emb.filter(F.col("vec_id") == 0).first()["embedding"]
+    queries = emb.filter(F.col("vec_id") < 2).select(
+        F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_vec")
+    )
+    calls = [
+        lambda n: idx.search(q, 5, n_probe=n),
+        lambda n: idx.knn_join(queries, 3, n_probe=n),
+    ] + [
+        call
+        for res in (False, True)
+        for call in (
+            lambda n, res=res: PQ.ivfpq_search(
+                idx, codes, cb, q, 5, n_probe=n, by_residual=res
+            ),
+            lambda n, res=res: PQ.ivfpq_knn_join(
+                idx, codes, cb, queries, 3, n_probe=n, by_residual=res
+            ),
+        )
+    ]
+    for call in calls:
+        for n in (0, -1):
+            with pytest.raises(ValueError, match="n_probe"):
+                call(n)
 
 
 # --- residual encoding (FAISS IVFADC by_residual=True, Jégou §IV) ----------
@@ -221,8 +259,14 @@ def test_ivfpq_append_equals_full_build(spark, tmp_path):
 def test_residual_train_is_deterministic(spark, tmp_path):
     emb = _emb(spark)
     idx = sim.IvfIndex.build(emb, tmp_path / "ivf", k=4, iters=2)
-    cb1 = PQ.ivfpq_train_residual(idx, m=8, k=16, iters=5)
-    cb2 = PQ.ivfpq_train_residual(idx, m=8, k=16, iters=5)
+    cb1 = PQ.pq_train(
+        PQ.residual_frame(idx, idx.vectors()),
+        m=8, k=16, iters=5,
+    )
+    cb2 = PQ.pq_train(
+        PQ.residual_frame(idx, idx.vectors()),
+        m=8, k=16, iters=5,
+    )
     assert cb1 == cb2
     assert len(cb1) == 8 and len(cb1[0]) == 16 and len(cb1[0][0]) == 8
 
@@ -234,12 +278,15 @@ def test_residual_search_self_query_ranks_top(spark, tmp_path):
     indexed vector."""
     emb = _emb(spark)
     idx = sim.IvfIndex.build(emb, tmp_path / "ivf", k=4, iters=2)
-    cb = PQ.ivfpq_train_residual(idx, m=8, k=16, iters=8)
+    cb = PQ.pq_train(
+        PQ.residual_frame(idx, idx.vectors()),
+        m=8, k=16, iters=8,
+    )
     PQ.ivfpq_write_codes(idx, cb, tmp_path / "codes", by_residual=True)
     for qid in (0, 7, 42):
         q = emb.filter(F.col("vec_id") == qid).first()["embedding"]
         top = PQ.ivfpq_search(
-            spark, idx, tmp_path / "codes", cb, q, topk=1, n_probe=1,
+            idx, tmp_path / "codes", cb, q, topk=1, n_probe=1,
             by_residual=True,
         ).first()
         assert top["vec_id"] == qid, qid
@@ -255,11 +302,14 @@ def test_residual_search_prunes_partitions_and_stays_jvm(spark, tmp_path):
 
     emb = _emb(spark)
     idx = sim.IvfIndex.build(emb, tmp_path / "ivf", k=4, iters=2)
-    cb = PQ.ivfpq_train_residual(idx, m=8, k=16, iters=3)
+    cb = PQ.pq_train(
+        PQ.residual_frame(idx, idx.vectors()),
+        m=8, k=16, iters=3,
+    )
     PQ.ivfpq_write_codes(idx, cb, tmp_path / "codes", by_residual=True)
     q = emb.filter(F.col("vec_id") == 0).first()["embedding"]
     res = PQ.ivfpq_search(
-        spark, idx, tmp_path / "codes", cb, q, topk=10, n_probe=2,
+        idx, tmp_path / "codes", cb, q, topk=10, n_probe=2,
         by_residual=True,
     )
     pf = partition_filters(res)
@@ -272,13 +322,16 @@ def test_residual_search_prunes_partitions_and_stays_jvm(spark, tmp_path):
 def test_residual_knn_join_matches_per_query_search(spark, tmp_path):
     emb = _emb(spark)
     idx = sim.IvfIndex.build(emb, tmp_path / "ivf", k=4, iters=2)
-    cb = PQ.ivfpq_train_residual(idx, m=8, k=16, iters=5)
+    cb = PQ.pq_train(
+        PQ.residual_frame(idx, idx.vectors()),
+        m=8, k=16, iters=5,
+    )
     PQ.ivfpq_write_codes(idx, cb, tmp_path / "codes", by_residual=True)
     queries = emb.filter(F.col("vec_id") < 4).select(
         F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_vec")
     )
     joined = PQ.ivfpq_knn_join(
-        spark, idx, tmp_path / "codes", cb, queries, k=5, n_probe=2,
+        idx, tmp_path / "codes", cb, queries, k=5, n_probe=2,
         by_residual=True,
     )
     got = {
@@ -288,7 +341,7 @@ def test_residual_knn_join_matches_per_query_search(spark, tmp_path):
     for q in range(4):
         qv = emb.filter(F.col("vec_id") == q).first()["embedding"]
         want = PQ.ivfpq_search(
-            spark, idx, tmp_path / "codes", cb, qv, topk=5, n_probe=2,
+            idx, tmp_path / "codes", cb, qv, topk=5, n_probe=2,
             by_residual=True,
         ).collect()
         for rank, r in enumerate(want, start=1):
@@ -300,7 +353,10 @@ def test_residual_append_equals_full_build(spark, tmp_path):
     first = emb.filter(F.col("vec_id") % 2 == 0)
     rest = emb.filter(F.col("vec_id") % 2 == 1)
     idx = sim.IvfIndex.build(first, tmp_path / "ivf", k=4, iters=2)
-    cb = PQ.ivfpq_train_residual(idx, m=8, k=16, iters=5)
+    cb = PQ.pq_train(
+        PQ.residual_frame(idx, idx.vectors()),
+        m=8, k=16, iters=5,
+    )
     PQ.ivfpq_write_codes(idx, cb, tmp_path / "codes", by_residual=True)
     n = PQ.ivfpq_append(idx, cb, tmp_path / "codes", rest, by_residual=True)
     assert n == rest.count()
@@ -309,7 +365,7 @@ def test_residual_append_equals_full_build(spark, tmp_path):
 
     cents = [idx.centroids[c] for c in sorted(idx.centroids)]
     full = PQ.pq_encode(
-        PQ._residual_frame(idx, assign_cells(emb, cents)), cb, keep=("cell",)
+        PQ.residual_frame(idx, assign_cells(emb, cents)), cb, keep=("cell",)
     )
     got = {
         (r["vec_id"], r["cell"], tuple(r["codes"]))
@@ -329,7 +385,10 @@ def test_residual_estimate_is_sane_vs_exact(spark, tmp_path):
 
     emb = _emb(spark)
     idx = sim.IvfIndex.build(emb, tmp_path / "ivf", k=8, iters=3)
-    cb = PQ.ivfpq_train_residual(idx, m=8, k=16, iters=8)
+    cb = PQ.pq_train(
+        PQ.residual_frame(idx, idx.vectors()),
+        m=8, k=16, iters=8,
+    )
     PQ.ivfpq_write_codes(idx, cb, tmp_path / "codes", by_residual=True)
     rows = emb.filter(F.col("vec_id") < 100).collect()
     X = {r["vec_id"]: np.array(r["embedding"], dtype=np.float64) for r in rows}
@@ -337,7 +396,7 @@ def test_residual_estimate_is_sane_vs_exact(spark, tmp_path):
     got = {
         r["vec_id"]: r["sim_pq"]
         for r in PQ.ivfpq_search(
-            spark, idx, tmp_path / "codes", cb, [float(x) for x in q],
+            idx, tmp_path / "codes", cb, [float(x) for x in q],
             topk=500, n_probe=8, exclude_ids=(0,), by_residual=True,
         ).collect()
     }

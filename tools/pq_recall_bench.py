@@ -116,8 +116,10 @@ def main() -> int:
         books = {}
         for rname, cfg in regimes.items():
             if cfg["res"]:
-                cb = PQ.ivfpq_train_residual(idx, m=M, k=K, iters=ITERS,
-                                             rotation=cfg["rot"])
+                cb = PQ.pq_train(
+                    PQ.residual_frame(idx, idx.vectors()),
+                    m=M, k=K, iters=ITERS, rotation=cfg["rot"],
+                )
             else:
                 cb = PQ.pq_train(emb, m=M, k=K, iters=ITERS,
                                  rotation=cfg["rot"])
@@ -159,7 +161,7 @@ def main() -> int:
             for rname, cfg in regimes.items():
                 got = _topk_sets(
                     PQ.ivfpq_knn_join(
-                        spark, idx, dirs[rname], books[rname], queries,
+                        idx, dirs[rname], books[rname], queries,
                         k=TOPK + 1, n_probe=n_probe,
                         by_residual=cfg["res"], rotation=cfg["rot"],
                     ).collect(),
