@@ -146,9 +146,3 @@ def u256_string_from_limb_sums(
     )
     trimmed = F.regexp_replace(digits, "^0+", "")
     return F.when(trimmed == "", F.lit("0")).otherwise(trimmed)
-
-
-def ts_seconds_to_timestamp(col: Column | str) -> Column:
-    """Unix-seconds BIGINT → TimestampType derived column."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.timestamp_seconds(c)

@@ -157,24 +157,6 @@ N_PERM = 64  # minhash permutations
 LSH_BANDS = 16  # 16 bands × 4 rows: P(candidate | J=0.8) ≈ 0.9996
 
 
-def minhash_signatures(
-    shingles: DataFrame, n_perm: int = N_PERM
-) -> DataFrame:
-    """(doc_id, sig array<long>): sig[i] = min over shingles of
-    xxhash64(i, shingle).  Seeded xxhash64 *is* the family of independent
-    permutations — JVM-side, no UDF, no dictionary to broadcast."""
-    # single-string F.expr parses: building the 64 aggregate columns as
-    # nested Column objects costs hundreds of py4j round-trips (~0.3 s
-    # per plan construction, measured); the parsed expressions are
-    # identical (same literal types, same hash values)
-    agg_min = [
-        F.expr(f"min(xxhash64({i}, shingle)) AS h{i}") for i in range(n_perm)
-    ]
-    per_doc = shingles.groupBy("doc_id").agg(*agg_min)
-    sig = "array(" + ", ".join(f"h{i}" for i in range(n_perm)) + ")"
-    return per_doc.select("doc_id", F.expr(sig).alias("sig"))
-
-
 def minhash_lsh_pairs(
     df: DataFrame,
     threshold: float = 0.5,

@@ -74,15 +74,6 @@ class DataTierIO:
         contract as :meth:`~.manifest_io.ManifestIO.mtime` applies."""
         raise NotImplementedError
 
-    def adopt_dir(self, src_rel: str, dst_rel: str) -> None:
-        """Move a staged directory to its final (fresh, unclaimed)
-        name.  POSIX: one rename.  Object stores: copy each object to
-        the new prefix then delete the old — safe because staging
-        prefixes are writer-private (uuid-named) and the destination
-        only becomes live when a later manifest swap references it, so
-        the non-atomicity is invisible to readers."""
-        raise NotImplementedError
-
     def touch_dir(self, rel: str) -> None:
         """Refresh the directory's :meth:`dir_mtime` to now — the
         in-flight writer's liveness heartbeat.  Vacuum's orphan floor
@@ -99,8 +90,11 @@ class DataTierIO:
         raise NotImplementedError
 
     def adopt_file(self, src_rel: str, dst_rel: str) -> None:
-        """Move one staged file to its final name (same contract as
-        :meth:`adopt_dir`)."""
+        """Move one staged file to its final (fresh, unclaimed) name.
+        POSIX: one rename.  Object stores: copy then delete — safe
+        because staging prefixes are writer-private (uuid-named) and the
+        destination only becomes live when a later manifest swap
+        references it, so the non-atomicity is invisible to readers."""
         raise NotImplementedError
 
     def list_files(self, rel: str) -> list[str]:
@@ -148,11 +142,6 @@ class LocalDataTierIO(DataTierIO):
 
     def dir_mtime(self, rel: str) -> float:
         return (self.root / rel).stat().st_mtime
-
-    def adopt_dir(self, src_rel: str, dst_rel: str) -> None:
-        dst = self.root / dst_rel
-        dst.parent.mkdir(parents=True, exist_ok=True)
-        os.replace(self.root / src_rel, dst)
 
     def touch_dir(self, rel: str) -> None:
         os.utime(self.root / rel)  # FileNotFoundError if reclaimed
@@ -202,7 +191,7 @@ class ObjectStoreStyleDataTierIO(DataTierIO):
         """ListObjectsV2 with ``Prefix=prefix + '/'`` — the trailing
         slash is PART OF THE CONTRACT: a raw ``Prefix=prefix`` listing
         has no path boundary, so ``data/t/frag-ab`` would also match
-        ``data/t/frag-abc...``'s keys and delete_dir/adopt_dir would
+        ``data/t/frag-abc...``'s keys and delete_dir/list_files would
         conflate sibling fragments.  A real adapter must append the
         delimiter exactly as the filesystem form below does implicitly
         (the local path component boundary)."""
@@ -250,13 +239,6 @@ class ObjectStoreStyleDataTierIO(DataTierIO):
         if not keys:
             raise FileNotFoundError(rel)
         return max(self._head(k)[1] for k in keys)
-
-    def adopt_dir(self, src_rel: str, dst_rel: str) -> None:
-        src_prefix = src_rel.rstrip("/") + "/"
-        for key in self._keys(src_rel):
-            suffix = key[len(src_prefix):]
-            self._put(f"{dst_rel}/{suffix}", self._get(key))
-            self._delete(key)
 
     def touch_dir(self, rel: str) -> None:
         if not self._keys(rel):  # never recreate a reclaimed prefix

@@ -490,3 +490,78 @@ def test_delete_feed_replay_converges_under_random_maintenance(spark, ops):
         for r in store.read("pts").collect()
     }
     assert replayed == fresh
+
+
+# strings whose case folding differs between Python's str.lower (which
+# Spark's lower() and the bloom tier agree with) and pyarrow's
+# utf8_lower: 'İ' lowers to 'i' + combining dot, final sigma to 'ς'
+_FOLD_STRINGS = [
+    "0xAbC", "0xabc", "0xABC", None, "İstanbul", "i̇stanbul", "istanbul",
+    "ΣΑΣ", "σας", "σασ", "0xdef",
+]
+
+
+def test_key_match_selects_the_same_rows_in_pyarrow_and_spark(spark):
+    """The one match spec compiled both ways — the pyarrow keep
+    expression the rewrite kernel applies and the Spark Column the
+    changefeed replays — selects identical rows on string keys
+    (mixed-case hex, NULLs, case folds pyarrow's utf8_lower gets
+    differently) and on int keys."""
+    import pyarrow as pa
+    import pyarrow.dataset as pa_ds
+
+    from rust_evm_indexer_spark.store.table_store import KeyMatch
+
+    rows = [
+        (i, s, None if i % 4 == 0 else i % 3)
+        for i, s in enumerate(_FOLD_STRINGS)
+    ]
+    ds = pa_ds.dataset(pa.table({
+        "id": pa.array([r[0] for r in rows], pa.int64()),
+        "s": pa.array([r[1] for r in rows], pa.string()),
+        "n": pa.array([r[2] for r in rows], pa.int64()),
+    }))
+    df = spark.createDataFrame(rows, "id: long, s: string, n: long")
+    cases = [
+        ("s", ("0xABC",)), ("s", ("İstanbul",)), ("s", ("istanbul",)),
+        ("s", ("ΣΑΣ",)), ("s", ("σασ", "0XDEF")), ("s", (None,)),
+        ("n", (1,)), ("n", (0, 2, None)), ("n", (7,)),
+    ]
+    for column, values in cases:
+        match = KeyMatch(column, values)
+        kept = set(ds.to_table(filter=match.keep(ds))["id"].to_pylist())
+        via_arrow = sorted({r[0] for r in rows} - kept)
+        via_spark = sorted(r["id"] for r in df.filter(match.spark()).collect())
+        assert via_arrow == via_spark, (column, values)
+
+
+def test_delete_feed_reports_exactly_the_removed_rows(spark, tmp_path):
+    """delete_equals / delete_in remove exactly what the changefeed then
+    reports as deleted, on case-folding strings; a key column an older
+    fragment lacks (added by schema evolution) keeps that fragment's
+    rows."""
+    store = _mk_store(spark, tmp_path, bloom_columns={"t": ("s",)})
+    store.commit({"t": spark.createDataFrame(
+        [(i, s) for i, s in enumerate(_FOLD_STRINGS)], "id: long, s: string")})
+    store.commit({"t": spark.createDataFrame(
+        [(100 + i, s, "x" if i % 2 else "y")
+         for i, s in enumerate(_FOLD_STRINGS)],
+        "id: long, s: string, tag: string")})
+
+    def ids():
+        return {r["id"] for r in store.read("t").collect()}
+
+    for op in (
+        lambda: store.delete_equals("t", "s", "İstanbul"),
+        lambda: store.delete_in("t", "s", ["ΣΑΣ", "0xabc"]),
+        lambda: store.delete_equals("t", "tag", "X"),
+    ):
+        before, v = ids(), store.current_manifest().version
+        op()
+        removed = before - ids()
+        feed = store.changes("t", since_version=v, include_deletes=True)
+        reported = [r["id"] for r in feed.collect()
+                    if r["_change_type"] == "delete"]
+        assert removed and sorted(reported) == sorted(removed)
+    # the pre-evolution fragment holds no 'tag': all its survivors stay
+    assert ids() == {3, 6, 9, 10, 106, 110}

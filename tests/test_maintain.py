@@ -9,6 +9,7 @@ import pytest
 
 from pyspark.sql import functions as F
 
+from conftest import assert_no_cache_leak
 from rust_evm_indexer_spark.store import MaintenancePolicy, TableStore
 
 
@@ -224,6 +225,80 @@ def test_delete_in_purges_projections(spark, tmp_path):
     via = store.read_projection("pts", "by_addr")
     assert via.count() == 50
     assert via.filter(F.col("addr").isin("0x01", "0x03")).count() == 0
+
+
+def test_row_mutations_run_no_spark_job(spark, tmp_path):
+    """The fragment-rewrite kernel runs in process: delete_equals,
+    delete_in and a projection takedown start no Spark job, upsert at
+    most one (collecting its batch), rollback none — and the store still
+    ends equal to a Python model of the same operations."""
+    import pyarrow as pa
+
+    store = TableStore(spark, tmp_path / "jstore", bloom_columns={},
+                       dict_columns={})
+    model = {}
+    for b in range(4):
+        rows = [(b * 100 + i, f"0xa{i % 5}", 100 + b) for i in range(20)]
+        model.update({r[0]: r for r in rows})
+        store.commit({"pts": pa.table({  # pyarrow commit: no job either
+            "id": pa.array([r[0] for r in rows], pa.int64()),
+            "addr": [r[1] for r in rows],
+            "block_number": pa.array([r[2] for r in rows], pa.int64()),
+        })})
+    sc = spark.sparkContext
+
+    def jobs(name, call):
+        group = f"row-mutation-{name}"
+        sc.setJobGroup(group, name)
+        try:
+            out = call()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return len(sc.statusTracker().getJobIdsForGroup(group)), out
+
+    def drop(addrs):
+        for k in [k for k, r in model.items() if r[1] in addrs]:
+            del model[k]
+
+    n, _ = jobs("delete-equals", lambda: store.delete_equals("pts", "addr", "0xA1"))
+    assert n == 0
+    drop({"0xa1"})
+    n, _ = jobs("delete-in", lambda: store.delete_in("pts", "addr", ["0xa2", "0xa3"]))
+    assert n == 0
+    drop({"0xa2", "0xa3"})
+    batch = [(0, "0xb0", 100), (1, "0xb1", 103), (999, "0xb9", 103)]
+    df = spark.createDataFrame(batch, "id: long, addr: string, block_number: long")
+    n, stats = jobs("upsert", lambda: store.upsert("pts", df, "id"))
+    assert n <= 1 and stats["replaced_rows"] == 1
+    model.update({r[0]: r for r in batch})
+    store.build_projection("pts", "by_addr", ("addr",), max_fragments=2)
+    n, stats = jobs("projection", lambda: store.delete_equals("pts", "addr", "0xa4"))
+    assert n == 0 and stats["projection_fragments_rewritten"] >= 1
+    drop({"0xa4"})
+    via = store.read_projection("pts", "by_addr")
+    assert sorted(map(tuple, via.collect())) == sorted(model.values())
+    # the upsert batch fragment straddles the fork: a kernel rewrite
+    n, _ = jobs("rollback", lambda: store.rollback_from(102))
+    assert n == 0
+    model = {k: r for k, r in model.items() if r[2] < 102}
+    assert sorted(map(tuple, store.read("pts").collect())) == sorted(model.values())
+
+
+def test_deletes_leave_no_cache(spark, tmp_path):
+    """delete_equals and delete_in, at default arguments, pin nothing
+    and return no frame over the fragments they replaced."""
+    store = _mk_store(spark, tmp_path)
+    _commit_batches(spark, store, 3)
+    root = store.root
+    stats = assert_no_cache_leak(
+        spark, lambda: store.delete_equals("pts", "addr", "0xa1"), root
+    )
+    assert stats["deleted_rows"] == 36
+    stats = assert_no_cache_leak(
+        spark, lambda: store.delete_in("pts", "addr", ["0xa2", "0xA3"]), root
+    )
+    assert stats["deleted_rows"] == 72
+    assert store.read("pts").count() == 180 - 36 - 72
 
 
 # -- stats()-driven whole-store policy pass (VERDICT r7 item 6) ----------

@@ -1178,38 +1178,19 @@ def test_commit_touch_heartbeat_and_loud_vanish_guard(spark, tmp_path):
     assert sweeper.read("pts").count() == 20
 
 
-def test_data_tier_crash_mid_adopt_recovers_and_reclaims(spark, tmp_path):
-    """Data-tier crash story (r12): on object semantics, adopt_dir is a
-    per-object copy+delete — a writer can die with the destination HALF
-    copied.  Safety holds by construction: adoption always targets a
-    FRESH uuid dir and the manifest swap never happened, so readers see
-    the old fragments untouched; the partial dir (and, on a hard death,
-    the dot-named staging prefix) is never-referenced and rides the
-    orphan floor — protected while young, reclaimed once aged.  A
+def test_data_tier_crash_mid_rewrite_recovers_and_reclaims(spark, tmp_path):
+    """Data-tier crash story: a delete can die with its rewritten
+    survivors fragment written but not yet stat-ed or swapped.  Safety
+    holds by construction: the rewrite always targets a FRESH uuid dir
+    and the manifest swap never happened, so readers see the old
+    fragments untouched; the partial dir is never-referenced and rides
+    the orphan floor — protected while young, reclaimed once aged.  A
     retried op succeeds against the intact state."""
     from rust_evm_indexer_spark.store.data_io import (
         ObjectStoreStyleDataTierIO,
     )
 
-    class CrashingDataTierIO(ObjectStoreStyleDataTierIO):
-        """Crash after N adopt-copy PutObjects (test-local; production
-        class stays fault-free — mirrors InMemoryObjectStoreIO's
-        manifest-tier injection)."""
-
-        puts_until_crash: int | None = None
-
-        def adopt_dir(self, src_rel: str, dst_rel: str) -> None:
-            src_prefix = src_rel.rstrip("/") + "/"
-            for key in self._keys(src_rel):
-                if self.puts_until_crash is not None:
-                    if self.puts_until_crash <= 0:
-                        raise SimulatedCrash(f"adopt_dir PutObject {key}")
-                    self.puts_until_crash -= 1
-                suffix = key[len(src_prefix):]
-                self._put(f"{dst_rel}/{suffix}", self._get(key))
-                self._delete(key)
-
-    dio = CrashingDataTierIO(tmp_path / "s")
+    dio = ObjectStoreStyleDataTierIO(tmp_path / "s")
     fake = InMemoryObjectStoreIO()
     store = _mk(spark, tmp_path / "s", fake, data_io=dio)
     for b in range(3):
@@ -1217,18 +1198,20 @@ def test_data_tier_crash_mid_adopt_recovers_and_reclaims(spark, tmp_path):
     before = sorted(store.read("pts").collect())
     live_before = set(store._dio.list_fragment_dirs())
 
-    # delete_equals rewrites its hit fragment via staging + adopt —
-    # die after the first copied object
-    dio.puts_until_crash = 1
+    # delete_equals writes its hit fragment's survivors — die right
+    # after the part file lands, before the fragment is stat-ed
+    def crash(*args, **kw):
+        raise SimulatedCrash("writer died after the rewrite")
+
+    store._stat_fragment_dir = crash
     with pytest.raises(SimulatedCrash):
         store.delete_equals("pts", "id", 105)
-    dio.puts_until_crash = None
 
     # nothing visible changed: manifest unswapped, old fragments intact
     recovery = _mk(spark, tmp_path / "s", fake, data_io=dio)
     assert sorted(recovery.read("pts").collect()) == before
     partials = set(dio.list_fragment_dirs()) - live_before
-    assert partials, "crash must leave a partial adopted dir"
+    assert partials, "crash must leave a partial rewritten dir"
 
     # the orphan floor protects the young partials, then reclaims them
     assert recovery.vacuum(grace_seconds=0) == 0
@@ -1322,14 +1305,11 @@ def test_touch_or_fail_wired_into_every_writer_path(spark, tmp_path):
     assert store.current_version() == v_before
 
 
-def test_maintenance_staging_vanish_is_loud_not_silent_empty(
-    spark, tmp_path
-):
-    """r12 review: _maintain_fragments_batched treated a missing
-    staging partition dir as 'fragment emptied' — but if the fragment
-    had surviving rows, absence means the staging was reclaimed out
-    from under the op, and recording None would SILENTLY drop rows that
-    matched no predicate.  Survivors expected + dir gone must raise."""
+def test_rewritten_fragment_reclaimed_before_swap_is_loud(spark, tmp_path):
+    """A delete's rewritten survivors fragment that a vacuum reclaims
+    between the rewrite and the manifest swap must fail the delete
+    through the pre-swap liveness check — never record the fragment as
+    emptied and silently drop rows that matched no predicate."""
     from rust_evm_indexer_spark.store.data_io import (
         ObjectStoreStyleDataTierIO,
     )
@@ -1338,21 +1318,21 @@ def test_maintenance_staging_vanish_is_loud_not_silent_empty(
     fake = InMemoryObjectStoreIO()
     store = _mk(spark, tmp_path / "s", fake, data_io=dio)
     store.commit({"pts": _batch(spark, 0)})
+    version = store.current_manifest().version
 
-    real_exists = dio.dir_exists
+    real_rewrite = store._rewrite_fragment
 
-    def staging_vanished(rel: str) -> bool:
-        if "/.maint-" in rel and "_frag=" in rel:
-            return False  # simulate: vacuum reclaimed the staging
-        return real_exists(rel)
+    def rewrite_then_reclaim(*args, **kw):
+        hits, new = real_rewrite(*args, **kw)
+        if new is not None:
+            dio.delete_dir(new.path)  # simulate: vacuum reclaimed it
+        return hits, new
 
-    dio.dir_exists = staging_vanished
-    try:
-        with pytest.raises(RuntimeError, match="staging output .* vanished"):
-            store.delete_equals("pts", "id", 5)  # 9 survivors expected
-    finally:
-        dio.dir_exists = real_exists
+    store._rewrite_fragment = rewrite_then_reclaim
+    with pytest.raises(RuntimeError, match="vanished before the swap"):
+        store.delete_equals("pts", "id", 5)  # 9 survivors rewritten
     # nothing swapped, nothing lost
+    assert store.current_manifest().version == version
     assert store.read("pts").count() == 10
 
 

@@ -2,10 +2,10 @@
 interleavings of commit / upsert / delete_equals / delete_in / compact /
 vacuum must keep ``read()`` equal to a trivial Python dict model.
 
-This is the guard for the r7 batched-maintenance rewrite
-(_maintain_fragments_batched): the individual operations each have
-focused tests, but the bugs that kernel could introduce are
-INTERACTION bugs — a delete after an upsert after a compaction hitting
+This is the guard for the row-level rewrite kernel
+(TableStore._rewrite_fragment, in-process pyarrow, no Spark job for a
+delete): the individual operations each have focused tests, but the
+bugs that kernel could introduce are INTERACTION bugs — a delete after an upsert after a compaction hitting
 a fragment layout no single-op test produces.  The model is
 deliberately dumb: {key: text}; upsert overwrites, delete removes
 (case-insensitively for the string column), commit inserts fresh keys.

@@ -7,6 +7,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from conftest import assert_no_cache_leak
 from rust_evm_indexer_spark.store import TableStore
 
 SCHEMA = "doc_id: long, text: string, score: long"
@@ -140,3 +141,17 @@ def test_upsert_guard_counts_string_keys_case_insensitively(spark, tmp_path):
     with pytest.raises(ValueError, match="case-insensitively"):
         store.upsert("docs", batch, "text")
     assert store.current_manifest().version == 1  # state unchanged
+
+
+def test_upsert_leaves_no_cache(spark, tmp_path):
+    """upsert, at default arguments, pins nothing and returns no frame
+    over the store it just rewrote."""
+    store = _mk(spark, tmp_path)
+    store.commit({"docs": _rows(spark, range(0, 10), "v1")})
+    stats = assert_no_cache_leak(
+        spark,
+        lambda: store.upsert("docs", _rows(spark, [2, 30], "v2"), "doc_id"),
+        store.root,
+    )
+    assert stats["replaced_rows"] == 1 and stats["inserted_rows"] == 2
+    assert store.read("docs").count() == 11
